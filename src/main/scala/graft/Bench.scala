@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.sources.Sources
 
 /** Benchmark main — the driver's per-round timing probe.
   *
@@ -38,7 +39,7 @@ object Bench {
     // small end-to-end query so per-query numbers reflect steady state.
     try {
       Seq("customer", "lineitem", "orders", "documents", "embeddings")
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count())
+        .foreach(t => Sources.table(spark, sfDir, t).limit(1).count())
       SparkEntry.entry(spark).count()
     } catch { case _: Throwable => () }
     // malformed env must not break the always-emit-one-JSON-line contract

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Events, ManifestedLog}
+import graft.sources.Sources
 
 /** Maintenance micro-benchmark for the manifested table's write paths —
   * the operational twin of [[Bench]] (which times the query surface).
@@ -65,7 +66,7 @@ object MaintBench {
     // 5. IVF index lifecycle: build over the embeddings fixture, append
     //    a re-keyed copy (cost ∝ batch against frozen centroids), one
     //    pruned probe
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Sources.table(spark, sfDir, "embeddings")
     emb.count()
     val idx = s"$base/ivf_index"
     val tIndexBuild = timed {

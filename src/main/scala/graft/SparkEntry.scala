@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{DedupQueries, EvalQueries, EventQueries, MultimodalQueries, NLQueries, PackingQueries, QueryPack, RelationalQueries, RetrievalQueries, SamplingQueries, TextQueries, VectorQueries}
+import graft.sources.Sources
 
 /** Driver contract — see SURVEY.md §7 and the builder prompt.
   *
@@ -25,6 +26,9 @@ object SparkEntry {
     RetrievalQueries,
     NLQueries)
 
+  /** The scale-factor directory the flagship query reads. */
+  private[graft] val EntrySfDir = "/root/testdata/sf0.001"
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's default description (agentic_workflow_transformation
     * .py:318) adapted to the customer table, through the full NL parse →
@@ -32,7 +36,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Engine.run(
       "Filter rows where c_acctbal > 1000 and select columns c_name and c_acctbal.",
-      spark.read.parquet("/root/testdata/sf0.001/customer.parquet"))
+      Sources.table(spark, EntrySfDir, "customer"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.sources.Sources
+
 /** Event-time operators over the `events` table (extension X4): tumbling
   * windows and gap-based sessionization, batch-first with streaming
   * equivalents in [[graft.streaming.EventStreams]].
@@ -26,7 +28,7 @@ object Events {
     // no-op for µs/NTZ fixtures; required at all for TIMESTAMP(NANOS)
     // (Spark's reader otherwise rejects it with [PARQUET_TYPE_ILLEGAL])
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTime(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeEventTime(Sources.table(spark, sfDir, "events"))
   }
 
   /** Dispatch on the physical `ts` type and emit `ts_us` + TimestampType
@@ -161,7 +163,7 @@ object Events {
                 fromUs: Long, toUs: Long): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTime(
-      timeRange(spark.read.parquet(s"$sfDir/events.parquet"), fromUs, toUs))
+      timeRange(Sources.table(spark, sfDir, "events"), fromUs, toUs))
   }
 
   /** Day-partitioned event-log layout: `dt=yyyy-MM-dd` directories

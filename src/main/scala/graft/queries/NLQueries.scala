@@ -932,7 +932,7 @@ object NLQueries extends QueryPack {
     // cell count — no cluster clause → the scaled default).
     "nl47_semantic_dedup" -> ((s: SparkSession, d: String) =>
       Engine.run("Dedup by semantic cosine 0.45.",
-        s.read.parquet(s"$d/embeddings.parquet"))),
+        table(s, d, "embeddings"))),
 
     // Temperature rebalance (x51's operator, key, and seed).
     "nl48_temperature_sample" -> ((s: SparkSession, d: String) =>
@@ -944,8 +944,8 @@ object NLQueries extends QueryPack {
       Engine.run("Keep rows matching urgent on l_orderkey = o_orderkey " +
                  "with a bloom filter and select columns l_orderkey, " +
                  "l_linenumber and l_quantity.",
-        s.read.parquet(s"$d/lineitem.parquet"),
-        Map("urgent" -> s.read.parquet(s"$d/orders.parquet")
+        table(s, d, "lineitem"),
+        Map("urgent" -> table(s, d, "orders")
           .filter(col("o_orderpriority") === "1-URGENT")))),
 
     // Multi-clause pipeline: filter → hash-sample → project, all from one
@@ -987,7 +987,7 @@ object NLQueries extends QueryPack {
                  "l_orderkey, l_linenumber, l_partkey, l_suppkey and zvalue " +
                  "and sort by zvalue, l_orderkey, l_linenumber " +
                  "and keep top 100 rows.",
-                 s.read.parquet(s"$d/lineitem.parquet"))),
+                 table(s, d, "lineitem"))),
 
     // Edit-distance dedup route (x59's threshold and blocking).
     "nl58_dedup_levenshtein" -> ((s: SparkSession, d: String) =>
@@ -1010,7 +1010,7 @@ object NLQueries extends QueryPack {
     "nl49_histogram" -> ((s: SparkSession, d: String) =>
       Engine.run("Histogram o_totalprice by o_orderpriority from 0 to " +
                  "600000 in 20 bins.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
     "nl50_outlier_clip" -> ((s: SparkSession, d: String) =>
       Engine.run("Clip outliers above the 99th percentile of n_chars " +
                  "and select columns doc_id and n_chars.", docs(s, d))),
@@ -1028,37 +1028,37 @@ object NLQueries extends QueryPack {
                  "and rollup by r_name and n_name, " +
                  "and show sum o_totalprice rounded to 2 as revenue " +
                  "and count rows as n_orders.",
-                 s.read.parquet(s"$d/orders.parquet"),
-                 Map("customer" -> s.read.parquet(s"$d/customer.parquet"),
-                     "nation" -> s.read.parquet(s"$d/nation.parquet"),
-                     "region" -> s.read.parquet(s"$d/region.parquet")))),
+                 table(s, d, "orders"),
+                 Map("customer" -> table(s, d, "customer"),
+                     "nation" -> table(s, d, "nation"),
+                     "region" -> table(s, d, "region")))),
 
     // q15's full cube over (status, priority).
     "nl61_cube_orders" -> ((s: SparkSession, d: String) =>
       Engine.run("Cube by o_orderstatus and o_orderpriority, " +
                  "and show count rows as n_orders " +
                  "and sum o_totalprice rounded to 2 as revenue.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q17's pivot with its explicit value list.
     "nl62_pivot_status" -> ((s: SparkSession, d: String) =>
       Engine.run("Pivot count of o_orderstatus values 'F', 'O' and 'P' " +
                  "by o_orderpriority.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q18's pivot → unpivot round trip.
     "nl63_unpivot_status" -> ((s: SparkSession, d: String) =>
       Engine.run("Pivot count of o_orderstatus values 'F', 'O' and 'P' " +
                  "by o_orderpriority, and unpivot F, O and P to " +
                  "o_orderstatus as n_orders.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q4's per-customer window top-3.
     "nl64_window_rank" -> ((s: SparkSession, d: String) =>
       Engine.run("Rank by o_totalprice desc within o_custkey tie by " +
                  "o_orderkey keep top 3, and select columns o_custkey, " +
                  "o_orderkey, o_totalprice and rn.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q20's ntile quartile buckets + per-cell aggregate.
     "nl65_ntile_quartiles" -> ((s: SparkSession, d: String) =>
@@ -1066,12 +1066,12 @@ object NLQueries extends QueryPack {
                  "o_orderkey as quartile, and group by o_orderpriority and " +
                  "quartile, and show count rows as n " +
                  "and sum o_totalprice rounded to 2 as revenue.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q10's union/except — the side tables are themselves built by NL
     // sub-descriptions, so the whole set expression is grammar-reachable.
     "nl66_setops" -> ((s: SparkSession, d: String) => {
-      val cust = s.read.parquet(s"$d/customer.parquet")
+      val cust = table(s, d, "customer")
       val richAuto = Engine.run(
         "Filter rows where c_mktsegment == 'AUTOMOBILE' and c_acctbal > 5000 " +
         "and select columns c_custkey and c_name.", cust)
@@ -1090,7 +1090,7 @@ object NLQueries extends QueryPack {
       Engine.run("Sort by o_totalprice desc and then by o_orderkey, " +
                  "and keep top 10 rows, and select columns o_orderkey, " +
                  "o_custkey and o_totalprice.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q3's broadcast dim join + revenue aggregate.
     "nl68_join_revenue" -> ((s: SparkSession, d: String) =>
@@ -1098,8 +1098,8 @@ object NLQueries extends QueryPack {
                  "and group by c_mktsegment, " +
                  "and show sum o_totalprice rounded to 2 as revenue " +
                  "and count rows as n_orders.",
-                 s.read.parquet(s"$d/orders.parquet"),
-                 Map("customer" -> s.read.parquet(s"$d/customer.parquet")))),
+                 table(s, d, "orders"),
+                 Map("customer" -> table(s, d, "customer")))),
 
     // Bucketed layout write — the pay-the-shuffle-once step, previously
     // spec-only. The result is the READ-BACK of the bucketed managed
@@ -1109,7 +1109,7 @@ object NLQueries extends QueryPack {
     "nl69_bucketed_write" -> ((s: SparkSession, d: String) =>
       Engine.run("Write orders bucketed by o_custkey into 16 buckets " +
                  "as graft_nl_orders_bucketed.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q19's date-part aggregate via the extract clause.
     "nl70_orders_by_month" -> ((s: SparkSession, d: String) =>
@@ -1118,7 +1118,7 @@ object NLQueries extends QueryPack {
                  "and group by order_year and order_month, " +
                  "and show count rows as n_orders " +
                  "and sum o_totalprice rounded to 2 as revenue.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q14's running-revenue ROWS frame.
     "nl71_running_revenue" -> ((s: SparkSession, d: String) =>
@@ -1128,7 +1128,7 @@ object NLQueries extends QueryPack {
                  "as running_revenue, " +
                  "and select columns o_custkey, o_orderkey, order_ms " +
                  "and running_revenue.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q16's trailing-30-day RANGE frame over the derived epoch column.
     "nl72_trailing_revenue" -> ((s: SparkSession, d: String) =>
@@ -1138,7 +1138,7 @@ object NLQueries extends QueryPack {
                  "as trailing_30d_revenue, " +
                  "and select columns o_custkey, o_orderkey, order_ms " +
                  "and trailing_30d_revenue.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q5's pushdown-verified selective scan — pure existing grammar.
     "nl73_filter_pushdown" -> ((s: SparkSession, d: String) =>
@@ -1146,30 +1146,30 @@ object NLQueries extends QueryPack {
                  "l_quantity < 10 and l_discount between 0.02 and 0.08 " +
                  "and select columns l_orderkey, l_partkey, l_quantity, " +
                  "l_discount and l_returnflag.",
-                 s.read.parquet(s"$d/lineitem.parquet"))),
+                 table(s, d, "lineitem"))),
 
     // q7's distinct aggregate via "count distinct".
     "nl74_distinct_agg" -> ((s: SparkSession, d: String) =>
       Engine.run("Group by o_orderstatus and show count distinct " +
                  "o_custkey as n_customers and count rows as n_orders.",
-                 s.read.parquet(s"$d/orders.parquet"))),
+                 table(s, d, "orders"))),
 
     // q9's semi join (parts with sales) via plain keep-matching.
     "nl75_parts_with_sales" -> ((s: SparkSession, d: String) =>
       Engine.run("Keep rows matching lineitem on p_partkey = l_partkey, " +
                  "and select columns p_partkey, p_name and p_retailprice.",
-                 s.read.parquet(s"$d/part.parquet"),
-                 Map("lineitem" -> s.read.parquet(s"$d/lineitem.parquet")))),
+                 table(s, d, "part"),
+                 Map("lineitem" -> table(s, d, "lineitem")))),
 
     // q8's anti join — the big-order side is itself NL-built.
     "nl76_customers_without_orders" -> ((s: SparkSession, d: String) => {
-      val orders = s.read.parquet(s"$d/orders.parquet")
+      val orders = table(s, d, "orders")
       val big = Engine.run(
         "Filter rows where o_totalprice > 300000 and select columns o_custkey.",
         orders)
       Engine.run("Drop rows matching bigorders on c_custkey = o_custkey, " +
                  "and select columns c_custkey and c_name.",
-                 s.read.parquet(s"$d/customer.parquet"),
+                 table(s, d, "customer"),
                  Map("bigorders" -> big))
     }),
 
@@ -1185,7 +1185,7 @@ object NLQueries extends QueryPack {
                  "and average l_quantity rounded to 4 as avg_qty " +
                  "and average l_extendedprice rounded to 4 as avg_price " +
                  "and count rows as count_order.",
-                 s.read.parquet(s"$d/lineitem.parquet"))),
+                 table(s, d, "lineitem"))),
 
     // q6's multi-join revenue rollup-free aggregate, same expression.
     "nl78_multi_join_revenue" -> ((s: SparkSession, d: String) =>
@@ -1197,11 +1197,11 @@ object NLQueries extends QueryPack {
                  "and show sum of l_extendedprice times (1 - l_discount) " +
                  "rounded to 2 as revenue " +
                  "and count rows as n_lineitems.",
-                 s.read.parquet(s"$d/lineitem.parquet"),
-                 Map("orders" -> s.read.parquet(s"$d/orders.parquet"),
-                     "customer" -> s.read.parquet(s"$d/customer.parquet"),
-                     "nation" -> s.read.parquet(s"$d/nation.parquet"),
-                     "region" -> s.read.parquet(s"$d/region.parquet")))),
+                 table(s, d, "lineitem"),
+                 Map("orders" -> table(s, d, "orders"),
+                     "customer" -> table(s, d, "customer"),
+                     "nation" -> table(s, d, "nation"),
+                     "region" -> table(s, d, "region")))),
 
     // q12's sketch-error certification, spoken: the last driver query to
     // gain an NL twin — every driver query now has one.

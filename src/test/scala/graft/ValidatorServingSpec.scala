@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The validator's serving-path opt-out: a TableOp-led plan (index
@@ -15,21 +14,6 @@ class ValidatorServingSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus posts asynchronously; settle before reading
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
 
   test("validate() of a probe-shaped plan triggers zero Spark jobs") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vs").toString

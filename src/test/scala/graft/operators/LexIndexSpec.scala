@@ -630,18 +630,6 @@ class LexIndexSpec extends SparkSpec {
 
   test("hybridServe's vector fetch is batched: Spark job count is " +
        "constant in the query-batch size") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(1000) }
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs.get()
-    }
     val lexP = freshPath()
     LexIndex.build(docsDf, lexP, buckets = 16)
     val ivfP = freshPath()
