@@ -56,7 +56,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object IvfIndex {
 
-  private val ManifestRe = "index-manifest-(\\d{9})\\.txt".r
   private val Header = "graft-ivf-index-manifest-v1"
   private val LegacyCentroidsFile = "centroids.txt"
   private val CentroidsHeader = "graft-ivf-centroids-v1"
@@ -106,6 +105,12 @@ object IvfIndex {
           .filter(_.nonEmpty).map(_.toLong).sorted)
       case _ => sys.error(s"unparseable index segment entry: '$s'")
     }
+
+    /** Per segment, the partitions EVERY entry naming it skips — the
+      * ones no manifest holding those entries reads any more. */
+    private[operators] def skippedByAll(entries: Seq[SegEntry]): Map[String, Set[Long]] =
+      entries.groupBy(_.name)
+        .map { case (n, es) => n -> es.map(_.skip.toSet).reduce(_ intersect _) }
   }
 
   /** One published index state: the segment list AND the quantizer
@@ -128,16 +133,13 @@ object IvfIndex {
   private def fs(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def dir(spark: SparkSession, root: Path): VersionedDir =
+    new VersionedDir(fs(spark, root), root, "index-manifest")
+
   // ----------------------------------------------------------- manifest
 
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return Seq.empty
-    f.listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }.sorted.toSeq
-  }
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    dir(spark, new Path(path)).versions
 
   /** (version, segment dir names) of the newest manifest. */
   def readManifest(spark: SparkSession, path: String): (Long, Seq[String]) = {
@@ -158,13 +160,7 @@ object IvfIndex {
   private def readManifestAt(spark: SparkSession, path: String,
                              v: Long): IndexManifest = {
     val root = new Path(path)
-    val f = fs(spark, root)
-    val in = f.open(new Path(root, f"index-manifest-$v%09d.txt"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val lines = text.linesIterator.toList
-    require(lines.headOption.contains(Header), s"$path is not a $Header index")
-    val entries = lines.drop(1).filter(_.nonEmpty)
+    val entries = dir(spark, root).lines(v, Header)
     val cents = entries.collectFirst { case s if s.startsWith("centroids=") =>
       s.stripPrefix("centroids=") }
     val pq = entries.collectFirst { case s if s.startsWith("pq=") =>
@@ -176,7 +172,8 @@ object IvfIndex {
       s.startsWith("pq=") || s.startsWith("sq8=") || s.startsWith("attrs="))
     IndexManifest(v, segs.map(SegEntry.parse),
       cents.getOrElse(LegacyCentroidsFile),
-      pq.orElse(if (cents.isEmpty && f.exists(new Path(root, LegacyPqFile)))
+      pq.orElse(if (cents.isEmpty &&
+                    fs(spark, root).exists(new Path(root, LegacyPqFile)))
                   Some(LegacyPqFile) else None),
       sq8, attrs)
   }
@@ -186,25 +183,10 @@ object IvfIndex {
                       pqFile: Option[String],
                       sq8: Boolean = false,
                       attrsDdl: Option[String] = None): Unit = {
-    val f = fs(spark, root)
-    val target = new Path(root, f"index-manifest-$version%09d.txt")
-    if (f.exists(target)) throw ConcurrentWriteException(
-      s"index manifest version $version already exists under $root")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s".index-manifest-$version-$token.tmp")
-    val out = f.create(tmp, true)
     val quant = (s"centroids=$centroidsFile" +: pqFile.map(p => s"pq=$p").toSeq) ++
       (if (sq8) Seq("sq8=1") else Nil) ++
       attrsDdl.map(d => s"attrs=$d").toSeq
-    try out.write((Header +: (quant ++ entries.map(_.render)))
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // no-replace by construction (FsAtomic) — the exists() pre-check
-    // alone is a racy fast-path, not the guarantee
-    if (!FsAtomic.renameNoReplace(f, tmp, target)) {
-      f.delete(tmp, false)
-      throw ConcurrentWriteException(s"publishing $target lost a race")
-    }
+    dir(spark, root).publish(version, Header +: (quant ++ entries.map(_.render)))
   }
 
   // ---------------------------------------------------------- centroids
@@ -447,48 +429,23 @@ object IvfIndex {
   def append(vectors: DataFrame, path: String, idCol: String = "vec_id",
              vecCol: String = "embedding",
              batchTag: Option[String] = None): Long = {
-    batchTag.foreach(t => require(t.nonEmpty && t.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batch tags are [A-Za-z0-9_-]+, got '$t'"))
+    batchTag.foreach(VersionedDir.requireName("batch tags", _))
     val spark = vectors.sparkSession
     val root = new Path(path)
     val m0 = readManifestFull(spark, path)
     val cents = readCentroidsFile(spark, root, m0.centroidsFile)
     val pqCb = m0.pqFile.map(readPqFile(spark, root, _)) // frozen together
-    batchTag.foreach { t =>
-      if (m0.segments.exists(_.endsWith(s"-b$t"))) return m0.version
-    }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val suffix = batchTag.map(t => s"-b$t").getOrElse("")
-    val seg = s"seg-$token$suffix"
+    if (batchTag.exists(VersionedDir.delivered(m0.segments, _))) return m0.version
+    val seg = VersionedDir.segmentName(batchTag)
     writeSegment(spark, root, seg, vectors, cents, idCol, vecCol, pqCb, m0.sq8,
                  m0.attrs.fieldNames.toSeq)
-    var m = m0
-    while (true) {
-      try {
-        publish(spark, root, m.version + 1, m.entries :+ SegEntry(seg),
-                m.centroidsFile, m.pqFile, m.sq8, m.attrsDdl)
-        return m.version + 1
-      } catch {
-        case _: ConcurrentWriteException =>
-          m = readManifestFull(spark, path)
-          if (m.centroidsFile != m0.centroidsFile) {
-            fs(spark, root).delete(new Path(root, seg), true)
-            sys.error(s"append to $path lost a race to a REBUILD — the " +
-              "segment was assigned under a replaced quantizer; re-append " +
-              "against the new index")
-          }
-          batchTag.foreach { t =>
-            if (m.segments.exists(_.endsWith(s"-b$t"))) {
-              // the racer delivered this very batch (a retried tagged
-              // append) — drop our duplicate segment and converge
-              fs(spark, root).delete(new Path(root, seg), true)
-              return m.version
-            }
-          }
-      }
+    // the quantizer is the layout a rebuild replaces
+    dir(spark, root).publishSegment(seg, batchTag, m0,
+        () => readManifestFull(spark, path))(
+        _.version, _.segments, _.centroidsFile) { m =>
+      publish(spark, root, m.version + 1, m.entries :+ SegEntry(seg),
+              m.centroidsFile, m.pqFile, m.sq8, m.attrsDdl)
     }
-    sys.error("unreachable")
   }
 
   /** Streaming ingest twin: each micro-batch appends one batch-tagged
@@ -757,8 +714,7 @@ object IvfIndex {
     val eraseEntries = affected.toSeq.sortBy(_._1).map { case (segName, cells) =>
       val e = m.entries.find(_.name == segName).getOrElse(
         sys.error(s"located segment $segName vanished from the manifest"))
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val newSeg = s"seg-$token-e"
+      val newSeg = s"seg-${VersionedDir.token()}-e"
       // partition filter first: the rewrite READS only the containing
       // cells' files (pruned at listing), then drops the erased rows —
       // NULL-predicate rows survive (coalesce, not bare negation)
@@ -790,34 +746,24 @@ object IvfIndex {
     }
   }
 
-  private def manifestFile(v: Long): String = f"index-manifest-$v%09d.txt"
-
-  /** Reader pins — the shared [[Pins]] protocol ([[ManifestedLog.pin]]'s
-    * contract, index side): a long-running reader (an offline
-    * evaluation replaying one index version, a serving fleet draining
-    * on a pinned snapshot) pins its version BEFORE the long read, and
-    * [[vacuum]] keeps every pinned manifest (and the segments,
-    * centroids, and PQ codebooks it references) until unpinned. The
-    * pin-vs-vacuum race resolves by the symmetric handshake in
-    * Pins.scala — a pin either protects its version or fails loudly at
-    * pin time, never silently protects nothing. */
-  def pin(spark: SparkSession, path: String, name: String, version: Long): Long = {
-    val root = new Path(path)
-    Pins.pin(fs(spark, root), root, name, version, versions(spark, path),
-      manifestFile)
-  }
+  /** Reader pins — the [[VersionedDir]] handshake
+    * ([[ManifestedLog.pin]]'s contract, index side): a long-running
+    * reader (an offline evaluation replaying one index version, a
+    * serving fleet draining on a pinned snapshot) pins its version
+    * BEFORE the long read, and [[vacuum]] keeps every pinned manifest
+    * (and the segments, centroids, and PQ codebooks it references)
+    * until unpinned. A pin either protects its version or fails loudly
+    * at pin time, never silently protects nothing. */
+  def pin(spark: SparkSession, path: String, name: String, version: Long): Long =
+    dir(spark, new Path(path)).pin(name, version)
 
   /** Drop the named pin; true if it existed. */
-  def unpin(spark: SparkSession, path: String, name: String): Boolean = {
-    val root = new Path(path)
-    Pins.unpin(fs(spark, root), root, name)
-  }
+  def unpin(spark: SparkSession, path: String, name: String): Boolean =
+    dir(spark, new Path(path)).unpin(name)
 
   /** All registered pins, name → version. */
-  def pins(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new Path(path)
-    Pins.pins(fs(spark, root), root)
-  }
+  def pins(spark: SparkSession, path: String): Map[String, Long] =
+    dir(spark, new Path(path)).pins
 
   /** Drop superseded manifests, the segments and quantizer files no
     * retained manifest references, and — completing [[deleteByKey]]'s
@@ -831,72 +777,25 @@ object IvfIndex {
     * `orphanMinAgeMs` guards entries NO manifest has EVER referenced —
     * exactly what an in-flight [[append]]'s token-named segment, a
     * mid-rebuild's quantizer files, and `.index-manifest-*.tmp` staging
-    * are until their publish. A vacuum racing live [[ingest]] would
-    * otherwise delete bytes a manifest is about to reference; with the
-    * guard, never-referenced entries reclaim only once older than the
-    * cutoff, while entries a now-deleted manifest DID reference are
-    * superseded published data and reclaim immediately. Sweeps beside
+    * are until their publish ([[VersionedDir.vacuum]]). Sweeps beside
     * live ingest should set it above the longest append (e.g. 1h); the
     * 0 default keeps eager cleanup for single-writer use. */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1,
              orphanMinAgeMs: Long = 0L): Long = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    require(orphanMinAgeMs >= 0L, s"orphanMinAgeMs must be >= 0, got $orphanMinAgeMs")
     val root = new Path(path)
-    val f = fs(spark, root)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no index manifest under $path")
-    def refsOf(m: IndexManifest): Set[String] =
-      m.segments.toSet + m.centroidsFile ++ m.pqFile
-    // retention = newest K ∪ pinned (a long-running reader's pinned
-    // probe version survives maintenance — the [[ManifestedLog]]
-    // contract, index side); pins on already-gone versions protect
-    // nothing (pin() fails loudly at creation, where the reader can
-    // still react)
-    val pinnedKept = Pins.pins(f, root).values.filter(vs.contains).toSet
-    val kept0 = vs.takeRight(keepVersions).toSet ++ pinnedKept
-    // prefetch every manifest's refs BEFORE any delete, so live can be
-    // recomputed from whichever manifests actually survive the sweep
-    val manifests = vs.map(v => v -> readManifestAt(spark, path, v)).toMap
-    // manifest sweep with the pin handshake (trash-rename, re-read
-    // pins, restore or drop — no interleaving leaves a pin useless)
-    val (alsoKept, removedManifests) = Pins.sweepManifests(f, root,
-      vs.filterNot(kept0.contains), manifestFile)
-    val kept = kept0 ++ alsoKept
-    var removed = removedManifests
-    val live = kept.flatMap(v => refsOf(manifests(v)))
-    // the complement of ever-referenced is where an in-flight writer
-    // may still be staging — that's what the age guard protects
-    val referencedEver = vs.flatMap(v => refsOf(manifests(v))).toSet
-    val orphanCutoffMs = System.currentTimeMillis() - orphanMinAgeMs
-    def orphanOldEnough(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      orphanMinAgeMs == 0L || st.getModificationTime < orphanCutoffMs
-    def sweepable(name: String, st: org.apache.hadoop.fs.FileStatus): Boolean =
-      !live.contains(name) &&
-        (referencedEver.contains(name) || orphanOldEnough(st))
-    f.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      name match {
-        case ManifestRe(_) => () // handled by the pin-aware sweep above
-        case _ if name.startsWith("seg-") && sweepable(name, st) =>
-          f.delete(st.getPath, true); removed += 1
-        case _ if (name.startsWith("centroids-") || name.startsWith("pq-")) &&
-                  sweepable(name, st) =>
-          f.delete(st.getPath, false); removed += 1
-        case _ if name.startsWith(".") && orphanOldEnough(st) =>
-          f.delete(st.getPath, true); removed += 1
-        case _ => ()
-      }
-    }
+    val (kept, swept) = dir(spark, root).vacuum(keepVersions, orphanMinAgeMs)(
+      readManifestAt(spark, path, _))(
+      m => m.segments.toSet + m.centroidsFile ++ m.pqFile,
+      n => n.startsWith("seg-") || n.startsWith("centroids-") ||
+        n.startsWith("pq-"))
     // physical erase completion: a live segment's cell dir reclaims when
     // EVERY kept manifest referencing the segment skips that cell
-    val keptEntries = kept.toSeq.flatMap(v => manifests(v).entries)
-    val erasedCells: Map[String, Set[Long]] = keptEntries.groupBy(_.name)
-      .map { case (n, es) => n -> es.map(_.skip.toSet).reduce(_ intersect _) }
-    erasedCells.foreach { case (seg, cells) =>
+    val f = fs(spark, root)
+    var removed = swept
+    SegEntry.skippedByAll(kept.flatMap(_.entries)).foreach { case (seg, cells) =>
       cells.foreach { c =>
-        val dir = new Path(root, s"$seg/cell=$c")
-        if (f.exists(dir)) { f.delete(dir, true); removed += 1 }
+        val cellDir = new Path(root, s"$seg/cell=$c")
+        if (f.exists(cellDir)) { f.delete(cellDir, true); removed += 1 }
       }
     }
     removed

@@ -39,7 +39,7 @@ import graft.operators.IvfIndex.SegEntry
   *    (`lex-manifest-<v>.txt`, newest wins): append publishes one new
   *    segment + summed stats, a crash anywhere leaves the old index
   *    serving, and a racing appender loses the rename loudly
-  *    ([[ManifestedLog.ConcurrentWriteException]]) and retries against
+  *    ([[ConcurrentWriteException]]) and retries against
   *    the winner;
   *  - the full maintenance lifecycle of the vector index: [[compact]]
   *    folds append segments into one (content-invariant, sync cursors
@@ -59,7 +59,6 @@ import graft.operators.IvfIndex.SegEntry
   */
 object LexIndex {
 
-  private val ManifestRe = "lex-manifest-(\\d{9})\\.txt".r
   private val Header = "graft-lex-index-manifest-v1"
 
   /** Column names the postings layout owns; attribute columns may not
@@ -131,6 +130,9 @@ object LexIndex {
   private def fs(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def dir(spark: SparkSession, root: Path): VersionedDir =
+    new VersionedDir(fs(spark, root), root, "lex-manifest")
+
   /** Authoritative read schema: attribute columns sit between the
     * counts and the partition column; `tb` is declared INT here so the
     * partition column never wraps in a cast (which would block
@@ -168,14 +170,8 @@ object LexIndex {
 
   // ----------------------------------------------------------- manifest
 
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return Seq.empty
-    f.listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }.sorted.toSeq
-  }
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    dir(spark, new Path(path)).versions
 
   def readManifest(spark: SparkSession, path: String): LexManifest = {
     val v = versions(spark, path).lastOption.getOrElse(
@@ -185,14 +181,7 @@ object LexIndex {
 
   private def readManifestAt(spark: SparkSession, path: String,
                              v: Long): LexManifest = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    val in = f.open(new Path(root, f"lex-manifest-$v%09d.txt"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val lines = text.linesIterator.toList
-    require(lines.headOption.contains(Header), s"$path is not a $Header index")
-    val entries = lines.drop(1).filter(_.nonEmpty)
+    val entries = dir(spark, new Path(path)).lines(v, Header)
     val stats = entries.collectFirst { case s if s.startsWith("stats=") =>
       s.stripPrefix("stats=").split(',') match {
         case Array(n, sd) => (n.toLong, sd.toLong)
@@ -227,31 +216,16 @@ object LexIndex {
                 attrs, positional, dfSegs, fields, fieldSums)
   }
 
-  private def publish(spark: SparkSession, root: Path, m: LexManifest): Unit = {
-    val f = fs(spark, root)
-    val target = new Path(root, f"lex-manifest-${m.version}%09d.txt")
-    if (f.exists(target)) throw ConcurrentWriteException(
-      s"lex manifest version ${m.version} already exists under $root")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s".lex-manifest-${m.version}-$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(
-      (Seq(Header, s"stats=${m.nDocs},${m.sumDl}", s"buckets=${m.buckets}") ++
+  private def publish(spark: SparkSession, root: Path, m: LexManifest): Unit =
+    dir(spark, root).publish(m.version,
+      Seq(Header, s"stats=${m.nDocs},${m.sumDl}", s"buckets=${m.buckets}") ++
         m.attrsDdl.map(d => s"attrs=$d").toSeq ++
         (if (m.positional) Seq("positions=1") else Nil) ++
         (if (m.dfSegs.nonEmpty)
            Seq(s"df=${m.dfSegs.toSeq.sorted.mkString(",")}") else Nil) ++
         m.fields.map(fs => s"fields=${fs.mkString(",")}").toSeq ++
         (if (m.fielded) Seq(s"fstats=${m.fieldSums.mkString(",")}") else Nil) ++
-        m.entries.map(_.render)).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // no-replace by construction (FsAtomic) — the exists() pre-check
-    // alone is a racy fast-path, not the guarantee
-    if (!FsAtomic.renameNoReplace(f, tmp, target)) {
-      f.delete(tmp, false)
-      throw ConcurrentWriteException(s"publishing $target lost a race")
-    }
-  }
+        m.entries.map(_.render))
 
   // ------------------------------------------------------------- build
 
@@ -553,18 +527,12 @@ object LexIndex {
   def append(docs: DataFrame, path: String,
              idCol: String = "doc_id", textCol: String = "text",
              batchTag: Option[String] = None): Long = {
-    batchTag.foreach(t => require(t.nonEmpty && t.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batch tags are [A-Za-z0-9_-]+, got '$t'"))
+    batchTag.foreach(VersionedDir.requireName("batch tags", _))
     val spark = docs.sparkSession
     val root = new Path(path)
     val m0 = readManifest(spark, path)
-    batchTag.foreach { t =>
-      if (m0.segments.exists(_.endsWith(s"-b$t"))) return m0.version
-    }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val suffix = batchTag.map(t => s"-b$t").getOrElse("")
-    val seg = s"seg-$token$suffix"
+    if (batchTag.exists(VersionedDir.delivered(m0.segments, _))) return m0.version
+    val seg = VersionedDir.segmentName(batchTag)
     writeSegment(spark, root, seg,
       m0.fields match {
         case Some(fs) =>
@@ -580,38 +548,16 @@ object LexIndex {
       case None =>
         val (a, b) = statsOf(docs, idCol, textCol); (a, b, Nil)
     }
-    var m = m0
-    while (true) {
-      try {
-        publish(spark, root, LexManifest(m.version + 1,
-          m.entries :+ SegEntry(seg), m.buckets,
-          m.nDocs + n, m.sumDl + sd, m.attrsDdl, m.positional,
-          m.dfSegs + seg, m.fields,
-          m.fieldSums.zipAll(sums, 0L, 0L).map { case (a, b) => a + b }))
-        return m.version + 1
-      } catch {
-        case _: ConcurrentWriteException =>
-          m = readManifest(spark, path)
-          if (m.buckets != m0.buckets || m.attrsDdl != m0.attrsDdl ||
-              m.positional != m0.positional || m.fields != m0.fields) {
-            // a REBUILD won the race: our segment is hashed under the
-            // old spread/attrs — never publish it (orphan reclaimed now)
-            fs(spark, root).delete(new Path(root, seg), true)
-            sys.error(s"append to $path lost a race to a REBUILD — the " +
-              "segment was bucketed under a replaced layout; re-append " +
-              "against the new index")
-          }
-          batchTag.foreach { t =>
-            if (m.segments.exists(_.endsWith(s"-b$t"))) {
-              // the racer delivered this very batch (a retried tagged
-              // append) — drop our duplicate segment and converge
-              fs(spark, root).delete(new Path(root, seg), true)
-              return m.version
-            }
-          }
-      }
+    // a rebuild may replace the bucket spread, attrs, positions, fields
+    dir(spark, root).publishSegment(seg, batchTag, m0,
+        () => readManifest(spark, path))(_.version, _.segments,
+        m => (m.buckets, m.attrsDdl, m.positional, m.fields)) { m =>
+      publish(spark, root, LexManifest(m.version + 1,
+        m.entries :+ SegEntry(seg), m.buckets,
+        m.nDocs + n, m.sumDl + sd, m.attrsDdl, m.positional,
+        m.dfSegs + seg, m.fields,
+        m.fieldSums.zipAll(sums, 0L, 0L).map { case (a, b) => a + b }))
     }
-    sys.error("unreachable")
   }
 
   /** Streaming ingest twin: each micro-batch appends one batch-tagged
@@ -830,8 +776,7 @@ object LexIndex {
     val eraseEntries = affected.toSeq.sortBy(_._1).map { case (segName, bks) =>
       val e = m.entries.find(_.name == segName).getOrElse(
         sys.error(s"located segment $segName vanished from the manifest"))
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val newSeg = s"seg-$token-e"
+      val newSeg = s"seg-${VersionedDir.token()}-e"
       // partition filter first: the rewrite READS only the containing
       // buckets' files (pruned at listing), then drops the erased rows —
       // NULL-predicate rows survive (coalesce, not bare negation)
@@ -865,32 +810,22 @@ object LexIndex {
     }
   }
 
-  private def manifestFile(v: Long): String = f"lex-manifest-$v%09d.txt"
-
-  /** Reader pins — the shared [[Pins]] protocol ([[ManifestedLog.pin]]'s
-    * contract, postings side): a long-running reader (a retrieval
-    * evaluation replaying one index version) pins BEFORE the long read,
-    * and [[vacuum]] keeps every pinned manifest with its segments until
-    * unpinned. The pin-vs-vacuum race resolves by the symmetric
-    * handshake in Pins.scala — a pin either protects its version or
-    * fails loudly at pin time. */
-  def pin(spark: SparkSession, path: String, name: String, version: Long): Long = {
-    val root = new Path(path)
-    Pins.pin(fs(spark, root), root, name, version, versions(spark, path),
-      manifestFile)
-  }
+  /** Reader pins — the [[VersionedDir]] handshake
+    * ([[ManifestedLog.pin]]'s contract, postings side): a long-running
+    * reader (a retrieval evaluation replaying one index version) pins
+    * BEFORE the long read, and [[vacuum]] keeps every pinned manifest
+    * with its segments until unpinned. A pin either protects its
+    * version or fails loudly at pin time. */
+  def pin(spark: SparkSession, path: String, name: String, version: Long): Long =
+    dir(spark, new Path(path)).pin(name, version)
 
   /** Drop the named pin; true if it existed. */
-  def unpin(spark: SparkSession, path: String, name: String): Boolean = {
-    val root = new Path(path)
-    Pins.unpin(fs(spark, root), root, name)
-  }
+  def unpin(spark: SparkSession, path: String, name: String): Boolean =
+    dir(spark, new Path(path)).unpin(name)
 
   /** All registered pins, name → version. */
-  def pins(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new Path(path)
-    Pins.pins(fs(spark, root), root)
-  }
+  def pins(spark: SparkSession, path: String): Map[String, Long] =
+    dir(spark, new Path(path)).pins
 
   /** Drop superseded manifests, the segments no retained manifest
     * references, and — completing [[deleteByKey]]'s physical erasure —
@@ -905,49 +840,17 @@ object LexIndex {
     * published). */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1,
              orphanMinAgeMs: Long = 0L): Long = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    require(orphanMinAgeMs >= 0L, s"orphanMinAgeMs must be >= 0, got $orphanMinAgeMs")
     val root = new Path(path)
-    val f = fs(spark, root)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no lex manifest under $path")
-    val pinnedKept = Pins.pins(f, root).values.filter(vs.contains).toSet
-    val kept0 = vs.takeRight(keepVersions).toSet ++ pinnedKept
-    // prefetch refs BEFORE any delete, so live recomputes from the
-    // manifests that actually survive the pin-aware sweep
-    val manifests = vs.map(v => v -> readManifestAt(spark, path, v)).toMap
-    val (alsoKept, removedManifests) = Pins.sweepManifests(f, root,
-      vs.filterNot(kept0.contains), manifestFile)
-    val kept = kept0 ++ alsoKept
-    var removed = removedManifests
-    val live = kept.flatMap(v => manifests(v).segments)
-    val referencedEver = vs.flatMap(v => manifests(v).segments).toSet
-    val orphanCutoffMs = System.currentTimeMillis() - orphanMinAgeMs
-    def orphanOldEnough(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      orphanMinAgeMs == 0L || st.getModificationTime < orphanCutoffMs
-    def sweepable(name: String, st: org.apache.hadoop.fs.FileStatus): Boolean =
-      !live.contains(name) &&
-        (referencedEver.contains(name) || orphanOldEnough(st))
-    f.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      name match {
-        case ManifestRe(_) => () // handled by the pin-aware sweep above
-        case _ if name.startsWith("seg-") && sweepable(name, st) =>
-          f.delete(st.getPath, true); removed += 1
-        case _ if name.startsWith(".") && orphanOldEnough(st) =>
-          f.delete(st.getPath, true); removed += 1
-        case _ => ()
-      }
-    }
+    val (kept, swept) = dir(spark, root).vacuum(keepVersions, orphanMinAgeMs)(
+      readManifestAt(spark, path, _))(_.segments, _.startsWith("seg-"))
     // physical erase completion: a live segment's bucket dir reclaims
     // when EVERY kept manifest referencing the segment skips it
-    val keptEntries = kept.toSeq.flatMap(v => manifests(v).entries)
-    val erasedBuckets: Map[String, Set[Long]] = keptEntries.groupBy(_.name)
-      .map { case (n, es) => n -> es.map(_.skip.toSet).reduce(_ intersect _) }
-    erasedBuckets.foreach { case (seg, bks) =>
+    val f = fs(spark, root)
+    var removed = swept
+    SegEntry.skippedByAll(kept.flatMap(_.entries)).foreach { case (seg, bks) =>
       bks.foreach { b =>
-        val dir = new Path(root, s"$seg/tb=$b")
-        if (f.exists(dir)) { f.delete(dir, true); removed += 1 }
+        val bucketDir = new Path(root, s"$seg/tb=$b")
+        if (f.exists(bucketDir)) { f.delete(bucketDir, true); removed += 1 }
         // the bucket's df-sidecar statistics go with it (readers already
         // exclude skipped buckets, so this is hygiene, not correctness).
         // Sidecar deletions do NOT increment the returned count — it

@@ -40,20 +40,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * day's directory listing, which [[loadRange]] only does for days that
   * survive pruning.
   */
-/** A concurrent writer published the manifest version this writer was
-  * about to claim. [[ManifestedLog.append]] catches it and retries from
-  * the re-read manifest (bounded attempts, exactly-once content);
-  * compaction and vacuum surface it — they run from the single
-  * scheduled [[ManifestedLog.maintain]] sweep by contract, so a
-  * collision there is a deployment error to fail loudly on, not a race
-  * to absorb. */
-final case class ConcurrentWriteException(msg: String)
-    extends RuntimeException(msg)
-
 object ManifestedLog {
 
   private val Header = "graft-event-log-manifest-v1"
-  private val ManifestRe = "manifest-(\\d{9})\\.txt".r
 
   // Per-file statistics sidecars (`_stats.txt`: ts bounds + key Blooms)
   // live in [[Sidecars]] — shared with [[SnapshotTable]]. At 100 TB the
@@ -72,6 +61,11 @@ object ManifestedLog {
 
   private def fs(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def dir(spark: SparkSession, path: String): VersionedDir = {
+    val root = new Path(path)
+    new VersionedDir(fs(spark, root), root, "manifest")
+  }
 
   /** All table writes force INT64-micros timestamps: Spark's default
     * INT96 encoding ships no column statistics, which would void both
@@ -102,12 +96,8 @@ object ManifestedLog {
 
   /** All manifest versions still on disk, ascending — the table's
     * retained history ([[vacuum]] trims it to the newest). */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new Path(path)
-    fs(spark, root).listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }.sorted.toSeq
-  }
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    dir(spark, path).versions
 
   /** Day map of a SPECIFIC retained manifest version — time travel.
     * Versions are immutable once published and their data directories
@@ -117,14 +107,12 @@ object ManifestedLog {
     * claim must never silently degrade to "newest". */
   def readManifestAt(spark: SparkSession, path: String,
                      version: Long): Map[String, String] = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    val target = new Path(root, f"manifest-$version%09d.txt")
-    if (!f.exists(target)) sys.error(
+    val d = dir(spark, path)
+    if (!d.exists(version)) sys.error(
       s"manifest version $version of $path is not retained " +
-        s"(have: ${versions(spark, path).mkString(", ")}) — vacuumed history " +
+        s"(have: ${d.versions.mkString(", ")}) — vacuumed history " +
         "cannot be time-traveled to")
-    parseManifest(f, target)
+    parseManifest(d, version).days
   }
 
   /** Full read of a pinned version (time travel). */
@@ -141,14 +129,8 @@ object ManifestedLog {
     * the state [[append]] bootstraps from. */
   def readManifestOpt(spark: SparkSession,
                       path: String): Option[(Long, Map[String, String])] = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return None
-    f.listStatus(root).map(_.getPath.getName).collect {
-      case name @ ManifestRe(v) => (v.toLong, name)
-    }.sortBy(_._1).lastOption.map { case (v, name) =>
-      (v, parseManifest(f, new Path(root, name)))
-    }
+    val d = dir(spark, path)
+    d.versions.lastOption.map(v => (v, parseManifest(d, v).days))
   }
 
   /** A parsed manifest: the day → directory map plus the table schema.
@@ -160,16 +142,8 @@ object ManifestedLog {
   private final case class Manifest(days: Map[String, String],
                                     schema: Option[StructType])
 
-  private def parseManifest(f: FileSystem, target: Path): Map[String, String] =
-    parseManifestFull(f, target).days
-
-  private def parseManifestFull(f: FileSystem, target: Path): Manifest = {
-    val in = f.open(target)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val lines = text.linesIterator.toList
-    require(lines.headOption.contains(Header), s"$target is not a $Header file")
-    val (meta, dayLines) = lines.drop(1).filter(_.nonEmpty).partition(_.startsWith("#"))
+  private def parseManifest(d: VersionedDir, v: Long): Manifest = {
+    val (meta, dayLines) = d.lines(v, Header).partition(_.startsWith("#"))
     val schema = meta.collectFirst {
       case l if l.startsWith("#schema\t") =>
         org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema\t"))
@@ -178,53 +152,21 @@ object ManifestedLog {
     Manifest(dayLines.map { l =>
       l.split('\t') match {
         case Array(day, dir) => day -> dir
-        case _ => sys.error(s"malformed manifest line in $target: '$l'")
+        case _ => sys.error(s"malformed manifest line in ${d.file(v)}: '$l'")
       }
     }.toMap, schema)
   }
 
-  /** Publish `days` as manifest version `version` — atomic: the content
-    * lands under a WRITER-UNIQUE dot-tmp name and renames to a target
-    * path that never existed. The tmp must be unique per call: two
-    * racers claiming the same version would otherwise share a tmp path,
-    * and the loser's content could overwrite the winner's tmp just
-    * before the winner's rename — publishing the LOSER's day map under
-    * the winner's success. The rename itself is the commit: a target
-    * that already exists (either before the write or at rename time)
-    * means a concurrent writer won — [[ConcurrentWriteException]],
-    * which [[append]] absorbs by retrying from the new manifest. */
+  /** Publish `days` as manifest version `version` — atomically, through
+    * [[VersionedDir.publish]]: a version a concurrent writer already
+    * holds throws [[ConcurrentWriteException]], which [[append]] absorbs
+    * by retrying from the new manifest. */
   private def publish(spark: SparkSession, path: String, version: Long,
                       days: Map[String, String],
-                      schema: Option[StructType]): Unit = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    val target = new Path(root, f"manifest-$version%09d.txt")
-    def lost(): Nothing = throw ConcurrentWriteException(
-      s"manifest version $version already exists under $path — a " +
-        "concurrent writer won the race")
-    if (f.exists(target)) lost()
-    val tmp = new Path(root, s".manifest-$version-${writerToken()}.tmp")
-    val out = f.create(tmp, true)
-    val schemaLines = schema.map(s => s"#schema\t${s.json}").toSeq
-    try out.write((Header +: (schemaLines ++ days.toSeq.sortBy(_._1).map {
-      case (d, dir) => s"$d\t$dir"
-    })).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // no-replace by construction (FsAtomic), not by the exists()
-    // pre-check: two racers passing the check together must still
-    // produce exactly one winner, or an append is silently lost
-    if (!FsAtomic.renameNoReplace(f, tmp, target)) {
-      f.delete(tmp, false)
-      lost()
-    }
-  }
-
-  /** 8-hex uniqueness token for writer-private paths (staged append day
-    * directories, manifest tmp files) — what makes two concurrent
-    * writers' staged artifacts disjoint BY CONSTRUCTION, so the only
-    * contended operation left is the atomic manifest rename. */
-  private def writerToken(): String =
-    java.util.UUID.randomUUID().toString.take(8)
+                      schema: Option[StructType]): Unit =
+    dir(spark, path).publish(version, Header +:
+      (schema.map(s => s"#schema\t${s.json}").toSeq ++
+        days.toSeq.sortBy(_._1).map { case (day, name) => s"$day\t$name" }))
 
   /** Logical version of a day directory name
     * `dt=<day>.v<n>[-<token>]` — append-written dirs carry the writer
@@ -237,12 +179,10 @@ object ManifestedLog {
     * read by footer inference instead. */
   def readSchemaAt(spark: SparkSession, path: String,
                    version: Long): Option[StructType] = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    val target = new Path(root, f"manifest-$version%09d.txt")
-    if (!f.exists(target)) sys.error(
+    val d = dir(spark, path)
+    if (!d.exists(version)) sys.error(
       s"manifest version $version of $path is not retained")
-    parseManifestFull(f, target).schema
+    parseManifest(d, version).schema
   }
 
   def readSchema(spark: SparkSession, path: String): Option[StructType] = {
@@ -688,7 +628,7 @@ object ManifestedLog {
 
     // every dir this attempt writes carries the attempt's token, so a
     // racing appender can never overwrite it; a lost race deletes them
-    val token = writerToken()
+    val token = VersionedDir.token()
     def nextDirName(day: String): String = days.get(day) match {
       case Some(cur) => s"dt=$day.v${dirVersion(cur) + 1}-$token"
       case None => s"dt=$day.v1-$token"
@@ -980,30 +920,20 @@ object ManifestedLog {
   // manifests themselves.
   // ------------------------------------------------------------------
 
-  private def manifestFile(v: Long): String = f"manifest-$v%09d.txt"
-
   /** Register (or move) the named pin onto a RETAINED version — the
-    * shared [[Pins]] protocol (publish-then-verify half of the
-    * pin-vs-vacuum handshake; see Pins.scala for the full argument).
-    * Returns the pinned version; fails LOUDLY if a racing sweep already
-    * reclaimed it. */
-  def pin(spark: SparkSession, path: String, name: String, version: Long): Long = {
-    val root = new Path(path)
-    Pins.pin(fs(spark, root), root, name, version, versions(spark, path),
-      manifestFile)
-  }
+    * publish-then-verify half of [[VersionedDir]]'s pin-vs-vacuum
+    * handshake. Returns the pinned version; fails LOUDLY if a racing
+    * sweep already reclaimed it. */
+  def pin(spark: SparkSession, path: String, name: String, version: Long): Long =
+    dir(spark, path).pin(name, version)
 
   /** Drop the named pin; true if it existed. */
-  def unpin(spark: SparkSession, path: String, name: String): Boolean = {
-    val root = new Path(path)
-    Pins.unpin(fs(spark, root), root, name)
-  }
+  def unpin(spark: SparkSession, path: String, name: String): Boolean =
+    dir(spark, path).unpin(name)
 
   /** All registered pins, name → version. */
-  def pins(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new Path(path)
-    Pins.pins(fs(spark, root), root)
-  }
+  def pins(spark: SparkSession, path: String): Map[String, Long] =
+    dir(spark, path).pins
 
   /** Delete data directories no RETAINED manifest references, manifests
     * older than the retention window, and dot-tmp leftovers. Retention
@@ -1043,57 +973,14 @@ object ManifestedLog {
     * use and tests. */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1,
              minAgeMs: Long = 0L, orphanMinAgeMs: Long = 0L): Long = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
     require(minAgeMs >= 0L, s"minAgeMs must be >= 0, got $minAgeMs")
-    require(orphanMinAgeMs >= 0L, s"orphanMinAgeMs must be >= 0, got $orphanMinAgeMs")
-    val root = new Path(path)
-    val f = fs(spark, root)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no manifest under $path — not a manifested event log")
-    // pins referencing already-gone versions (pinned after an older
-    // vacuum raced them out) protect nothing — the pin() path fails
-    // loudly at creation, which is where the reader can still react
-    val pinnedKept = pins(spark, path).values.filter(vs.contains).toSet
-    val nowMs = System.currentTimeMillis()
-    val cutoffMs = nowMs - minAgeMs
-    def youngerThanCutoff(v: Long): Boolean = minAgeMs > 0L &&
-      f.getFileStatus(new Path(root, f"manifest-$v%09d.txt"))
-        .getModificationTime > cutoffMs
-    val kept = (vs.takeRight(keepVersions).toSet ++ pinnedKept ++
-      vs.filter(youngerThanCutoff)).toSeq.sorted
-    // prefetch every manifest's refs BEFORE any delete, so the live set
-    // can be recomputed from whichever manifests actually survive
-    val refsByVersion = vs.map(v =>
-      v -> readManifestAt(spark, path, v).values.toSet).toMap
-    val orphanCutoffMs = nowMs - orphanMinAgeMs
-    def orphanOldEnough(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      orphanMinAgeMs == 0L || st.getModificationTime < orphanCutoffMs
-    // Phase 1 — manifests, with the pin handshake that closes the
-    // pin-vs-vacuum race (the shared [[Pins.sweepManifests]]:
-    // trash-rename aside, re-read _pins/, restore or drop — symmetric
-    // to pin()'s publish-then-verify, so no interleaving leaves a pin
-    // silently protecting nothing; live is computed AFTER this phase).
-    val (alsoKept, removedManifests) = Pins.sweepManifests(f, root,
-      vs.filterNot(kept.contains), manifestFile)
-    var removed = removedManifests
-    // Phase 2 — data dirs + staging, live recomputed from survivors
-    val live = (kept ++ alsoKept).flatMap(refsByVersion).toSet
-    // every dir ANY still-present manifest references — the complement
-    // (never-referenced) is where an in-flight appender may be writing
-    val referencedEver = vs.flatMap(refsByVersion).toSet
-    f.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      name match {
-        case ManifestRe(_) => () // survivors of phase 1 are all kept
-        case _ if name.startsWith("dt=") && !live.contains(name) =>
-          if (referencedEver.contains(name) || orphanOldEnough(st)) {
-            f.delete(st.getPath, true); removed += 1
-          }
-        case _ if name.startsWith(".") => // tmp/staging leftovers
-          if (orphanOldEnough(st)) { f.delete(st.getPath, true); removed += 1 }
-        case _ => ()
-      }
-    }
-    removed
+    val d = dir(spark, path)
+    val f = fs(spark, new Path(path))
+    val cutoffMs = System.currentTimeMillis() - minAgeMs
+    def young(v: Long): Boolean = minAgeMs > 0L &&
+      f.getFileStatus(d.file(v)).getModificationTime > cutoffMs
+    d.vacuum(keepVersions, orphanMinAgeMs, _.filter(young))(
+      readManifestAt(spark, path, _).values)(identity,
+      _.startsWith("dt="))._2
   }
 }

@@ -32,21 +32,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotTable {
 
-  private val CommitRe = "commit-(\\d{9})\\.txt".r
+  private val StateDirRe = "v(\\d+)".r
 
   private def fs(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Commit markers `commit-<v>.txt` are the versioned directory's
+    * manifests; the snapshot has no reader pins of its own (the log's
+    * pins reach [[vacuum]] as `alsoKeep`). */
+  private def dir(spark: SparkSession, root: Path): VersionedDir =
+    new VersionedDir(fs(spark, root), root, "commit", readerPins = false)
+
   /** The log version the snapshot currently reflects; None if never
     * bootstrapped. */
-  def versionOpt(spark: SparkSession, snapPath: String): Option[Long] = {
-    val root = new Path(snapPath)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return None
-    f.listStatus(root).map(_.getPath.getName).collect {
-      case CommitRe(v) => v.toLong
-    }.sorted.lastOption
-  }
+  def versionOpt(spark: SparkSession, snapPath: String): Option[Long] =
+    dir(spark, new Path(snapPath)).versions.lastOption
 
   def version(spark: SparkSession, snapPath: String): Long =
     versionOpt(spark, snapPath).getOrElse(
@@ -158,8 +158,8 @@ object SnapshotTable {
         Cdc.mergeCompacted(read(spark, snapPath), delta,
           keyCol, tsCol, seqCol, opCol, withEvolved(delta))
     }
-    val dir = new Path(root, s"v$target")
-    val marker = new Path(root, f"commit-$target%09d.txt")
+    val stateDir = new Path(root, s"v$target")
+    val commits = dir(spark, root)
     // Build the state under a WRITER-UNIQUE staging name and rename it
     // into place: two updaters racing to the same target version would
     // otherwise share the v<N> directory, and the loser's
@@ -168,8 +168,7 @@ object SnapshotTable {
     // a loser whose target already exists discards its staging — both
     // racers computed the state from the SAME log version, so the
     // winner's content is identical and losing is a benign no-op.
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(root, s".v$target-$token")
+    val stage = new Path(root, s".v$target-${VersionedDir.token()}")
     // state files are hash-partitioned by the merge's keyed aggregation;
     // sorting within partitions by key tightens row-group min/max (no
     // extra shuffle), and the sidecar Bloom below prunes whole FILES —
@@ -180,23 +179,18 @@ object SnapshotTable {
     f.delete(new Path(stage, "_SUCCESS"), false)
     Sidecars.write(spark, Seq(stage), Some(nextState.schema),
       boundsCol = keyCol, bloomCols = Seq(keyCol))
-    def racerWon(): Boolean = f.exists(marker)
+    def racerWon(): Boolean = commits.exists(target)
     if (racerWon()) { f.delete(stage, true); return target }
-    if (f.exists(dir)) f.delete(dir, true) // unreferenced crash leftover
-    if (!f.rename(stage, dir)) {
+    if (f.exists(stateDir)) f.delete(stateDir, true) // unreferenced crash leftover
+    if (!f.rename(stage, stateDir)) {
       f.delete(stage, true)
       if (racerWon()) return target
-      sys.error(s"staging rename to $dir failed and no commit exists")
+      sys.error(s"staging rename to $stateDir failed and no commit exists")
     }
-    val tmp = new Path(root, s".commit-$target-$token.tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"v$target\n".getBytes("UTF-8")) finally out.close()
-    if (!FsAtomic.renameNoReplace(f, tmp, marker)) {
-      f.delete(tmp, false)
-      if (racerWon()) return target // identical content already published
-      sys.error(s"publishing $marker failed")
-    }
-    target
+    // racerWon() was just checked: publish without the exists fast path
+    if (!commits.tryPublish(target, Seq(s"v$target")) && !racerWon())
+      sys.error(s"publishing ${commits.file(target)} failed")
+    target // a lost race published identical content
   }
 
   /** Streaming maintenance twin: each micro-batch appends to the log
@@ -226,29 +220,8 @@ object SnapshotTable {
     * [[ManifestedLog.maintain]] passes the log's reader pins through,
     * so a pinned log version keeps its matching snapshot commit too. */
   def vacuum(spark: SparkSession, snapPath: String,
-             keepVersions: Int = 1, alsoKeep: Set[Long] = Set.empty): Long = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val root = new Path(snapPath)
-    val f = fs(spark, root)
-    val vs = f.listStatus(root).map(_.getPath.getName).collect {
-      case CommitRe(v) => v.toLong
-    }.sorted.toSeq
-    require(vs.nonEmpty, s"no snapshot commit under $snapPath")
-    val kept = vs.takeRight(keepVersions).toSet ++ alsoKeep.filter(vs.contains)
-    var removed = 0L
-    f.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      name match {
-        case CommitRe(v) if !kept.contains(v.toLong) =>
-          f.delete(st.getPath, false); removed += 1
-        case _ if name.startsWith("v") &&
-            name.drop(1).forall(_.isDigit) && !kept.contains(name.drop(1).toLong) =>
-          f.delete(st.getPath, true); removed += 1
-        case _ if name.startsWith(".") =>
-          f.delete(st.getPath, true); removed += 1
-        case _ => ()
-      }
-    }
-    removed
-  }
+             keepVersions: Int = 1, alsoKeep: Set[Long] = Set.empty): Long =
+    dir(spark, new Path(snapPath)).vacuum(keepVersions,
+        alsoKeep = _.filter(alsoKeep))(
+      v => Seq(s"v$v"))(identity, StateDirRe.matches)._2
 }

@@ -1116,4 +1116,48 @@ class LexIndexSpec extends SparkSpec {
     assert(LexIndex.readManifest(spark, p).version == 2L)
     assert(LexIndex.readManifest(spark, p).nDocs == docsFx.size + 1L)
   }
+
+  test("racing untagged appenders both land exactly-once via publish retry") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val p = freshPath()
+    LexIndex.build(docsDf.filter(col("doc_id") < 3), p)
+    val parts = (3 until 7).map(i => docsDf.filter(col("doc_id") === i))
+    val futures = parts.map(b => Future(LexIndex.append(b, p)))
+    val versions = Await.result(Future.sequence(futures), 5.minutes)
+    // every racer published its own version; together they reach v5
+    assert(versions.sorted == Seq(2L, 3L, 4L, 5L))
+    val m = LexIndex.readManifest(spark, p)
+    assert(m.version == 5L && m.segments.size == 5)
+    // stats summed exactly: identical to a one-shot build of the corpus
+    val whole = freshPath()
+    LexIndex.build(docsDf, whole)
+    val w = LexIndex.readManifest(spark, whole)
+    assert((m.nDocs, m.sumDl) == (w.nDocs, w.sumDl))
+    val qs = queriesDf(1L -> Seq("spark", "join", "window", "batch"))
+    assert(rows(LexIndex.search(spark, p, qs, 7)) ==
+      rows(Retrieval.bm25TopK(docsDf, qs, 7)))
+  }
+
+  test("vacuum's orphan-age guard shields a racing appender's staging") {
+    import org.apache.hadoop.fs.Path
+    val p = freshPath()
+    LexIndex.build(docsDf, p)
+    val f = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a never-referenced young segment + tmp = an in-flight append
+    f.mkdirs(new Path(p, "seg-inflight01"))
+    f.create(new Path(p, ".lex-manifest-2-abc.tmp"), true).close()
+    assert(LexIndex.vacuum(spark, p, keepVersions = 1,
+      orphanMinAgeMs = 3600000L) == 0L)
+    assert(f.exists(new Path(p, "seg-inflight01")),
+      "orphan-age guard failed to shield an in-flight segment")
+    assert(f.exists(new Path(p, ".lex-manifest-2-abc.tmp")))
+    // eager default reclaims both
+    assert(LexIndex.vacuum(spark, p) == 2L)
+    assert(!f.exists(new Path(p, "seg-inflight01")))
+    assert(!f.exists(new Path(p, ".lex-manifest-2-abc.tmp")))
+    assert(LexIndex.search(spark, p,
+      queriesDf(1L -> Seq("spark")), 3).count() == 3L)
+  }
 }
