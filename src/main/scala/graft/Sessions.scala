@@ -14,9 +14,20 @@ import org.apache.spark.sql.SparkSession
   *    runtime splitting as the backstop behind the deterministic salted
   *    join), so the dependency lives in code and is asserted in
   *    SessionConfigSpec rather than riding an upstream default,
-  *  - UTC session time, which every timestamp oracle assumes.
+  *  - UTC session time, which every timestamp oracle assumes,
+  *  - local paths through [[NioLocalFileSystem]]: this Hadoop build has
+  *    no native library, so the stock local filesystem forks a `chmod`
+  *    process for every directory, data file and `.crc` file a write
+  *    creates — 2,192 of the 2,198 processes one `store_ingest`
+  *    benchmark run (seed 41) starts; 6 start with this class, which
+  *    sets the same bits with one syscall.
   */
 object Sessions {
+
+  /** The `file` scheme's filesystem class, shared with the test session
+    * so specs write through the same path. */
+  val LocalFileSystemConf: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName
 
   def local(cpus: String, appName: String): SparkSession =
     builder(cpus, appName).getOrCreate()
@@ -38,4 +49,5 @@ object Sessions {
       // micros restores both and matches TimestampType semantics exactly.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(LocalFileSystemConf._1, LocalFileSystemConf._2)
 }

@@ -157,8 +157,8 @@ object IvfIndex {
     readManifestAt(spark, path, v)
   }
 
-  private def readManifestAt(spark: SparkSession, path: String,
-                             v: Long): IndexManifest = {
+  private[operators] def readManifestAt(spark: SparkSession, path: String,
+                                        v: Long): IndexManifest = {
     val root = new Path(path)
     val entries = dir(spark, root).lines(v, Header)
     val cents = entries.collectFirst { case s if s.startsWith("centroids=") =>
@@ -559,10 +559,14 @@ object IvfIndex {
     * result hash-matches a full-scan group-by — that is its oracle.
     * Skipped (erased) cells are excluded, as every reader excludes
     * them. */
-  def cellStats(spark: SparkSession, path: String): DataFrame = {
+  def cellStats(spark: SparkSession, path: String): DataFrame =
+    cellStatsOf(spark, new Path(path), readManifestFull(spark, path))
+
+  /** [[cellStats]] of the manifest `m` — [[compact]] sizes its tiles
+    * from the manifest it folds, not a newer one. */
+  private[operators] def cellStatsOf(spark: SparkSession, root: Path,
+                                     m: IndexManifest): DataFrame = {
     import spark.implicits._
-    val root = new Path(path)
-    val m = readManifestFull(spark, path)
     val f = fs(spark, root)
     val CellRe = "cell=(\\d+)".r
     val files: Seq[(Long, String, Long)] = for {
@@ -579,25 +583,12 @@ object IvfIndex {
       spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(files, slices)
       .map { case (cell, file, bytes) =>
-        (cell, FooterRead.rowCount(bc.value.value, file), bytes)
+        (cell, Footers.rowCount(bc.value.value, file), bytes)
       }
       .toDF("cell", "n_rows", "bytes")
       .groupBy("cell")
       .agg(sum("n_rows").as("n_rows"), sum("bytes").as("bytes"),
            count(lit(1)).as("files"))
-  }
-
-  private[operators] object FooterRead extends Serializable {
-    def rowCount(conf: org.apache.hadoop.conf.Configuration,
-                 file: String): Long = {
-      import scala.jdk.CollectionConverters._
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }
   }
 
   // -------------------------------------------------------- maintenance
@@ -628,7 +619,7 @@ object IvfIndex {
     // bounded collect (≤ cells rows, already footer-only): when no cell
     // re-tiles — the non-skewed common case — the tile join and column
     // drop out of the plan entirely (LexIndex.compact's recipe)
-    val tiles = cellStats(spark, path).select("cell", "n_rows").collect()
+    val tiles = cellStatsOf(spark, root, m).select("cell", "n_rows").collect()
       .map(r => (r.getLong(0),
         math.ceil(r.getLong(1).toDouble / maxRowsPerFile).toLong))
       .filter(_._2 > 1)

@@ -179,8 +179,8 @@ object LexIndex {
     readManifestAt(spark, path, v)
   }
 
-  private def readManifestAt(spark: SparkSession, path: String,
-                             v: Long): LexManifest = {
+  private[operators] def readManifestAt(spark: SparkSession, path: String,
+                                        v: Long): LexManifest = {
     val entries = dir(spark, new Path(path)).lines(v, Header)
     val stats = entries.collectFirst { case s if s.startsWith("stats=") =>
       s.stripPrefix("stats=").split(',') match {
@@ -673,7 +673,7 @@ object LexIndex {
     val root = new Path(path)
     val m = readManifest(spark, path)
     val merged = readPostingsWith(spark, path, m)
-    val tiles = bucketStats(spark, path).select("tb", "n_rows").collect()
+    val tiles = bucketStatsOf(spark, root, m).select("tb", "n_rows").collect()
       .map(r => (r.getInt(0),
         math.ceil(r.getLong(1).toDouble / maxRowsPerFile).toLong))
       .filter(_._2 > 1)
@@ -914,10 +914,14 @@ object LexIndex {
       .orderBy("segment")
   }
 
-  def bucketStats(spark: SparkSession, path: String): DataFrame = {
+  def bucketStats(spark: SparkSession, path: String): DataFrame =
+    bucketStatsOf(spark, new Path(path), readManifest(spark, path))
+
+  /** [[bucketStats]] of the manifest `m` — [[compact]] sizes its tiles
+    * from the manifest it folds, not a newer one. */
+  private[operators] def bucketStatsOf(spark: SparkSession, root: Path,
+                                       m: LexManifest): DataFrame = {
     import spark.implicits._
-    val root = new Path(path)
-    val m = readManifest(spark, path)
     val f = fs(spark, root)
     val TbRe = "tb=(\\d+)".r
     val files: Seq[(Int, String, Long)] = for {
@@ -934,7 +938,7 @@ object LexIndex {
       spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(files, slices)
       .map { case (tb, file, bytes) =>
-        (tb, IvfIndex.FooterRead.rowCount(bc.value.value, file), bytes)
+        (tb, Footers.rowCount(bc.value.value, file), bytes)
       }
       .toDF("tb", "n_rows", "bytes")
       .groupBy("tb")

@@ -90,9 +90,10 @@ object ManifestedLog {
   }
 
   /** (version, day → data-dir name) of the newest manifest. */
-  def readManifest(spark: SparkSession, path: String): (Long, Map[String, String]) =
-    readManifestOpt(spark, path).getOrElse(
-      sys.error(s"no manifest under $path — not a manifested event log"))
+  def readManifest(spark: SparkSession, path: String): (Long, Map[String, String]) = {
+    val m = newest(spark, path)
+    (m.version, m.days)
+  }
 
   /** All manifest versions still on disk, ascending — the table's
     * retained history ([[vacuum]] trims it to the newest). */
@@ -106,41 +107,54 @@ object ManifestedLog {
     * Fails loudly when the version was vacuumed — a reproducibility
     * claim must never silently degrade to "newest". */
   def readManifestAt(spark: SparkSession, path: String,
-                     version: Long): Map[String, String] = {
-    val d = dir(spark, path)
-    if (!d.exists(version)) sys.error(
-      s"manifest version $version of $path is not retained " +
-        s"(have: ${d.versions.mkString(", ")}) — vacuumed history " +
-        "cannot be time-traveled to")
-    parseManifest(d, version).days
-  }
+                     version: Long): Map[String, String] =
+    manifestAt(spark, path, version).days
 
   /** Full read of a pinned version (time travel). */
   def loadAt(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val days = readManifestAt(spark, path, version)
-    val dirs = days.toSeq.sortBy(_._1)
+    val m = manifestAt(spark, path, version)
+    val dirs = m.days.toSeq.sortBy(_._1)
       .map { case (_, dir) => new Path(new Path(path), dir).toString }
     require(dirs.nonEmpty, s"manifest version $version of $path lists no days")
-    Events.normalizeEventTime(
-      readDirs(spark, dirs, readSchemaAt(spark, path, version)))
+    Events.normalizeEventTime(readDirs(spark, dirs, m.schema))
   }
 
   /** As [[readManifest]], but None for an uninitialized/absent table —
     * the state [[append]] bootstraps from. */
   def readManifestOpt(spark: SparkSession,
-                      path: String): Option[(Long, Map[String, String])] = {
-    val d = dir(spark, path)
-    d.versions.lastOption.map(v => (v, parseManifest(d, v).days))
-  }
+                      path: String): Option[(Long, Map[String, String])] =
+    newestOpt(spark, path).map(m => (m.version, m.days))
 
-  /** A parsed manifest: the day → directory map plus the table schema.
+  /** A parsed manifest: its version, the day → directory map and the
+    * table schema, from one open of the file — every call reads its
+    * manifest through [[newest]]/[[manifestAt]] once.
     * The schema line (`#schema<TAB><StructType json>`) is what makes
     * SCHEMA EVOLUTION cheap at scale: readers take the authoritative
     * current schema from the manifest (parquet fills columns missing in
     * older files with null) instead of merging O(files) footers; early
     * manifests without the line fall back to footer inference. */
-  private final case class Manifest(days: Map[String, String],
+  private final case class Manifest(version: Long, days: Map[String, String],
                                     schema: Option[StructType])
+
+  private def newestOpt(spark: SparkSession, path: String): Option[Manifest] = {
+    val d = dir(spark, path)
+    d.versions.lastOption.map(parseManifest(d, _))
+  }
+
+  private def newest(spark: SparkSession, path: String): Manifest =
+    newestOpt(spark, path).getOrElse(
+      sys.error(s"no manifest under $path — not a manifested event log"))
+
+  /** A retained version; fails loudly when it was vacuumed. */
+  private def manifestAt(spark: SparkSession, path: String,
+                         version: Long): Manifest = {
+    val d = dir(spark, path)
+    if (!d.exists(version)) sys.error(
+      s"manifest version $version of $path is not retained " +
+        s"(have: ${d.versions.mkString(", ")}) — vacuumed history " +
+        "cannot be time-traveled to")
+    parseManifest(d, version)
+  }
 
   private def parseManifest(d: VersionedDir, v: Long): Manifest = {
     val (meta, dayLines) = d.lines(v, Header).partition(_.startsWith("#"))
@@ -149,7 +163,7 @@ object ManifestedLog {
         org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema\t"))
           .asInstanceOf[StructType]
     }
-    Manifest(dayLines.map { l =>
+    Manifest(v, dayLines.map { l =>
       l.split('\t') match {
         case Array(day, dir) => day -> dir
         case _ => sys.error(s"malformed manifest line in ${d.file(v)}: '$l'")
@@ -178,17 +192,11 @@ object ManifestedLog {
     * version); None for early tables predating the schema line, which
     * read by footer inference instead. */
   def readSchemaAt(spark: SparkSession, path: String,
-                   version: Long): Option[StructType] = {
-    val d = dir(spark, path)
-    if (!d.exists(version)) sys.error(
-      s"manifest version $version of $path is not retained")
-    parseManifest(d, version).schema
-  }
+                   version: Long): Option[StructType] =
+    manifestAt(spark, path, version).schema
 
-  def readSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val (v, _) = readManifest(spark, path)
-    readSchemaAt(spark, path, v)
-  }
+  def readSchema(spark: SparkSession, path: String): Option[StructType] =
+    newest(spark, path).schema
 
   /** Read a set of day directories under the table's authoritative
     * schema when one is recorded: columns added by later appends
@@ -277,8 +285,7 @@ object ManifestedLog {
     *     surviving files. */
   def loadRange(spark: SparkSession, path: String,
                 fromUs: Long, toUs: Long): DataFrame = {
-    val (version, days) = readManifest(spark, path)
-    val schema = readSchemaAt(spark, path, version)
+    val Manifest(_, days, schema) = newest(spark, path)
     val fromDt = Events.usLocalDateTime(fromUs).toLocalDate.toString
     val toDt   = Events.usLocalDateTime(toUs - 1L).toLocalDate.toString
     val root = new Path(path)
@@ -328,8 +335,7 @@ object ManifestedLog {
                      values: Seq[Long], fromUs: Long, toUs: Long): DataFrame = {
     import graft.functions.BloomKernel
     require(values.nonEmpty, "loadByKey needs at least one key value")
-    val (version, days) = readManifest(spark, path)
-    val schema = readSchemaAt(spark, path, version)
+    val Manifest(_, days, schema) = newest(spark, path)
     val root = new Path(path)
     // each bound clamps INDEPENDENTLY: a half-open range (one sentinel
     // end) must not push its extreme through usLocalDateTime (throws) or
@@ -408,12 +414,11 @@ object ManifestedLog {
 
   /** Full-table read (all days of the newest manifest). */
   def load(spark: SparkSession, path: String): DataFrame = {
-    val (version, days) = readManifest(spark, path)
-    val dirs = days.toSeq.sortBy(_._1)
+    val m = newest(spark, path)
+    val dirs = m.days.toSeq.sortBy(_._1)
       .map { case (_, dir) => new Path(new Path(path), dir).toString }
     require(dirs.nonEmpty, s"manifested log at $path lists no days")
-    Events.normalizeEventTime(
-      readDirs(spark, dirs, readSchemaAt(spark, path, version)))
+    Events.normalizeEventTime(readDirs(spark, dirs, m.schema))
   }
 
   /** Compact one day into ~targetBytes ts-range-tiled files, then flip
@@ -426,7 +431,7 @@ object ManifestedLog {
     ensureMicrosWrites(spark)
     val root = new Path(path)
     val f = fs(spark, root)
-    val (version, days) = readManifest(spark, path)
+    val Manifest(version, days, schema) = newest(spark, path)
     val currentDir = days.getOrElse(dt,
       sys.error(s"day $dt is not in the manifest of $path"))
     val nextDir = s"dt=$dt.v${dirVersion(currentDir) + 1}"
@@ -435,7 +440,6 @@ object ManifestedLog {
     val dayPath = new Path(root, currentDir)
     val totalBytes = f.getContentSummary(dayPath).getLength
     val parts = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val schema = readSchemaAt(spark, path, version)
     // compacting under the table schema also MIGRATES the day: columns
     // added by later appends materialize (as null) in the rewritten files
     readDirs(spark, Seq(dayPath.toString), schema)
@@ -492,8 +496,7 @@ object ManifestedLog {
     ensureMicrosWrites(spark)
     val root = new Path(path)
     val f = fs(spark, root)
-    val (version, days) = readManifest(spark, path)
-    val schema = readSchemaAt(spark, path, version)
+    val Manifest(version, days, schema) = newest(spark, path)
     val rewritten = days.toSeq.sortBy(_._1).flatMap { case (dt, dir) =>
       if (Events.dayBoundsUs(dt)._2 > watermarkUs) None
       else {
@@ -609,13 +612,13 @@ object ManifestedLog {
     val root = new Path(path)
     val f = fs(spark, root)
     // bootstrap: appending to an uninitialized table creates version 1
-    val (version, days) =
-      readManifestOpt(spark, path).getOrElse((0L, Map.empty[String, String]))
+    val Manifest(version, days, recorded) =
+      newestOpt(spark, path).getOrElse(Manifest(0L, Map.empty, None))
     // the table's current schema: from the manifest when recorded, by
     // one-off footer merge for tables predating the schema line
     val current: Option[StructType] =
       if (version == 0L) None
-      else readSchemaAt(spark, path, version).orElse {
+      else recorded.orElse {
         val dirs = days.toSeq.sortBy(_._1)
           .map { case (_, dir) => new Path(root, dir).toString }
         Some(spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema)
@@ -746,8 +749,7 @@ object ManifestedLog {
     ensureMicrosWrites(spark)
     val root = new Path(path)
     val f = fs(spark, root)
-    val (version, days) = readManifest(spark, path)
-    val schema = readSchemaAt(spark, path, version)
+    val Manifest(version, days, schema) = newest(spark, path)
     val touched = days.toSeq.sortBy(_._1).filter { case (_, dir) =>
       val dayDir = new Path(root, dir)
       Sidecars.read(spark, dayDir) match {
@@ -809,8 +811,7 @@ object ManifestedLog {
     require(fromVersion <= toVersion,
       s"change feed runs forward: $fromVersion > $toVersion")
     val from = readManifestAt(spark, path, fromVersion)
-    val to = readManifestAt(spark, path, toVersion)
-    val schema = readSchemaAt(spark, path, toVersion)
+    val Manifest(_, to, schema) = manifestAt(spark, path, toVersion)
     val root = new Path(path)
     def dir(name: String): String = new Path(root, name).toString
     val (rewrites, adds) = to.toSeq.sortBy(_._1).flatMap { case (day, d) =>

@@ -89,60 +89,55 @@ private[operators] object Sidecars {
   private def footerStat(conf: org.apache.hadoop.conf.Configuration,
                          file: Path, boundsCol: String): FileStat = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val toV: Option[Long => Long] =
-        footer.getFileMetaData.getSchema.getFields.asScala
-          .find(f => f.getName == boundsCol && f.isPrimitive)
-          .flatMap { f =>
-            val prim = f.asPrimitiveType
-            Option(prim.getLogicalTypeAnnotation) match {
-              case Some(t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-                t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MICROS => Some((n: Long) => n)
-                  case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                    Some((n: Long) => Math.floorDiv(n, 1000L))
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                    Some((n: Long) => Math.multiplyExact(n, 1000L))
-                  case _ => None
-                }
-              case Some(_: LogicalTypeAnnotation.IntLogicalTypeAnnotation) | None =>
-                prim.getPrimitiveTypeName match {
-                  case PrimitiveType.PrimitiveTypeName.INT64
-                     | PrimitiveType.PrimitiveTypeName.INT32 =>
-                    Some((n: Long) => n)
-                  case _ => None
-                }
-              case _ => None
-            }
-          }
-      val bounds: Option[(Long, Long)] = toV.flatMap { cv =>
-        val perBlock = blocks.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == boundsCol).flatMap { cc =>
-            val st: org.apache.parquet.column.statistics.Statistics[_] =
-              cc.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) None
-            else (st.genericGetMin, st.genericGetMax) match {
-              case (lo: java.lang.Long, hi: java.lang.Long) =>
-                Some((cv(lo.longValue), cv(hi.longValue)))
-              case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                Some((cv(lo.longValue), cv(hi.longValue)))
-              case _ => None
-            }
+    val footer = Footers.read(conf, file)
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    val toV: Option[Long => Long] =
+      footer.getFileMetaData.getSchema.getFields.asScala
+        .find(f => f.getName == boundsCol && f.isPrimitive)
+        .flatMap { f =>
+          val prim = f.asPrimitiveType
+          Option(prim.getLogicalTypeAnnotation) match {
+            case Some(t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
+              t.getUnit match {
+                case LogicalTypeAnnotation.TimeUnit.MICROS => Some((n: Long) => n)
+                case LogicalTypeAnnotation.TimeUnit.NANOS =>
+                  Some((n: Long) => Math.floorDiv(n, 1000L))
+                case LogicalTypeAnnotation.TimeUnit.MILLIS =>
+                  Some((n: Long) => Math.multiplyExact(n, 1000L))
+                case _ => None
+              }
+            case Some(_: LogicalTypeAnnotation.IntLogicalTypeAnnotation) | None =>
+              prim.getPrimitiveTypeName match {
+                case PrimitiveType.PrimitiveTypeName.INT64
+                   | PrimitiveType.PrimitiveTypeName.INT32 =>
+                  Some((n: Long) => n)
+                case _ => None
+              }
+            case _ => None
           }
         }
-        // every row group must report bounds, else the file is unknown
-        if (perBlock.exists(_.isEmpty) || perBlock.isEmpty) None
-        else Some((perBlock.flatten.map(_._1).min, perBlock.flatten.map(_._2).max))
+    val bounds: Option[(Long, Long)] = toV.flatMap { cv =>
+      val perBlock = blocks.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == boundsCol).flatMap { cc =>
+          val st: org.apache.parquet.column.statistics.Statistics[_] =
+            cc.getStatistics
+          if (st == null || st.isEmpty || !st.hasNonNullValue) None
+          else (st.genericGetMin, st.genericGetMax) match {
+            case (lo: java.lang.Long, hi: java.lang.Long) =>
+              Some((cv(lo.longValue), cv(hi.longValue)))
+            case (lo: java.lang.Integer, hi: java.lang.Integer) =>
+              Some((cv(lo.longValue), cv(hi.longValue)))
+            case _ => None
+          }
+        }
       }
-      FileStat(file.getName, rows, bounds.map(_._1), bounds.map(_._2))
-    } finally reader.close()
+      // every row group must report bounds, else the file is unknown
+      if (perBlock.exists(_.isEmpty) || perBlock.isEmpty) None
+      else Some((perBlock.flatten.map(_._1).min, perBlock.flatten.map(_._2).max))
+    }
+    FileStat(file.getName, rows, bounds.map(_._1), bounds.map(_._2))
   }
 
   /** Footer stats for every parquet file of a directory. */

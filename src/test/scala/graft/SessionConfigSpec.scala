@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * skew-join splitting (plus shuffle parallelism = worker count and the
   * UTC session the timestamp oracles assume), so the session factory
   * must pin all of it — an upstream default flip must not silently
-  * change what the benchmarks measure. */
+  * change what the benchmarks measure. The local filesystem class is
+  * pinned the same way: the store benchmarks measure its write path. */
 class SessionConfigSpec extends AnyFunSuite {
 
   test("session factory pins AQE on: coalescing + skew-join active") {
@@ -25,5 +26,15 @@ class SessionConfigSpec extends AnyFunSuite {
       "shuffle parallelism tracks the worker count, not the 200 default")
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC",
       "timestamp oracles assume a UTC session")
+  }
+
+  test("session factory opens local paths through NioLocalFileSystem") {
+    val s = Sessions.builder("4", "graft-config-spec").getOrCreate()
+    assert(s.conf.get("spark.hadoop.fs.file.impl") ==
+      classOf[NioLocalFileSystem].getName)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), s.sparkContext.hadoopConfiguration)
+    assert(fs.getClass == classOf[NioLocalFileSystem],
+      "local writes must not fork a chmod per file")
   }
 }

@@ -57,6 +57,7 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(Sessions.LocalFileSystemConf._1, Sessions.LocalFileSystemConf._2)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
