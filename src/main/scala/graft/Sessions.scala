@@ -20,7 +20,12 @@ import org.apache.spark.sql.SparkSession
   *    process for every directory, data file and `.crc` file a write
   *    creates — 2,192 of the 2,198 processes one `store_ingest`
   *    benchmark run (seed 41) starts; 6 start with this class, which
-  *    sets the same bits with one syscall.
+  *    sets the same bits with one syscall,
+  *  - streaming checkpoints through that same filesystem: Spark's
+  *    default checkpoint manager goes through `FileContext`, whose
+  *    `file:` binding ignores `fs.file.impl` and forks `readlink` and
+  *    `chmod` for checkpoint files — 341 process starts for one
+  *    3-batch memory-sink query.
   */
 object Sessions {
 
@@ -28,6 +33,13 @@ object Sessions {
     * so specs write through the same path. */
   val LocalFileSystemConf: (String, String) =
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName
+
+  /** The streaming checkpoint manager: the `FileSystem`-API one, which
+    * opens checkpoints through [[LocalFileSystemConf]]'s class. Shared
+    * with the test session. */
+  val CheckpointFileManagerConf: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   def local(cpus: String, appName: String): SparkSession =
     builder(cpus, appName).getOrCreate()
@@ -50,4 +62,5 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       .config(LocalFileSystemConf._1, LocalFileSystemConf._2)
+      .config(CheckpointFileManagerConf._1, CheckpointFileManagerConf._2)
 }

@@ -248,7 +248,7 @@ object LexIndex {
     *
     * With `positional = true` each posting also carries the term's
     * 0-based token POSITIONS (ascending `array<int>`) — the phrase /
-    * proximity serving layer ([[searchPhrase]]): `posexplode` replaces
+    * proximity serving layer ([[search]]'s slot kernels): `posexplode` replaces
     * `explode` at the same shuffle width (one extra int per token on
     * the wire), and the sorted position list aggregates in the same
     * group. Non-phrase probes never read the column (columnar store —
@@ -283,7 +283,7 @@ object LexIndex {
     * With `positional = true` each row also carries the term's 0-based
     * token positions WITHIN ITS FIELD's token stream (ascending
     * `array<int>`) — the fielded phrase/sloppy serving layer
-    * ([[searchPhraseFielded]]): a phrase is a single-stream question,
+    * ([[search]] with a fielded phrase): a phrase is a single-stream question,
     * so per-field streams are exactly the right granularity. Same
     * shuffle width as the plain positional layout (one extra int per
     * token on the wire); non-phrase probes never read the column. */
@@ -464,12 +464,12 @@ object LexIndex {
     * (term, doc, field) and the doc's per-field length vector; the
     * manifest records the field names (fold order) and per-field exact
     * Σ doc lengths. Field WEIGHTS are not stored — they are probe-time
-    * arguments ([[searchFielded]], the Lucene convention), so one index
+    * arguments ([[search]]'s [[LexQuery]], the Lucene convention), so one index
     * serves every weighting. N counts docs with ≥1 token in ANY field.
     * The lifecycle verbs (append/compact/vacuum/erase/sync) all apply.
     * With `positions = true` each (term, doc, field) row also stores
     * the within-FIELD position list — the fielded phrase/sloppy layer
-    * ([[searchPhraseFielded]]/[[searchPhraseSloppyFielded]]: "the
+    * ([[search]] with a fielded phrase or sloppy match: "the
     * phrase in the TITLE"); a quoted phrase is a single-STREAM
     * question, and per-field streams are that granularity. */
   def buildFielded(docs: DataFrame, path: String, fields: Seq[String],
@@ -973,12 +973,33 @@ object LexIndex {
 
   // ------------------------------------------------------------- probe
 
-  /** BM25 top-k from the index: reads ONLY the query terms' bucket
-    * partitions (plus the pushed `term IN (…)` row-group filter), then
-    * the shared scoring tail. df per term counts over the pruned
-    * postings BEFORE any attribute filter — every posting of a probed
-    * term survives pruning, so the count equals the full-corpus
-    * document frequency exactly, filtered or not.
+  /** Top-k documents per query for one [[LexQuery]] from the index —
+    * [[Retrieval.bm25TopK]]'s at-rest twin and the one probe compiler,
+    * score-identical over the indexed corpus. It reads ONLY the query
+    * terms' bucket partitions (plus the pushed `term IN (…)` row-group
+    * filter), then:
+    *  - for a phrase, sloppy or window match, a slot kernel over the
+    *    stored position lists of the PRUNED candidate rows yields the
+    *    eligible (query, doc) pairs — zero corpus scans. A document
+    *    matches iff it holds all n slots (`count(j) = n` after the
+    *    per-slot term join — at most one posting row per (doc, term), a
+    *    duplicated phrase term filling each of its slots from the same
+    *    row) and the slot positions satisfy the match: adjacency
+    *    (p + j in slot j's list), an ordered greedy chain within the
+    *    slop window, or every term inside some `[s, s+window)` with s
+    *    anchored at a term occurrence (a satisfying window can always
+    *    be anchored at its earliest term position). On a fielded index
+    *    the kernel reads only the named field's rows — within-field
+    *    streams, so positions mean exactly what the flat kernel sees;
+    *  - tf for BM25 from the stored (tf, dl); for simplified BM25F the
+    *    pruned (field, tf) rows fold in field order against the stored
+    *    per-field length vector and the manifest's exact per-field sums;
+    *    for full BM25F each row normalizes by its own b_f against
+    *    avgdl_f = Σdl_f / N from the manifest (the same IEEE divisions
+    *    the flat scan computes inside its plan) before the fold;
+    *  - the shared scoring tail with df from the index statistics.
+    * WEIGHTS and every BM25(F) parameter are probe-time: one index
+    * serves every weighting.
     *
     * `pred` filters CANDIDATE DOCUMENTS (requires the index to store
     * the referenced attribute columns — [[build]]'s `attrs`): the
@@ -990,282 +1011,156 @@ object LexIndex {
     * zero extra scans or exchanges versus the unfiltered probe. It
     * deliberately does NOT push as a scan filter: dropping
     * non-matching postings before the window would shrink df to the
-    * slice and silently change every score; the probed terms' postings
-    * are already term- and bucket-pruned, so evaluating the predicate
-    * on them costs one projected attribute column.
+    * slice and silently change every score.
     *
-    * @param queries `(query_id, terms: array<string>)`, as
-    *                [[Retrieval.bm25TopK]]
+    * @param queries `(query_id, terms | phrase)` per [[LexQuery]]'s
+    *                column contract
+    * @param q       a fielded scoring must name the index's fields in
+    *                order (the fold order is the index's, the values are
+    *                the caller's); phrase, sloppy and window matches need
+    *                a positional index
     */
   def search(spark: SparkSession, path: String, queries: DataFrame, k: Int,
-             k1: Double = 1.2, b: Double = 0.75,
+             q: LexQuery = LexQuery(),
              pred: Option[Column] = None): DataFrame = {
+    import LexQuery._
     val m = readManifest(spark, path)
-    require(!m.fielded,
-      s"$path is a FIELDED index — probe it with searchFielded")
+    if (q.fielded) {
+      require(m.fielded, s"$path stores no fielded postings — build the " +
+        "index with buildFielded to serve BM25F queries")
+      require(q.fields == m.fields.get,
+        s"probe weights must name the index's fields in order " +
+          s"(${m.fields.get.mkString(", ")}), got ${q.fields.mkString(", ")}")
+    } else
+      require(!m.fielded,
+        s"$path is a FIELDED index — probe it with a fielded scoring")
+    if (q.scoring.isInstanceOf[Bm25FFull])
+      require(m.nDocs > 0, s"$path indexes no documents")
+    if (q.matching != Terms)
+      require(m.positional, s"$path stores no positional postings — " +
+        "build the index with positions = true to serve phrase, sloppy " +
+        "and window queries")
     val root = new Path(path)
-    val qTerms = queries.select(col("query_id"),
-      explode(col("terms")).as("t"))
-      .select(col("query_id"), lower(col("t")).as("term"))
+    // the slot frame (query_id, n, j, term) of a positional match
+    def slotsOf(qs: DataFrame, arr: String) =
+      qs.select(col("query_id"), size(col(arr)).as("n"),
+        posexplode(col(arr)).as(Seq("j", "term")))
+    val (qTerms, slotQ) = q.matching match {
+      case Terms =>
+        (queries.select(col("query_id"), explode(col("terms")).as("t"))
+          .select(col("query_id"), lower(col("t")).as("term")), None)
+      case Window(_) =>
+        val qIdx = slotsOf(queries.select(col("query_id"),
+          array_distinct(transform(col("terms"), t => lower(t))).as("qterms")),
+          "qterms")
+        (qIdx.select("query_id", "term").distinct(), Some(qIdx))
+      case _ =>
+        val phIdx = slotsOf(queries.select(col("query_id"),
+          transform(col("phrase"), t => lower(t)).as("phrase")), "phrase")
+        (phIdx.select("query_id", "term").distinct(), Some(phIdx))
+    }
     val pp = probePruning(spark, m, qTerms)
     val pruned = prunedPostings(spark, path, m, pp)
-    val tfQ = pruned
+    val eligPairs = slotQ.map { qIdx =>
+      // one row per (query, doc, slot): slot j matches a document iff
+      // the document holds slot j's term
+      val posRows = q.phraseField.fold(pruned)(f =>
+        pruned.filter(col("fi") === lit(m.fields.get.indexOf(f))))
+      val slots = posRows.select("term", "doc_id", "positions")
+        .join(broadcast(qIdx), Seq("term"))
+        .groupBy("query_id", "doc_id")
+        .agg(max("n").as("n"), count(lit(1)).as("nj"),
+          map_from_entries(collect_list(struct(col("j"), col("positions"))))
+            .as("slot_pos"))
+        .filter(col("nj") === col("n"))
+      // n = 1 short-circuits BEFORE the sequence (sequence(1, 0) would
+      // silently run DESCENDING; CaseWhen branches evaluate lazily)
+      val ok = q.matching match {
+        case Window(w) =>
+          val starts = flatten(transform(sequence(lit(0), col("n") - lit(1)),
+            j => element_at(col("slot_pos"), j)))
+          exists(starts, s =>
+            forall(sequence(lit(0), col("n") - lit(1)), j =>
+              exists(element_at(col("slot_pos"), j),
+                p => p >= s && p < s + lit(w))))
+        case Sloppy(slop, _) =>
+          when(col("n") === 1, lit(true)).otherwise(
+            exists(element_at(col("slot_pos"), lit(0)), p0 =>
+              aggregate(sequence(lit(1), col("n") - lit(1)), p0, (acc, j) =>
+                when(acc.isNull, acc).otherwise(
+                  array_min(filter(element_at(col("slot_pos"), j),
+                    x => x > acc && x <= p0 + col("n") - lit(1) + lit(slop)))))
+                .isNotNull))
+        case _ =>
+          when(col("n") === 1, lit(true)).otherwise(
+            exists(element_at(col("slot_pos"), lit(0)), p =>
+              forall(sequence(lit(1), col("n") - lit(1)), j =>
+                array_contains(element_at(col("slot_pos"), j), p + j))))
+      }
+      slots.filter(ok).select("query_id", "doc_id")
+    }
+    val eligCol = pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq
+    val eligAgg = if (pred.isDefined) Seq(max("elig").as("elig")) else Nil
+    val base = pruned
       .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("tf") +: col("dl") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val stats = spark.createDataFrame(Seq((m.nDocs, m.sumDl)))
-      .toDF("n_docs", "sum_dl")
+    val (tfQ, stats, k1, b) = q.scoring match {
+      case Bm25(k1, b) =>
+        (base.select(col("doc_id") +: col("term") +: col("tf") +: col("dl") +:
+            eligCol: _*),
+          spark.createDataFrame(Seq((m.nDocs, m.sumDl))).toDF("n_docs", "sum_dl"),
+          k1, b)
+      case Bm25F(ws, k1, b) =>
+        // weighted tf′ folds the pruned (field, tf) rows in field order,
+        // weighted dl′ folds the stored per-field length vector, corpus
+        // stats weight the manifest's exact per-field sums — the SAME
+        // left-associative field-order fold the flat scan computes
+        val w = ws.map(_._2)
+        val weightArr = array(w.map(lit): _*)
+        val dlw = w.indices.foldLeft(lit(0.0))((acc, i) =>
+          acc + lit(w(i)) * element_at(col("dls"), i + 1).cast("double"))
+        val aggs = aggregate(
+            array_sort(collect_list(struct(col("fi"), col("tf")))),
+            lit(0.0),
+            (acc, x) => acc + element_at(weightArr, x.getField("fi") + 1) *
+              x.getField("tf").cast("double")).as("tf") +:
+          max("dlw").as("dl") +: eligAgg
+        val sumDlW = w.indices.foldLeft(0.0)((acc, i) =>
+          acc + w(i) * m.fieldSums(i).toDouble)
+        (base.select(col("doc_id") +: col("term") +: col("fi") +: col("tf") +:
+            dlw.as("dlw") +: eligCol: _*)
+            .groupBy("doc_id", "term").agg(aggs.head, aggs.tail: _*),
+          spark.createDataFrame(Seq((m.nDocs, sumDlW))).toDF("n_docs", "sum_dl"),
+          k1, b)
+      case Bm25FFull(ps, k1) =>
+        val wArr = array(ps.map(p => lit(p._2)): _*)
+        val bArr = array(ps.map(p => lit(p._3)): _*)
+        // avgdl_f: the manifest's exact Σdl_f over exact N — the
+        // identical IEEE division the flat scan's broadcast-stats row
+        // divides
+        val avgArr = array(ps.indices.map(i =>
+          lit(m.fieldSums(i).toDouble / m.nDocs.toDouble)): _*)
+        val bF = element_at(bArr, col("fi") + 1)
+        val tfn = col("tf").cast("double") /
+          (lit(1.0) - bF + bF *
+            element_at(col("dls"), col("fi") + 1).cast("double") /
+            element_at(avgArr, col("fi") + 1))
+        val aggs = aggregate(
+            array_sort(collect_list(struct(col("fi"), col("tfn")))),
+            lit(0.0),
+            (acc, x) => acc + element_at(wArr, x.getField("fi") + 1) *
+              x.getField("tfn")).as("tf") +: eligAgg
+        // b = 0 tail: the saturation denominator is tf̄ + k1
+        (base.select(col("doc_id") +: col("term") +: col("fi") +:
+            tfn.as("tfn") +: eligCol: _*)
+            .groupBy("doc_id", "term").agg(aggs.head, aggs.tail: _*)
+            .withColumn("dl", lit(0.0)),
+          spark.createDataFrame(Seq((m.nDocs, m.nDocs))).toDF("n_docs", "sum_dl"),
+          k1, 0.0)
+    }
     // df from index statistics (sidecars where present, a bounded
     // per-legacy-segment recompute otherwise) — the posting bytes are
     // read once for scoring, period, at any query width
-    Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b,
-      mergeableDf = true, dft = Some(dfStats(spark, root, m, qTerms, pp)))
-  }
-
-  /** BM25F probe of a FIELDED index ([[buildFielded]]) —
-    * [[Retrieval.bm25fTopK]]'s at-rest twin, score-identical over the
-    * indexed corpus: weighted tf′ folds the pruned (field, tf) rows in
-    * field order, weighted dl′ folds the stored per-field length
-    * vector, corpus stats weight the manifest's exact per-field sums
-    * (same IEEE fold on both sides), and df comes from the sidecar
-    * statistics (distinct docs per term — any-field containment). The
-    * probe reads only the query terms' bucket partitions; WEIGHTS are
-    * probe-time arguments, so one index serves every weighting.
-    *
-    * @param weights `(field, weight)` naming the manifest's fields in
-    *                order — the fold order is the index's, the values
-    *                are the caller's
-    */
-  def searchFielded(spark: SparkSession, path: String, queries: DataFrame,
-                    k: Int, weights: Seq[(String, Double)],
-                    k1: Double = 1.2, b: Double = 0.75,
-                    pred: Option[Column] = None): DataFrame = {
-    val m = readManifest(spark, path)
-    require(m.fielded, s"$path stores no fielded postings — build the " +
-      "index with buildFielded to serve BM25F queries")
-    val fs = m.fields.get
-    require(weights.map(_._1) == fs,
-      s"probe weights must name the index's fields in order " +
-        s"(${fs.mkString(", ")}), got ${weights.map(_._1).mkString(", ")}")
-    require(weights.forall(_._2 > 0.0),
-      s"field weights must be > 0, got ${weights.map(_._2).mkString(", ")}")
-    val root = new Path(path)
-    val qTerms = queries.select(col("query_id"),
-      explode(col("terms")).as("t"))
-      .select(col("query_id"), lower(col("t")).as("term"))
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    fieldedBm25Tail(spark, root, m, pruned, qTerms, pp,
-      weights.map(_._2), k, k1, b, pred, eligPairs = None)
-  }
-
-  /** The fielded probes' shared simplified-BM25F scoring tail
-    * ([[searchFielded]] and the fielded phrase/sloppy probes meet
-    * here): weighted tf′ folds the pruned (field, tf) rows in field
-    * order, weighted dl′ folds the stored per-field length vector,
-    * corpus stats weight the manifest's exact per-field sums (the SAME
-    * left-associative field-order fold the flat scan computes), df
-    * from the sidecar statistics. */
-  private def fieldedBm25Tail(spark: SparkSession, root: Path,
-                              m: LexManifest, pruned: DataFrame,
-                              qTerms: DataFrame, pp: ProbePruning,
-                              w: Seq[Double], k: Int,
-                              k1: Double, b: Double,
-                              pred: Option[Column],
-                              eligPairs: Option[DataFrame]): DataFrame = {
-    val fs = m.fields.get
-    val weightArr = array(w.map(lit): _*)
-    val dlw = fs.indices.foldLeft(lit(0.0))((acc, i) =>
-      acc + lit(w(i)) * element_at(col("dls"), i + 1).cast("double"))
-    val base = pruned
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("fi") +: col("tf") +:
-        dlw.as("dlw") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val aggs = aggregate(
-        array_sort(collect_list(struct(col("fi"), col("tf")))),
-        lit(0.0),
-        (acc, x) => acc + element_at(weightArr, x.getField("fi") + 1) *
-          x.getField("tf").cast("double")).as("tf") +:
-      max("dlw").as("dl") +:
-      (if (pred.isDefined) Seq(max("elig").as("elig")) else Nil)
-    val tfQ = base.groupBy("doc_id", "term").agg(aggs.head, aggs.tail: _*)
-    val sumDlW = fs.indices.foldLeft(0.0)((acc, i) =>
-      acc + w(i) * m.fieldSums(i).toDouble)
-    val stats = spark.createDataFrame(Seq((m.nDocs, sumDlW)))
-      .toDF("n_docs", "sum_dl")
     Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs,
-      mergeableDf = true, dft = Some(dfStats(spark, root, m, qTerms, pp)))
-  }
-
-  /** Quoted-PHRASE probe of a FIELDED positional index —
-    * [[Retrieval.bm25fPhraseTopK]]'s at-rest twin ("the phrase in the
-    * TITLE", served): only documents whose `phraseField` holds the
-    * phrase as a contiguous run in ITS OWN token stream rank, scored
-    * by simplified BM25F at the probe-time weights. Adjacency
-    * intersects the target field's stored within-field position lists
-    * on the PRUNED candidate rows (the [[searchPhrase]] kernel over
-    * `fi = phraseField` rows only); the scoring branch folds ALL
-    * fields' pruned rows — two column-pruned probes of the same
-    * buckets, zero corpus scans. Requires [[buildFielded]] with
-    * `positions = true`.
-    *
-    * @param weights     `(field, weight)` naming the manifest's fields
-    *                    in order, as [[searchFielded]]
-    * @param phraseField which field must contain the run */
-  def searchPhraseFielded(spark: SparkSession, path: String,
-                          phrases: DataFrame, k: Int,
-                          weights: Seq[(String, Double)],
-                          phraseField: String,
-                          k1: Double = 1.2, b: Double = 0.75,
-                          pred: Option[Column] = None): DataFrame =
-    fieldedPhraseServe(spark, path, phrases, k, weights, phraseField,
-      k1, b, pred, slop = None)
-
-  /** SLOPPY-phrase probe of a FIELDED positional index —
-    * [[Retrieval.bm25fSloppyPhraseTopK]]'s at-rest twin: the ordered
-    * greedy-chain containment ([[searchPhraseSloppy]]'s kernel) over
-    * the target field's within-field position lists; slop = 0 is
-    * [[searchPhraseFielded]]. */
-  def searchPhraseSloppyFielded(spark: SparkSession, path: String,
-                                phrases: DataFrame, k: Int,
-                                weights: Seq[(String, Double)],
-                                phraseField: String, slop: Int,
-                                k1: Double = 1.2, b: Double = 0.75,
-                                pred: Option[Column] = None): DataFrame = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    fieldedPhraseServe(spark, path, phrases, k, weights, phraseField,
-      k1, b, pred, slop = Some(slop))
-  }
-
-  private def fieldedPhraseServe(spark: SparkSession, path: String,
-                                 phrases: DataFrame, k: Int,
-                                 weights: Seq[(String, Double)],
-                                 phraseField: String,
-                                 k1: Double, b: Double,
-                                 pred: Option[Column],
-                                 slop: Option[Int]): DataFrame = {
-    val m = readManifest(spark, path)
-    require(m.fielded, s"$path stores no fielded postings — build the " +
-      "index with buildFielded to serve fielded phrase queries")
-    require(m.positional, s"$path stores no positional postings — " +
-      "buildFielded with positions = true to serve phrase queries")
-    val fs = m.fields.get
-    require(weights.map(_._1) == fs,
-      s"probe weights must name the index's fields in order " +
-        s"(${fs.mkString(", ")}), got ${weights.map(_._1).mkString(", ")}")
-    require(weights.forall(_._2 > 0.0),
-      s"field weights must be > 0, got ${weights.map(_._2).mkString(", ")}")
-    val fiIdx = fs.indexOf(phraseField)
-    require(fiIdx >= 0, s"phrase field '$phraseField' is not one of the " +
-      s"index's fields (${fs.mkString(", ")})")
-    val root = new Path(path)
-    val ph = phrases.select(col("query_id"),
-      transform(col("phrase"), t => lower(t)).as("phrase"))
-    val phIdx = ph.select(col("query_id"), size(col("phrase")).as("n"),
-      posexplode(col("phrase")).as(Seq("j", "term")))
-    val qTerms = phIdx.select("query_id", "term").distinct()
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    // adjacency over the TARGET field's rows only — within-field
-    // streams, so positions mean exactly what the flat kernel sees
-    val withJ = pruned.filter(col("fi") === lit(fiIdx))
-      .select("term", "doc_id", "positions")
-      .join(broadcast(phIdx), Seq("term"))
-    val slots = withJ.groupBy("query_id", "doc_id")
-      .agg(max("n").as("n"), count(lit(1)).as("nj"),
-        map_from_entries(collect_list(struct(col("j"), col("positions"))))
-          .as("slot_pos"))
-      .filter(col("nj") === col("n"))
-    // the n = 1 short-circuit keeps every sequence ascending (CaseWhen
-    // branches evaluate lazily — the searchPhrase/searchPhraseSloppy
-    // guard, fielded form)
-    val chainOk = slop match {
-      case None =>
-        exists(element_at(col("slot_pos"), lit(0)), p =>
-          forall(sequence(lit(1), col("n") - lit(1)), j =>
-            array_contains(element_at(col("slot_pos"), j), p + j)))
-      case Some(sl) =>
-        exists(element_at(col("slot_pos"), lit(0)), p0 =>
-          aggregate(sequence(lit(1), col("n") - lit(1)), p0, (acc, j) =>
-            when(acc.isNull, acc).otherwise(
-              array_min(filter(element_at(col("slot_pos"), j),
-                x => x > acc && x <= p0 + col("n") - lit(1) + lit(sl)))))
-            .isNotNull)
-    }
-    val eligPairs = slots.filter(
-      when(col("n") === 1, lit(true)).otherwise(chainOk))
-      .select("query_id", "doc_id")
-    fieldedBm25Tail(spark, root, m, pruned, qTerms, pp,
-      weights.map(_._2), k, k1, b, pred, eligPairs = Some(eligPairs))
-  }
-
-  /** FULL Robertson–Zaragoza BM25F probe of a FIELDED index —
-    * [[Retrieval.bm25fFullTopK]]'s at-rest twin, score-identical over
-    * the indexed corpus: per-field length normalization
-    * tf̃_f = tf_f / (1 − b_f + b_f·dl_f/avgdl_f) runs on the pruned
-    * posting rows (dl_f from the stored length vector, avgdl_f =
-    * Σdl_f / N from the manifest's exact integers — the same IEEE
-    * divisions the flat scan computes inside its plan), tf̄ folds in
-    * field order, and the b = 0 scoring tail saturates tf̄ against k1
-    * alone. Like [[searchFielded]], EVERY parameter (w_f, b_f, k1) is
-    * probe-time — the index stores raw per-field integers, so one
-    * 100 TB index serves any tuning without a rebuild. df from the
-    * sidecar statistics; only the query terms' bucket partitions read.
-    *
-    * @param params `(field, weight, b_f)` naming the manifest's fields
-    *               in order; weights > 0, b_f in [0, 1]
-    */
-  def searchFieldedFull(spark: SparkSession, path: String,
-                        queries: DataFrame, k: Int,
-                        params: Seq[(String, Double, Double)],
-                        k1: Double = 1.2,
-                        pred: Option[Column] = None): DataFrame = {
-    val m = readManifest(spark, path)
-    require(m.fielded, s"$path stores no fielded postings — build the " +
-      "index with buildFielded to serve BM25F queries")
-    val fs = m.fields.get
-    require(params.map(_._1) == fs,
-      s"probe params must name the index's fields in order " +
-        s"(${fs.mkString(", ")}), got ${params.map(_._1).mkString(", ")}")
-    require(params.forall(_._2 > 0.0),
-      s"field weights must be > 0, got ${params.map(_._2).mkString(", ")}")
-    require(params.forall(p => p._3 >= 0.0 && p._3 <= 1.0),
-      s"per-field b must be in [0,1], got ${params.map(_._3).mkString(", ")}")
-    require(m.nDocs > 0, s"$path indexes no documents")
-    val root = new Path(path)
-    val qTerms = queries.select(col("query_id"),
-      explode(col("terms")).as("t"))
-      .select(col("query_id"), lower(col("t")).as("term"))
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    val wArr = array(params.map(p => lit(p._2)): _*)
-    val bArr = array(params.map(p => lit(p._3)): _*)
-    // avgdl_f: the manifest's exact Σdl_f over exact N — the identical
-    // IEEE division the flat scan's broadcast-stats row divides
-    val avgArr = array(fs.indices.map(i =>
-      lit(m.fieldSums(i).toDouble / m.nDocs.toDouble)): _*)
-    val bF = element_at(bArr, col("fi") + 1)
-    val tfn = col("tf").cast("double") /
-      (lit(1.0) - bF + bF *
-        element_at(col("dls"), col("fi") + 1).cast("double") /
-        element_at(avgArr, col("fi") + 1))
-    val base = pruned
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("fi") +:
-        tfn.as("tfn") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val aggs = aggregate(
-        array_sort(collect_list(struct(col("fi"), col("tfn")))),
-        lit(0.0),
-        (acc, x) => acc + element_at(wArr, x.getField("fi") + 1) *
-          x.getField("tfn")).as("tf") +:
-      (if (pred.isDefined) Seq(max("elig").as("elig")) else Nil)
-    val tfQ = base.groupBy("doc_id", "term").agg(aggs.head, aggs.tail: _*)
-      .withColumn("dl", lit(0.0))
-    val stats = spark.createDataFrame(Seq((m.nDocs, m.nDocs)))
-      .toDF("n_docs", "sum_dl")
-    Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b = 0.0,
       mergeableDf = true, dft = Some(dfStats(spark, root, m, qTerms, pp)))
   }
 
@@ -1293,8 +1188,8 @@ object LexIndex {
     }
   }
 
-  /** The probe's pruned candidate read, shared by [[search]],
-    * [[searchPhrase]] and [[searchProximity]]: the probed buckets turn
+  /** The probe's pruned candidate read, shared by every [[search]]
+    * branch: the probed buckets turn
     * into `tb IN (…)` partition literals, plus a pushed `term IN (…)`
     * row-group filter in the literal regime. Past the cap the TERM
     * literals drop (the downstream equi-join prunes rows identically)
@@ -1354,199 +1249,5 @@ object LexIndex {
           .select("term", "df")
     }.reduce(_.unionByName(_))
     per.groupBy("term").agg(sum("df").as("df"))
-  }
-
-  /** Quoted-PHRASE probe — [[Retrieval.bm25PhraseTopK]]'s at-rest twin:
-    * only documents containing the phrase as a CONTIGUOUS token run
-    * rank, scored by BM25 over the phrase's distinct terms with the
-    * manifest's full-corpus stats. Requires a POSITIONAL index
-    * ([[build]] with `positions = true`).
-    *
-    * Adjacency is an intersection over the stored position lists of the
-    * PRUNED candidate rows — zero corpus scans, the phrase's terms'
-    * bucket partitions only: a document matches iff it holds all n
-    * phrase slots (`count(j) = n` after the per-slot term join — a
-    * duplicated phrase term fills each of its slots from the same
-    * posting row) and some start position p in slot 0's list has p+j in
-    * slot j's list for every j (codegen'd `exists`/`forall` over the
-    * collected per-slot arrays). The adjacency branch reads ONLY
-    * (term, doc_id, positions) and the scoring branch ONLY
-    * (term, doc_id, tf, dl) — two column-pruned probes of the same
-    * buckets, each bounded by the spoken terms' posting bytes.
-    *
-    * @param phrases `(query_id, phrase: array<string>)`, tokens matched
-    *                lowercased, adjacency in array order
-    * @param pred    optional attribute pre-filter, as [[search]]
-    */
-  def searchPhrase(spark: SparkSession, path: String, phrases: DataFrame,
-                   k: Int, k1: Double = 1.2, b: Double = 0.75,
-                   pred: Option[Column] = None): DataFrame = {
-    val m = readManifest(spark, path)
-    require(m.positional, s"$path stores no positional postings — " +
-      "build the index with positions = true to serve phrase queries")
-    require(!m.fielded, s"$path is a FIELDED index — probe it with " +
-      "searchPhraseFielded (positions there are per FIELD stream)")
-    val root = new Path(path)
-    val ph = phrases.select(col("query_id"),
-      transform(col("phrase"), t => lower(t)).as("phrase"))
-    val phIdx = ph.select(col("query_id"), size(col("phrase")).as("n"),
-      posexplode(col("phrase")).as(Seq("j", "term")))
-    val qTerms = phIdx.select("query_id", "term").distinct()
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    // one row per (query, doc, phrase slot): slot j matches a document
-    // iff the document holds slot j's term — at most one posting row
-    // per (doc, term), so count(j) = n certifies every slot filled
-    val withJ = pruned.select("term", "doc_id", "positions")
-      .join(broadcast(phIdx), Seq("term"))
-    val slots = withJ.groupBy("query_id", "doc_id")
-      .agg(max("n").as("n"), count(lit(1)).as("nj"),
-        map_from_entries(collect_list(struct(col("j"), col("positions"))))
-          .as("slot_pos"))
-      .filter(col("nj") === col("n"))
-    // n = 1 short-circuits BEFORE the sequence (sequence(1, 0) would
-    // silently run DESCENDING — the bm25PhraseTopK guard, index side)
-    val eligPairs = slots.filter(
-      when(col("n") === 1, lit(true)).otherwise(
-        exists(element_at(col("slot_pos"), lit(0)), p =>
-          forall(sequence(lit(1), col("n") - lit(1)), j =>
-            array_contains(element_at(col("slot_pos"), j), p + j)))))
-      .select("query_id", "doc_id")
-    val tfQ = pruned
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("tf") +: col("dl") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val stats = spark.createDataFrame(Seq((m.nDocs, m.sumDl)))
-      .toDF("n_docs", "sum_dl")
-    Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b, Some(eligPairs),
-      mergeableDf = true,
-      dft = Some(dfStats(spark, root, m, qTerms, pp)))
-  }
-
-  /** SLOPPY-phrase probe — [[Retrieval.bm25SloppyPhraseTopK]]'s at-rest
-    * twin: only documents containing the phrase's tokens IN ORDER
-    * within `slop` extra positions rank (∃ p₀ < … < pₙ₋₁ matching the
-    * slots with pₙ₋₁ − p₀ ≤ (n−1) + slop; slop = 0 is the exact
-    * phrase), answered from the stored position lists of the PRUNED
-    * candidate rows — zero corpus scans, the spoken terms' bucket
-    * partitions only. Per anchor in slot 0's list, a codegen'd GREEDY
-    * chain takes each later slot's smallest position > the previous
-    * inside the anchor's slop window (greedy minimizes the chain end,
-    * so an anchor admits a valid chain iff its greedy chain fits).
-    * Requires a POSITIONAL index ([[build]] with `positions = true`).
-    *
-    * @param phrases `(query_id, phrase: array<string>)`, tokens matched
-    *                lowercased, slot order = array order
-    * @param slop    extra positions allowed beyond adjacency, ≥ 0
-    * @param pred    optional attribute pre-filter, as [[search]]
-    */
-  def searchPhraseSloppy(spark: SparkSession, path: String, phrases: DataFrame,
-                         k: Int, slop: Int,
-                         k1: Double = 1.2, b: Double = 0.75,
-                         pred: Option[Column] = None): DataFrame = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    val m = readManifest(spark, path)
-    require(m.positional, s"$path stores no positional postings — " +
-      "build the index with positions = true to serve sloppy-phrase queries")
-    require(!m.fielded, s"$path is a FIELDED index — probe it with " +
-      "searchPhraseSloppyFielded (positions there are per FIELD stream)")
-    val root = new Path(path)
-    val ph = phrases.select(col("query_id"),
-      transform(col("phrase"), t => lower(t)).as("phrase"))
-    val phIdx = ph.select(col("query_id"), size(col("phrase")).as("n"),
-      posexplode(col("phrase")).as(Seq("j", "term")))
-    val qTerms = phIdx.select("query_id", "term").distinct()
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    val withJ = pruned.select("term", "doc_id", "positions")
-      .join(broadcast(phIdx), Seq("term"))
-    val slots = withJ.groupBy("query_id", "doc_id")
-      .agg(max("n").as("n"), count(lit(1)).as("nj"),
-        map_from_entries(collect_list(struct(col("j"), col("positions"))))
-          .as("slot_pos"))
-      .filter(col("nj") === col("n"))
-    // greedy chain from each anchor in slot 0's positions; the n = 1
-    // short-circuit keeps sequence(1, n−1) ascending (CaseWhen branches
-    // evaluate lazily — the searchPhrase guard, sloppy form)
-    val chainOk = exists(element_at(col("slot_pos"), lit(0)), p0 =>
-      aggregate(sequence(lit(1), col("n") - lit(1)), p0, (acc, j) =>
-        when(acc.isNull, acc).otherwise(
-          array_min(filter(element_at(col("slot_pos"), j),
-            x => x > acc && x <= p0 + col("n") - lit(1) + lit(slop)))))
-        .isNotNull)
-    val eligPairs = slots.filter(
-      when(col("n") === 1, lit(true)).otherwise(chainOk))
-      .select("query_id", "doc_id")
-    val tfQ = pruned
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("tf") +: col("dl") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val stats = spark.createDataFrame(Seq((m.nDocs, m.sumDl)))
-      .toDF("n_docs", "sum_dl")
-    Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b, Some(eligPairs),
-      mergeableDf = true,
-      dft = Some(dfStats(spark, root, m, qTerms, pp)))
-  }
-
-  /** PROXIMITY probe — [[Retrieval.bm25ProximityTopK]]'s at-rest twin:
-    * only documents with ALL query terms inside some `window`-token
-    * run rank, answered from the stored position lists of the PRUNED
-    * candidate rows (zero corpus scans). A satisfying window can
-    * always be anchored at a term occurrence (take the earliest term
-    * position inside any satisfying window — every term then sits in
-    * `[s, s+window)`), so candidate starts are the union of the terms'
-    * positions: a document matches iff ∃ s ∈ ⋃positions with every
-    * term holding a position in `[s, s+window)` — codegen'd
-    * `exists`/`forall` over the collected per-term arrays, cost
-    * bounded by the spoken terms' posting bytes.
-    *
-    * @param queries `(query_id, terms: array<string>)`, as [[search]]
-    * @param window  run length in tokens, ≥ 1
-    */
-  def searchProximity(spark: SparkSession, path: String, queries: DataFrame,
-                      k: Int, window: Int,
-                      k1: Double = 1.2, b: Double = 0.75,
-                      pred: Option[Column] = None): DataFrame = {
-    require(window >= 1, s"window must be >= 1 token, got $window")
-    val m = readManifest(spark, path)
-    require(m.positional, s"$path stores no positional postings — " +
-      "build the index with positions = true to serve proximity queries")
-    require(!m.fielded, s"$path is a FIELDED index — an unordered " +
-      "proximity window over separate field streams is not defined; " +
-      "probe a single-field positional index")
-    val root = new Path(path)
-    val qs = queries.select(col("query_id"),
-      array_distinct(transform(col("terms"), t => lower(t))).as("qterms"))
-    val qIdx = qs.select(col("query_id"), size(col("qterms")).as("n"),
-      posexplode(col("qterms")).as(Seq("j", "term")))
-    val qTerms = qIdx.select("query_id", "term").distinct()
-    val pp = probePruning(spark, m, qTerms)
-    val pruned = prunedPostings(spark, path, m, pp)
-    val withJ = pruned.select("term", "doc_id", "positions")
-      .join(broadcast(qIdx), Seq("term"))
-    // distinct terms ⇒ one posting row per (query, doc, slot):
-    // count(j) = n certifies every term present
-    val slots = withJ.groupBy("query_id", "doc_id")
-      .agg(max("n").as("n"), count(lit(1)).as("nj"),
-        map_from_entries(collect_list(struct(col("j"), col("positions"))))
-          .as("slot_pos"))
-      .filter(col("nj") === col("n"))
-    val starts = flatten(transform(sequence(lit(0), col("n") - lit(1)),
-      j => element_at(col("slot_pos"), j)))
-    val eligPairs = slots.filter(
-      exists(starts, s =>
-        forall(sequence(lit(0), col("n") - lit(1)), j =>
-          exists(element_at(col("slot_pos"), j),
-            p => p >= s && p < s + lit(window)))))
-      .select("query_id", "doc_id")
-    val tfQ = pruned
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .select(col("doc_id") +: col("term") +: col("tf") +: col("dl") +:
-        pred.map(p => coalesce(p, lit(false)).as("elig")).toSeq: _*)
-    val stats = spark.createDataFrame(Seq((m.nDocs, m.sumDl)))
-      .toDF("n_docs", "sum_dl")
-    Retrieval.scoreAndRank(tfQ, qTerms, stats, k, k1, b, Some(eligPairs),
-      mergeableDf = true,
-      dft = Some(dfStats(spark, root, m, qTerms, pp)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Lexical and hybrid retrieval over the `documents` corpus — the
@@ -26,38 +26,54 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  /** BM25 top-k documents per query.
+  /** Top-k documents per query for one [[LexQuery]], flat-scan form —
+    * the one flat compiler: it builds the tokenize-and-eligibility row,
+    * the explode → broadcast-prune → partial-aggregate tf, and the stats
+    * row once; the match contributes the containment kernel, the
+    * scoring the fold.
     *
-    * Scale shape — the only FULL-corpus work is two map-side passes
-    * over the scan, and the whole query is ONE Spark action:
-    *  - the broadcast query-term SET (one 1-row frame) restricts each
-    *    document's token array IN ROW, and per-(doc, term) tf is an
-    *    array expression over that row — all of a document's tokens
-    *    already live on its own line, so the tf aggregation needs NO
-    *    exchange and the corpus token stream is never exploded (only
-    *    matching tokens generate rows). The first shuffle of the whole
-    *    query is the df window over the matching postings;
+    * Scale shape — the only FULL-corpus work is map-side passes over
+    * the scan:
+    *  - the broadcast query-term set prunes exploded tokens BEFORE the
+    *    (doc, term) aggregation, so only matching tokens shuffle; the
+    *    first shuffle of the whole query is the df window over the
+    *    matching postings;
     *  - doc length rides the same row (`size` of the same token
     *    array) — no doc-keyed length join, no second aggregation branch;
     *  - corpus stats (N, Σdl — exact integers) reduce map-side to a
     *    1-row frame that broadcast-cross-joins into the score
     *    expression: no driver action, no literal baking, and avgdl is
     *    the same one IEEE division either way;
+    *  - a phrase/sloppy/window match is one bounded crossJoin of the
+    *    tokenized rows with the (tiny, broadcast) query batch, filtered
+    *    by a codegen'd containment kernel; the resulting (query, doc)
+    *    pairs semi-join the scoring tail after the df window;
     *  - ranking is the shared partial top-k aggregator — map-side
     *    partials keep q×k×partitions rows on the wire, never the
     *    scored set.
     *
-    * @param docs    corpus `(idCol, textCol, …)`; `idCol` must be
+    * BM25F (simplified; Robertson/Zaragoza) scores the WEIGHTED
+    * aggregates: tf′ = Σ_f w_f·tf_f, dl′ = Σ_f w_f·dl_f, avgdl′ =
+    * (Σ_f w_f·Σ_d dl_f)/N, one shared saturation — a term spamming one
+    * field can't restart the tf curve per field. Full BM25F normalizes
+    * length inside each field, tf̃_f = tf_f / (1 − b_f + b_f·dl_f/avgdl_f),
+    * folds tf̄ = Σ_f w_f·tf̃_f and saturates against k1 alone (the
+    * scoring tail at b = 0, whose dl term is exactly 0). For both, df(t)
+    * = documents containing t in ANY field and N = documents with ≥1
+    * token in any field; every weighted sum folds left-associatively in
+    * field order over exact integer operands, so the oracle accumulates
+    * the identical doubles.
+    *
+    * @param docs    corpus `(doc_id, text, …)` — or the scored field
+    *                columns for a fielded scoring; `doc_id` must be
     *                UNIQUE (the corpus's primary key — true of every
     *                corpus here). All per-document statistics (tf, dl,
     *                df) compute in-row from each document's own line,
     *                so duplicate ids would emit duplicate postings —
     *                double-counted df and score contributions — rather
     *                than merging counts as a keyed aggregation would.
-    *                The same precondition applies to every flat scan in
-    *                this family (phrase/sloppy/proximity/BM25F).
-    * @param queries small frame `(queryIdCol, termsCol: array<string>)`
-    *                — broadcast; terms are matched lowercased
+    * @param queries small frame `(query_id, terms | phrase)` per
+    *                [[LexQuery]]'s column contract — broadcast
     * @param pred    optional DOCUMENT filter over `docs`' columns
     *                ("matching spark where lang = 'en'"): only matching
     *                documents rank — exactly k matching results, never
@@ -72,11 +88,9 @@ object Retrieval {
     *         result), and an empty corpus returns an empty result
     */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               idCol: String = "doc_id", textCol: String = "text",
-               queryIdCol: String = "query_id",
-               termsCol: String = "terms",
-               pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+               q: LexQuery = LexQuery(),
+               pred: Option[Column] = None): DataFrame = {
+    import LexQuery._
     // the eligibility bit RIDES the document rows from the first select
     // (evaluated beside the tokenize — attributes and text live on the
     // same row), aggregates with the tf (constant per document), and
@@ -85,89 +99,191 @@ object Retrieval {
     // predicate into the scan instead would be WRONG, not just slower:
     // dropping non-matching documents before the window would shrink
     // df/N to the slice, silently changing every score.
-    //
-    // Shape note (round 22, measured): this is the explode →
-    // broadcast-join → map-side-partial groupBy form, DELIBERATELY.
-    // Round 21 replaced it with an in-row matched-token kernel
-    // (filter(toks, array_contains(qset, t)) + per-row tf pairs) to
-    // "remove the (doc, term) exchange"; at sf1/32c that kernel
-    // measured 1.5-2.2× SLOWER across the whole family (x98 3.4→7.5s,
-    // x102 3.9→6.4s, x122 6.1→9.4s — numbers in OPTIMIZATION_r22.md)
-    // and the driver's sf0.1 bench agreed (x-twins 0.63-0.83×). The
-    // exploded tokens are loop iterations inside one codegen stage
-    // (generate → broadcast-hash probe → partial agg), the partial
-    // aggregation already keeps the corpus token stream OFF the wire
-    // (only matched (doc, term) partials shuffle), and the in-row
-    // form's per-row array allocations bought nothing structural.
-    val toksAll = docs.select(col(idCol).as("doc_id"),
-      Dedup.tokens(col(textCol)).as("toks"),
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig"))
-    // doc length rides every exploded token row — exact per-group, so
-    // the tf aggregation carries it without a doc-keyed join
-    val exploded = toksAll.select(col("doc_id"),
-      size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("term"),
-      col("elig"))
-    val qTerms = queries.select(col(queryIdCol).as("query_id"),
-      explode(col(termsCol)).as("term"))
+    val elig = coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig")
+    // the phrase batch, tokens lowercased in array order
+    def phrases = queries.select(col("query_id").as("query_id"),
+      transform(col("phrase"), t => lower(t)).as("phrase"))
+    // the query-term frame (query_id, term) of a terms-column batch
+    def spokenTerms(qs: DataFrame) = qs.select(col("query_id").as("query_id"),
+      explode(col("terms")).as("term"))
       .select(col("query_id"), lower(col("term")).as("term"))
-    // prune to query terms BEFORE aggregating: the first shuffle carries
-    // only matching tokens, never the corpus token stream
-    val tfQ = exploded
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .groupBy("doc_id", "term")
-      .agg(count("*").as("tf"), max("dl").as("dl"), max("elig").as("elig"))
-    // corpus stats: exact integers, map-side reduce to one broadcast
-    // row — over the FULL corpus regardless of the filter. N counts
-    // documents with ≥1 token — the convention the oracle's doc-length
-    // CTE implies and the one a persisted index's erase can keep
-    // consistent (LexIndex stores the same N)
-    val stats = toksAll.filter(size(col("toks")) > 0)
-      .agg(count("*").as("n_docs"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b)
+    // a Phrase or Sloppy match's containment of `phrase` in `toks`
+    def phraseKernel = q.matching match {
+      case Sloppy(slop, _) => sloppyContains(col("toks"), col("phrase"), slop)
+      case _               => phraseContains(col("toks"), col("phrase"))
+    }
+    q.scoring match {
+      case Bm25(k1, b) =>
+        val toksAll = docs.select(col("doc_id").as("doc_id"),
+          Dedup.tokens(col("text")).as("toks"), elig)
+        // Shape note (round 22, measured): the containment is its own
+        // bounded crossJoin pass + eligPairs semi-join, and the tf is the
+        // explode → broadcast-join → map-side-partial groupBy form,
+        // DELIBERATELY. Round 21 replaced it with an in-row matched-token
+        // kernel (filter(toks, array_contains(qset, t)) + per-row tf
+        // pairs) to "remove the (doc, term) exchange", and folded the
+        // containment into that matched pass; at sf1/32c the kernel
+        // measured 1.5-2.2× SLOWER across the whole family (x98
+        // 3.4→7.5s, x102 3.9→6.4s, x122 6.1→9.4s, x115 5.1→7.3s —
+        // numbers in OPTIMIZATION_r22.md) and the sf0.1 suite bench
+        // agreed (x-twins 0.63-0.83×). The exploded tokens are loop
+        // iterations inside one codegen stage (generate → broadcast-hash
+        // probe → partial agg), the partial aggregation already keeps
+        // the corpus token stream OFF the wire (only matched (doc, term)
+        // partials shuffle), and the in-row form's per-row array
+        // allocations bought nothing structural.
+        def restrictTo(qs: DataFrame, contains: Column) =
+          Some(toksAll.crossJoin(broadcast(qs)).filter(contains)
+            .select("query_id", "doc_id"))
+        val (qTerms, eligPairs) = q.matching match {
+          case Terms => (spokenTerms(queries), None)
+          case Phrase(_) | Sloppy(_, _) =>
+            val ph = phrases
+            (ph.select(col("query_id"), explode(col("phrase")).as("term"))
+              .distinct(), restrictTo(ph, phraseKernel))
+          case Window(w) =>
+            val qs = queries.select(col("query_id").as("query_id"),
+              array_distinct(transform(col("terms"), t => lower(t)))
+                .as("qterms"))
+            (qs.select(col("query_id"), explode(col("qterms")).as("term"))
+              .distinct(),
+              restrictTo(qs, windowContains(col("toks"), col("qterms"), w)))
+        }
+        // doc length rides every exploded token row — exact per-group, so
+        // the tf aggregation carries it without a doc-keyed join
+        val exploded = toksAll.select(col("doc_id"),
+          size(col("toks")).cast("long").as("dl"),
+          explode(col("toks")).as("term"), col("elig"))
+        // prune to query terms BEFORE aggregating: the first shuffle
+        // carries only matching tokens, never the corpus token stream
+        val tfQ = exploded
+          .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
+          .groupBy("doc_id", "term")
+          .agg(count("*").as("tf"), max("dl").as("dl"), max("elig").as("elig"))
+        // corpus stats: exact integers, map-side reduce to one broadcast
+        // row — over the FULL corpus regardless of the filter. N counts
+        // documents with ≥1 token — the convention the oracle's
+        // doc-length CTE implies and the one a persisted index's erase
+        // can keep consistent (LexIndex stores the same N)
+        val stats = toksAll.filter(size(col("toks")) > 0)
+          .agg(count("*").as("n_docs"),
+            coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
+        scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = eligPairs)
+
+      case fielded: FieldedScoring =>
+        val fields = fielded.fields
+        // a fielded phrase is a question about ONE token stream: the
+        // named field's run, its (query, doc) pairs restricting the tail
+        val (termQueries, eligPairs) = q.matching match {
+          case Terms => (queries, None)
+          case _ => // Phrase or Sloppy: LexQuery rejects a window over fields
+            val ph = phrases
+            (ph.select(col("query_id"), array_distinct(col("phrase")).as("terms")),
+              Some(docs.select(col("doc_id").as("doc_id"),
+                  Dedup.tokensNs(col(q.phraseField.get)).as("toks"))
+                .crossJoin(broadcast(ph))
+                .filter(phraseKernel)
+                .select("query_id", "doc_id")))
+        }
+        val toksAll = docs.select(col("doc_id").as("doc_id") +: elig +:
+          fields.zipWithIndex.map { case (c, i) =>
+            Dedup.tokensNs(col(c)).as(s"toks_$i") }: _*)
+        val anyTok = fields.indices
+          .map(i => size(col(s"toks_$i"))).reduce(_ + _) > 0
+        val qTerms = spokenTerms(termQueries)
+        val qDistinct = qTerms.select("term").distinct()
+        // Shape note (round 22, measured): BM25F is the per-field explode
+        // -> broadcast-prune -> (doc, term, field) union aggregate form,
+        // DELIBERATELY. Round 21 replaced it with an in-row per-field
+        // matched-array kernel (one matched pass, field-order fold in
+        // row) which measured faster at sf0.1 (x129 1.14x) - but at
+        // sf1/32c the kernel is 1.7-3x SLOWER (x129 6.7->11.4s, x139
+        // 4.8->15.0s, x143 4.8->5.4s; OPTIMIZATION_r22.md): the sf0.1 win
+        // was fixed stage/scheduling overhead, while the per-row
+        // size(filter(...)) folds scale with matched-tokens^2 per
+        // document and the explode path scales linearly.
+        def perField(len: Int => Column, lenName: String) =
+          fields.indices.map { i =>
+            toksAll.select(col("doc_id"), lit(i).as("fi"),
+                col("elig"), len(i).as(lenName),
+                explode(col(s"toks_$i")).as("term"))
+              .join(broadcast(qDistinct), Seq("term"))
+              .groupBy("doc_id", "term", "fi")
+              .agg(count("*").as("tf"), max(lenName).as(lenName),
+                max("elig").as("elig"))
+          }.reduce(_.unionByName(_))
+        // corpus stats: exact per-field integer sums reduce map-side to
+        // one row — N (any-field docs) + per-field Σdl
+        val statCols = count("*").as("n_docs") +:
+          fields.indices.map(i =>
+            coalesce(sum(size(col(s"toks_$i")).cast("long")), lit(0L))
+              .as(s"s_$i"))
+        val rawStats = toksAll.filter(anyTok).agg(statCols.head, statCols.tail: _*)
+        fielded match {
+          case Bm25F(ws, k1, b) =>
+            // weighted doc length: a literal field-order fold — exact
+            // integer operands, one rounding per field term
+            val dlw = ws.zipWithIndex.foldLeft(lit(0.0)) {
+              case (acc, ((_, w), i)) =>
+                acc + lit(w) * size(col(s"toks_$i")).cast("double") }
+            // weighted tf: fold the present (field, tf) pairs in field
+            // order — absent fields contribute exactly nothing (0 + x = x
+            // in IEEE for the positive products here, so the oracle's
+            // coalesce-style two-term sum is bit-identical)
+            val weightArr = array(ws.map(f => lit(f._2)): _*)
+            val tfQ = perField(_ => dlw, "dlw").groupBy("doc_id", "term")
+              .agg(aggregate(
+                  array_sort(collect_list(struct(col("fi"), col("tf")))),
+                  lit(0.0),
+                  (acc, x) => acc + element_at(weightArr, x.getField("fi") + 1) *
+                    x.getField("tf").cast("double")).as("tf"),
+                max("dlw").as("dl"), max("elig").as("elig"))
+            val sumDlW = ws.zipWithIndex.foldLeft(lit(0.0)) {
+              case (acc, ((_, w), i)) => acc + lit(w) * col(s"s_$i").cast("double") }
+            val stats = rawStats.select(col("n_docs"), sumDlW.as("sum_dl"))
+            scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = eligPairs)
+          case Bm25FFull(ps, k1) =>
+            val wArr = array(ps.map(f => lit(f._2)): _*)
+            val bArr = array(ps.map(f => lit(f._3)): _*)
+            val sArr = array(ps.indices.map(i => col(s"s_$i")): _*)
+            // tf̃ per (doc, term, field) row: each operand order mirrors
+            // the oracle text — (1 − b_f) + (b_f·dl_f) / (Σdl_f / N), the
+            // avgdl_f division executor-side on the broadcast stats row
+            val bF = element_at(bArr, col("fi") + 1)
+            val tfn = col("tf").cast("double") /
+              (lit(1.0) - bF + bF * col("dlf").cast("double") /
+                (element_at(sArr, col("fi") + 1).cast("double") /
+                  col("n_docs").cast("double")))
+            val tfQ = perField(i => size(col(s"toks_$i")).cast("long"), "dlf")
+              .crossJoin(broadcast(rawStats))
+              .select(col("doc_id"), col("term"), col("fi"), col("elig"),
+                tfn.as("tfn"))
+              .groupBy("doc_id", "term")
+              .agg(aggregate(
+                  array_sort(collect_list(struct(col("fi"), col("tfn")))),
+                  lit(0.0),
+                  (acc, x) => acc + element_at(wArr, x.getField("fi") + 1) *
+                    x.getField("tfn")).as("tf"),
+                max("elig").as("elig"))
+              .withColumn("dl", lit(0.0))
+            // b = 0 tail: dl/avgdl contributes exactly 0 (sum_dl = N
+            // keeps the avgdl division finite); the saturation
+            // denominator is tf̄ + k1
+            val stats = rawStats.select(col("n_docs"),
+              col("n_docs").cast("long").as("sum_dl"))
+            scoreAndRank(tfQ, qTerms, stats, k, k1, b = 0.0)
+        }
+    }
   }
 
-  /** The query-term SET as one broadcastable 1-row frame — the flat
-    * scans' in-row prune: `array_contains` against a dozen-literal set
-    * costs the same membership test as the old exploded-token broadcast
-    * hash join, without generating a row per corpus token first.
-    * `sort_array` pins the (otherwise arbitrary) collect_set order so
-    * the plan canonicalizes identically across runs. */
-  private def qSetFrame(qTerms: DataFrame): DataFrame =
-    qTerms.agg(sort_array(collect_set(col("term"))).as("qset"))
-
-  /** Quoted-PHRASE BM25 top-k, flat-scan form: only documents
-    * containing the phrase as a CONTIGUOUS token run rank ("documents
-    * matching \"spark join\"" — adjacency, not bag-of-words), scored by
-    * BM25 over the phrase's distinct terms with FULL-corpus df/stats
-    * (the phrase restricts the candidate set, never the scoring
-    * function — [[bm25TopK]]'s `pred` contract, per-query form).
-    *
-    * Scale shape — identical to [[bm25TopK]] plus one broadcast: the
-    * phrase batch (tiny) broadcast-joins the already-tokenized corpus
-    * rows, and containment evaluates as a codegen'd slice-equality scan
-    * over each document's token array (O(dl·n) per (doc, phrase) — the
-    * classic naive-substring bound, fine because n is words-in-a-quote
-    * small). The resulting (query, doc) pairs semi-join the scoring
-    * tail after the df window. The persisted-index twin
-    * ([[LexIndex.searchPhrase]]) answers the same question from
-    * positional postings without any corpus scan.
-    *
-    * @param phrases `(query_id, phrase: array<string>)` — tokens
-    *                matched lowercased, adjacency in array order
-    * @param pred    optional additional DOCUMENT filter, as [[bm25TopK]]
-    * @return (query_id, doc_id, rank, score), as [[bm25TopK]]; a
-    *         document containing every phrase term but never adjacently
-    *         is NOT a result
-    */
   /** Contiguous-run containment kernel: ∃ i ≤ dl−n+1 with
-    * toks[i..i+n) = phrase — array slice equality inside codegen,
-    * guarded so the `sequence` never runs descending (sequence(1, 0)
-    * would, silently). Shared by the single-field and the FIELDED
-    * phrase scans — a phrase is a question about ONE token stream. */
-  private[operators] def phraseContains(
-      toks: org.apache.spark.sql.Column,
-      phrase: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    * toks[i..i+n) = phrase — array slice equality inside codegen
+    * (O(dl·n) per (doc, phrase), the classic naive-substring bound,
+    * fine because n is words-in-a-quote small), guarded so the
+    * `sequence` never runs descending (sequence(1, 0) would, silently).
+    * A document containing every phrase term but never adjacently is
+    * NOT a match. */
+  private def phraseContains(toks: Column, phrase: Column): Column = {
     val n = size(phrase)
     when(size(toks) >= n,
         exists(sequence(lit(1), size(toks) - n + lit(1)),
@@ -175,20 +291,19 @@ object Retrieval {
       .otherwise(lit(false))
   }
 
-  /** Ordered-within-slop containment kernel — a codegen'd GREEDY chain
-    * from each anchor (the tokens equal to phrase[0], 1-based): slots
-    * 2..n each take the smallest position > acc inside
-    * [p0, p0+n−1+slop]; null = broken; greedy minimizes the chain end,
-    * so an anchor admits a valid chain iff its greedy chain fits.
-    * CaseWhen branches evaluate lazily, so the n = 1 short-circuit
-    * keeps sequence(2, n) ascending (sequence(2, 1) would silently run
-    * DESCENDING). Shared by the single-field and FIELDED sloppy scans. */
-  private[operators] def sloppyContains(
-      toks: org.apache.spark.sql.Column,
-      phrase: org.apache.spark.sql.Column,
-      slop: Int): org.apache.spark.sql.Column = {
+  /** Ordered-within-slop containment kernel: ∃ positions p₀ < … < pₙ₋₁
+    * with toks[pⱼ] = phrase[j] and pₙ₋₁ − p₀ ≤ (n−1) + slop (Lucene
+    * `PhraseQuery(slop)`'s common case). A codegen'd GREEDY chain from
+    * each anchor (the tokens equal to phrase[0], 1-based): slots 2..n
+    * each take the smallest position > acc inside [p0, p0+n−1+slop];
+    * null = broken; greedy minimizes the chain end, so an anchor admits
+    * a valid chain iff its greedy chain fits. Cost O(dl·n·(n + slop))
+    * per (doc, phrase). CaseWhen branches evaluate lazily, so the n = 1
+    * short-circuit keeps sequence(2, n) ascending (sequence(2, 1) would
+    * silently run DESCENDING). */
+  private def sloppyContains(toks: Column, phrase: Column, slop: Int): Column = {
     val n = size(phrase)
-    def chainEnd(p0: org.apache.spark.sql.Column) =
+    def chainEnd(p0: Column) =
       aggregate(sequence(lit(2), n), p0.cast("int"), (acc, j) =>
         when(acc.isNull, acc).otherwise {
           val hi = least(p0 + n - lit(1) + lit(slop), size(toks))
@@ -204,441 +319,17 @@ object Retrieval {
         .otherwise(lit(false)))
   }
 
-  def bm25PhraseTopK(docs: DataFrame, phrases: DataFrame, k: Int,
-                     k1: Double = 1.2, b: Double = 0.75,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     queryIdCol: String = "query_id",
-                     phraseCol: String = "phrase",
-                     pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val ph = phrases.select(col(queryIdCol).as("query_id"),
-      transform(col(phraseCol), t => lower(t)).as("phrase"))
-    val toksAll = docs.select(col(idCol).as("doc_id"),
-      Dedup.tokens(col(textCol)).as("toks"),
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig"))
-    // adjacency as its own bounded crossJoin pass + eligPairs semi-join
-    // — bm25TopK's shape note applies here too: round 21 folded the
-    // containment into an in-row matched pass (qids riding the posting
-    // rows) to save this second tokenize, and the fold measured ~1.4×
-    // slower at sf1 (x115 5.1→7.3s) — reverted
-    val eligPairs = toksAll.crossJoin(broadcast(ph))
-      .filter(phraseContains(col("toks"), col("phrase")))
-      .select("query_id", "doc_id")
-    val exploded = toksAll.select(col("doc_id"),
-      size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("term"),
-      col("elig"))
-    val qTerms = ph.select(col("query_id"),
-      explode(col("phrase")).as("term")).distinct()
-    val tfQ = exploded
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .groupBy("doc_id", "term")
-      .agg(count("*").as("tf"), max("dl").as("dl"), max("elig").as("elig"))
-    val stats = toksAll.filter(size(col("toks")) > 0)
-      .agg(count("*").as("n_docs"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = Some(eligPairs))
-  }
-
-  /** SLOPPY-phrase BM25 top-k, flat-scan form — the ordered middle
-    * ground between the exact phrase ([[bm25PhraseTopK]]: adjacent) and
-    * the unordered window ([[bm25ProximityTopK]]: any order): only
-    * documents containing the phrase's tokens IN ORDER within `slop`
-    * extra positions rank — ∃ positions p₀ < p₁ < … < pₙ₋₁ with
-    * toks[pⱼ] = phrase[j] and pₙ₋₁ − p₀ ≤ (n−1) + slop (the standard
-    * ordered-slop semantics, Lucene `PhraseQuery(slop)`'s common case;
-    * slop = 0 degenerates to the exact phrase). BM25-scored over the
-    * phrase's distinct terms with FULL-corpus df/stats — the phrase
-    * contract, sloppy-ordered form.
-    *
-    * Containment is a codegen'd GREEDY chain per anchor: anchors are
-    * the tokens equal to phrase[0]; from each, every later slot takes
-    * the SMALLEST in-order match inside the anchor's slop window
-    * (greedy minimizes the chain end, so an anchor admits a valid
-    * chain iff its greedy chain fits — the exchange argument). Cost
-    * O(dl · n · (n + slop)) per (doc, phrase): the window bound keeps
-    * the inner scan slop-sized, never document-sized. The at-rest twin
-    * ([[LexIndex.searchPhraseSloppy]]) answers from stored positions
-    * without any corpus scan.
-    *
-    * @param phrases `(query_id, phrase: array<string>)`, matched
-    *                lowercased, slot order = array order
-    * @param slop    extra positions allowed beyond adjacency, ≥ 0
-    * @param pred    optional additional DOCUMENT filter, as [[bm25TopK]]
-    */
-  def bm25SloppyPhraseTopK(docs: DataFrame, phrases: DataFrame, k: Int,
-                           slop: Int,
-                           k1: Double = 1.2, b: Double = 0.75,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           queryIdCol: String = "query_id",
-                           phraseCol: String = "phrase",
-                           pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    val ph = phrases.select(col(queryIdCol).as("query_id"),
-      transform(col(phraseCol), t => lower(t)).as("phrase"))
-    val toksAll = docs.select(col(idCol).as("doc_id"),
-      Dedup.tokens(col(textCol)).as("toks"),
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig"))
-    // bm25PhraseTopK's reverted shape (measured at sf1, see bm25TopK)
-    val eligPairs = toksAll.crossJoin(broadcast(ph))
-      .filter(sloppyContains(col("toks"), col("phrase"), slop))
-      .select("query_id", "doc_id")
-    val exploded = toksAll.select(col("doc_id"),
-      size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("term"),
-      col("elig"))
-    val qTerms = ph.select(col("query_id"),
-      explode(col("phrase")).as("term")).distinct()
-    val tfQ = exploded
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .groupBy("doc_id", "term")
-      .agg(count("*").as("tf"), max("dl").as("dl"), max("elig").as("elig"))
-    val stats = toksAll.filter(size(col("toks")) > 0)
-      .agg(count("*").as("n_docs"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = Some(eligPairs))
-  }
-
-  /** PROXIMITY BM25 top-k, flat-scan form — the middle ground between
-    * bag-of-words ([[bm25TopK]]: terms anywhere) and the exact phrase
-    * ([[bm25PhraseTopK]]: terms adjacent in order): only documents with
-    * ALL query terms inside SOME `window`-token run rank, in any order
-    * ("spark and join within 5 tokens"), BM25-scored over the distinct
-    * terms with full-corpus stats (the proximity restricts candidates,
-    * never the scoring — the phrase contract, sloppy form).
-    *
-    * Containment is a codegen'd sliding-window check over the token
-    * array (`exists` start × `forall` term × `array_contains` slice —
-    * O(dl·window·terms) per (doc, query), words-in-a-sentence small);
-    * a document shorter than the window is checked whole. The at-rest
-    * twin ([[LexIndex.searchProximity]]) answers from stored positions
-    * without any corpus scan.
-    *
-    * @param queries `(query_id, terms: array<string>)`, matched
-    *                lowercased
-    * @param window  run length in tokens; must be ≥ 1 (a window
-    *                smaller than the distinct-term count can never
-    *                match — allowed, returns empty)
-    */
-  def bm25ProximityTopK(docs: DataFrame, queries: DataFrame, k: Int,
-                        window: Int,
-                        k1: Double = 1.2, b: Double = 0.75,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        queryIdCol: String = "query_id",
-                        termsCol: String = "terms",
-                        pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(window >= 1, s"window must be >= 1 token, got $window")
-    val qs = queries.select(col(queryIdCol).as("query_id"),
-      array_distinct(transform(col(termsCol), t => lower(t))).as("qterms"))
-    val toksAll = docs.select(col(idCol).as("doc_id"),
-      Dedup.tokens(col(textCol)).as("toks"),
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig"))
-    // a window never exceeds the document; sequence stays ascending.
-    // bm25PhraseTopK's reverted shape (measured at sf1, see bm25TopK)
-    val n = least(lit(window), size(col("toks")))
-    val inWindow = when(size(col("toks")) > 0,
-        exists(sequence(lit(1), size(col("toks")) - n + lit(1)),
-          i => forall(col("qterms"),
-            t => array_contains(slice(col("toks"), i, n), t))))
+  /** Unordered-window containment kernel: ALL query terms inside SOME
+    * `window`-token run, any order — a sliding-window check (`exists`
+    * start × `forall` term × `array_contains` slice, O(dl·window·terms)
+    * per (doc, query)); a window never exceeds the document, so the
+    * `sequence` stays ascending and a short document is checked whole. */
+  private def windowContains(toks: Column, terms: Column, window: Int): Column = {
+    val n = least(lit(window), size(toks))
+    when(size(toks) > 0,
+        exists(sequence(lit(1), size(toks) - n + lit(1)),
+          i => forall(terms, t => array_contains(slice(toks, i, n), t))))
       .otherwise(lit(false))
-    val eligPairs = toksAll.crossJoin(broadcast(qs))
-      .filter(inWindow)
-      .select("query_id", "doc_id")
-    val exploded = toksAll.select(col("doc_id"),
-      size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("term"),
-      col("elig"))
-    val qTerms = qs.select(col("query_id"),
-      explode(col("qterms")).as("term")).distinct()
-    val tfQ = exploded
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-      .groupBy("doc_id", "term")
-      .agg(count("*").as("tf"), max("dl").as("dl"), max("elig").as("elig"))
-    val stats = toksAll.filter(size(col("toks")) > 0)
-      .agg(count("*").as("n_docs"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = Some(eligPairs))
-  }
-
-  // Shape note (round 22, measured): the BM25F family below is the
-  // per-field explode -> broadcast-prune -> (doc, term, field) union
-  // aggregate form, DELIBERATELY. Round 21 replaced it with an in-row
-  // per-field matched-array kernel (one matched pass, field-order fold
-  // in row) which measured faster at sf0.1 (x129 1.14x) - but at
-  // sf1/32c the kernel is 1.7-3x SLOWER (x129 6.7->11.4s, x139
-  // 4.8->15.0s, x143 4.8->5.4s; OPTIMIZATION_r22.md): the sf0.1 win
-  // was fixed stage/scheduling overhead, while the per-row
-  // size(filter(...)) folds scale with matched-tokens^2 per document
-  // and the explode path scales linearly. Reverted to the r20 shape.
-
-  /** BM25F multi-FIELD top-k, flat-scan form — the title/body shape a
-    * web-crawl corpus serves ("spark in the title counts double"):
-    * each document is a set of weighted text fields, and the classic
-    * simplified BM25F (Robertson/Zaragoza) scores the WEIGHTED
-    * aggregates instead of per-field scores:
-    *
-    *   tf′(d,t) = Σ_f w_f · tf_f(d,t)      (weighted term frequency)
-    *   dl′(d)   = Σ_f w_f · dl_f(d)        (weighted doc length)
-    *   avgdl′   = (Σ_f w_f · Σ_d dl_f) / N
-    *   score    = Σ_t idf(t) · tf′(k1+1) / (tf′ + k1(1−b+b·dl′/avgdl′))
-    *
-    * with df(t) = documents containing t in ANY field and N = documents
-    * with ≥1 token in any field. Weighting aggregates (not scores)
-    * keeps the saturation shared across fields — a term spamming one
-    * field can't restart the tf curve per field, the reason BM25F
-    * exists.
-    *
-    * Determinism: per-field tf/dl/Σdl are exact integers; every
-    * weighted sum folds LEFT-ASSOCIATIVELY IN FIELD ORDER over w_f ×
-    * integer products (per (doc, term) via `aggregate ∘ array_sort`
-    * on the collected (field, tf) pairs; per document and corpus as a
-    * literal field-order expression), so both engines accumulate the
-    * identical doubles; the only library call stays `ln`, absorbed by
-    * the 1e-6 rounding-before-rank.
-    *
-    * Scale shape — [[bm25TopK]]'s, one union wider: each field explodes
-    * once (same map-side pass over the scan), the broadcast query-term
-    * list prunes BEFORE the (doc, term, field) aggregation, and the
-    * per-field corpus sums reduce map-side to one broadcast row. The
-    * shuffled volume is the matching tokens of all fields — for a
-    * title+body corpus, ~the body alone.
-    *
-    * @param fields `(column, weight)` in significance order — the fold
-    *               order of every weighted sum; weights must be > 0
-    * @param pred   optional DOCUMENT filter, as [[bm25TopK]]
-    */
-  def bm25fTopK(docs: DataFrame, queries: DataFrame, k: Int,
-                fields: Seq[(String, Double)],
-                k1: Double = 1.2, b: Double = 0.75,
-                idCol: String = "doc_id",
-                queryIdCol: String = "query_id",
-                termsCol: String = "terms",
-                pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    bm25fRanked(docs, queries, k, fields, k1, b, idCol, queryIdCol,
-      termsCol, pred, eligPairs = None)
-
-  /** [[bm25fTopK]]'s body with the per-(query, doc) candidate
-    * restriction exposed — the fielded PHRASE scans' scoring tail. */
-  private def bm25fRanked(docs: DataFrame, queries: DataFrame, k: Int,
-                          fields: Seq[(String, Double)],
-                          k1: Double, b: Double,
-                          idCol: String, queryIdCol: String,
-                          termsCol: String,
-                          pred: Option[org.apache.spark.sql.Column],
-                          eligPairs: Option[DataFrame]): DataFrame = {
-    require(fields.nonEmpty, "bm25fTopK needs at least one field")
-    require(fields.forall(_._2 > 0.0),
-      s"field weights must be > 0, got ${fields.map(_._2).mkString(", ")}")
-    val toksAll = docs.select(col(idCol).as("doc_id") +:
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig") +:
-      fields.zipWithIndex.map { case ((c, _), i) =>
-        Dedup.tokensNs(col(c)).as(s"toks_$i") }: _*)
-    // weighted doc length: a literal field-order fold — exact integer
-    // operands, one rounding per field term, identical in the oracle
-    val dlw = fields.zipWithIndex.foldLeft(lit(0.0)) {
-      case (acc, ((_, w), i)) =>
-        acc + lit(w) * size(col(s"toks_$i")).cast("double") }
-    val anyTok = fields.indices
-      .map(i => size(col(s"toks_$i"))).reduce(_ + _) > 0
-    val qTerms = queries.select(col(queryIdCol).as("query_id"),
-      explode(col(termsCol)).as("term"))
-      .select(col("query_id"), lower(col("term")).as("term"))
-    val qDistinct = qTerms.select("term").distinct()
-    // one exploded pass per field, pruned to query terms BEFORE the
-    // (doc, term, field) aggregation — the bm25TopK discipline per arm
-    val perField = fields.zipWithIndex.map { case ((_, _), i) =>
-      toksAll.select(col("doc_id"), lit(i).as("fi"),
-          col("elig"), dlw.as("dlw"),
-          explode(col(s"toks_$i")).as("term"))
-        .join(broadcast(qDistinct), Seq("term"))
-        .groupBy("doc_id", "term", "fi")
-        .agg(count("*").as("tf"), max("dlw").as("dlw"),
-          max("elig").as("elig"))
-    }.reduce(_.unionByName(_))
-    // weighted tf: fold the present (field, tf) pairs in field order —
-    // absent fields contribute exactly nothing (0 + x = x in IEEE for
-    // the positive products here, so the oracle's coalesce-style
-    // two-term sum is bit-identical)
-    val weightArr = array(fields.map(f => lit(f._2)): _*)
-    val tfQ = perField.groupBy("doc_id", "term")
-      .agg(aggregate(
-          array_sort(collect_list(struct(col("fi"), col("tf")))),
-          lit(0.0),
-          (acc, x) => acc + element_at(weightArr, x.getField("fi") + 1) *
-            x.getField("tf").cast("double")).as("tf"),
-        max("dlw").as("dl"), max("elig").as("elig"))
-    // corpus stats: exact per-field integer sums reduce map-side to one
-    // row; the weighted total folds in field order on that single row
-    val statCols = count("*").as("n_docs") +:
-      fields.indices.map(i =>
-        coalesce(sum(size(col(s"toks_$i")).cast("long")), lit(0L))
-          .as(s"s_$i"))
-    val rawStats = toksAll.filter(anyTok).agg(statCols.head, statCols.tail: _*)
-    val sumDlW = fields.zipWithIndex.foldLeft(lit(0.0)) {
-      case (acc, ((_, w), i)) => acc + lit(w) * col(s"s_$i").cast("double") }
-    val stats = rawStats.select(col("n_docs"), sumDlW.as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b, eligPairs = eligPairs)
-  }
-
-  /** Quoted-PHRASE BM25F, flat-scan form — "the phrase in the TITLE":
-    * only documents whose `phraseField` contains the phrase as a
-    * CONTIGUOUS token run (in that field's own token stream) rank,
-    * scored by simplified BM25F over the phrase's distinct terms at
-    * the probe weights. The phrase restricts CANDIDATES per (query,
-    * doc) AFTER the df stage — df, weighted lengths and corpus stats
-    * stay full-corpus, the phrase contract, fielded form. The at-rest
-    * twin ([[LexIndex.searchPhraseFielded]]) answers from per-field
-    * stored positions without any corpus scan.
-    *
-    * @param phrases     `(query_id, phrase: array<string>)`, adjacency
-    *                    in array order, matched lowercased
-    * @param phraseField which field must contain the run — one of
-    *                    `fields`' names (a phrase is a single-stream
-    *                    question; cross-field runs don't exist)
-    */
-  def bm25fPhraseTopK(docs: DataFrame, phrases: DataFrame, k: Int,
-                      fields: Seq[(String, Double)], phraseField: String,
-                      k1: Double = 1.2, b: Double = 0.75,
-                      idCol: String = "doc_id",
-                      queryIdCol: String = "query_id",
-                      phraseCol: String = "phrase",
-                      pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    bm25fPhraseRanked(docs, phrases, k, fields, phraseField, k1, b, idCol,
-      queryIdCol, phraseCol, pred,
-      (toks, phrase) => phraseContains(toks, phrase))
-
-  /** SLOPPY-phrase BM25F, flat-scan form — the ordered-within-slop run
-    * ([[bm25SloppyPhraseTopK]]'s semantics) inside ONE field of a
-    * multi-field document, scored by simplified BM25F at the probe
-    * weights. slop = 0 degenerates to [[bm25fPhraseTopK]]. */
-  def bm25fSloppyPhraseTopK(docs: DataFrame, phrases: DataFrame, k: Int,
-                            fields: Seq[(String, Double)],
-                            phraseField: String, slop: Int,
-                            k1: Double = 1.2, b: Double = 0.75,
-                            idCol: String = "doc_id",
-                            queryIdCol: String = "query_id",
-                            phraseCol: String = "phrase",
-                            pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    bm25fPhraseRanked(docs, phrases, k, fields, phraseField, k1, b, idCol,
-      queryIdCol, phraseCol, pred,
-      (toks, phrase) => sloppyContains(toks, phrase, slop))
-  }
-
-  private def bm25fPhraseRanked(docs: DataFrame, phrases: DataFrame,
-                                k: Int, fields: Seq[(String, Double)],
-                                phraseField: String,
-                                k1: Double, b: Double,
-                                idCol: String, queryIdCol: String,
-                                phraseCol: String,
-                                pred: Option[org.apache.spark.sql.Column],
-                                contains: (org.apache.spark.sql.Column,
-                                  org.apache.spark.sql.Column) =>
-                                  org.apache.spark.sql.Column): DataFrame = {
-    require(fields.exists(_._1 == phraseField),
-      s"phrase field '$phraseField' is not one of the scored fields " +
-        s"(${fields.map(_._1).mkString(", ")})")
-    val ph = phrases.select(col(queryIdCol).as("query_id"),
-      transform(col(phraseCol), t => lower(t)).as("phrase"))
-    val eligPairs = docs
-      .select(col(idCol).as("doc_id"),
-        Dedup.tokensNs(col(phraseField)).as("toks"))
-      .crossJoin(broadcast(ph))
-      .filter(contains(col("toks"), col("phrase")))
-      .select("query_id", "doc_id")
-    val qTerms = ph.select(col("query_id"),
-      array_distinct(col("phrase")).as("terms"))
-    bm25fRanked(docs, qTerms, k, fields, k1, b, idCol, "query_id",
-      "terms", pred, eligPairs = Some(eligPairs))
-  }
-
-  /** FULL Robertson–Zaragoza BM25F, flat-scan form — the per-field
-    * length-normalization [[bm25fTopK]]'s simplified shape can't
-    * express (the common tuning: titles want b≈0.3, bodies keep
-    * b≈0.75):
-    *
-    *   tf̃_f(d,t) = tf_f / (1 − b_f + b_f · dl_f/avgdl_f)
-    *   tf̄(d,t)  = Σ_f w_f · tf̃_f                (field-order fold)
-    *   score     = Σ_t idf(t) · tf̄(k1+1) / (tf̄ + k1)
-    *
-    * Length normalization moves INSIDE each field (its own b_f against
-    * its own exact avgdl_f), so the outer saturation sees a
-    * length-adjusted pseudo-frequency and carries no b of its own —
-    * the Zaragoza et al. 2004 formulation. df and N stay any-field,
-    * as [[bm25fTopK]].
-    *
-    * Determinism: per-field tf/dl/Σdl are exact integers; avgdl_f is
-    * ONE IEEE division (Σdl_f / N) and tf̃_f one more, both replicated
-    * textually in the oracle; tf̄ folds left-associatively in field
-    * order; the scoring tail is [[scoreAndRank]] at b = 0 (the
-    * normalization already happened per field), whose dl term is
-    * exactly 0. Scale shape identical to [[bm25fTopK]] — one extra
-    * broadcast of the same 1-row stats frame into the per-field rows.
-    *
-    * @param fields `(column, weight, b_f)` in significance order;
-    *               weights > 0, b_f in [0, 1]
-    */
-  def bm25fFullTopK(docs: DataFrame, queries: DataFrame, k: Int,
-                    fields: Seq[(String, Double, Double)],
-                    k1: Double = 1.2,
-                    idCol: String = "doc_id",
-                    queryIdCol: String = "query_id",
-                    termsCol: String = "terms",
-                    pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(fields.nonEmpty, "bm25fFullTopK needs at least one field")
-    require(fields.forall(_._2 > 0.0),
-      s"field weights must be > 0, got ${fields.map(_._2).mkString(", ")}")
-    require(fields.forall(f => f._3 >= 0.0 && f._3 <= 1.0),
-      s"per-field b must be in [0,1], got ${fields.map(_._3).mkString(", ")}")
-    val toksAll = docs.select(col(idCol).as("doc_id") +:
-      coalesce(pred.getOrElse(lit(true)), lit(false)).as("elig") +:
-      fields.zipWithIndex.map { case ((c, _, _), i) =>
-        Dedup.tokensNs(col(c)).as(s"toks_$i") }: _*)
-    val anyTok = fields.indices
-      .map(i => size(col(s"toks_$i"))).reduce(_ + _) > 0
-    val qTerms = queries.select(col(queryIdCol).as("query_id"),
-      explode(col(termsCol)).as("term"))
-      .select(col("query_id"), lower(col("term")).as("term"))
-    val qDistinct = qTerms.select("term").distinct()
-    // exact corpus statistics: N (any-field docs) + per-field Σdl, one
-    // broadcast row — avgdl_f divides INSIDE the plan, executor-side,
-    // the same IEEE division the oracle writes
-    val statCols = count("*").as("n_docs") +:
-      fields.indices.map(i =>
-        coalesce(sum(size(col(s"toks_$i")).cast("long")), lit(0L))
-          .as(s"s_$i"))
-    val rawStats = toksAll.filter(anyTok).agg(statCols.head, statCols.tail: _*)
-    val perField = fields.zipWithIndex.map { case (_, i) =>
-      toksAll.select(col("doc_id"), lit(i).as("fi"),
-          col("elig"), size(col(s"toks_$i")).cast("long").as("dlf"),
-          explode(col(s"toks_$i")).as("term"))
-        .join(broadcast(qDistinct), Seq("term"))
-        .groupBy("doc_id", "term", "fi")
-        .agg(count("*").as("tf"), max("dlf").as("dlf"),
-          max("elig").as("elig"))
-    }.reduce(_.unionByName(_))
-    val wArr = array(fields.map(f => lit(f._2)): _*)
-    val bArr = array(fields.map(f => lit(f._3)): _*)
-    val sArr = array(fields.indices.map(i => col(s"s_$i")): _*)
-    // tf̃ per (doc, term, field) row: each operand order mirrors the
-    // oracle text — (1 − b_f) + (b_f·dl_f) / (Σdl_f / N)
-    val bF = element_at(bArr, col("fi") + 1)
-    val tfn = col("tf").cast("double") /
-      (lit(1.0) - bF + bF * col("dlf").cast("double") /
-        (element_at(sArr, col("fi") + 1).cast("double") /
-          col("n_docs").cast("double")))
-    val tfQ = perField.crossJoin(broadcast(rawStats))
-      .select(col("doc_id"), col("term"), col("fi"), col("elig"),
-        tfn.as("tfn"))
-      .groupBy("doc_id", "term")
-      .agg(aggregate(
-          array_sort(collect_list(struct(col("fi"), col("tfn")))),
-          lit(0.0),
-          (acc, x) => acc + element_at(wArr, x.getField("fi") + 1) *
-            x.getField("tfn")).as("tf"),
-        max("elig").as("elig"))
-      .withColumn("dl", lit(0.0))
-    // b = 0 tail: dl/avgdl contributes exactly 0 (sum_dl = N keeps the
-    // avgdl division finite); the saturation denominator is tf̄ + k1
-    val stats = rawStats.select(col("n_docs"),
-      col("n_docs").cast("long").as("sum_dl"))
-    scoreAndRank(tfQ, qTerms, stats, k, k1, b = 0.0)
   }
 
   /** Shared BM25 scoring tail — the flat scan ([[bm25TopK]]) and the
@@ -774,25 +465,12 @@ object Retrieval {
         col("rank"), col("score"))
   }
 
-  /** Hybrid search: BM25 over the document texts fused with exact
-    * cosine over the aligned embeddings (doc_id ≡ vec_id), RRF-combined
-    * to the final top-k. Queries carry BOTH modalities — a term list
-    * and a query vector id resolved against the embedding corpus —
-    * which is the real serving sentence ("docs about X, near this
-    * embedding"). Both arms retrieve `depth` candidates (rank-space
-    * fusion needs rankings deeper than k to fuse meaningfully: an arm's
-    * k+1-th hit can enter the fused top-k).
-    *
-    * @param queries `(query_id, terms: array<string>)`; the query
-    *                vector for each query_id is looked up in
-    *                `embeddings` by `vecIdCol` ≡ query_id
-    */
   /** The fully AT-REST hybrid probe: lexical arm from the persisted
-    * inverted index ([[LexIndex.search]] — query-term bucket pruning),
-    * vector arm from the persisted IVF index ([[IvfIndex.search]] —
-    * cell partition pruning), RRF-fused. The RAG serving probe with
-    * ZERO corpus scans: every byte read is posting lists of the spoken
-    * terms or vectors of the probed cells.
+    * inverted index ([[LexIndex.search]] of `q` — query-term bucket
+    * pruning), vector arm from the persisted IVF index
+    * ([[IvfIndex.search]] — cell partition pruning), RRF-fused. The RAG
+    * serving probe with ZERO corpus scans: every byte read is posting
+    * lists of the spoken terms or vectors of the probed cells.
     *
     * Query vectors are fetched from the index BY THE QUERY ID
     * (projected, predicate-pushed one-row reads — the bounded
@@ -804,6 +482,8 @@ object Retrieval {
     *
     * @param queries `(query_id, terms)`; query_id is also the vec_id
     *                whose stored vector drives the vector arm
+    * @param q       the lexical arm's query — plain BM25 by default, or
+    *                BM25F at probe-time weights over a fielded index
     * @param pred    optional document filter over attribute columns
     *                BOTH indexes store under the same names (doc_id ≡
     *                vec_id, so the metadata is one attribute set viewed
@@ -814,7 +494,8 @@ object Retrieval {
   def hybridServe(spark: org.apache.spark.sql.SparkSession,
                   lexPath: String, ivfPath: String, queries: DataFrame,
                   k: Int, depth: Int, nprobe: Int, c: Int = 60,
-                  pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                  q: LexQuery = LexQuery(),
+                  pred: Option[Column] = None): DataFrame = {
     require(depth >= k, s"depth=$depth must be >= k=$k")
     // ONE manifest read shared by the batched vector fetch and the
     // probe — internally consistent under concurrent rebuild
@@ -842,36 +523,7 @@ object Retrieval {
     // query document itself may not match the predicate — it is the
     // probe, not a candidate); the predicate filters candidates only
     serveArms(spark,
-      LexIndex.search(spark, lexPath, queries, depth, pred = pred),
-      ivfPath, m, qVecs, excludeSelf = true, k, depth, nprobe, c, pred)
-  }
-
-  /** [[hybridServe]] with a FIELDED (BM25F) lexical arm — the
-    * title/body hybrid: the lexical candidates come from
-    * [[LexIndex.searchFielded]] at the given probe-time field weights,
-    * the vector arm from the IVF index by the query id's stored
-    * embedding (self-excluding, the by-id semantics), RRF-fused. Zero
-    * corpus scans, as every at-rest hybrid. */
-  def hybridServeFielded(spark: org.apache.spark.sql.SparkSession,
-                         lexPath: String, ivfPath: String,
-                         queries: DataFrame, k: Int, depth: Int,
-                         nprobe: Int, weights: Seq[(String, Double)],
-                         c: Int = 60,
-                         pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(depth >= k, s"depth=$depth must be >= k=$k")
-    val m = IvfIndex.readManifestFull(spark, ivfPath)
-    val ids = queries.select("query_id").collect().map(_.getLong(0))
-    val qVecs = IvfIndex.lookupVectorsFrame(spark, ivfPath, m, ids)
-      .select(col("vec_id"), col("embedding"))
-    // ids-only presence check — hybridServe's rationale
-    val present = qVecs.select("vec_id").collect().map(_.getLong(0)).toSet
-    val missing = ids.filterNot(present).take(8)
-    require(missing.isEmpty,
-      s"vec_ids ${missing.mkString(", ")} are not stored in the index " +
-        s"at $ivfPath")
-    serveArms(spark,
-      LexIndex.searchFielded(spark, lexPath, queries, depth, weights,
-        pred = pred),
+      LexIndex.search(spark, lexPath, queries, depth, q, pred),
       ivfPath, m, qVecs, excludeSelf = true, k, depth, nprobe, c, pred)
   }
 
@@ -888,7 +540,7 @@ object Retrieval {
   def hybridServeLiteral(spark: org.apache.spark.sql.SparkSession,
                          lexPath: String, ivfPath: String, queries: DataFrame,
                          k: Int, depth: Int, nprobe: Int, c: Int = 60,
-                         pred: Option[org.apache.spark.sql.Column] = None,
+                         pred: Option[Column] = None,
                          vecCol: String = "embedding"): DataFrame = {
     require(depth >= k, s"depth=$depth must be >= k=$k")
     val m = IvfIndex.readManifestFull(spark, ivfPath)
@@ -900,8 +552,7 @@ object Retrieval {
   }
 
   /** The shared at-rest fusion tail: an already-built LEXICAL arm
-    * (plain [[LexIndex.search]] or the fielded [[LexIndex.searchFielded]])
-    * + the vector probe over an already-resolved manifest, RRF-fused.
+    * ([[LexIndex.search]]) + the vector probe over an already-resolved manifest, RRF-fused.
     * `qVecs` is `(vec_id, embedding)` — fetched from the index
     * ([[hybridServe]]) or carried literally by the queries
     * ([[hybridServeLiteral]]). */
@@ -911,7 +562,7 @@ object Retrieval {
                         qVecs: DataFrame,
                         excludeSelf: Boolean, k: Int, depth: Int,
                         nprobe: Int, c: Int,
-                        pred: Option[org.apache.spark.sql.Column]): DataFrame = {
+                        pred: Option[Column]): DataFrame = {
     val lex = lexArm.select(col("query_id"), col("doc_id"), col("rank"))
     val vec = IvfIndex.searchWith(spark, ivfPath, m, qVecs, depth, nprobe,
         "vec_id", "embedding", pred, excludeSelf)
@@ -1128,7 +779,8 @@ object Retrieval {
     // did, now also feeding the greedy instead of a plan that would
     // re-run the probe
     val (candRows, cand) =
-      localBounded(LexIndex.search(spark, lexPath, queries, depth, k1, b))
+      localBounded(LexIndex.search(spark, lexPath, queries, depth,
+        LexQuery(scoring = LexQuery.Bm25(k1, b))))
     mmrTopK(cand, candidateVecsLoud(spark, ivfPath,
       candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
   }
@@ -1215,7 +867,7 @@ object Retrieval {
                             lexPath: String, ivfPath: String,
                             queries: DataFrame, k: Int, lambda: Double,
                             depth: Int, nprobe: Int, c: Int = 60,
-                            pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                            pred: Option[Column] = None): DataFrame = {
     require(depth >= k, s"depth=$depth must be >= k=$k")
     // depth-bounded fused ranking, two consumers — mmrServe's rationale
     val (candRows, cand) = localBounded(hybridServeLiteral(spark, lexPath,
@@ -1224,13 +876,25 @@ object Retrieval {
       candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
   }
 
+  /** Hybrid search: BM25 over the document texts fused with exact
+    * cosine over the aligned embeddings (doc_id ≡ vec_id), RRF-combined
+    * to the final top-k. Queries carry BOTH modalities — a term list
+    * and a query vector id resolved against the embedding corpus —
+    * which is the real serving sentence ("docs about X, near this
+    * embedding"). Both arms retrieve `depth` candidates (rank-space
+    * fusion needs rankings deeper than k to fuse meaningfully: an arm's
+    * k+1-th hit can enter the fused top-k).
+    *
+    * @param queries `(query_id, terms: array<string>)`; the query
+    *                vector for each query_id is looked up in
+    *                `embeddings` by `vecIdCol` ≡ query_id
+    */
   def hybridTopK(docs: DataFrame, embeddings: DataFrame, queries: DataFrame,
                  k: Int, depth: Int, c: Int = 60,
-                 idCol: String = "doc_id", textCol: String = "text",
                  vecIdCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
     require(depth >= k, s"depth=$depth must be >= k=$k")
-    val lex = bm25TopK(docs, queries, depth, idCol = idCol, textCol = textCol)
+    val lex = bm25TopK(docs, queries, depth)
     val qVecs = embeddings.join(
       broadcast(queries.select(col("query_id").as(vecIdCol))), Seq(vecIdCol))
     // the query is EXTERNAL (a term list + an embedding), not a corpus
@@ -1238,7 +902,7 @@ object Retrieval {
     // stored vector IS the query vector is a legitimate (best) hit
     val vec = Similarity.bruteForceTopK(qVecs, embeddings, depth,
         idCol = vecIdCol, vecCol = vecCol, excludeSelf = false)
-      .select(col("query_id"), col("neighbor_id").as(idCol), col("rank"))
-    rrfFuse(lex.select("query_id", idCol, "rank"), vec, k, c, idCol)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+    rrfFuse(lex.select("query_id", "doc_id", "rank"), vec, k, c)
   }
 }

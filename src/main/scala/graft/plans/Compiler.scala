@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Events, Multimodal, Retrieval, Sampling, Similarity, SkewJoin, TextAnalysis}
+import graft.operators.{Dedup, Events, LexIndex, LexQuery, Multimodal, Retrieval, Sampling, Similarity, SkewJoin, TextAnalysis}
 
 /** Plan IR → DataFrame program.
   *
@@ -71,6 +71,10 @@ object Compiler {
       s"$op needs a manifested table or persisted index input (a " +
         "directory with manifest-*.txt / index-manifest-*.txt / " +
         "lex-manifest-*.txt) — plain frames have no versions to act on"))
+    def lexProbe(tokens: Seq[String], k: Int, q: LexQuery,
+                 where: Option[Pred]): DataFrame =
+      LexIndex.search(spark, path, spokenQuery(spark, tokens, q), k, q,
+        where.map(predicate(df, _)))
     op match {
       case Op.LoadAtVersion(v) => ManifestedLog.loadAt(spark, path, v)
       case Op.CompactClosedDays(wmUs) =>
@@ -145,64 +149,29 @@ object Compiler {
         val exact = Similarity.bruteForceTopK(queries, corpus, k)
         if (ndcg) Retrieval.ndcgAtK(probe, exact, k)
         else Retrieval.recallAtK(probe, exact, k)
+      // the spoken tokens are the query (query_id -1, as Bm25TopK): the
+      // probe reads only those terms' bucket partitions, positional
+      // matches run from the stored position lists, fielded scorings
+      // apply the spoken weights at probe time, and a spoken attribute
+      // filter pushes into that pruned scan — zero corpus scans
       case Op.LexSearch(terms, k, where) =>
-        // the spoken term list is the query (query_id -1, as Bm25TopK);
-        // the probe reads only those terms' bucket partitions, and a
-        // spoken attribute filter pushes into that pruned scan
-        val queries = spark.createDataFrame(Seq((-1L, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.LexIndex.search(spark, path, queries, k,
-          pred = where.map(predicate(df, _)))
+        lexProbe(terms, k, LexQuery(), where)
       case Op.LexPhraseSearch(phrase, k, where) =>
-        // the quoted phrase is the query (query_id -1): adjacency from
-        // the positional index's stored position lists, candidates
-        // pruned to the phrase terms' buckets — zero corpus scans
-        val phrases = spark.createDataFrame(Seq((-1L, phrase)))
-          .toDF("query_id", "phrase")
-        graft.operators.LexIndex.searchPhrase(spark, path, phrases, k,
-          pred = where.map(predicate(df, _)))
+        lexProbe(phrase, k, LexQuery(LexQuery.Phrase()), where)
       case Op.LexSloppySearch(phrase, k, slop, where) =>
-        // ordered-within-slop chains from the positional index's
-        // stored position lists — zero corpus scans
-        val phrases = spark.createDataFrame(Seq((-1L, phrase)))
-          .toDF("query_id", "phrase")
-        graft.operators.LexIndex.searchPhraseSloppy(spark, path, phrases,
-          k, slop, pred = where.map(predicate(df, _)))
+        lexProbe(phrase, k, LexQuery(LexQuery.Sloppy(slop)), where)
       case Op.LexFieldedSearch(terms, k, ws, where) =>
-        // BM25F from the fielded index's per-field postings; the
-        // spoken weights apply at probe time (one index, any weighting)
-        val queries = spark.createDataFrame(Seq((-1L, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.LexIndex.searchFielded(spark, path, queries, k,
-          ws, pred = where.map(predicate(df, _)))
+        lexProbe(terms, k, LexQuery(scoring = LexQuery.Bm25F(ws)), where)
       case Op.LexFieldedFullSearch(terms, k, params, where) =>
-        // the full-BM25F probe of the same fielded index the
-        // simplified probe serves — every parameter probe-time
-        val queries = spark.createDataFrame(Seq((-1L, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.LexIndex.searchFieldedFull(spark, path, queries,
-          k, params, pred = where.map(predicate(df, _)))
+        lexProbe(terms, k, LexQuery(scoring = LexQuery.Bm25FFull(params)), where)
       case Op.LexFieldedPhraseSearch(phrase, k, field, ws, where) =>
-        // "the phrase in the TITLE", served: within-field adjacency
-        // from the fielded positional index's stored position lists
-        val phrases = spark.createDataFrame(Seq((-1L, phrase)))
-          .toDF("query_id", "phrase")
-        graft.operators.LexIndex.searchPhraseFielded(spark, path, phrases,
-          k, ws, field, pred = where.map(predicate(df, _)))
+        lexProbe(phrase, k, LexQuery(LexQuery.Phrase(Some(field)),
+          LexQuery.Bm25F(ws)), where)
       case Op.LexFieldedSloppySearch(phrase, k, field, slop, ws, where) =>
-        // the ordered-within-slop chain over the named field's stream
-        val phrases = spark.createDataFrame(Seq((-1L, phrase)))
-          .toDF("query_id", "phrase")
-        graft.operators.LexIndex.searchPhraseSloppyFielded(spark, path,
-          phrases, k, ws, field, slop,
-          pred = where.map(predicate(df, _)))
+        lexProbe(phrase, k, LexQuery(LexQuery.Sloppy(slop, Some(field)),
+          LexQuery.Bm25F(ws)), where)
       case Op.LexProximitySearch(terms, k, w, where) =>
-        // window containment from the positional index's stored
-        // position lists — zero corpus scans
-        val queries = spark.createDataFrame(Seq((-1L, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.LexIndex.searchProximity(spark, path, queries, k,
-          w, pred = where.map(predicate(df, _)))
+        lexProbe(terms, k, LexQuery(LexQuery.Window(w)), where)
       case Op.LexHybridServe(terms, vec, k, depth, nprobe, where) =>
         // the literal query carries BOTH modalities inline (query_id
         // -1, outside the stored id space); the lexical index is the
@@ -260,8 +229,8 @@ object Compiler {
             "lexical one — the hybrid serves from both stores"))
         val queries = spark.createDataFrame(Seq((qid, terms)))
           .toDF("query_id", "terms")
-        graft.operators.Retrieval.hybridServeFielded(spark, path, ivfPath,
-          queries, k, depth, nprobe, ws,
+        Retrieval.hybridServe(spark, path, ivfPath, queries, k, depth,
+          nprobe, q = LexQuery(scoring = LexQuery.Bm25F(ws)),
           pred = where.map(predicate(df, _)))
       case Op.HybridEval(ndcg, k, qid, terms, depth, nprobe) =>
         // the fused at-rest probe vs the exact-hybrid reference: the
@@ -310,6 +279,18 @@ object Compiler {
         lexContent(spark, path)
     }
   }
+
+  /** A spoken lexical query as a one-row frame in `q`'s column
+    * contract, query_id -1 (outside the stored doc id space). */
+  private def spokenQuery(spark: org.apache.spark.sql.SparkSession,
+                          tokens: Seq[String], q: LexQuery): DataFrame =
+    spark.createDataFrame(Seq((-1L, tokens))).toDF("query_id", q.column)
+
+  /** A spoken lexical query over the input documents (the flat scan). */
+  private def lexScan(df: DataFrame, tokens: Seq[String], k: Int,
+                      q: LexQuery, where: Option[Pred]): DataFrame =
+    Retrieval.bm25TopK(df, spokenQuery(df.sparkSession, tokens, q), k, q,
+      where.map(predicate(df, _)))
 
   /** The inverted index's logical content — what the lexical
     * maintenance verbs read back for their content-invariance oracles:
@@ -545,66 +526,28 @@ object Compiler {
       val queries = Seq((-1L, vec.toArray)).toDF("vec_id", "embedding")
       similarServe(df, queries, k, pq, rerank, proj, sq8,
                    where.map(predicate(df, _)))
+    // the spoken tokens ARE the query — one-row broadcast frame,
+    // query_id -1 (outside the stored doc id space); a spoken attribute
+    // filter pre-filters candidates (full-corpus stats); fielded
+    // scorings read the input frame's named field columns
     case Op.Bm25TopK(terms, k, where) =>
-      // the spoken term list IS the query — one-row broadcast frame,
-      // query_id -1 (outside the stored doc id space); a spoken
-      // attribute filter pre-filters candidates (full-corpus stats)
-      val session = df.sparkSession
-      val queries = session.createDataFrame(Seq((-1L, terms)))
-        .toDF("query_id", "terms")
-      Retrieval.bm25TopK(df, queries, k, pred = where.map(predicate(df, _)))
+      lexScan(df, terms, k, LexQuery(), where)
     case Op.Bm25Phrase(phrase, k, where) =>
-      // the quoted phrase IS the query (query_id -1): only documents
-      // containing the contiguous run rank, stats full-corpus
-      val session = df.sparkSession
-      val phrases = session.createDataFrame(Seq((-1L, phrase)))
-        .toDF("query_id", "phrase")
-      Retrieval.bm25PhraseTopK(df, phrases, k,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, phrase, k, LexQuery(LexQuery.Phrase()), where)
     case Op.Bm25Sloppy(phrase, k, slop, where) =>
-      // phrase tokens in order within slop extra positions (query_id -1)
-      val session = df.sparkSession
-      val phrases = session.createDataFrame(Seq((-1L, phrase)))
-        .toDF("query_id", "phrase")
-      Retrieval.bm25SloppyPhraseTopK(df, phrases, k, slop,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, phrase, k, LexQuery(LexQuery.Sloppy(slop)), where)
     case Op.Bm25F(terms, k, ws, where) =>
-      // weighted-aggregate BM25F over the input frame's named fields
-      val session = df.sparkSession
-      val queries = session.createDataFrame(Seq((-1L, terms)))
-        .toDF("query_id", "terms")
-      Retrieval.bm25fTopK(df, queries, k, ws,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, terms, k, LexQuery(scoring = LexQuery.Bm25F(ws)), where)
     case Op.Bm25FFull(terms, k, params, where) =>
-      // full Robertson–Zaragoza BM25F: per-field b before the shared
-      // saturation, weights/b/k1 all from the sentence
-      val session = df.sparkSession
-      val queries = session.createDataFrame(Seq((-1L, terms)))
-        .toDF("query_id", "terms")
-      Retrieval.bm25fFullTopK(df, queries, k, params,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, terms, k, LexQuery(scoring = LexQuery.Bm25FFull(params)), where)
     case Op.Bm25FPhrase(phrase, k, field, ws, where) =>
-      // the quoted phrase must run contiguously inside the NAMED
-      // field's own token stream; BM25F scores at the spoken weights
-      val session = df.sparkSession
-      val phrases = session.createDataFrame(Seq((-1L, phrase)))
-        .toDF("query_id", "phrase")
-      Retrieval.bm25fPhraseTopK(df, phrases, k, ws, field,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, phrase, k, LexQuery(LexQuery.Phrase(Some(field)),
+        LexQuery.Bm25F(ws)), where)
     case Op.Bm25FSloppy(phrase, k, field, slop, ws, where) =>
-      // ordered within slop inside one field's stream, BM25F-scored
-      val session = df.sparkSession
-      val phrases = session.createDataFrame(Seq((-1L, phrase)))
-        .toDF("query_id", "phrase")
-      Retrieval.bm25fSloppyPhraseTopK(df, phrases, k, ws, field, slop,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, phrase, k, LexQuery(LexQuery.Sloppy(slop, Some(field)),
+        LexQuery.Bm25F(ws)), where)
     case Op.Bm25Proximity(terms, k, w, where) =>
-      // all terms inside some w-token run, any order (query_id -1)
-      val session = df.sparkSession
-      val queries = session.createDataFrame(Seq((-1L, terms)))
-        .toDF("query_id", "terms")
-      Retrieval.bm25ProximityTopK(df, queries, k, w,
-        pred = where.map(predicate(df, _)))
+      lexScan(df, terms, k, LexQuery(LexQuery.Window(w)), where)
     case Op.MmrTopK(terms, k, lambda, depth) =>
       // BM25 candidates over the input documents; diversification
       // vectors from the catalog-bound embeddings (doc_id ≡ vec_id)

@@ -200,19 +200,19 @@ object Op {
     * matching \"spark join\"") — only documents containing the phrase
     * as a CONTIGUOUS token run rank, scored by BM25 over the phrase's
     * distinct terms with full-corpus stats
-    * ([[graft.operators.Retrieval.bm25PhraseTopK]]); query_id -1. */
+    * ([[graft.operators.Retrieval.bm25TopK]], `Phrase`); query_id -1. */
   final case class Bm25Phrase(phrase: Seq[String], k: Int,
                               where: Option[Pred] = None)          extends CorpusOp
   /** SLOPPY-phrase BM25 top-k ("documents matching \"spark fast\" with
     * slop 3") — phrase tokens IN ORDER within `slop` extra positions
     * (∃ p₀ < … < pₙ₋₁ matching the slots, pₙ₋₁ − p₀ ≤ (n−1)+slop;
     * slop 0 = the exact phrase)
-    * ([[graft.operators.Retrieval.bm25SloppyPhraseTopK]]). */
+    * ([[graft.operators.Retrieval.bm25TopK]], `Sloppy`). */
   final case class Bm25Sloppy(phrase: Seq[String], k: Int, slop: Int,
                               where: Option[Pred] = None)          extends CorpusOp
   /** BM25F multi-field top-k ("documents matching spark, join
     * weighting title 2, text 1") — weighted-aggregate scoring over
-    * named fields ([[graft.operators.Retrieval.bm25fTopK]]). */
+    * named fields ([[graft.operators.Retrieval.bm25TopK]], `Bm25F`). */
   final case class Bm25F(terms: Seq[String], k: Int,
                          weights: Seq[(String, Double)],
                          where: Option[Pred] = None)               extends CorpusOp
@@ -220,27 +220,27 @@ object Op {
     * weighting title 2, text 1 normalizing title 0.3, text 0.75") —
     * per-field length normalization INSIDE each field before the
     * shared saturation
-    * ([[graft.operators.Retrieval.bm25fFullTopK]]). */
+    * ([[graft.operators.Retrieval.bm25TopK]], `Bm25FFull`). */
   final case class Bm25FFull(terms: Seq[String], k: Int,
                              params: Seq[(String, Double, Double)],
                              where: Option[Pred] = None)           extends CorpusOp
   /** Quoted-phrase BM25F ("documents matching \"the fast\" in title
     * weighting title 2, text 1") — the run must sit in the NAMED
     * field's OWN token stream; the eligible docs rank by BM25F at the
-    * spoken weights ([[graft.operators.Retrieval.bm25fPhraseTopK]]). */
+    * spoken weights ([[graft.operators.Retrieval.bm25TopK]], `Phrase(field)` × `Bm25F`). */
   final case class Bm25FPhrase(phrase: Seq[String], k: Int, field: String,
                                weights: Seq[(String, Double)],
                                where: Option[Pred] = None)         extends CorpusOp
   /** SLOPPY-phrase BM25F ("… \"spark fast\" in text with slop 3
     * weighting title 2, text 1") — ordered within slop inside one
     * field's stream
-    * ([[graft.operators.Retrieval.bm25fSloppyPhraseTopK]]). */
+    * ([[graft.operators.Retrieval.bm25TopK]], `Sloppy(slop, field)` × `Bm25F`). */
   final case class Bm25FSloppy(phrase: Seq[String], k: Int, field: String,
                                slop: Int, weights: Seq[(String, Double)],
                                where: Option[Pred] = None)         extends CorpusOp
   /** PROXIMITY BM25 top-k ("documents matching spark, join within 5
     * tokens") — only documents with all terms inside some window-token
-    * run rank ([[graft.operators.Retrieval.bm25ProximityTopK]]). */
+    * run rank ([[graft.operators.Retrieval.bm25TopK]], `Window`). */
   final case class Bm25Proximity(terms: Seq[String], k: Int, window: Int,
                                  where: Option[Pred] = None)       extends CorpusOp
   /** MMR-diversified retrieval: BM25 depth-candidates over the input
@@ -612,35 +612,35 @@ object Op {
   final case class LexSearch(terms: Seq[String], k: Int,
                              where: Option[Pred] = None)           extends TableOp
   /** Quoted-PHRASE probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.searchPhrase]] — adjacency from the
+    * ([[graft.operators.LexIndex.search]], `Phrase` — adjacency from the
     * stored position lists on the pruned candidate rows; zero corpus
     * scans; score-identical to the flat [[Bm25Phrase]] scan over the
     * indexed corpus). */
   final case class LexPhraseSearch(phrase: Seq[String], k: Int,
                                    where: Option[Pred] = None)     extends TableOp
   /** SLOPPY-phrase probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.searchPhraseSloppy]] — ordered chains
+    * ([[graft.operators.LexIndex.search]], `Sloppy` — ordered chains
     * within the slop window from stored position lists on the pruned
     * candidate rows; zero corpus scans; score-identical to the flat
     * [[Bm25Sloppy]] scan over the indexed corpus). */
   final case class LexSloppySearch(phrase: Seq[String], k: Int, slop: Int,
                                    where: Option[Pred] = None)     extends TableOp
   /** BM25F probe of the bound FIELDED inverted index
-    * ([[graft.operators.LexIndex.searchFielded]] — weighted-aggregate
+    * ([[graft.operators.LexIndex.search]], `Bm25F` — weighted-aggregate
     * scoring from per-field postings and the manifest's exact
     * per-field sums; weights are probe-time). */
   final case class LexFieldedSearch(terms: Seq[String], k: Int,
                                     weights: Seq[(String, Double)],
                                     where: Option[Pred] = None)    extends TableOp
   /** FULL Robertson–Zaragoza BM25F probe of the bound FIELDED index
-    * ([[graft.operators.LexIndex.searchFieldedFull]] — per-field b
+    * ([[graft.operators.LexIndex.search]], `Bm25FFull` — per-field b
     * over the same stored integers [[LexFieldedSearch]] probes; every
     * parameter probe-time). */
   final case class LexFieldedFullSearch(terms: Seq[String], k: Int,
                                         params: Seq[(String, Double, Double)],
                                         where: Option[Pred] = None) extends TableOp
   /** Quoted-phrase probe of the bound FIELDED POSITIONAL index
-    * ([[graft.operators.LexIndex.searchPhraseFielded]] — "the phrase
+    * ([[graft.operators.LexIndex.search]], `Phrase(field)` × `Bm25F` — "the phrase
     * in the TITLE", served: adjacency from the target field's stored
     * within-field position lists, BM25F scoring at the spoken
     * weights; zero corpus scans). */
@@ -649,13 +649,13 @@ object Op {
                                           weights: Seq[(String, Double)],
                                           where: Option[Pred] = None) extends TableOp
   /** SLOPPY-phrase probe of the bound FIELDED POSITIONAL index
-    * ([[graft.operators.LexIndex.searchPhraseSloppyFielded]]). */
+    * ([[graft.operators.LexIndex.search]], `Sloppy(slop, field)` × `Bm25F`). */
   final case class LexFieldedSloppySearch(phrase: Seq[String], k: Int,
                                           field: String, slop: Int,
                                           weights: Seq[(String, Double)],
                                           where: Option[Pred] = None) extends TableOp
   /** PROXIMITY probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.searchProximity]] — window
+    * ([[graft.operators.LexIndex.search]], `Window` — window
     * containment from stored position lists on the pruned candidate
     * rows; zero corpus scans). */
   final case class LexProximitySearch(terms: Seq[String], k: Int,
@@ -691,7 +691,7 @@ object Op {
                                      lambda: Double, depth: Int,
                                      nprobe: Int, qid: Long)       extends TableOp
   /** The FIELDED hybrid served at rest over TWO bound indexes
-    * ([[graft.operators.Retrieval.hybridServeFielded]]): BM25F lexical
+    * ([[graft.operators.Retrieval.hybridServe]] with a `Bm25F` lexical arm): BM25F lexical
     * arm from this bound FIELDED index at the spoken probe-time
     * weights, vector arm from the bound IVF index by the spoken query
     * id's STORED embedding (self-excluding, the by-id semantics),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Retrieval
+import graft.operators.{LexIndex, LexQuery, Retrieval}
 import graft.sources.Sources.table
 
 /** Lexical + hybrid retrieval queries (Retrieval.scala) over
@@ -115,6 +115,21 @@ object RetrievalQueries extends QueryPack {
   private[queries] val ProxWindow = 6
   private def proxQueriesDf(s: SparkSession): DataFrame =
     s.createDataFrame(ProxQueries).toDF("query_id", "terms")
+
+  // the pack's lexical queries, one value per (match, scoring) pair it
+  // serves — BM25 at (K1, B), BM25F at the fixture weights; each flat
+  // query and its at-rest twin compile the same value
+  private val Bm25Q = LexQuery.Bm25(K1, B)
+  private val Bm25FQ = LexQuery.Bm25F(FieldWeights, K1, B)
+  private val TermsQ = LexQuery(scoring = Bm25Q)
+  private val PhraseQ = LexQuery(LexQuery.Phrase(), Bm25Q)
+  private val SloppyQ = LexQuery(LexQuery.Sloppy(Slop), Bm25Q)
+  private val WindowQ = LexQuery(LexQuery.Window(ProxWindow), Bm25Q)
+  private val FieldedQ = LexQuery(scoring = Bm25FQ)
+  private val FieldedFullQ =
+    LexQuery(scoring = LexQuery.Bm25FFull(FieldParamsFull, K1))
+  private val TitlePhraseQ = LexQuery(LexQuery.Phrase(Some("title")), Bm25FQ)
+  private val TextSloppyQ = LexQuery(LexQuery.Sloppy(Slop, Some("text")), Bm25FQ)
 
   /** The filtered-serving slice: the documents table's own `lang`
     * attribute (x102/x103/nl128/nl129), and the embeddings' `label`
@@ -285,8 +300,7 @@ object RetrievalQueries extends QueryPack {
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x98_bm25_topk" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s), K,
-        k1 = K1, b = B)),
+      Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s), K, TermsQ)),
 
     "x99_hybrid_rrf" -> ((s: SparkSession, d: String) =>
       Retrieval.hybridTopK(table(s, d, "documents"),
@@ -296,8 +310,7 @@ object RetrievalQueries extends QueryPack {
     // x98 — the probe must hash-match the flat scan exactly (and the
     // shared oracle makes them interleaved bench twins).
     "x100_lex_index_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.search(s, lexIndexTable(s, d),
-        queriesDf(s), K, k1 = K1, b = B)),
+      LexIndex.search(s, lexIndexTable(s, d), queriesDf(s), K, TermsQ)),
 
     // The fully at-rest hybrid probe: lexical arm from the inverted
     // index, vector arm from the persisted IVF index, RRF-fused — the
@@ -314,15 +327,14 @@ object RetrievalQueries extends QueryPack {
     // full-corpus (the scoring function is unchanged; the candidate
     // set is filtered — x91's contract, lexical side).
     "x102_bm25_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s), K,
-        k1 = K1, b = B, pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s), K, TermsQ,
+        pred = Some(col("lang") === FilterLang))),
 
     // The same filter served AT REST: the predicate over the index's
     // stored `lang` attribute pushes into the pruned bucket scan.
     // Same oracle STRING as x102 — interleaved bench twins.
     "x103_lex_search_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.search(s, lexAttrIndexTable(s, d),
-        queriesDf(s), K, k1 = K1, b = B,
+      LexIndex.search(s, lexAttrIndexTable(s, d), queriesDf(s), K, TermsQ,
         pred = Some(col("lang") === FilterLang))),
 
     // Attribute-filtered HYBRID serving: both at-rest arms pre-filter
@@ -341,13 +353,13 @@ object RetrievalQueries extends QueryPack {
     "x105_lex_compact" -> ((s: SparkSession, d: String) => {
       val p = lexMaintIndexTable(s, d)
       graft.operators.LexIndex.compact(s, p)
-      graft.operators.LexIndex.search(s, p, queriesDf(s), K, k1 = K1, b = B)
+      LexIndex.search(s, p, queriesDf(s), K, TermsQ)
     }),
 
     "x106_lex_vacuum" -> ((s: SparkSession, d: String) => {
       val p = lexMaintIndexTable(s, d)
       graft.operators.LexIndex.vacuum(s, p, keepVersions = 1)
-      graft.operators.LexIndex.search(s, p, queriesDf(s), K, k1 = K1, b = B)
+      LexIndex.search(s, p, queriesDf(s), K, TermsQ)
     }),
 
     // Postings compliance erasure: "forget doc X" reaches the inverted
@@ -359,7 +371,7 @@ object RetrievalQueries extends QueryPack {
     "x107_lex_erase" -> ((s: SparkSession, d: String) => {
       val p = lexEraseIndexTable(s, d)
       graft.operators.LexIndex.deleteByKey(s, p, LexEraseKeys)
-      graft.operators.LexIndex.search(s, p, queriesDf(s), K, k1 = K1, b = B)
+      LexIndex.search(s, p, queriesDf(s), K, TermsQ)
     }),
 
     // Change-feed-driven index maintenance, self-certified (x93's
@@ -372,8 +384,7 @@ object RetrievalQueries extends QueryPack {
       import graft.operators.LexIndex
       val (logPath, idxPath, twinPath) = lexSyncScenario(s, d)
       val (to1, v1) = LexIndex.syncFromLog(s, logPath, idxPath)
-      def ranked(p: String) = LexIndex.search(s, p, queriesDf(s), K,
-          k1 = K1, b = B)
+      def ranked(p: String) = LexIndex.search(s, p, queriesDf(s), K, TermsQ)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSet
       // each probe collected ONCE (ranked(idxPath) evaluated twice in
@@ -391,7 +402,7 @@ object RetrievalQueries extends QueryPack {
       val p = lexEraseWhereIndexTable(s, d)
       graft.operators.LexIndex.deleteWhere(s, p,
         col("lang") === LexEraseLang)
-      graft.operators.LexIndex.search(s, p, queriesDf(s), K, k1 = K1, b = B)
+      LexIndex.search(s, p, queriesDf(s), K, TermsQ)
     }),
 
     // Per-bucket index observability from parquet footers only (the
@@ -426,7 +437,7 @@ object RetrievalQueries extends QueryPack {
       import s.implicits._
       val dir = lexDfHealthIndexTable(s, d)
       val qs = queriesDf(s)
-      def res = graft.operators.LexIndex.search(s, dir, qs, K, k1 = K1, b = B)
+      def res = LexIndex.search(s, dir, qs, K, TermsQ)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSet
       def health = graft.operators.LexIndex.dfSidecarHealth(s, dir).collect()
@@ -498,16 +509,14 @@ object RetrievalQueries extends QueryPack {
     // scored by BM25 over the phrase's distinct terms with full-corpus
     // stats. The fixture includes a duplicate-term phrase.
     "x115_bm25_phrase" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25PhraseTopK(table(s, d, "documents"), phrasesDf(s), K,
-        k1 = K1, b = B)),
+      Retrieval.bm25TopK(table(s, d, "documents"), phrasesDf(s), K, PhraseQ)),
 
     // The same phrases served AT REST from the positional index:
     // adjacency from stored position lists on the pruned candidate
     // rows — zero corpus scans. Same oracle STRING as x115 (the
     // interleaved-bench-twin convention).
     "x116_lex_phrase_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhrase(s, lexPosIndexTable(s, d),
-        phrasesDf(s), K, k1 = K1, b = B)),
+      LexIndex.search(s, lexPosIndexTable(s, d), phrasesDf(s), K, PhraseQ)),
 
     // The FILTERED literal-query hybrid — the full production serving
     // sentence: fresh embedding + keywords + a metadata filter, both
@@ -522,51 +531,47 @@ object RetrievalQueries extends QueryPack {
     // Proximity retrieval — the middle ground between bag-of-words and
     // the exact phrase: all terms inside some 6-token run, any order.
     "x122_bm25_proximity" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25ProximityTopK(table(s, d, "documents"),
-        proxQueriesDf(s), K, ProxWindow, k1 = K1, b = B)),
+      Retrieval.bm25TopK(table(s, d, "documents"), proxQueriesDf(s), K,
+        WindowQ)),
 
     // Served at rest from the positional index: window containment
     // from stored position lists on the pruned candidate rows — zero
     // corpus scans. Same oracle STRING as x122.
     "x123_lex_proximity_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchProximity(s, lexPosIndexTable(s, d),
-        proxQueriesDf(s), K, ProxWindow, k1 = K1, b = B)),
+      LexIndex.search(s, lexPosIndexTable(s, d), proxQueriesDf(s), K,
+        WindowQ)),
 
     // Filtered proximity: window containment AND the lang slice.
     "x125_bm25_proximity_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25ProximityTopK(table(s, d, "documents"),
-        proxQueriesDf(s), K, ProxWindow, k1 = K1, b = B,
-        pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(table(s, d, "documents"), proxQueriesDf(s), K,
+        WindowQ, pred = Some(col("lang") === FilterLang))),
 
     // At rest from the positions+attrs index; shares x125's string.
     "x126_lex_proximity_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchProximity(s, lexPosAttrIndexTable(s, d),
-        proxQueriesDf(s), K, ProxWindow, k1 = K1, b = B,
-        pred = Some(col("lang") === FilterLang))),
+      LexIndex.search(s, lexPosAttrIndexTable(s, d), proxQueriesDf(s), K,
+        WindowQ, pred = Some(col("lang") === FilterLang))),
 
     // BM25F multi-field retrieval — the title/body shape: weighted
     // aggregates (tf' = Σ w_f·tf_f, dl' = Σ w_f·dl_f) under the shared
     // saturation curve, df over any-field containment. The title field
     // weighs 2× so a title hit genuinely reranks against body spam.
     "x129_bm25f" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fTopK(titledDocs(s, d), queriesDf(s), K, FieldWeights,
-        k1 = K1, b = B)),
+      Retrieval.bm25TopK(titledDocs(s, d), queriesDf(s), K, FieldedQ)),
 
     // The same BM25F served AT REST from the FIELDED index: weighted
     // tf'/dl' fold per-field postings and the stored length vectors,
     // corpus stats weight the manifest's exact per-field sums, df from
     // the distinct-doc sidecars. Same oracle STRING as x129.
     "x130_lexf_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchFielded(s, lexFieldedIndexTable(s, d),
-        queriesDf(s), K, FieldWeights, k1 = K1, b = B)),
+      LexIndex.search(s, lexFieldedIndexTable(s, d), queriesDf(s), K,
+        FieldedQ)),
 
     // FULL Robertson–Zaragoza BM25F — per-field length normalization
     // (title b 0.3, body b 0.75: the classic tuning the simplified
     // shared-saturation form can't express), then the field-order
     // weighted fold saturating against k1 alone.
     "x139_bm25f_full" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fFullTopK(titledDocs(s, d), queriesDf(s), K,
-        FieldParamsFull, k1 = K1)),
+      Retrieval.bm25TopK(titledDocs(s, d), queriesDf(s), K, FieldedFullQ)),
 
     // The same full form served AT REST from the SAME fielded index
     // x130 probes — w_f, b_f AND k1 are all probe-time arguments over
@@ -574,59 +579,53 @@ object RetrievalQueries extends QueryPack {
     // simplified and the full scoring without a rebuild. Same oracle
     // STRING as x139 (interleaved bench twins).
     "x140_lexf_search_full" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchFieldedFull(s,
-        lexFieldedIndexTable(s, d), queriesDf(s), K, FieldParamsFull,
-        k1 = K1)),
+      LexIndex.search(s, lexFieldedIndexTable(s, d), queriesDf(s), K,
+        FieldedFullQ)),
 
     // The FIELDED hybrid — the title/body RAG probe: BM25F lexical arm
     // from the fielded index (probe-time weights), by-id vector arm
     // from the IVF index, RRF-fused; zero corpus scans.
     "x137_hybrid_serve_fielded" -> ((s: SparkSession, d: String) =>
-      Retrieval.hybridServeFielded(s, lexFieldedIndexTable(s, d),
+      Retrieval.hybridServe(s, lexFieldedIndexTable(s, d),
         VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-        IvfNProbe, FieldWeights, RrfC)),
+        IvfNProbe, RrfC, LexQuery(scoring = LexQuery.Bm25F(FieldWeights)))),
 
     // FIELDED × POSITIONAL — "the phrase in the TITLE": only documents
     // whose title stream holds the contiguous run rank, scored by
     // BM25F at the probe weights (the phrase restricts candidates,
     // never scoring — the phrase contract, fielded form).
     "x143_bm25f_phrase" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fPhraseTopK(titledDocs(s, d), titlePhrasesDf(s), K,
-        FieldWeights, "title", k1 = K1, b = B)),
+      Retrieval.bm25TopK(titledDocs(s, d), titlePhrasesDf(s), K,
+        TitlePhraseQ)),
 
     // Served AT REST from the fielded POSITIONAL index: adjacency from
     // the target field's stored within-field position lists on the
     // pruned candidate rows — zero corpus scans. Same oracle STRING as
     // x143 (interleaved bench twins).
     "x144_lexf_phrase_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhraseFielded(s,
-        lexFieldedPosIndexTable(s, d), titlePhrasesDf(s), K, FieldWeights,
-        "title", k1 = K1, b = B)),
+      LexIndex.search(s, lexFieldedPosIndexTable(s, d), titlePhrasesDf(s),
+        K, TitlePhraseQ)),
 
     // The FILTERED fielded phrase: the within-title run AND the lang
     // slice compose (df/lengths/stats full-corpus, the filtered-probe
     // contract); x148 serves from a fields+positions+attrs index.
     "x147_bm25f_phrase_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fPhraseTopK(titledDocs(s, d), titlePhrasesDf(s), K,
-        FieldWeights, "title", k1 = K1, b = B,
-        pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(titledDocs(s, d), titlePhrasesDf(s), K,
+        TitlePhraseQ, pred = Some(col("lang") === FilterLang))),
 
     "x148_lexf_phrase_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhraseFielded(s,
-        lexFieldedPosAttrIndexTable(s, d), titlePhrasesDf(s), K,
-        FieldWeights, "title", k1 = K1, b = B,
+      LexIndex.search(s, lexFieldedPosAttrIndexTable(s, d),
+        titlePhrasesDf(s), K, TitlePhraseQ,
         pred = Some(col("lang") === FilterLang))),
 
     // The SLOPPY form in the BODY field: ordered within slop inside
     // one field's stream, BM25F-scored at the probe weights.
     "x145_bm25f_sloppy" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fSloppyPhraseTopK(titledDocs(s, d), sloppyDf(s), K,
-        FieldWeights, "text", Slop, k1 = K1, b = B)),
+      Retrieval.bm25TopK(titledDocs(s, d), sloppyDf(s), K, TextSloppyQ)),
 
     "x146_lexf_sloppy_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhraseSloppyFielded(s,
-        lexFieldedPosIndexTable(s, d), sloppyDf(s), K, FieldWeights,
-        "text", Slop, k1 = K1, b = B)),
+      LexIndex.search(s, lexFieldedPosIndexTable(s, d), sloppyDf(s), K,
+        TextSloppyQ)),
 
     // Ordered SLOPPY-phrase retrieval — the standard slop semantics
     // every production search engine defaults to (Lucene PhraseQuery):
@@ -634,52 +633,47 @@ object RetrievalQueries extends QueryPack {
     // ground between exact adjacency (x115) and the unordered window
     // (x122). Greedy-chain containment restricts the BM25 ranking.
     "x127_bm25_sloppy" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25SloppyPhraseTopK(table(s, d, "documents"), sloppyDf(s),
-        K, Slop, k1 = K1, b = B)),
+      Retrieval.bm25TopK(table(s, d, "documents"), sloppyDf(s), K, SloppyQ)),
 
     // Served at rest from the positional index: ordered chains from
     // stored position lists on the pruned candidate rows — zero corpus
     // scans. Same oracle STRING as x127 (interleaved bench twins).
     "x128_lex_sloppy_search" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhraseSloppy(s, lexPosIndexTable(s, d),
-        sloppyDf(s), K, Slop, k1 = K1, b = B)),
+      LexIndex.search(s, lexPosIndexTable(s, d), sloppyDf(s), K, SloppyQ)),
 
     // Filtered sloppy pair: the ordered-chain restriction AND the lang
     // slice compose (stats and df full-corpus). x133 shares x132's
     // string, served from the positions+attrs index.
     "x132_bm25_sloppy_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25SloppyPhraseTopK(table(s, d, "documents"), sloppyDf(s),
-        K, Slop, k1 = K1, b = B, pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(table(s, d, "documents"), sloppyDf(s), K, SloppyQ,
+        pred = Some(col("lang") === FilterLang))),
 
     "x133_lex_sloppy_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhraseSloppy(s,
-        lexPosAttrIndexTable(s, d), sloppyDf(s), K, Slop, k1 = K1, b = B,
+      LexIndex.search(s, lexPosAttrIndexTable(s, d), sloppyDf(s), K, SloppyQ,
         pred = Some(col("lang") === FilterLang))),
 
     // Filtered BM25F pair: the weighted-aggregate scoring AND the lang
     // slice; x135 serves from a fields+attrs index (x134's string).
     "x134_bm25f_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25fTopK(titledDocs(s, d), queriesDf(s), K, FieldWeights,
-        k1 = K1, b = B, pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(titledDocs(s, d), queriesDf(s), K, FieldedQ,
+        pred = Some(col("lang") === FilterLang))),
 
     "x135_lexf_search_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchFielded(s,
-        lexFieldedAttrIndexTable(s, d), queriesDf(s), K, FieldWeights,
-        k1 = K1, b = B, pred = Some(col("lang") === FilterLang))),
+      LexIndex.search(s, lexFieldedAttrIndexTable(s, d), queriesDf(s), K,
+        FieldedQ, pred = Some(col("lang") === FilterLang))),
 
     // Filtered phrase retrieval: the phrase adjacency restriction AND
     // an attribute pre-filter compose — exactly k matching documents
     // containing the contiguous run, stats and df full-corpus.
     "x120_bm25_phrase_filtered" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25PhraseTopK(table(s, d, "documents"), phrasesDf(s), K,
-        k1 = K1, b = B, pred = Some(col("lang") === FilterLang))),
+      Retrieval.bm25TopK(table(s, d, "documents"), phrasesDf(s), K, PhraseQ,
+        pred = Some(col("lang") === FilterLang))),
 
     // Served at rest from the positional+attribute index: adjacency
     // from stored positions, eligibility from the stored `lang` riding
     // the pruned candidate rows. Same oracle STRING as x120.
     "x121_lex_phrase_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.LexIndex.searchPhrase(s, lexPosAttrIndexTable(s, d),
-        phrasesDf(s), K, k1 = K1, b = B,
+      LexIndex.search(s, lexPosAttrIndexTable(s, d), phrasesDf(s), K, PhraseQ,
         pred = Some(col("lang") === FilterLang))),
 
     // MMR-diversified retrieval: BM25 depth-10 candidates re-selected
@@ -691,7 +685,7 @@ object RetrievalQueries extends QueryPack {
     "x112_mmr_docs" -> ((s: SparkSession, d: String) =>
       Retrieval.mmrTopK(
         Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s), MmrDepth,
-          k1 = K1, b = B),
+          TermsQ),
         table(s, d, "embeddings"), K, MmrLambda)),
 
     // The same diversification served fully AT REST: candidates from
@@ -764,7 +758,7 @@ object RetrievalQueries extends QueryPack {
   private def hybridTruth(s: SparkSession, d: String): DataFrame = {
     val embs = table(s, d, "embeddings")
     val lex = Retrieval.bm25TopK(table(s, d, "documents"), queriesDf(s),
-        Depth, k1 = K1, b = B)
+        Depth, TermsQ)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val qVecs = embs.join(
       broadcast(queriesDf(s).select(col("query_id").as("vec_id"))),
@@ -777,17 +771,17 @@ object RetrievalQueries extends QueryPack {
   /** x141/x142's probe: the at-rest FIELDED hybrid at the eval
     * operating point (x137's serving shape under x118's nprobe). */
   private def hybridProbeFielded(s: SparkSession, d: String): DataFrame =
-    Retrieval.hybridServeFielded(s, lexFieldedIndexTable(s, d),
+    Retrieval.hybridServe(s, lexFieldedIndexTable(s, d),
       VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-      HybridEvalNProbe, FieldWeights, RrfC)
+      HybridEvalNProbe, RrfC, LexQuery(scoring = LexQuery.Bm25F(FieldWeights)))
 
   /** The exact FIELDED-hybrid reference: flat BM25F (score-identical
     * to the fielded probe) RRF-fused with EXACT self-excluding cosine
     * over the aligned embeddings — x118's reference, fielded arm. */
   private def hybridTruthFielded(s: SparkSession, d: String): DataFrame = {
     val embs = table(s, d, "embeddings")
-    val lex = Retrieval.bm25fTopK(titledDocs(s, d), queriesDf(s), Depth,
-        FieldWeights, k1 = K1, b = B)
+    val lex = Retrieval.bm25TopK(titledDocs(s, d), queriesDf(s), Depth,
+        FieldedQ)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val qVecs = embs.join(
       broadcast(queriesDf(s).select(col("query_id").as("vec_id"))),
@@ -1184,7 +1178,7 @@ object RetrievalQueries extends QueryPack {
   private[queries] def mmrReplaySql(qs: Seq[(Long, Seq[String])], k: Int,
                                     depth: Int, lambda: Double): String =
     s"""WITH ${bm25Ctes(qs)},
-       |cand AS (
+       |cand AS MATERIALIZED (
        |  SELECT l.query_id, l.doc_id, l.score AS rel, e.embedding
        |  FROM (SELECT * FROM lex WHERE rank <= $depth) l
        |  JOIN embeddings e ON e.vec_id = l.doc_id),
@@ -1192,12 +1186,15 @@ object RetrievalQueries extends QueryPack {
 
   /** The unrolled greedy's pick/sel chain + final SELECT, shared by
     * every MMR replay — requires a `cand(query_id, doc_id, rel,
-    * embedding)` CTE in scope. */
+    * embedding)` CTE in scope. Every CTE of the chain (and `cand`) is
+    * declared MATERIALIZED: step i reads sel(i−1) three times, and an
+    * engine that inlines CTEs would copy the candidate replay (a full
+    * BM25 or hybrid replay) ~3^(k−1) times. */
   private def mmrGreedyTailSql(k: Int, lambda: Double): String = {
     val lam = lambda.toString
     val oneMinus = (1.0 - lambda).toString
     val steps = (2 to k).map { i =>
-      s"""p$i AS (
+      s"""p$i AS MATERIALIZED (
          |  SELECT c.query_id, c.doc_id,
          |    $lam::DOUBLE * c.rel - $oneMinus::DOUBLE *
          |      max(list_cosine_similarity(c.embedding::DOUBLE[],
@@ -1209,20 +1206,20 @@ object RetrievalQueries extends QueryPack {
          |    ON x.query_id = c.query_id AND x.doc_id = c.doc_id
          |  WHERE x.doc_id IS NULL
          |  GROUP BY c.query_id, c.doc_id, c.rel),
-         |pick$i AS (
+         |pick$i AS MATERIALIZED (
          |  SELECT query_id, doc_id, $i::BIGINT AS rank, obj FROM p$i
          |  QUALIFY row_number() OVER (PARTITION BY query_id
          |    ORDER BY obj DESC, doc_id ASC) = 1),
-         |sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM pick$i)"""
+         |sel$i AS MATERIALIZED (SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM pick$i)"""
         .stripMargin
     }.mkString(",\n")
-    s"""pick1 AS (
+    s"""pick1 AS MATERIALIZED (
        |  SELECT query_id, doc_id, 1::BIGINT AS rank,
        |         $lam::DOUBLE * rel AS obj
        |  FROM cand
        |  QUALIFY row_number() OVER (PARTITION BY query_id
        |    ORDER BY $lam::DOUBLE * rel DESC, doc_id ASC) = 1),
-       |sel1 AS (SELECT * FROM pick1),
+       |sel1 AS MATERIALIZED (SELECT * FROM pick1),
        |$steps
        |SELECT query_id, doc_id, rank, round(obj, 6) AS mmr
        |FROM sel$k""".stripMargin
@@ -1239,7 +1236,7 @@ object RetrievalQueries extends QueryPack {
     s"""WITH hsr AS (
        |${hybridServeReplaySql(qs, depth, depth, nprobe)}
        |),
-       |cand AS (
+       |cand AS MATERIALIZED (
        |  SELECT h.query_id, h.doc_id, h.score AS rel, e.embedding
        |  FROM hsr h JOIN embeddings e ON e.vec_id = h.doc_id),
        |${mmrGreedyTailSql(k, lambda)}""".stripMargin
@@ -1269,7 +1266,7 @@ object RetrievalQueries extends QueryPack {
     s"""WITH hsr AS (
        |${hybridServeLiteralReplaySql(LitHybridTerms, depth, depth, nprobe)}
        |),
-       |cand AS (
+       |cand AS MATERIALIZED (
        |  SELECT h.query_id, h.doc_id, h.score AS rel, e.embedding
        |  FROM hsr h JOIN embeddings e ON e.vec_id = h.doc_id),
        |${mmrGreedyTailSql(k, lambda)}""".stripMargin

@@ -36,5 +36,8 @@ class SessionConfigSpec extends AnyFunSuite {
       java.net.URI.create("file:///"), s.sparkContext.hadoopConfiguration)
     assert(fs.getClass == classOf[NioLocalFileSystem],
       "local writes must not fork a chmod per file")
+    assert(s.conf.get(Sessions.CheckpointFileManagerConf._1) ==
+      Sessions.CheckpointFileManagerConf._2,
+      "streaming checkpoints open through the same filesystem")
   }
 }

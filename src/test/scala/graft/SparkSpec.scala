@@ -51,6 +51,28 @@ object SparkSpec {
     scans(df.queryExecution.executedPlan)
   }
 
+  /** Processes the JVM starts while `body` runs (a JFR
+    * `jdk.ProcessStart` recording): each one's command line and the
+    * classes on its starting stack, outermost last. */
+  def processStarts(body: => Unit): Seq[(String, Seq[String])] = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try body finally rec.stop()
+      val out = java.nio.file.Files.createTempFile("graft-procs", ".jfr")
+      rec.dump(out)
+      RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => e.getString("command") ->
+          Option(e.getStackTrace).toSeq
+            .flatMap(_.getFrames.asScala.map(_.getMethod.getType.getName)))
+    } finally rec.close()
+  }
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -58,6 +80,8 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config(Sessions.LocalFileSystemConf._1, Sessions.LocalFileSystemConf._2)
+    .config(Sessions.CheckpointFileManagerConf._1,
+      Sessions.CheckpointFileManagerConf._2)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()

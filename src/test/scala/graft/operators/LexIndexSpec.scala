@@ -682,9 +682,10 @@ class LexIndexSpec extends SparkSpec {
       2L -> Seq("spark", "spark"),     // duplicate term: doc 2 only
       3L -> Seq("join"),               // single-term: presence
       4L -> Seq("window", "scan", "scan")) // 3-gram, doc 6
-    assert(rows(LexIndex.searchPhrase(spark, p, ph, 5)) ==
-      rows(Retrieval.bm25PhraseTopK(docsDf, ph, 5)))
-    assert(LexIndex.searchPhrase(spark, p, ph, 5).count() > 0)
+    assert(rows(LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Phrase()))) ==
+      rows(Retrieval.bm25TopK(docsDf, ph, 5, LexQuery(LexQuery.Phrase()))))
+    assert(LexIndex.search(spark, p, ph, 5,
+      LexQuery(LexQuery.Phrase())).count() > 0)
   }
 
   test("phrase adjacency: all terms present but never adjacent is NOT " +
@@ -694,10 +695,10 @@ class LexIndexSpec extends SparkSpec {
     // doc 4 "fast fast join spark table" holds join AND fast but never
     // the run "join fast"; doc 0 "spark join fast spark" holds it
     val ph = phrasesDf(1L -> Seq("join", "fast"))
-    val hits = LexIndex.searchPhrase(spark, p, ph, 5)
+    val hits = LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Phrase()))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(hits.contains(0L) && !hits.contains(4L))
-    val flat = Retrieval.bm25PhraseTopK(docsDf, ph, 5)
+    val flat = Retrieval.bm25TopK(docsDf, ph, 5, LexQuery(LexQuery.Phrase()))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(flat == hits)
   }
@@ -710,9 +711,10 @@ class LexIndexSpec extends SparkSpec {
       positions = true)
     LexIndex.append(rest.toDF("doc_id", "text"), p)
     val ph = phrasesDf(1L -> Seq("spark", "join"))
-    val res = LexIndex.searchPhrase(spark, p, ph, 5)
+    val res = LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Phrase()))
     res.collect()
-    assert(rows(res) == rows(Retrieval.bm25PhraseTopK(docsDf, ph, 5)))
+    assert(rows(res) == rows(Retrieval.bm25TopK(docsDf, ph, 5,
+      LexQuery(LexQuery.Phrase()))))
     val scans = graft.SparkSpec.executedFileScans(res)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("/seg-")))
     assert(scans.nonEmpty, "no index scan in the executed plan")
@@ -747,8 +749,8 @@ class LexIndexSpec extends SparkSpec {
     assert(rows(res) == rows(Retrieval.bm25TopK(docsDf, qs, 3)))
     // phrase probe: scoring branch column-pruned too — positions only
     // in the adjacency branch
-    val phr = LexIndex.searchPhrase(spark, p,
-      phrasesDf(1L -> Seq("spark", "join")), 3)
+    val phr = LexIndex.search(spark, p,
+      phrasesDf(1L -> Seq("spark", "join")), 3, LexQuery(LexQuery.Phrase()))
     phr.collect()
     val phrScans = graft.SparkSpec.executedFileScans(phr)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("/seg-")))
@@ -778,8 +780,10 @@ class LexIndexSpec extends SparkSpec {
     val qs = queriesDf(1L -> Seq("spark", "join"), 2L -> Seq("table"))
     for (ws <- Seq(FW, Seq("title" -> 1.0, "text" -> 1.0),
                    Seq("title" -> 5.0, "text" -> 0.5))) {
-      assert(rows(LexIndex.searchFielded(spark, p, qs, 5, ws)) ==
-        rows(Retrieval.bm25fTopK(fieldedDf, qs, 5, ws)),
+      assert(rows(LexIndex.search(spark, p, qs, 5,
+        LexQuery(scoring = LexQuery.Bm25F(ws)))) ==
+        rows(Retrieval.bm25TopK(fieldedDf, qs, 5,
+          LexQuery(scoring = LexQuery.Bm25F(ws)))),
         s"weighting $ws")
     }
     // manifest: per-field exact sums, N counts any-field docs
@@ -802,8 +806,10 @@ class LexIndexSpec extends SparkSpec {
     val (m1, m2) = (LexIndex.readManifest(spark, p1),
       LexIndex.readManifest(spark, p2))
     assert(m1.fieldSums == m2.fieldSums && m1.nDocs == m2.nDocs)
-    assert(rows(LexIndex.searchFielded(spark, p1, qs, 5, FW)) ==
-      rows(LexIndex.searchFielded(spark, p2, qs, 5, FW)))
+    assert(rows(LexIndex.search(spark, p1, qs, 5,
+      LexQuery(scoring = LexQuery.Bm25F(FW)))) ==
+      rows(LexIndex.search(spark, p2, qs, 5,
+        LexQuery(scoring = LexQuery.Bm25F(FW)))))
     // guards: plain probe on fielded, fielded probe on plain, bad names
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, p, qs, 5)
@@ -811,10 +817,11 @@ class LexIndexSpec extends SparkSpec {
     val plain = freshPath()
     LexIndex.build(docsDf, plain)
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchFielded(spark, plain, qs, 5, FW)
+      LexIndex.search(spark, plain, qs, 5, LexQuery(scoring = LexQuery.Bm25F(FW)))
     }.getMessage.contains("fielded"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchFielded(spark, p, qs, 5, Seq("text" -> 1.0))
+      LexIndex.search(spark, p, qs, 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("text" -> 1.0))))
     }.getMessage.contains("fields in order"))
   }
 
@@ -824,7 +831,8 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"),
       buckets = 16)
     val qs = queriesDf(1L -> Seq("spark", "join"))
-    val res = LexIndex.searchFielded(spark, p, qs, 3, FW)
+    val res = LexIndex.search(spark, p, qs, 3,
+      LexQuery(scoring = LexQuery.Bm25F(FW)))
     res.collect()
     val scans = graft.SparkSpec.executedFileScans(res)
     assert(scans.nonEmpty && scans.forall(_.relation.location.rootPaths
@@ -857,31 +865,40 @@ class LexIndexSpec extends SparkSpec {
         Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)),
         Seq(("title", 1.0, 0.0), ("text", 1.0, 1.0)),
         Seq(("title", 5.0, 0.75), ("text", 0.5, 0.3)))) {
-      assert(rows(LexIndex.searchFieldedFull(spark, p, qs, 5, ps)) ==
-        rows(Retrieval.bm25fFullTopK(fieldedDf, qs, 5, ps)),
+      assert(rows(LexIndex.search(spark, p, qs, 5,
+        LexQuery(scoring = LexQuery.Bm25FFull(ps)))) ==
+        rows(Retrieval.bm25TopK(fieldedDf, qs, 5,
+          LexQuery(scoring = LexQuery.Bm25FFull(ps)))),
         s"params $ps")
     }
     // k1 is probe-time too
-    assert(rows(LexIndex.searchFieldedFull(spark, p, qs, 5,
-        Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)), k1 = 0.4)) ==
-      rows(Retrieval.bm25fFullTopK(fieldedDf, qs, 5,
-        Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)), k1 = 0.4)))
+    assert(rows(LexIndex.search(spark, p, qs, 5,
+      LexQuery(scoring =
+        LexQuery.Bm25FFull(Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)), 0.4)))) ==
+      rows(Retrieval.bm25TopK(fieldedDf, qs, 5,
+        LexQuery(scoring =
+          LexQuery.Bm25FFull(Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)), 0.4)))))
     // and the SAME index still serves the simplified form (x130's probe)
-    assert(rows(LexIndex.searchFielded(spark, p, qs, 5, FW)) ==
-      rows(Retrieval.bm25fTopK(fieldedDf, qs, 5, FW)))
+    assert(rows(LexIndex.search(spark, p, qs, 5,
+      LexQuery(scoring = LexQuery.Bm25F(FW)))) ==
+      rows(Retrieval.bm25TopK(fieldedDf, qs, 5,
+        LexQuery(scoring = LexQuery.Bm25F(FW)))))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchFieldedFull(spark, p, qs, 5,
-        Seq(("text", 1.0, 0.75), ("title", 2.0, 0.3)))
+      LexIndex.search(spark, p, qs, 5,
+        LexQuery(scoring =
+          LexQuery.Bm25FFull(Seq(("text", 1.0, 0.75), ("title", 2.0, 0.3)))))
     }.getMessage.contains("fields in order"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchFieldedFull(spark, p, qs, 5,
-        Seq(("title", 2.0, 1.5), ("text", 1.0, 0.75)))
+      LexIndex.search(spark, p, qs, 5,
+        LexQuery(scoring =
+          LexQuery.Bm25FFull(Seq(("title", 2.0, 1.5), ("text", 1.0, 0.75)))))
     }.getMessage.contains("b must be in [0,1]"))
     val plain = freshPath()
     LexIndex.build(docsDf, plain)
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchFieldedFull(spark, plain, qs, 5,
-        Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)))
+      LexIndex.search(spark, plain, qs, 5,
+        LexQuery(scoring =
+          LexQuery.Bm25FFull(Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)))))
     }.getMessage.contains("fielded"))
   }
 
@@ -898,24 +915,28 @@ class LexIndexSpec extends SparkSpec {
       2L -> Seq("spark", "join"),   // docs 1/2/5 body runs
       3L -> Seq("join",  "join"))   // doc 0 body duplicate run
     for (field <- Seq("title", "text")) {
-      assert(rows(LexIndex.searchPhraseFielded(spark, p, ph, 5, FW, field)) ==
-        rows(Retrieval.bm25fPhraseTopK(fieldedDf, ph, 5, FW, field)),
+      assert(rows(LexIndex.search(spark, p, ph, 5,
+        LexQuery(LexQuery.Phrase(Some(field)), LexQuery.Bm25F(FW)))) ==
+        rows(Retrieval.bm25TopK(fieldedDf, ph, 5,
+          LexQuery(LexQuery.Phrase(Some(field)), LexQuery.Bm25F(FW)))),
         s"exact field $field")
       for (sl <- Seq(0, 2))
-        assert(rows(LexIndex.searchPhraseSloppyFielded(spark, p, ph, 5, FW,
-            field, sl)) ==
-          rows(Retrieval.bm25fSloppyPhraseTopK(fieldedDf, ph, 5, FW,
-            field, sl)),
+        assert(rows(LexIndex.search(spark, p, ph, 5,
+          LexQuery(LexQuery.Sloppy(sl, Some(field)), LexQuery.Bm25F(FW)))) ==
+          rows(Retrieval.bm25TopK(fieldedDf, ph, 5,
+            LexQuery(LexQuery.Sloppy(sl, Some(field)), LexQuery.Bm25F(FW)))),
           s"sloppy field $field slop $sl")
     }
     // slop 0 ≡ the exact fielded phrase probe, row for row
-    assert(rows(LexIndex.searchPhraseSloppyFielded(spark, p, ph, 5, FW,
-        "text", 0)) ==
-      rows(LexIndex.searchPhraseFielded(spark, p, ph, 5, FW, "text")))
+    assert(rows(LexIndex.search(spark, p, ph, 5,
+      LexQuery(LexQuery.Sloppy(0, Some("text")), LexQuery.Bm25F(FW)))) ==
+      rows(LexIndex.search(spark, p, ph, 5,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))))
     // the probe genuinely discriminates by field: "spark fast" sits in
     // doc 2's TITLE stream only (its body has join between)
-    assert(LexIndex.searchPhraseFielded(spark, p,
-        phrases(1L -> Seq("spark", "fast")), 5, FW, "title")
+    assert(LexIndex.search(spark, p,
+        phrases(1L -> Seq("spark", "fast")), 5,
+          LexQuery(LexQuery.Phrase(Some("title")), LexQuery.Bm25F(FW)))
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L))
     // append ≡ rebuild on the positional fielded layout
     val (p1, p2) = (freshPath(), freshPath())
@@ -925,11 +946,14 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.append(rest.toDF("doc_id", "title", "text"), p1)
     LexIndex.buildFielded(fieldedDf, p2,
       fields = Seq("title", "text"), buckets = 16, positions = true)
-    assert(rows(LexIndex.searchPhraseFielded(spark, p1, ph, 5, FW, "text")) ==
-      rows(LexIndex.searchPhraseFielded(spark, p2, ph, 5, FW, "text")))
+    assert(rows(LexIndex.search(spark, p1, ph, 5,
+      LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))) ==
+      rows(LexIndex.search(spark, p2, ph, 5,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))))
     // zero corpus scans; adjacency reads positions, scoring does not
-    val res = LexIndex.searchPhraseFielded(spark, p,
-      phrases(1L -> Seq("spark", "join")), 3, FW, "text")
+    val res = LexIndex.search(spark, p,
+      phrases(1L -> Seq("spark", "join")), 3,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))
     res.collect()
     val scans = graft.SparkSpec.executedFileScans(res)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("/seg-")))
@@ -958,28 +982,31 @@ class LexIndexSpec extends SparkSpec {
     // fielded probe rejects non-positional / plain indexes, proximity
     // rejects fielded, bad field name fails loudly
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchPhrase(spark, p, ph, 5)
+      LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Phrase()))
     }.getMessage.contains("FIELDED"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchPhraseSloppy(spark, p, ph, 5, 1)
+      LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Sloppy(1)))
     }.getMessage.contains("FIELDED"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchProximity(spark, p,
-        queriesDf(1L -> Seq("spark", "join")), 5, 4)
+      LexIndex.search(spark, p,
+        queriesDf(1L -> Seq("spark", "join")), 5, LexQuery(LexQuery.Window(4)))
     }.getMessage.contains("FIELDED"))
     val noPos = freshPath()
     LexIndex.buildFielded(fieldedDf, noPos, fields = Seq("title", "text"),
       buckets = 16)
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchPhraseFielded(spark, noPos, ph, 5, FW, "text")
+      LexIndex.search(spark, noPos, ph, 5,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))
     }.getMessage.contains("positional"))
     val plain = freshPath()
     LexIndex.build(docsDf, plain, positions = true)
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchPhraseFielded(spark, plain, ph, 5, FW, "text")
+      LexIndex.search(spark, plain, ph, 5,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))
     }.getMessage.contains("fielded"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.searchPhraseFielded(spark, p, ph, 5, FW, "nope")
+      LexIndex.search(spark, p, ph, 5,
+        LexQuery(LexQuery.Phrase(Some("nope")), LexQuery.Bm25F(FW)))
     }.getMessage.contains("phrase field"))
   }
 
@@ -998,11 +1025,14 @@ class LexIndexSpec extends SparkSpec {
       surv.map(t => dlOf(t._2)).sum,
       surv.map(t => dlOf(t._3)).sum))
     val qs = queriesDf(1L -> Seq("spark", "join"))
-    val expected = rows(Retrieval.bm25fTopK(
-      surv.toDF("doc_id", "title", "text"), qs, 5, FW))
-    assert(rows(LexIndex.searchFielded(spark, p, qs, 5, FW)) == expected)
+    val expected = rows(Retrieval.bm25TopK(
+      surv.toDF("doc_id", "title", "text"), qs, 5,
+        LexQuery(scoring = LexQuery.Bm25F(FW))))
+    assert(rows(LexIndex.search(spark, p, qs, 5,
+      LexQuery(scoring = LexQuery.Bm25F(FW)))) == expected)
     LexIndex.compact(spark, p)
-    assert(rows(LexIndex.searchFielded(spark, p, qs, 5, FW)) == expected)
+    assert(rows(LexIndex.search(spark, p, qs, 5,
+      LexQuery(scoring = LexQuery.Bm25F(FW)))) == expected)
   }
 
   test("sloppy probe ≡ flat sloppy scan; ordered (unlike proximity), " +
@@ -1014,22 +1044,22 @@ class LexIndexSpec extends SparkSpec {
       2L -> Seq("join", "spark", "table"), // doc 4 adjacent 3-gram
       3L -> Seq("join", "join"),          // duplicate: strict chain
       4L -> Seq("window", "batch"))       // doc 6 window@1 … batch@4
-    val idx = LexIndex.searchPhraseSloppy(spark, p, ph, 5, slop = 2)
-    val flat = Retrieval.bm25SloppyPhraseTopK(docsDf, ph, 5, slop = 2)
+    val idx = LexIndex.search(spark, p, ph, 5, LexQuery(LexQuery.Sloppy(2)))
+    val flat = Retrieval.bm25TopK(docsDf, ph, 5, LexQuery(LexQuery.Sloppy(2)))
     assert(rows(idx) == rows(flat) && idx.count() > 0)
     // ordered: "spark fast" at slop 2 admits doc 0 (spark@1 → fast@3),
     // not doc 4 (fast only BEFORE spark) — proximity window 3 admits both
     val q1 = idx.filter(col("query_id") === 1L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(q1 == Set(0L))
-    val prox = LexIndex.searchProximity(spark, p,
-        queriesDf(1L -> Seq("spark", "fast")), 5, window = 3)
+    val prox = LexIndex.search(spark, p,
+        queriesDf(1L -> Seq("spark", "fast")), 5, LexQuery(LexQuery.Window(3)))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(prox == Set(0L, 4L))
     // slop 0 is the exact phrase probe, row for row
     val ph0 = phrasesDf(1L -> Seq("spark", "join"), 2L -> Seq("scan", "scan"))
-    assert(rows(LexIndex.searchPhraseSloppy(spark, p, ph0, 5, slop = 0)) ==
-      rows(LexIndex.searchPhrase(spark, p, ph0, 5)))
+    assert(rows(LexIndex.search(spark, p, ph0, 5, LexQuery(LexQuery.Sloppy(0)))) ==
+      rows(LexIndex.search(spark, p, ph0, 5, LexQuery(LexQuery.Phrase()))))
     // zero corpus scans, as every index probe
     idx.collect()
     val scans = graft.SparkSpec.executedFileScans(idx)
@@ -1039,7 +1069,7 @@ class LexIndexSpec extends SparkSpec {
     val p2 = freshPath()
     LexIndex.build(docsDf, p2)
     val e = intercept[IllegalArgumentException] {
-      LexIndex.searchPhraseSloppy(spark, p2, ph, 5, slop = 1)
+      LexIndex.search(spark, p2, ph, 5, LexQuery(LexQuery.Sloppy(1)))
     }
     assert(e.getMessage.contains("positions"))
   }
@@ -1055,8 +1085,8 @@ class LexIndexSpec extends SparkSpec {
         1L -> Seq("spark", "fast"),
         2L -> Seq("join", "table", "slow")))
       .toDF("query_id", "terms")
-    val idx = LexIndex.searchProximity(spark, p, qs, 5, window = 3)
-    val flat = Retrieval.bm25ProximityTopK(docsDf, qs, 5, window = 3)
+    val idx = LexIndex.search(spark, p, qs, 5, LexQuery(LexQuery.Window(3)))
+    val flat = Retrieval.bm25TopK(docsDf, qs, 5, LexQuery(LexQuery.Window(3)))
     assert(rows(idx) == rows(flat) && idx.count() > 0)
     // q2 "join table slow" within 3: doc 1 "join slow table join join"
     // holds all three in (slow@1? no: join@0 slow@1 table@2) — window 3
@@ -1065,9 +1095,9 @@ class LexIndexSpec extends SparkSpec {
     assert(q2hits == Set(1L))
     // proximity(window = dl_max) degenerates to bag-of-words presence;
     // window = 2 on an adjacent pair behaves like the unordered phrase
-    val wide = LexIndex.searchProximity(spark, p,
+    val wide = LexIndex.search(spark, p,
       spark.createDataFrame(Seq(1L -> Seq("spark", "fast")))
-        .toDF("query_id", "terms"), 7, window = 100)
+        .toDF("query_id", "terms"), 7, LexQuery(LexQuery.Window(100)))
     val bagDocs = docsFx.filter { case (_, t) =>
       val toks = t.split(" ").toSet; toks("spark") && toks("fast") }
       .map(_._1).toSet
@@ -1084,7 +1114,8 @@ class LexIndexSpec extends SparkSpec {
     val p = freshPath()
     LexIndex.build(docsDf, p)
     val e = intercept[IllegalArgumentException] {
-      LexIndex.searchPhrase(spark, p, phrasesDf(1L -> Seq("spark")), 3)
+      LexIndex.search(spark, p, phrasesDf(1L -> Seq("spark")), 3,
+        LexQuery(LexQuery.Phrase()))
     }
     assert(e.getMessage.contains("positional"))
     // compact + erase on a positional index keep the layout and the
@@ -1092,16 +1123,19 @@ class LexIndexSpec extends SparkSpec {
     val p2 = freshPath()
     LexIndex.build(docsDf, p2, positions = true)
     val ph = phrasesDf(1L -> Seq("spark", "join"))
-    val before = rows(LexIndex.searchPhrase(spark, p2, ph, 5))
+    val before = rows(LexIndex.search(spark, p2, ph, 5,
+      LexQuery(LexQuery.Phrase())))
     LexIndex.compact(spark, p2)
     assert(LexIndex.readManifest(spark, p2).positional)
-    assert(rows(LexIndex.searchPhrase(spark, p2, ph, 5)) == before)
+    assert(rows(LexIndex.search(spark, p2, ph, 5,
+      LexQuery(LexQuery.Phrase()))) == before)
     // erasure adjusts the manifest stats, so scores recompute over the
     // survivors — the pin is probe ≡ flat scan of the surviving corpus
     LexIndex.deleteByKey(spark, p2, Seq(1L))
-    assert(rows(LexIndex.searchPhrase(spark, p2, ph, 5)) ==
-      rows(Retrieval.bm25PhraseTopK(
-        docsFx.filter(_._1 != 1L).toDF("doc_id", "text"), ph, 5)))
+    assert(rows(LexIndex.search(spark, p2, ph, 5, LexQuery(LexQuery.Phrase()))) ==
+      rows(Retrieval.bm25TopK(
+        docsFx.filter(_._1 != 1L).toDF("doc_id", "text"), ph, 5,
+          LexQuery(LexQuery.Phrase()))))
   }
 
   test("a racing manifest version fails loudly (atomic publish)") {

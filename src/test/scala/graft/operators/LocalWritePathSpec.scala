@@ -84,26 +84,12 @@ class LocalWritePathSpec extends SparkSpec {
     * forks on its own schedule too — `getconf PAGESIZE` at the first
     * heartbeat, `rm -rf` when it cleans up a collected session's
     * artifacts — and those are not the store verbs' work. */
-  private def processStarts(body: => Unit): Seq[String] = {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
-    def fromStores(e: RecordedEvent): Boolean =
-      Option(e.getStackTrace).exists(_.getFrames.asScala.exists { f =>
-        val cls = f.getMethod.getType.getName
-        cls.startsWith("org.apache.hadoop.fs.") || cls.startsWith("graft.")
-      })
-    val rec = new Recording()
-    try {
-      rec.enable("jdk.ProcessStart").withStackTrace()
-      rec.start()
-      try body finally rec.stop()
-      val out = Files.createTempFile("graft-procs", ".jfr")
-      rec.dump(out)
-      RecordingFile.readAllEvents(out).asScala.toSeq
-        .filter(e => e.getEventType.getName == "jdk.ProcessStart" && fromStores(e))
-        .map(_.getString("command"))
-    } finally rec.close()
-  }
+  private def processStarts(body: => Unit): Seq[String] =
+    SparkSpec.processStarts(body).collect {
+      case (command, frames) if frames.exists(cls =>
+          cls.startsWith("org.apache.hadoop.fs.") || cls.startsWith("graft.")) =>
+        command
+    }
 
   test("store appends, compaction and vacuum start no process through the filesystem") {
     val base = freshDir()

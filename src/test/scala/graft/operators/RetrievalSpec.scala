@@ -238,8 +238,8 @@ class RetrievalSpec extends SparkSpec {
     }
     val q = queriesDf(1L -> Seq("spark", "join"))
     for ((wT, wB) <- Seq((4.0, 1.0), (1.0, 1.0), (2.0, 0.5))) {
-      val out = Retrieval.bm25fTopK(df, q, 5,
-          Seq("title" -> wT, "text" -> wB))
+      val out = Retrieval.bm25TopK(df, q, 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("title" -> wT, "text" -> wB))))
         .collect().map(r => (r.getLong(1), r.getDouble(3))).toMap
       val ref = refBm25f(Seq("spark", "join"), wT, wB)
       assert(out.keySet == ref.keySet, s"weights ($wT, $wB)")
@@ -247,7 +247,8 @@ class RetrievalSpec extends SparkSpec {
         assert(math.abs(s - ref(id)) < 1e-9, s"doc $id weights ($wT, $wB)") }
     }
     // single field at weight 1 ≡ plain BM25 over that field, row for row
-    val one = Retrieval.bm25fTopK(df, q, 5, Seq("text" -> 1.0))
+    val one = Retrieval.bm25TopK(df, q, 5,
+      LexQuery(scoring = LexQuery.Bm25F(Seq("text" -> 1.0))))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
     val plain = Retrieval.bm25TopK(df, q, 5)
@@ -258,8 +259,8 @@ class RetrievalSpec extends SparkSpec {
     // doc 10 above the body-hit doc 11, flat weights favor 11 (equal
     // tf, shorter weighted length)
     def rankOf(wT: Double, wB: Double, id: Long) =
-      Retrieval.bm25fTopK(df, queriesDf(1L -> Seq("spark")), 5,
-          Seq("title" -> wT, "text" -> wB))
+      Retrieval.bm25TopK(df, queriesDf(1L -> Seq("spark")), 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("title" -> wT, "text" -> wB))))
         .filter(col("doc_id") === id).collect().head.getLong(2)
     assert(rankOf(4.0, 1.0, 10L) < rankOf(4.0, 1.0, 11L))
     assert(rankOf(1.0, 1.0, 10L) > rankOf(1.0, 1.0, 11L))
@@ -311,7 +312,8 @@ class RetrievalSpec extends SparkSpec {
                    Seq(4.0 -> 0.75, 0.5 -> 0.3))) {
       val fields = Seq(("title", ps(0)._1, ps(0)._2),
         ("text", ps(1)._1, ps(1)._2))
-      val out = Retrieval.bm25fFullTopK(df, q, 5, fields)
+      val out = Retrieval.bm25TopK(df, q, 5,
+        LexQuery(scoring = LexQuery.Bm25FFull(fields)))
         .collect().map(r => (r.getLong(1), r.getDouble(3))).toMap
       val ref = refFull(Seq("spark", "join"), ps)
       assert(out.keySet == ref.keySet, s"params $ps")
@@ -323,7 +325,8 @@ class RetrievalSpec extends SparkSpec {
     // 10 relative to title b = 1 — their score GAP must shrink, which
     // the simplified single-b form cannot express per field
     def scoreOf(ps: Seq[(String, Double, Double)], id: Long) =
-      Retrieval.bm25fFullTopK(df, queriesDf(1L -> Seq("spark")), 5, ps)
+      Retrieval.bm25TopK(df, queriesDf(1L -> Seq("spark")), 5,
+        LexQuery(scoring = LexQuery.Bm25FFull(ps)))
         .filter(col("doc_id") === id).collect().head.getDouble(3)
     val gapB1 = scoreOf(Seq(("title", 2.0, 1.0), ("text", 1.0, 0.75)), 10L) -
       scoreOf(Seq(("title", 2.0, 1.0), ("text", 1.0, 0.75)), 12L)
@@ -349,41 +352,50 @@ class RetrievalSpec extends SparkSpec {
     val phSF = phrasesDf(1L -> Seq("spark", "fast"))
     // exact in TITLE: only doc 0 ("spark fast" is its title stream);
     // doc 3's BODY has the run but its title is null — not eligible
-    assert(ids(Retrieval.bm25fPhraseTopK(df, phSF, 5, fw, "title")) ==
+    assert(ids(Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Phrase(Some("title")), LexQuery.Bm25F(fw)))) ==
       Set(0L))
     // exact in TEXT: only doc 3
-    assert(ids(Retrieval.bm25fPhraseTopK(df, phSF, 5, fw, "text")) ==
+    assert(ids(Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw)))) ==
       Set(3L))
     // a run split ACROSS fields never matches: doc 0's title ends with
     // "fast" and its text starts with "join" — "fast join" is in no
     // single stream of doc 0 (only doc 2's body holds it)
-    assert(ids(Retrieval.bm25fPhraseTopK(df,
-      phrasesDf(1L -> Seq("fast", "join")), 5, fw, "title")).isEmpty)
-    assert(ids(Retrieval.bm25fPhraseTopK(df,
-      phrasesDf(1L -> Seq("fast", "join")), 5, fw, "text")) == Set(2L))
+    assert(ids(Retrieval.bm25TopK(df,
+      phrasesDf(1L -> Seq("fast", "join")), 5,
+        LexQuery(LexQuery.Phrase(Some("title")), LexQuery.Bm25F(fw)))).isEmpty)
+    assert(ids(Retrieval.bm25TopK(df,
+      phrasesDf(1L -> Seq("fast", "join")), 5,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw)))) == Set(2L))
     // sloppy in TEXT: slop 1 admits doc 1 (spark _ fast) but not the
     // reversed doc 2; slop 0 ≡ the exact phrase, row for row
-    assert(ids(Retrieval.bm25fSloppyPhraseTopK(df, phSF, 5, fw, "text",
-      slop = 1)) == Set(1L, 3L))
-    val sl0 = Retrieval.bm25fSloppyPhraseTopK(df, phSF, 5, fw, "text",
-        slop = 0).collect().map(r => (r.getLong(0), r.getLong(1),
+    assert(ids(Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Sloppy(1, Some("text")),
+        LexQuery.Bm25F(fw)))) == Set(1L, 3L))
+    val sl0 = Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Sloppy(0, Some("text")),
+        LexQuery.Bm25F(fw))).collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3))).toSet
-    val exact = Retrieval.bm25fPhraseTopK(df, phSF, 5, fw, "text")
+    val exact = Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
     assert(sl0 == exact && sl0.nonEmpty)
     // scoring: each eligible doc's score equals its bm25fTopK score
     // over the phrase's distinct terms (the phrase restricts
     // CANDIDATES, never scoring — the phrase contract, fielded form)
-    val full = Retrieval.bm25fTopK(df,
+    val full = Retrieval.bm25TopK(df,
         spark.createDataFrame(Seq((1L, Seq("spark", "fast")))).toDF(
-          "query_id", "terms"), 5, fw)
+          "query_id", "terms"), 5, LexQuery(scoring = LexQuery.Bm25F(fw)))
       .collect().map(r => (r.getLong(1), r.getDouble(3))).toMap
-    Retrieval.bm25fPhraseTopK(df, phSF, 5, fw, "text").collect()
+    Retrieval.bm25TopK(df, phSF, 5,
+      LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw))).collect()
       .foreach(r => assert(r.getDouble(3) == full(r.getLong(1))))
     // an unknown phrase field fails loudly
     assert(intercept[IllegalArgumentException] {
-      Retrieval.bm25fPhraseTopK(df, phSF, 5, fw, "nope")
+      Retrieval.bm25TopK(df, phSF, 5,
+        LexQuery(LexQuery.Phrase(Some("nope")), LexQuery.Bm25F(fw)))
     }.getMessage.contains("phrase field"))
   }
 
@@ -392,7 +404,8 @@ class RetrievalSpec extends SparkSpec {
     def phrasesDf(qs: (Long, Seq[String])*) =
       spark.createDataFrame(qs).toDF("query_id", "phrase")
     def hits(ph: Seq[String], slop: Int) =
-      Retrieval.bm25SloppyPhraseTopK(docsDf, phrasesDf(1L -> ph), 5, slop)
+      Retrieval.bm25TopK(docsDf, phrasesDf(1L -> ph), 5,
+        LexQuery(LexQuery.Sloppy(slop)))
         .select("doc_id").collect().map(_.getLong(0)).toSet
     // doc 0 "spark join fast spark": spark@1 → fast@3 (span 2 ≤ 1+1);
     // doc 4 "fast fast join spark table" has no fast AFTER spark —
@@ -402,10 +415,10 @@ class RetrievalSpec extends SparkSpec {
     assert(hits(Seq("fast", "spark"), 1) == Set(0L, 4L))
     // slop 0 ≡ the exact phrase, full-row hash equality
     val ph0 = phrasesDf(1L -> Seq("spark", "join"), 2L -> Seq("join", "join"))
-    val sloppy0 = Retrieval.bm25SloppyPhraseTopK(docsDf, ph0, 5, 0)
+    val sloppy0 = Retrieval.bm25TopK(docsDf, ph0, 5, LexQuery(LexQuery.Sloppy(0)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val exact = Retrieval.bm25PhraseTopK(docsDf, ph0, 5)
+    val exact = Retrieval.bm25TopK(docsDf, ph0, 5, LexQuery(LexQuery.Phrase()))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
     assert(sloppy0 == exact && sloppy0.nonEmpty)

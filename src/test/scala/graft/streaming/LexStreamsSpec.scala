@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
-import graft.operators.{IvfIndex, LexIndex, Retrieval}
+import graft.operators.{IvfIndex, LexIndex, LexQuery, Retrieval}
 
 /** Streaming keyword/hybrid serving ≡ batch probes — the
   * [[VectorStreamsSpec]] contract for the lexical arm: batching
@@ -55,9 +55,10 @@ class LexStreamsSpec extends SparkSpec {
     LexIndex.build(half.toDF("doc_id", "text", "lang"), index, buckets = 16)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serve(
-      stream.toDF().toDF("query_id", "terms"),
-      index, s"$dir/out", s"$dir/ckpt", K)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K)
+    }
     try {
       stream.addData(queryFx.take(2))
       q.processAllAvailable()
@@ -65,7 +66,7 @@ class LexStreamsSpec extends SparkSpec {
       stream.addData(queryFx.drop(2))
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
     // batch 0 probed the half index, batch 1 the appended one
     val halfTwin = s"$dir/half"
     LexIndex.build(half.toDF("doc_id", "text", "lang"), halfTwin, buckets = 16)
@@ -86,22 +87,25 @@ class LexStreamsSpec extends SparkSpec {
       0L -> Seq("spark", "join"), 1L -> Seq("join", "fast"),
       2L -> Seq("spark", "spark"), 3L -> Seq("window", "scan", "scan"))
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.servePhrase(
-      stream.toDF().toDF("query_id", "phrase"),
-      index, s"$dir/out", s"$dir/ckpt", K)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "phrase"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K, LexQuery(LexQuery.Phrase()))
+    }
     try {
       stream.addData(phraseFx.take(2))
       q.processAllAvailable()
       stream.addData(phraseFx.drop(2))
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
-    val batch = ranked(LexIndex.searchPhrase(spark, index,
-      spark.createDataFrame(phraseFx).toDF("query_id", "phrase"), K))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
+    val batch = ranked(LexIndex.search(spark, index,
+      spark.createDataFrame(phraseFx).toDF("query_id", "phrase"), K,
+        LexQuery(LexQuery.Phrase())))
     assert(streamed == batch && streamed.nonEmpty)
     // and the batch twin equals the flat phrase scan (the full chain)
-    assert(batch == ranked(Retrieval.bm25PhraseTopK(docsDf,
-      spark.createDataFrame(phraseFx).toDF("query_id", "phrase"), K)))
+    assert(batch == ranked(Retrieval.bm25TopK(docsDf,
+      spark.createDataFrame(phraseFx).toDF("query_id", "phrase"), K,
+        LexQuery(LexQuery.Phrase()))))
   }
 
   test("restart replay is idempotent; filtered serve equals the filtered " +
@@ -113,16 +117,17 @@ class LexStreamsSpec extends SparkSpec {
     val pred = Some(col("lang") === "en")
     def runOnce(ckpt: String): Seq[(Long, Long, Long, Double)] = {
       val stream = MemoryStream[(Long, Seq[String])]
-      val q = LexStreams.serve(
-        stream.toDF().toDF("query_id", "terms"),
-        index, s"$dir/out", ckpt, K, pred = pred)
+      val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+        ckpt) { b =>
+        LexIndex.search(b.sparkSession, index, b, K, pred = pred)
+      }
       try {
         stream.addData(queryFx.take(2))
         q.processAllAvailable()
         stream.addData(queryFx.drop(2))
         q.processAllAvailable()
       } finally stopQuietly(q)
-      ranked(LexStreams.served(spark, s"$dir/out"))
+      ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
     }
     val once = runOnce(s"$dir/ckpt")
     val batch = ranked(LexIndex.search(spark, index, queriesDf(queryFx), K,
@@ -146,22 +151,25 @@ class LexStreamsSpec extends SparkSpec {
     IvfIndex.build(embs, ivfP, cells = 2)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serveHybrid(
-      stream.toDF().toDF("query_id", "terms"),
-      lexP, ivfP, s"$dir/out", s"$dir/ckpt", K, depth = 5, nprobe = 1)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        nprobe = 1)
+    }
     try {
       stream.addData(queryFx.take(1))
       q.processAllAvailable()
       stream.addData(queryFx.slice(1, 2))
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
     val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
       queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1))
     assert(streamed == batch && streamed.nonEmpty)
-    assert(LexStreams.served(spark, s"$dir/none").columns.toSeq ==
+    assert(Serving.served(spark, s"$dir/none",
+      Serving.LexicalSchema).columns.toSeq ==
       Seq("query_id", "doc_id", "rank", "score"))
-    assert(LexStreams.served(spark, s"$dir/none").count() == 0L)
+    assert(Serving.served(spark, s"$dir/none", Serving.LexicalSchema).count() == 0L)
   }
 
   test("streamed proximity and sloppy probes equal their batch twins " +
@@ -174,34 +182,36 @@ class LexStreamsSpec extends SparkSpec {
     val proxFx: Seq[(Long, Seq[String])] = Seq(
       0L -> Seq("spark", "fast"), 1L -> Seq("join", "table", "slow"))
     val ps = MemoryStream[(Long, Seq[String])]
-    val pq = LexStreams.serveProximity(
-      ps.toDF().toDF("query_id", "terms"),
-      index, s"$dir/prox", s"$dir/pckpt", K, window = 3)
+    val pq = Serving.serve(ps.toDF().toDF("query_id", "terms"), s"$dir/prox",
+      s"$dir/pckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K, LexQuery(LexQuery.Window(3)))
+    }
     try {
       ps.addData(proxFx.take(1)); pq.processAllAvailable()
       ps.addData(proxFx.drop(1)); pq.processAllAvailable()
     } finally stopQuietly(pq)
-    assert(ranked(LexStreams.served(spark, s"$dir/prox")) ==
-      ranked(LexIndex.searchProximity(spark, index,
+    assert(ranked(Serving.served(spark, s"$dir/prox", Serving.LexicalSchema)) ==
+      ranked(LexIndex.search(spark, index,
         spark.createDataFrame(proxFx).toDF("query_id", "terms"), K,
-        window = 3)))
-    assert(LexStreams.served(spark, s"$dir/prox").count() > 0)
+          LexQuery(LexQuery.Window(3)))))
+    assert(Serving.served(spark, s"$dir/prox", Serving.LexicalSchema).count() > 0)
     // sloppy: ordered within 2 extra positions
     val slopFx: Seq[(Long, Seq[String])] = Seq(
       0L -> Seq("spark", "fast"), 1L -> Seq("window", "batch"))
     val ss = MemoryStream[(Long, Seq[String])]
-    val sq = LexStreams.serveSloppy(
-      ss.toDF().toDF("query_id", "phrase"),
-      index, s"$dir/slop", s"$dir/sckpt", K, slop = 2)
+    val sq = Serving.serve(ss.toDF().toDF("query_id", "phrase"), s"$dir/slop",
+      s"$dir/sckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K, LexQuery(LexQuery.Sloppy(2)))
+    }
     try {
       ss.addData(slopFx.take(1)); sq.processAllAvailable()
       ss.addData(slopFx.drop(1)); sq.processAllAvailable()
     } finally stopQuietly(sq)
-    assert(ranked(LexStreams.served(spark, s"$dir/slop")) ==
-      ranked(LexIndex.searchPhraseSloppy(spark, index,
+    assert(ranked(Serving.served(spark, s"$dir/slop", Serving.LexicalSchema)) ==
+      ranked(LexIndex.search(spark, index,
         spark.createDataFrame(slopFx).toDF("query_id", "phrase"), K,
-        slop = 2)))
-    assert(LexStreams.served(spark, s"$dir/slop").count() > 0)
+          LexQuery(LexQuery.Sloppy(2)))))
+    assert(Serving.served(spark, s"$dir/slop", Serving.LexicalSchema).count() > 0)
   }
 
   test("streamed fielded (BM25F) probes equal the batch searchFielded") {
@@ -215,16 +225,19 @@ class LexStreamsSpec extends SparkSpec {
     val fw = Seq("title" -> 2.0, "text" -> 1.0)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serveFielded(
-      stream.toDF().toDF("query_id", "terms"),
-      index, s"$dir/out", s"$dir/ckpt", K, fw)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K,
+        LexQuery(scoring = LexQuery.Bm25F(fw)))
+    }
     try {
       stream.addData(queryFx.take(2)); q.processAllAvailable()
       stream.addData(queryFx.drop(2)); q.processAllAvailable()
     } finally stopQuietly(q)
-    assert(ranked(LexStreams.served(spark, s"$dir/out")) ==
-      ranked(LexIndex.searchFielded(spark, index, queriesDf(queryFx), K, fw)))
-    assert(LexStreams.served(spark, s"$dir/out").count() > 0)
+    assert(ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema)) ==
+      ranked(LexIndex.search(spark, index, queriesDf(queryFx), K,
+        LexQuery(scoring = LexQuery.Bm25F(fw)))))
+    assert(Serving.served(spark, s"$dir/out", Serving.LexicalSchema).count() > 0)
   }
 
   test("streamed fielded PHRASE probes equal the batch " +
@@ -241,30 +254,34 @@ class LexStreamsSpec extends SparkSpec {
     val phFx: Seq[(Long, Seq[String])] = Seq(
       0L -> Seq("spark", "fast"), 1L -> Seq("window", "batch"))
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serveFieldedPhrase(
-      stream.toDF().toDF("query_id", "phrase"),
-      index, s"$dir/out", s"$dir/ckpt", K, fw, "text")
+    val q = Serving.serve(stream.toDF().toDF("query_id", "phrase"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      LexIndex.search(b.sparkSession, index, b, K,
+        LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw)))
+    }
     try {
       stream.addData(phFx.take(1)); q.processAllAvailable()
       stream.addData(phFx.drop(1)); q.processAllAvailable()
     } finally stopQuietly(q)
-    assert(ranked(LexStreams.served(spark, s"$dir/out")) ==
-      ranked(LexIndex.searchPhraseFielded(spark, index,
-        spark.createDataFrame(phFx).toDF("query_id", "phrase"), K, fw,
-        "text")))
+    assert(ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema)) ==
+      ranked(LexIndex.search(spark, index,
+        spark.createDataFrame(phFx).toDF("query_id", "phrase"), K,
+          LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(fw)))))
     // sloppy form through the same twin
     val stream2 = MemoryStream[(Long, Seq[String])]
-    val q2 = LexStreams.serveFieldedPhrase(
-      stream2.toDF().toDF("query_id", "phrase"),
-      index, s"$dir/out2", s"$dir/ckpt2", K, fw, "text", slop = 2)
+    val q2 = Serving.serve(stream2.toDF().toDF("query_id", "phrase"), s"$dir/out2",
+      s"$dir/ckpt2") { b =>
+      LexIndex.search(b.sparkSession, index, b, K,
+        LexQuery(LexQuery.Sloppy(2, Some("text")), LexQuery.Bm25F(fw)))
+    }
     try {
       stream2.addData(phFx); q2.processAllAvailable()
     } finally stopQuietly(q2)
-    assert(ranked(LexStreams.served(spark, s"$dir/out2")) ==
-      ranked(LexIndex.searchPhraseSloppyFielded(spark, index,
-        spark.createDataFrame(phFx).toDF("query_id", "phrase"), K, fw,
-        "text", slop = 2)))
-    assert(LexStreams.served(spark, s"$dir/out2").count() > 0)
+    assert(ranked(Serving.served(spark, s"$dir/out2", Serving.LexicalSchema)) ==
+      ranked(LexIndex.search(spark, index,
+        spark.createDataFrame(phFx).toDF("query_id", "phrase"), K,
+          LexQuery(LexQuery.Sloppy(2, Some("text")), LexQuery.Bm25F(fw)))))
+    assert(Serving.served(spark, s"$dir/out2", Serving.LexicalSchema).count() > 0)
   }
 
   test("streamed fielded hybrid equals the batch hybridServeFielded") {
@@ -282,17 +299,19 @@ class LexStreamsSpec extends SparkSpec {
     val fw = Seq("title" -> 2.0, "text" -> 1.0)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serveHybridFielded(
-      stream.toDF().toDF("query_id", "terms"),
-      lexP, ivfP, s"$dir/out", s"$dir/ckpt", K, depth = 5, nprobe = 1,
-      weights = fw)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        nprobe = 1, q = LexQuery(scoring = LexQuery.Bm25F(fw)))
+    }
     try {
       stream.addData(queryFx.take(1)); q.processAllAvailable()
       stream.addData(queryFx.slice(1, 2)); q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
-    val batch = ranked(Retrieval.hybridServeFielded(spark, lexP, ivfP,
-      queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1, weights = fw))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
+    val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
+      queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1,
+      q = LexQuery(scoring = LexQuery.Bm25F(fw))))
     assert(streamed == batch && streamed.nonEmpty)
   }
 
@@ -311,14 +330,16 @@ class LexStreamsSpec extends SparkSpec {
       (-2L, Seq("table", "scan"), Seq(-0.3f, 0.2f, 0.1f, 0.4f)))
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[String], Seq[Float])]
-    val q = LexStreams.serveHybridLiteral(
-      stream.toDF().toDF("query_id", "terms", "embedding"),
-      lexP, ivfP, s"$dir/out", s"$dir/ckpt", K, depth = 5, nprobe = 1)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms", "embedding"),
+      s"$dir/out", s"$dir/ckpt") { b =>
+      Retrieval.hybridServeLiteral(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        nprobe = 1)
+    }
     try {
       stream.addData(litFx.take(1)); q.processAllAvailable()
       stream.addData(litFx.drop(1)); q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
     val batch = ranked(Retrieval.hybridServeLiteral(spark, lexP, ivfP,
       spark.createDataFrame(litFx).toDF("query_id", "terms", "embedding"),
       K, depth = 5, nprobe = 1))
@@ -341,15 +362,16 @@ class LexStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val pred = Some(col("lang") === "en")
     val stream = MemoryStream[(Long, Seq[String])]
-    val q = LexStreams.serveHybrid(
-      stream.toDF().toDF("query_id", "terms"),
-      lexP, ivfP, s"$dir/out", s"$dir/ckpt", K, depth = 5, nprobe = 1,
-      pred = pred)
+    val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        nprobe = 1, pred = pred)
+    }
     try {
       stream.addData(queryFx.take(2))
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(LexStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
     val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
       queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1, pred = pred))
     assert(streamed == batch && streamed.nonEmpty)

@@ -10,7 +10,7 @@ import graft.operators.{IvfIndex, Pq}
 /** Streaming query serving ≡ batch probes.
   *
   * A MemoryStream of query vectors probes the persisted index in
-  * micro-batches through [[VectorStreams.serve]]; the accumulated
+  * micro-batches through [[Serving.serve]]; the accumulated
   * output must equal ONE batch [[IvfIndex.search]]/`searchAdc` over
   * the union of all queries (per-query results are independent, so
   * batching boundaries must not show). Restart-replay of a batch must
@@ -48,9 +48,10 @@ class VectorStreamsSpec extends SparkSpec {
       .collect().toSeq.sortBy(_._1)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Array[Float])]
-    val q = VectorStreams.serve(
-      stream.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt", K, NProbe)
+    val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe)
+    }
     try {
       // three uneven micro-batches — boundaries must not show
       stream.addData(queryRows.take(2))
@@ -61,7 +62,7 @@ class VectorStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally stopQuietly(q)
 
-    val streamed = ranked(VectorStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
     val batch = ranked(IvfIndex.search(spark,
       index, embs.filter(col("vec_id") < 9), K, NProbe))
     assert(streamed == batch)
@@ -78,9 +79,10 @@ class VectorStreamsSpec extends SparkSpec {
       .collect().toSeq.sortBy(_._1)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Array[Float])]
-    val q = VectorStreams.serve(
-      stream.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt", K, NProbe, pq = true)
+    val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      IvfIndex.searchAdc(b.sparkSession, index, b, K, NProbe)
+    }
     try {
       stream.addData(queryRows.take(2))
       q.processAllAvailable()
@@ -88,7 +90,7 @@ class VectorStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally stopQuietly(q)
 
-    val once = ranked(VectorStreams.served(spark, s"$dir/out"))
+    val once = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
     val batch = ranked(IvfIndex.searchAdc(spark,
       index, embs.filter(col("vec_id") < 4), K, NProbe))
     assert(once == batch)
@@ -97,16 +99,17 @@ class VectorStreamsSpec extends SparkSpec {
     // with the same output dir re-serves the same queries under the
     // same batch ids — the per-batch overwrite leaves content unchanged
     val stream2 = MemoryStream[(Long, Array[Float])]
-    val q2 = VectorStreams.serve(
-      stream2.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt2", K, NProbe, pq = true)
+    val q2 = Serving.serve(stream2.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt2") { b =>
+      IvfIndex.searchAdc(b.sparkSession, index, b, K, NProbe)
+    }
     try {
       stream2.addData(queryRows.take(2))
       q2.processAllAvailable()
       stream2.addData(queryRows.drop(2))
       q2.processAllAvailable()
     } finally stopQuietly(q2)
-    assert(ranked(VectorStreams.served(spark, s"$dir/out")) == once)
+    assert(ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema)) == once)
   }
 
   test("the SQ8 layer streams too") {
@@ -118,16 +121,17 @@ class VectorStreamsSpec extends SparkSpec {
       .select("vec_id", "embedding").as[(Long, Array[Float])]
       .collect().toSeq.sortBy(_._1)
     val stream = MemoryStream[(Long, Array[Float])]
-    val q = VectorStreams.serve(
-      stream.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt", K, NProbe, sq8 = true)
+    val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      IvfIndex.searchSq8(b.sparkSession, index, b, K, NProbe)
+    }
     try {
       stream.addData(queryRows.take(2))
       q.processAllAvailable()
       stream.addData(queryRows.drop(2))
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(VectorStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
     val batch = ranked(IvfIndex.searchSq8(spark,
       index, embs.filter(col("vec_id") < 4), K, NProbe))
     assert(streamed == batch && streamed.nonEmpty)
@@ -145,9 +149,10 @@ class VectorStreamsSpec extends SparkSpec {
       .collect().toSeq.sortBy(_._1)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Array[Float])]
-    val q = VectorStreams.serve(
-      stream.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt", K, NProbe)
+    val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe)
+    }
     try {
       stream.addData(Seq(queryRows.head))
       q.processAllAvailable()
@@ -156,7 +161,7 @@ class VectorStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally stopQuietly(q)
 
-    val streamed = ranked(VectorStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
     // batch 0 probed the half-corpus index, batch 1 the full one
     val dirHalf = s"$dir/indexHalf"
     IvfIndex.build(half, dirHalf, cells = Cells)
@@ -170,13 +175,13 @@ class VectorStreamsSpec extends SparkSpec {
        "empty frame with the serving schema, not an AnalysisException") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vsempty").toString
     // outPath not created at all
-    val none = VectorStreams.served(spark, s"$dir/out")
+    val none = Serving.served(spark, s"$dir/out", Serving.VectorSchema)
     assert(none.columns.toSeq ==
       Seq("query_id", "neighbor_id", "rank", "score"))
     assert(none.count() == 0L)
     // outPath exists but holds no batch= dir yet (checkpoint staging)
     new java.io.File(s"$dir/out2").mkdirs()
-    assert(VectorStreams.served(spark, s"$dir/out2").count() == 0L)
+    assert(Serving.served(spark, s"$dir/out2", Serving.VectorSchema).count() == 0L)
   }
   test("a filtered serve pushes the predicate into every batch's probe; " +
        "stream equals the filtered batch search") {
@@ -191,14 +196,15 @@ class VectorStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Array[Float])]
     val pred = Some(col("label") === 3)
-    val q = VectorStreams.serve(
-      stream.toDF().toDF("vec_id", "embedding"),
-      index, s"$dir/out", s"$dir/ckpt", K, NProbe, pred = pred)
+    val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
+      s"$dir/ckpt") { b =>
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe, pred = pred)
+    }
     try {
       stream.addData(queryRows)
       q.processAllAvailable()
     } finally stopQuietly(q)
-    val streamed = ranked(VectorStreams.served(spark, s"$dir/out"))
+    val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
     val batch = ranked(IvfIndex.search(spark, index,
       embs.filter(col("vec_id") < 2), K, NProbe, pred = pred))
     assert(streamed == batch && streamed.nonEmpty)

@@ -12,6 +12,7 @@ Usage: python3 tools/check_oracle.py <sfDir> <outDir>
 """
 import json
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -33,8 +34,15 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+# DuckDB's default cap is 80% of RAM, which a host shared with other work
+# does not have; past the cap, operators spill to a temporary directory.
+MEMORY_LIMIT = "3GB"
+
+
+def main(sf_dir: str, out_dir: str, spill: str) -> int:
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{spill}'")
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
@@ -86,4 +94,6 @@ def main(sf_dir: str, out_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(*sys.argv[1:3]))
+    with tempfile.TemporaryDirectory(prefix="check_oracle_spill_") as spill:
+        code = main(*sys.argv[1:3], spill)
+    sys.exit(code)
