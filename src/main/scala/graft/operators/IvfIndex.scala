@@ -940,30 +940,38 @@ object IvfIndex {
     * cells (the frozen quantizer, driver-side — centroids are KiBs),
     * the probed cell set pushes down as a PARTITION filter (only those
     * cells' files are listed and read — spec-pinned via inputFiles),
-    * candidates join on the STORED cell, exact cosine rescoring, ranked
-    * top-k per query via the map-side partial aggregator. Identical
-    * result contract to [[Similarity.ivfTopK]] at the same parameters —
-    * spec-pinned — with the per-query build replaced by the stored
-    * layout. When the probed set covers most cells (a huge query
-    * batch), the filter degenerates to a full scan, which is then the
-    * honest cost.
+    * candidates join on the STORED cell, are scored by `scoring`'s
+    * kernel, and rank top-k per query via the map-side partial
+    * aggregator. With [[IvfScoring.Exact]] the result contract is
+    * [[Similarity.ivfTopK]]'s at the same parameters — spec-pinned —
+    * with the per-query build replaced by the stored layout; the code
+    * layers ([[IvfScoring.Adc]], [[IvfScoring.Sq8]]) project only
+    * `(vec_id, <codes>, cell)` (plus the attribute columns when `pred`
+    * filters), so the pruned scan never reads the float vectors
+    * (spec-pinned on the executed scan's read schema). When the probed
+    * set covers most cells (a huge query batch), the filter degenerates
+    * to a full scan, which is then the honest cost.
     *
-    * `pred` filters CANDIDATES inside the pruned scan (requires the
-    * index to store the referenced attribute columns — [[build]]'s
-    * `attrs`): the predicate pushes into the parquet scan beside the
-    * partition filter, and the top-k ranks over matching candidates
-    * only — exactly k matching results, never the under-returning
-    * post-filter. */
+    * `queries` is `(vec_id, embedding)`; the result `(query_id,
+    * neighbor_id, rank, score)`. `pred` filters CANDIDATES inside the
+    * pruned scan (requires the index to store the referenced attribute
+    * columns — [[build]]'s `attrs`): the predicate pushes into the
+    * parquet scan beside the partition filter, and the top-k ranks over
+    * matching candidates only — exactly k matching results, never the
+    * under-returning post-filter. */
   def search(spark: SparkSession, path: String, queries: DataFrame, k: Int,
-             nprobe: Int, idCol: String = "vec_id",
-             vecCol: String = "embedding",
+             nprobe: Int, scoring: IvfScoring = IvfScoring.Exact,
              pred: Option[Column] = None): DataFrame =
     searchWith(spark, path, readManifestFull(spark, path), queries, k,
-               nprobe, idCol, vecCol, pred)
+               nprobe, scoring, pred)
 
+  /** [[search]] against an already-resolved manifest. `excludeSelf =
+    * false` is the LITERAL-query regime: the query is an external
+    * embedding, not a stored row, so nothing is "self" — a stored
+    * vector sharing the caller's query_id is a legitimate hit. */
   private[graft] def searchWith(spark: SparkSession, path: String,
                                 m: IndexManifest, queries: DataFrame, k: Int,
-                                nprobe: Int, idCol: String, vecCol: String,
+                                nprobe: Int, scoring: IvfScoring,
                                 pred: Option[Column],
                                 excludeSelf: Boolean = true): DataFrame = {
     import graft.functions.SketchFunctions.nearestCentroids
@@ -971,115 +979,89 @@ object IvfIndex {
     // ONE manifest resolves quantizer + segments together — a rebuild
     // landing mid-probe cannot mix new centroids with old cells
     val root = new Path(path)
+    val kern = probeKernel(spark, path, root, m, scoring)
     val cents = readCentroidsFile(spark, root, m.centroidsFile)
-    val qb = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("cell", explode(nearestCentroids(col("q_vec"), cents, nprobe)))
+    def cells(v: Column): Column = explode(nearestCentroids(v, cents, nprobe))
+    val qb = kern.query match {
+      // exact: the query column IS the vector, so the cells explode from
+      // the projected column (the plan the exact probe has always had)
+      case None => queries
+        .select(col("vec_id").as("query_id"), col("embedding").as(kern.queryCol))
+        .withColumn("cell", cells(col(kern.queryCol)))
+      case Some(encode) => queries
+        .select(col("vec_id").as("query_id"),
+                encode(col("embedding")).as(kern.queryCol),
+                cells(col("embedding")).as("cell"))
+    }
     // bounded driver collect: |queries| × nprobe cell ids
     val probed = qb.select("cell").distinct().collect().map(_.getLong(0))
-    val corpus0 = pruneCells(readSegments(spark, root, m), probed)
+    val segs = readSegments(spark, root, m)
+    val projected = kern.stored.fold(segs) { stored =>
+      val attrs = if (pred.isDefined) m.attrs.fieldNames.toSeq else Nil
+      segs.select((stored ++ attrs).map(col): _*)
+    }
+    val corpus0 = pruneCells(projected, probed)
     val corpus = pred.fold(corpus0)(corpus0.filter)
-    // excludeSelf = false is the LITERAL-query regime: the query is an
-    // external embedding, not a stored row, so nothing is "self" — a
-    // stored doc sharing the caller's query_id is a legitimate hit
     val joined0 = corpus.join(broadcast(qb), Seq("cell"))
     val joined = if (excludeSelf)
       joined0.filter(col("vec_id") =!= col("query_id")) else joined0
     val scored = joined
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              graft.functions.VectorFunctions.cosineSim(
-                col("q_vec"), col("embedding")).as("score"))
+              kern.score.as("score"))
     Similarity.topKPerQuery(scored, k)
   }
 
-  /** IVF-PQ (IVFADC) search: cell pruning as [[search]], but candidates
-    * score through the PQ layer — the probe projects `(vec_id, codes,
-    * cell)` ONLY (plus the attribute columns when `pred` filters), so
-    * the pruned scan reads `m` bytes per candidate instead of the float
-    * vectors (spec-pinned on the executed scan's read schema). Scores
-    * are [[Pq.adcTopK]]'s quantized inner product; requires the index
-    * to have been built with `pq = Some(...)`. */
-  def searchAdc(spark: SparkSession, path: String, queries: DataFrame,
-                k: Int, nprobe: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding",
-                pred: Option[Column] = None): DataFrame =
-    searchAdcWith(spark, path, readManifestFull(spark, path), queries, k,
-                  nprobe, idCol, vecCol, pred)
+  /** One scoring's share of the probe: the query-side column
+    * `queryCol` (the vector itself when `query` is None, else
+    * `query(vector)`), the stored columns the candidate scan projects
+    * (None: every column), and the kernel over the joined row. */
+  private final case class ProbeKernel(queryCol: String,
+                                       query: Option[Column => Column],
+                                       stored: Option[Seq[String]],
+                                       score: Column)
 
-  private[graft] def searchAdcWith(spark: SparkSession, path: String,
-                                   m: IndexManifest, queries: DataFrame,
-                                   k: Int, nprobe: Int, idCol: String,
-                                   vecCol: String,
-                                   pred: Option[Column]): DataFrame = {
-    import graft.functions.PqFunctions.{pqAdc, pqLut}
-    import graft.functions.SketchFunctions.nearestCentroids
-    require(k > 0 && nprobe > 0, s"k and nprobe must be positive")
-    val root = new Path(path)
-    val cents = readCentroidsFile(spark, root, m.centroidsFile)
-    val cb = m.pqFile.map(readPqFile(spark, root, _)).getOrElse(sys.error(
-      s"$path has no PQ layer — build(..., pq = Some(PqParams(...)))"))
-    val qb = queries
-      .select(col(idCol).as("query_id"),
-              pqLut(col(vecCol), cb.flat, cb.m, cb.ksub).as("lut"),
-              explode(nearestCentroids(col(vecCol), cents, nprobe)).as("cell"))
-    // bounded driver collect: |queries| × nprobe cell ids
-    val probed = qb.select("cell").distinct().collect().map(_.getLong(0))
-    val projCols = Seq("vec_id", "codes", "cell") ++
-      (if (pred.isDefined) m.attrs.fieldNames.toSeq else Nil)
-    val corpus0 = pruneCells(
-      readSegments(spark, root, m).select(projCols.map(col): _*), probed)
-    val corpus = pred.fold(corpus0)(corpus0.filter)
-    val scored = corpus.join(broadcast(qb), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              pqAdc(col("lut"), col("codes"), cb.m, cb.ksub).as("score"))
-    Similarity.topKPerQuery(scored, k)
-  }
+  /** The layer check and kernel of each [[IvfScoring]]: exact cosine
+    * over the floats; the PQ layer's ADC over `m` code bytes per
+    * candidate ([[Pq.adcTopK]]'s quantized inner product); the
+    * integer-exact SQ8 cosine over 1 byte per dimension
+    * ([[graft.functions.Sq8Cosine]] — scales cancel, so the replay
+    * needs no association pinning; queries encode on the fly, so the
+    * layer needs no trained quantizer and survives any rebuild). */
+  private def probeKernel(spark: SparkSession, path: String, root: Path,
+                          m: IndexManifest, scoring: IvfScoring): ProbeKernel =
+    scoring match {
+      case IvfScoring.Exact =>
+        ProbeKernel("q_vec", None, None,
+          graft.functions.VectorFunctions.cosineSim(col("q_vec"), col("embedding")))
+      case IvfScoring.Adc =>
+        import graft.functions.PqFunctions.{pqAdc, pqLut}
+        val cb = m.pqFile.map(readPqFile(spark, root, _)).getOrElse(sys.error(
+          s"$path has no PQ layer — build(..., pq = Some(PqParams(...)))"))
+        ProbeKernel("lut", Some(pqLut(_, cb.flat, cb.m, cb.ksub)),
+          Some(Seq("vec_id", "codes", "cell")),
+          pqAdc(col("lut"), col("codes"), cb.m, cb.ksub))
+      case IvfScoring.Sq8 =>
+        import graft.functions.SketchFunctions.{sq8Cos, sq8EncodeBytes}
+        if (!m.sq8) sys.error(s"$path has no SQ8 layer — build(..., sq8 = true)")
+        ProbeKernel("q_codes8", Some(sq8EncodeBytes), Some(Seq("vec_id", "codes8", "cell")),
+          sq8Cos(col("q_codes8"), col("codes8")))
+    }
+}
 
-  /** IVF-SQ8 search: cell pruning as [[search]], but candidates score
-    * through the per-vector int8 code words — the probe projects
-    * `(vec_id, codes8, cell)` ONLY (plus the attribute columns when
-    * `pred` filters), so the pruned scan reads 1 byte per dimension
-    * instead of the float vectors (4x fewer candidate bytes;
-    * spec-pinned on the executed scan's read schema). Scores are the
-    * quantized cosine ([[graft.functions.Sq8Cosine]]) — scales cancel,
-    * integer sums exact, so the replay needs no association pinning.
-    * SQ8 needs no trained quantizer: queries encode on the fly,
-    * appends encode against nothing — the layer survives any rebuild
-    * untouched. Requires `build(..., sq8 = true)`. */
-  def searchSq8(spark: SparkSession, path: String, queries: DataFrame,
-                k: Int, nprobe: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding",
-                pred: Option[Column] = None): DataFrame =
-    searchSq8With(spark, path, readManifestFull(spark, path), queries, k,
-                  nprobe, idCol, vecCol, pred)
-
-  private[graft] def searchSq8With(spark: SparkSession, path: String,
-                                   m: IndexManifest, queries: DataFrame,
-                                   k: Int, nprobe: Int, idCol: String,
-                                   vecCol: String,
-                                   pred: Option[Column]): DataFrame = {
-    import graft.functions.SketchFunctions.{nearestCentroids, sq8Cos, sq8EncodeBytes}
-    require(k > 0 && nprobe > 0, s"k and nprobe must be positive")
-    if (!m.sq8) sys.error(
-      s"$path has no SQ8 layer — build(..., sq8 = true)")
-    val root = new Path(path)
-    val cents = readCentroidsFile(spark, root, m.centroidsFile)
-    val qb = queries
-      .select(col(idCol).as("query_id"),
-              sq8EncodeBytes(col(vecCol)).as("q_codes8"),
-              explode(nearestCentroids(col(vecCol), cents, nprobe)).as("cell"))
-    // bounded driver collect: |queries| × nprobe cell ids
-    val probed = qb.select("cell").distinct().collect().map(_.getLong(0))
-    val projCols = Seq("vec_id", "codes8", "cell") ++
-      (if (pred.isDefined) m.attrs.fieldNames.toSeq else Nil)
-    val corpus0 = pruneCells(
-      readSegments(spark, root, m).select(projCols.map(col): _*), probed)
-    val corpus = pred.fold(corpus0)(corpus0.filter)
-    val scored = corpus.join(broadcast(qb), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              sq8Cos(col("q_codes8"), col("codes8")).as("score"))
-    Similarity.topKPerQuery(scored, k)
-  }
+/** How an IVF probe scores its candidates — one probe body
+  * ([[IvfIndex.search]]) with the scoring kernel as a parameter, the
+  * IVFADC construction of Jégou et al., "Product Quantization for
+  * Nearest Neighbor Search" (TPAMI 2011):
+  *  - [[IvfScoring.Exact]]: cosine over the stored float vectors;
+  *  - [[IvfScoring.Adc]]: asymmetric distance through the PQ code words
+  *    (reads `m` bytes per candidate, never the floats; needs
+  *    `build(..., pq = Some(...))`);
+  *  - [[IvfScoring.Sq8]]: the integer-exact int8-quantized cosine (1
+  *    byte per dimension; needs `build(..., sq8 = true)`).
+  * A pure value with no Spark dependency, so the plan IR carries it. */
+sealed trait IvfScoring extends Product with Serializable
+object IvfScoring {
+  case object Exact extends IvfScoring
+  case object Adc   extends IvfScoring
+  case object Sq8   extends IvfScoring
 }

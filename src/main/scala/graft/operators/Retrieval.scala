@@ -565,7 +565,7 @@ object Retrieval {
                         pred: Option[Column]): DataFrame = {
     val lex = lexArm.select(col("query_id"), col("doc_id"), col("rank"))
     val vec = IvfIndex.searchWith(spark, ivfPath, m, qVecs, depth, nprobe,
-        "vec_id", "embedding", pred, excludeSelf)
+        IvfScoring.Exact, pred, excludeSelf)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     rrfFuse(lex, vec, k, c)
   }

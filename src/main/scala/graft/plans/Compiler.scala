@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Events, LexIndex, LexQuery, Multimodal, Retrieval, Sampling, Similarity, SkewJoin, TextAnalysis}
+import graft.operators.{Dedup, Events, IvfScoring, LexIndex, LexQuery, Multimodal, Retrieval, Sampling, Similarity, SkewJoin, TextAnalysis}
 
 /** Plan IR → DataFrame program.
   *
@@ -71,10 +71,6 @@ object Compiler {
       s"$op needs a manifested table or persisted index input (a " +
         "directory with manifest-*.txt / index-manifest-*.txt / " +
         "lex-manifest-*.txt) — plain frames have no versions to act on"))
-    def lexProbe(tokens: Seq[String], k: Int, q: LexQuery,
-                 where: Option[Pred]): DataFrame =
-      LexIndex.search(spark, path, spokenQuery(spark, tokens, q), k, q,
-        where.map(predicate(df, _)))
     op match {
       case Op.LoadAtVersion(v) => ManifestedLog.loadAt(spark, path, v)
       case Op.CompactClosedDays(wmUs) =>
@@ -97,7 +93,7 @@ object Compiler {
       case Op.DeleteByKey(kc, keys) =>
         ManifestedLog.deleteByKey(spark, path, kc, keys)
         ManifestedLog.load(spark, path)
-      case Op.IndexSearch(qid, k, nprobe, adc, sq8, where) =>
+      case Op.IndexSearch(qid, k, nprobe, scoring, where) =>
         import graft.operators.IvfIndex
         // The spoken id's STORED vector probes the index. ONE manifest
         // read resolves (quantizer, segments) for BOTH the query-vector
@@ -110,13 +106,13 @@ object Compiler {
         // full-table read per spoken probe).
         val m = IvfIndex.readManifestFull(spark, path)
         val vec = IvfIndex.lookupVectorWith(spark, path, m, qid)
-        indexProbe(spark, path, m, qid, vec, k, nprobe, adc, sq8,
+        indexProbe(spark, path, m, qid, vec, k, nprobe, scoring,
                    where.map(predicate(df, _)))
-      case Op.IndexSearchVec(vec, k, nprobe, adc, sq8, where) =>
+      case Op.IndexSearchVec(vec, k, nprobe, scoring, where) =>
         // an UNSEEN literal query vector — nothing to fetch; the id -1
         // is outside the stored id space, so no candidate is excluded
         val m = graft.operators.IvfIndex.readManifestFull(spark, path)
-        indexProbe(spark, path, m, -1L, vec.toArray, k, nprobe, adc, sq8,
+        indexProbe(spark, path, m, -1L, vec.toArray, k, nprobe, scoring,
                    where.map(predicate(df, _)))
       case Op.IndexErase(keys) =>
         graft.operators.IvfIndex.deleteByKey(spark, path, keys)
@@ -145,33 +141,18 @@ object Compiler {
           .select(col("vec_id"), col("embedding"))
         val queries = corpus.filter(col("vec_id") < qMax)
         val probe = IvfIndex.searchWith(spark, path, m, queries, k, nprobe,
-          "vec_id", "embedding", None)
+          IvfScoring.Exact, None)
         val exact = Similarity.bruteForceTopK(queries, corpus, k)
         if (ndcg) Retrieval.ndcgAtK(probe, exact, k)
         else Retrieval.recallAtK(probe, exact, k)
-      // the spoken tokens are the query (query_id -1, as Bm25TopK): the
+      // the spoken tokens are the query (query_id -1, as LexTopK): the
       // probe reads only those terms' bucket partitions, positional
       // matches run from the stored position lists, fielded scorings
       // apply the spoken weights at probe time, and a spoken attribute
       // filter pushes into that pruned scan — zero corpus scans
-      case Op.LexSearch(terms, k, where) =>
-        lexProbe(terms, k, LexQuery(), where)
-      case Op.LexPhraseSearch(phrase, k, where) =>
-        lexProbe(phrase, k, LexQuery(LexQuery.Phrase()), where)
-      case Op.LexSloppySearch(phrase, k, slop, where) =>
-        lexProbe(phrase, k, LexQuery(LexQuery.Sloppy(slop)), where)
-      case Op.LexFieldedSearch(terms, k, ws, where) =>
-        lexProbe(terms, k, LexQuery(scoring = LexQuery.Bm25F(ws)), where)
-      case Op.LexFieldedFullSearch(terms, k, params, where) =>
-        lexProbe(terms, k, LexQuery(scoring = LexQuery.Bm25FFull(params)), where)
-      case Op.LexFieldedPhraseSearch(phrase, k, field, ws, where) =>
-        lexProbe(phrase, k, LexQuery(LexQuery.Phrase(Some(field)),
-          LexQuery.Bm25F(ws)), where)
-      case Op.LexFieldedSloppySearch(phrase, k, field, slop, ws, where) =>
-        lexProbe(phrase, k, LexQuery(LexQuery.Sloppy(slop, Some(field)),
-          LexQuery.Bm25F(ws)), where)
-      case Op.LexProximitySearch(terms, k, w, where) =>
-        lexProbe(terms, k, LexQuery(LexQuery.Window(w)), where)
+      case Op.LexProbe(tokens, k, q, where) =>
+        LexIndex.search(spark, path, spokenQuery(spark, tokens, q), k, q,
+          where.map(predicate(df, _)))
       case Op.LexHybridServe(terms, vec, k, depth, nprobe, where) =>
         // the literal query carries BOTH modalities inline (query_id
         // -1, outside the stored id space); the lexical index is the
@@ -286,12 +267,6 @@ object Compiler {
                           tokens: Seq[String], q: LexQuery): DataFrame =
     spark.createDataFrame(Seq((-1L, tokens))).toDF("query_id", q.column)
 
-  /** A spoken lexical query over the input documents (the flat scan). */
-  private def lexScan(df: DataFrame, tokens: Seq[String], k: Int,
-                      q: LexQuery, where: Option[Pred]): DataFrame =
-    Retrieval.bm25TopK(df, spokenQuery(df.sparkSession, tokens, q), k, q,
-      where.map(predicate(df, _)))
-
   /** The inverted index's logical content — what the lexical
     * maintenance verbs read back for their content-invariance oracles:
     * the postings sans layout columns (tb is a physical placement;
@@ -310,20 +285,13 @@ object Compiler {
                          path: String,
                          m: graft.operators.IvfIndex.IndexManifest,
                          qid: Long, vec: Array[Float],
-                         k: Int, nprobe: Int, adc: Boolean,
-                         sq8: Boolean = false,
-                         pred: Option[Column] = None): DataFrame = {
-    import graft.operators.IvfIndex
+                         k: Int, nprobe: Int, scoring: IvfScoring,
+                         pred: Option[Column]): DataFrame = {
     import spark.implicits._
     val queries = Seq((qid, vec)).toDF("vec_id", "embedding")
-    val res =
-      if (sq8) IvfIndex.searchSq8With(spark, path, m, queries, k, nprobe,
-                                      "vec_id", "embedding", pred)
-      else if (adc) IvfIndex.searchAdcWith(spark, path, m, queries, k, nprobe,
-                                           "vec_id", "embedding", pred)
-      else IvfIndex.searchWith(spark, path, m, queries, k, nprobe,
-                               "vec_id", "embedding", pred)
-    res.withColumn("score", round(col("score"), 6))
+    graft.operators.IvfIndex.searchWith(spark, path, m, queries, k, nprobe,
+        scoring, pred)
+      .withColumn("score", round(col("score"), 6))
   }
 
   /** The table's colocated snapshot sidecar table: an underscore name
@@ -513,41 +481,25 @@ object Compiler {
         col("doc_id"),
         TextAnalysis.scrubPii(col("text")).as("scrubbed"),
         (TextAnalysis.scrubPii(col("text")) =!= col("text")).as("was_scrubbed"))
-    case Op.SimilarTopK(qid, k, pq, rerank, proj, sq8, where) =>
+    case Op.SimilarTopK(qid, k, scoring, where) =>
       // the query row is fetched from the UNFILTERED corpus — the
       // neighbor filter must not make the spoken query id unfindable
-      similarServe(df, df.filter(col("vec_id") === qid), k, pq, rerank,
-                   proj, sq8, where.map(predicate(df, _)))
-    case Op.SimilarTopKVec(vec, k, pq, rerank, proj, sq8, where) =>
+      similarServe(df, df.filter(col("vec_id") === qid), k, scoring,
+                   where.map(predicate(df, _)))
+    case Op.SimilarTopKVec(vec, k, scoring, where) =>
       // the literal becomes a one-row broadcast frame (query_id -1, so
       // no candidate is self-excluded) — same kernels as SimilarTopK
       val session = df.sparkSession
       import session.implicits._
       val queries = Seq((-1L, vec.toArray)).toDF("vec_id", "embedding")
-      similarServe(df, queries, k, pq, rerank, proj, sq8,
-                   where.map(predicate(df, _)))
+      similarServe(df, queries, k, scoring, where.map(predicate(df, _)))
     // the spoken tokens ARE the query — one-row broadcast frame,
     // query_id -1 (outside the stored doc id space); a spoken attribute
     // filter pre-filters candidates (full-corpus stats); fielded
     // scorings read the input frame's named field columns
-    case Op.Bm25TopK(terms, k, where) =>
-      lexScan(df, terms, k, LexQuery(), where)
-    case Op.Bm25Phrase(phrase, k, where) =>
-      lexScan(df, phrase, k, LexQuery(LexQuery.Phrase()), where)
-    case Op.Bm25Sloppy(phrase, k, slop, where) =>
-      lexScan(df, phrase, k, LexQuery(LexQuery.Sloppy(slop)), where)
-    case Op.Bm25F(terms, k, ws, where) =>
-      lexScan(df, terms, k, LexQuery(scoring = LexQuery.Bm25F(ws)), where)
-    case Op.Bm25FFull(terms, k, params, where) =>
-      lexScan(df, terms, k, LexQuery(scoring = LexQuery.Bm25FFull(params)), where)
-    case Op.Bm25FPhrase(phrase, k, field, ws, where) =>
-      lexScan(df, phrase, k, LexQuery(LexQuery.Phrase(Some(field)),
-        LexQuery.Bm25F(ws)), where)
-    case Op.Bm25FSloppy(phrase, k, field, slop, ws, where) =>
-      lexScan(df, phrase, k, LexQuery(LexQuery.Sloppy(slop, Some(field)),
-        LexQuery.Bm25F(ws)), where)
-    case Op.Bm25Proximity(terms, k, w, where) =>
-      lexScan(df, terms, k, LexQuery(LexQuery.Window(w)), where)
+    case Op.LexTopK(tokens, k, q, where) =>
+      Retrieval.bm25TopK(df, spokenQuery(df.sparkSession, tokens, q), k, q,
+        where.map(predicate(df, _)))
     case Op.MmrTopK(terms, k, lambda, depth) =>
       // BM25 candidates over the input documents; diversification
       // vectors from the catalog-bound embeddings (doc_id ≡ vec_id)
@@ -740,37 +692,38 @@ object Compiler {
     }
   }
 
-  /** Shared serving tail of the spoken similarity verbs: exact brute
-    * force by default; `pq` ranks through ADC code words at the
+  /** Shared serving tail of the spoken similarity verbs, one case per
+    * [[SimilarScoring]]: the PQ path trains its code words at the
     * classical m=8/ksub=256 operating point (32x compression at
-    * dim=64), replayable like every Lloyd path; `proj` ranks
-    * candidates in the JL-projected space at 4x compression
-    * (outDim = dim/4) and exact-rescores the top-rerank — the dim fetch
-    * is a bounded one-row lookup (same class as the centroid fetch),
-    * since the plane matrix must materialize on the driver either way;
-    * `sq8` ranks by the integer-exact int8-quantized cosine. `pred`
-    * (exact path only — the parser enforces the exclusivity) filters
-    * NEIGHBORS inside the corpus scan, pre-filter semantics. */
+    * dim=64), replayable like every Lloyd path; the projection path
+    * ranks in the JL-projected space at 4x compression (outDim =
+    * dim/4) — its dim fetch is a bounded one-row lookup (same class as
+    * the centroid fetch), since the plane matrix must materialize on
+    * the driver either way. `pred` (exact path only — the parser
+    * rejects a spoken filter on the compressed forms; this guards IR
+    * built in code) filters NEIGHBORS inside the corpus scan,
+    * pre-filter semantics. */
   private def similarServe(df: DataFrame, queries: DataFrame, k: Int,
-                           pq: Boolean, rerank: Option[Int],
-                           proj: Boolean, sq8: Boolean = false,
-                           pred: Option[Column] = None): DataFrame = {
-    require(pred.isEmpty || !(pq || proj || sq8),
+                           scoring: SimilarScoring,
+                           pred: Option[Column]): DataFrame = {
+    require(pred.isEmpty || scoring == SimilarScoring.Exact,
       "a neighbor filter on flat similarity is exact-only")
-    val result =
-      if (proj) {
-        val dim = embeddingDim(df)
-        Similarity.projectedTopK(queries, df, k,
-          rerank.getOrElse(math.max(50, k)), dim, math.max(1, dim / 4))
-      } else if (sq8) {
-        Similarity.sq8TopK(queries, df, k, rerank.getOrElse(math.max(50, k)))
-      } else if (pq) {
+    def depth(rerank: Option[Int]) = rerank.getOrElse(math.max(50, k))
+    val result = scoring match {
+      case SimilarScoring.Exact => Similarity.bruteForceTopK(queries, df, k, pred = pred)
+      case SimilarScoring.Pq(rerank) =>
         val cb = graft.operators.Pq.train(df, 8, 256)
         rerank match {
           case Some(r) => graft.operators.Pq.adcTopKRefined(queries, df, cb, k, r)
           case None    => graft.operators.Pq.adcTopK(queries, df, cb, k)
         }
-      } else Similarity.bruteForceTopK(queries, df, k, pred = pred)
+      case SimilarScoring.Proj(rerank) =>
+        val dim = embeddingDim(df)
+        Similarity.projectedTopK(queries, df, k, depth(rerank), dim,
+          math.max(1, dim / 4))
+      case SimilarScoring.Sq8(rerank) =>
+        Similarity.sq8TopK(queries, df, k, depth(rerank))
+    }
     result.withColumn("score", round(col("score"), 6))
   }
 

@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.operators.{IvfScoring, LexQuery}
+
 /** Deterministic natural-language → Plan IR parser.
   *
   * Replaces the reference's two LLM stages — planner
@@ -1047,152 +1049,53 @@ object NLParser {
           } else if (p.peekWordLower.exists(w => w == "documents" || w == "docs") &&
                      p.peekAt(1).collect { case w: Word => w.lower }
                        .contains("matching")) {
-            // "Find top 5 documents matching spark, join, fast [fused
-            // with vector 0 [at depth 20]]." — BM25 lexical retrieval,
-            // optionally RRF-fused with the stored-embedding vector arm
-            // (hybrid search). Terms separate by commas and/or "and";
-            // the phrasing "most similar documents to …" stays the
-            // vector route (it starts with "most"/"similar", not
-            // "documents matching"). A QUOTED operand — "… matching
-            // \"spark join\"" — is a PHRASE: only documents containing
-            // the contiguous token run rank (adjacency, not
-            // bag-of-words).
+            // "Find top 5 documents matching spark, join, fast." —
+            // lexical retrieval over the input documents, every form of
+            // the shared grammar ([[lexicalQuery]], [[Op.LexTopK]]).
+            // Terms separate by commas and/or "and"; the phrasing "most
+            // similar documents to …" stays the vector route (it starts
+            // with "most"/"similar", not "documents matching").
             p.next(); p.expectWord("matching")
-            p.peek match {
-              case Some(Quoted(s)) =>
-                p.next()
-                val phrase = s.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-                if (phrase.isEmpty) throw ParseException(
-                  "a quoted phrase needs at least one token")
-                // "… matching \"the fast\" in title [with slop 3]
-                // weighting title 2, text 1" — the FIELDED phrase: the
-                // run must sit in the NAMED field's own token stream,
-                // eligible docs ranked by BM25F at the spoken weights
-                if (p.peekWordLower.contains("in")) {
-                  p.next(); p.dropWords("the")
-                  val field = p.expectWordRaw()
-                  val fslop = p.peekWordLower match {
-                    case Some("with") =>
-                      p.next(); p.expectWord("slop")
-                      val sl = p.expectNum().toInt
-                      if (sl < 0) throw ParseException(
-                        s"slop must be >= 0: $sl")
-                      Some(sl)
-                    case _ => None
+            Right(lexicalQuery(p) { (terms, q) =>
+              if (q != LexQuery()) None
+              else p.peekWordLower match {
+                case Some("fused") =>
+                  // "… fused with vector 0 [at depth 20]" — hybrid: the
+                  // BM25 arm RRF-fused with the stored-embedding vector
+                  // arm
+                  p.next(); p.expectWord("with"); p.dropWords("the")
+                  p.expectWord("vector")
+                  val vid = p.expectNum().toLong
+                  val depth = p.peekWordLower match {
+                    case Some("at") =>
+                      p.next(); p.expectWord("depth"); p.expectNum().toInt
+                    case _ => 20
                   }
-                  p.expectWord("weighting")
-                  val ws = weightList(p)
-                  val where = p.peekWordLower match {
-                    case Some("where") => p.next(); Some(parsePred(p))
-                    case _             => None
-                  }
+                  if (depth < k) throw ParseException(
+                    s"fusion depth $depth must be at least k=$k")
                   requireDone(p)
-                  return Right(List(fslop match {
-                    case Some(sl) =>
-                      Op.Bm25FSloppy(phrase, k, field, sl, ws, where)
-                    case None =>
-                      Op.Bm25FPhrase(phrase, k, field, ws, where)
-                  }))
-                }
-                // "… matching \"spark fast\" with slop 3" — SLOPPY:
-                // phrase tokens in order within slop extra positions
-                val slop = p.peekWordLower match {
-                  case Some("with") =>
-                    p.next(); p.expectWord("slop")
-                    val sl = p.expectNum().toInt
-                    if (sl < 0) throw ParseException(
-                      s"slop must be >= 0: $sl")
-                    Some(sl)
-                  case _ => None
-                }
-                val where = p.peekWordLower match {
-                  case Some("where") => p.next(); Some(parsePred(p))
-                  case _             => None
-                }
-                requireDone(p)
-                return Right(List(slop match {
-                  case Some(sl) => Op.Bm25Sloppy(phrase, k, sl, where)
-                  case None     => Op.Bm25Phrase(phrase, k, where)
-                }))
-              case _ => ()
-            }
-            val terms = termList(p)
-            if (p.peekWordLower.contains("fused")) {
-              p.next(); p.expectWord("with"); p.dropWords("the")
-              p.expectWord("vector")
-              val vid = p.expectNum().toLong
-              val depth = p.peekWordLower match {
-                case Some("at") =>
-                  p.next(); p.expectWord("depth"); p.expectNum().toInt
-                case _ => 20
+                  Some(List(Op.HybridTopK(terms, k, vid, depth)))
+                case Some("with") =>
+                  // "… with lambda 0.7 [at depth 10]" — MMR
+                  // diversification of the BM25 candidates (embedding
+                  // redundancy from the catalog-bound embeddings table)
+                  p.next(); p.expectWord("lambda")
+                  val lam = p.expectNum()
+                  if (lam < 0.0 || lam > 1.0) throw ParseException(
+                    s"mmr lambda must be in [0,1]: $lam")
+                  val depth = p.peekWordLower match {
+                    case Some("at") =>
+                      p.next(); p.expectWord("depth"); p.expectNum().toInt
+                    case _ => 10
+                  }
+                  if (depth < k) throw ParseException(
+                    s"mmr depth $depth must be at least k=$k")
+                  requireDone(p)
+                  Some(List(Op.MmrTopK(terms, k, lam, depth)))
+                case _ => None
               }
-              if (depth < k) throw ParseException(
-                s"fusion depth $depth must be at least k=$k")
-              requireDone(p)
-              Right(List(Op.HybridTopK(terms, k, vid, depth)))
-            } else if (p.peekWordLower.contains("with")) {
-              // "… matching spark, join, fast with lambda 0.7 [at
-              // depth 10]." — MMR diversification of the BM25
-              // candidates (embedding redundancy from the catalog-bound
-              // embeddings table)
-              p.next(); p.expectWord("lambda")
-              val lam = p.expectNum()
-              if (lam < 0.0 || lam > 1.0) throw ParseException(
-                s"mmr lambda must be in [0,1]: $lam")
-              val depth = p.peekWordLower match {
-                case Some("at") =>
-                  p.next(); p.expectWord("depth"); p.expectNum().toInt
-                case _ => 10
-              }
-              if (depth < k) throw ParseException(
-                s"mmr depth $depth must be at least k=$k")
-              requireDone(p)
-              Right(List(Op.MmrTopK(terms, k, lam, depth)))
-            } else if (p.peekWordLower.contains("within")) {
-              // "… matching spark, join within 5 tokens" — proximity:
-              // all terms inside some window-token run, any order
-              p.next()
-              val w = p.expectNum().toInt
-              if (w < 1) throw ParseException(
-                s"proximity window must be >= 1 token: $w")
-              p.dropWords("tokens", "token")
-              val where = p.peekWordLower match {
-                case Some("where") => p.next(); Some(parsePred(p))
-                case _             => None
-              }
-              requireDone(p)
-              Right(List(Op.Bm25Proximity(terms, k, w, where)))
-            } else if (p.peekWordLower.contains("weighting")) {
-              // "… matching spark, join weighting title 2, text 1" —
-              // BM25F: weighted-aggregate scoring over named fields.
-              // A trailing "normalizing title 0.3, text 0.75" switches
-              // to FULL Robertson–Zaragoza BM25F (per-field b)
-              p.next()
-              val ws = weightList(p)
-              val bs = p.peekWordLower match {
-                case Some("normalizing") => p.next(); Some(normalizeList(p))
-                case _                   => None
-              }
-              val where = p.peekWordLower match {
-                case Some("where") => p.next(); Some(parsePred(p))
-                case _             => None
-              }
-              requireDone(p)
-              Right(List(bs match {
-                case Some(b) => Op.Bm25FFull(terms, k, fullParams(ws, b), where)
-                case None    => Op.Bm25F(terms, k, ws, where)
-              }))
-            } else {
-              // "… matching spark, join where lang == 'en'" — the
-              // candidate pre-filter: only matching documents rank,
-              // scoring stats stay full-corpus
-              val where = p.peekWordLower match {
-                case Some("where") => p.next(); Some(parsePred(p))
-                case _             => None
-              }
-              requireDone(p)
-              Right(List(Op.Bm25TopK(terms, k, where)))
-            }
+            }.fold(identity, { case (tokens, q, where) =>
+              List(Op.LexTopK(tokens, k, q, where)) }))
           } else {
             p.dropWords("most"); p.expectWord("similar")
             p.dropWords("vectors", "neighbors", "documents", "items")
@@ -1208,33 +1111,33 @@ object NLParser {
             // projected-candidates path — or "… using int8 codes …" —
             // the scalar-quantized path — instead of the exact
             // brute-force scan
-            val (pq, proj, sq8, rerank) =
+            val scoring: SimilarScoring =
               if (p.peekWordLower.contains("using")) {
                 p.next(); p.dropWords("a", "the")
-                val isProj =
-                  p.peekWordLower.contains("random") ||
-                  p.peekWordLower.contains("projection")
-                val isSq8 = !isProj && p.peekWordLower.contains("int8")
-                if (isProj) {
-                  p.dropWords("random"); p.expectWord("projection")
-                } else if (isSq8) {
-                  p.next(); p.dropWords("quantized")
-                  p.dropWords("codes", "code", "quantization", "vectors")
-                } else {
-                  p.dropWords("product")
-                  p.expectWord("quantized")
-                  p.dropWords("codes", "code", "vectors")
-                }
-                val rerank =
+                val form: Option[Int] => SimilarScoring =
+                  if (p.peekWordLower.contains("random") ||
+                      p.peekWordLower.contains("projection")) {
+                    p.dropWords("random"); p.expectWord("projection")
+                    SimilarScoring.Proj(_)
+                  } else if (p.peekWordLower.contains("int8")) {
+                    p.next(); p.dropWords("quantized")
+                    p.dropWords("codes", "code", "quantization", "vectors")
+                    SimilarScoring.Sq8(_)
+                  } else {
+                    p.dropWords("product")
+                    p.expectWord("quantized")
+                    p.dropWords("codes", "code", "vectors")
+                    SimilarScoring.Pq(_)
+                  }
+                form(
                   if (p.peekWordLower.contains("with")) {
                     p.next(); p.expectWord("rerank")
                     val r = p.expectNum().toInt
                     if (r < k) throw ParseException(
                       s"rerank $r must be at least k=$k")
                     Some(r)
-                  } else None
-                (!isProj && !isSq8, isProj, isSq8, rerank)
-              } else (false, false, false, None)
+                  } else None)
+              } else SimilarScoring.Exact
             // "… where label == 3" — a neighbor metadata pre-filter,
             // exact path only: the flat compressed paths train/rank
             // per query, so a filtered corpus would change the
@@ -1242,7 +1145,7 @@ object NLParser {
             // persisted index's job ("Search the index … where …")
             val where = p.peekWordLower match {
               case Some("where") =>
-                if (pq || proj || sq8) throw ParseException(
+                if (scoring != SimilarScoring.Exact) throw ParseException(
                   "a 'where' filter on flat similarity is exact-only — " +
                     "for filtered compressed serving, search a persisted " +
                     "index built with attribute columns")
@@ -1251,8 +1154,8 @@ object NLParser {
             }
             requireDone(p)
             Right(List(query match {
-              case Left(qid)  => Op.SimilarTopK(qid, k, pq, rerank, proj, sq8, where)
-              case Right(vec) => Op.SimilarTopKVec(vec, k, pq, rerank, proj, sq8, where)
+              case Left(qid)  => Op.SimilarTopK(qid, k, scoring, where)
+              case Right(vec) => Op.SimilarTopKVec(vec, k, scoring, where)
             }))
           }
         }
@@ -1813,86 +1716,25 @@ object NLParser {
         p.next(); p.dropWords("the")
         if (p.peekWordLower.contains("lexical")) {
           // "Search the lexical index for top 5 matching spark, join,
-          // fast [where lang == 'en']." — BM25 probe of the bound
-          // persisted inverted index; the optional attribute filter
-          // pushes into the pruned bucket scan (pre-filter). A QUOTED
-          // operand — "… matching \"spark join\"" — probes the
-          // POSITIONAL layer: adjacency from the stored position lists
+          // fast." — a probe of the bound persisted inverted index,
+          // every form of the shared grammar ([[lexicalQuery]],
+          // [[Op.LexProbe]]); the optional attribute filter pushes into
+          // the pruned bucket scan (pre-filter)
           p.next(); p.expectWord("index")
           p.expectWord("for"); p.dropWords("top", "the")
           val k = p.expectNum().toInt
           if (k <= 0) throw ParseException(s"top-k must be positive: $k")
           p.dropWords("documents", "docs")
           p.expectWord("matching")
-          p.peek match {
-            case Some(Quoted(s)) =>
-              p.next()
-              val phrase = s.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-              if (phrase.isEmpty) throw ParseException(
-                "a quoted phrase needs at least one token")
-              // "… matching \"the fast\" in title [with slop 3]
-              // weighting title 2, text 1" — the FIELDED phrase probe:
-              // within-field adjacency from the fielded positional
-              // index's stored per-field position lists, BM25F scoring
-              // at the spoken probe-time weights
-              if (p.peekWordLower.contains("in")) {
-                p.next(); p.dropWords("the")
-                val field = p.expectWordRaw()
-                val fslop = p.peekWordLower match {
-                  case Some("with") =>
-                    p.next(); p.expectWord("slop")
-                    val sl = p.expectNum().toInt
-                    if (sl < 0) throw ParseException(
-                      s"slop must be >= 0: $sl")
-                    Some(sl)
-                  case _ => None
-                }
-                p.expectWord("weighting")
-                val ws = weightList(p)
-                val where = p.peekWordLower match {
-                  case Some("where") => p.next(); Some(parsePred(p))
-                  case _             => None
-                }
-                requireDone(p)
-                return Right(List(fslop match {
-                  case Some(sl) =>
-                    Op.LexFieldedSloppySearch(phrase, k, field, sl, ws, where)
-                  case None =>
-                    Op.LexFieldedPhraseSearch(phrase, k, field, ws, where)
-                }))
-              }
-              // "… matching \"spark fast\" with slop 3" — the SLOPPY
-              // probe: ordered chains within the slop window from the
-              // positional index's stored position lists
-              val slop = p.peekWordLower match {
-                case Some("with") =>
-                  p.next(); p.expectWord("slop")
-                  val sl = p.expectNum().toInt
-                  if (sl < 0) throw ParseException(
-                    s"slop must be >= 0: $sl")
-                  Some(sl)
-                case _ => None
-              }
-              val where = p.peekWordLower match {
-                case Some("where") => p.next(); Some(parsePred(p))
-                case _             => None
-              }
-              requireDone(p)
-              return Right(List(slop match {
-                case Some(sl) => Op.LexSloppySearch(phrase, k, sl, where)
-                case None     => Op.LexPhraseSearch(phrase, k, where)
-              }))
-            case _ => ()
+          def probing(): Int = {
+            p.expectWord("probing")
+            val np = p.expectNum().toInt
+            if (np <= 0) throw ParseException(
+              s"probed cell count must be positive: $np")
+            p.dropWords("cells", "cell")
+            np
           }
-          val terms = termList(p)
-          if (p.peekWordLower.contains("fused")) {
-            // "… matching spark, join fused with vector [0.1, …] at
-            // depth 20 probing 4 cells." — the LITERAL-query hybrid:
-            // a fresh embedding + keywords served from BOTH bound
-            // indexes (lexical buckets + IVF cells), RRF-fused
-            p.next(); p.expectWord("with"); p.dropWords("the")
-            p.expectWord("vector")
-            val vec = vectorLiteral(p)
+          def fusionDepth(): Int = {
             val depth = p.peekWordLower match {
               case Some("at") =>
                 p.next(); p.expectWord("depth"); p.expectNum().toInt
@@ -1900,161 +1742,107 @@ object NLParser {
             }
             if (depth < k) throw ParseException(
               s"fusion depth $depth must be at least k=$k")
-            p.expectWord("probing")
-            val np = p.expectNum().toInt
-            if (np <= 0) throw ParseException(
-              s"probed cell count must be positive: $np")
-            p.dropWords("cells", "cell")
-            // "… with lambda 0.7" — MMR-diversify the fused literal
-            // ranking (the production hybrid sentence, diversified)
-            val lam = p.peekWordLower match {
-              case Some("with") =>
-                p.next(); p.expectWord("lambda")
-                val l = p.expectNum()
-                if (l < 0.0 || l > 1.0) throw ParseException(
-                  s"mmr lambda must be in [0,1]: $l")
-                Some(l)
-              case _ => None
-            }
-            // "… where label == 3" — both arms pre-filter on the
-            // attribute BOTH indexes store (the x104 contract, spoken
-            // on the literal-query form)
-            val where = p.peekWordLower match {
-              case Some("where") => p.next(); Some(parsePred(p))
-              case _             => None
-            }
-            requireDone(p)
-            return Right(List(lam match {
-              case Some(l) =>
-                Op.LexHybridMmrLit(terms, vec, k, l, depth, np, where)
-              case None => Op.LexHybridServe(terms, vec, k, depth, np, where)
-            }))
+            depth
           }
-          if (p.peekWordLower.contains("with")) {
-            // "… matching spark, join, fast with lambda 0.7 [at depth
-            // 10]." — MMR diversification served fully AT REST: BM25
-            // candidates from this index, embeddings fetched by id from
-            // the bound vector index (nl136's flat sentence, two-store
-            // form). With a trailing "probing 4 cells for query 0" the
-            // CANDIDATES are the fused HYBRID top-depth instead (the
-            // spoken id names the stored embedding driving the vector
-            // arm) — MMR over what a RAG pipeline actually serves.
-            p.next(); p.expectWord("lambda")
-            val lam = p.expectNum()
-            if (lam < 0.0 || lam > 1.0) throw ParseException(
-              s"mmr lambda must be in [0,1]: $lam")
-            val depth = p.peekWordLower match {
-              case Some("at") =>
-                p.next(); p.expectWord("depth"); p.expectNum().toInt
-              case _ => 10
-            }
-            if (depth < k) throw ParseException(
-              s"mmr depth $depth must be at least k=$k")
-            if (p.peekWordLower.contains("probing")) {
-              p.next()
-              val np = p.expectNum().toInt
-              if (np <= 0) throw ParseException(
-                s"probed cell count must be positive: $np")
-              p.dropWords("cells", "cell")
-              p.expectWord("for"); p.expectWord("query")
-              val qid = p.expectNum().toLong
-              requireDone(p)
-              return Right(List(
-                Op.LexMmrHybridServe(terms, k, lam, depth, np, qid)))
-            }
-            requireDone(p)
-            return Right(List(Op.LexMmrServe(terms, k, lam, depth)))
-          }
-          if (p.peekWordLower.contains("within")) {
-            // "… matching spark, join within 5 tokens." — proximity
-            // from the positional index's stored position lists
-            p.next()
-            val w = p.expectNum().toInt
-            if (w < 1) throw ParseException(
-              s"proximity window must be >= 1 token: $w")
-            p.dropWords("tokens", "token")
-            val where = p.peekWordLower match {
-              case Some("where") => p.next(); Some(parsePred(p))
-              case _             => None
-            }
-            requireDone(p)
-            return Right(List(Op.LexProximitySearch(terms, k, w, where)))
-          }
-          if (p.peekWordLower.contains("weighting")) {
-            // "… matching spark, join weighting title 2, text 1." —
-            // the BM25F probe of a FIELDED index (weights probe-time)
-            p.next()
-            val ws = weightList(p)
-            if (p.peekWordLower.contains("fused")) {
-              // "… weighting title 2, text 1 fused at depth 20 probing
-              // 4 cells for query 0 [where …]." — the FIELDED hybrid:
-              // this index's BM25F arm at the spoken weights, the
-              // bound vector index's arm by the spoken query id's
-              // STORED embedding, RRF-fused (the title/body RAG probe)
-              p.next()
-              val depth = p.peekWordLower match {
-                case Some("at") =>
-                  p.next(); p.expectWord("depth"); p.expectNum().toInt
-                case _ => 20
-              }
-              if (depth < k) throw ParseException(
-                s"fusion depth $depth must be at least k=$k")
-              p.expectWord("probing")
-              val np = p.expectNum().toInt
-              if (np <= 0) throw ParseException(
-                s"probed cell count must be positive: $np")
-              p.dropWords("cells", "cell")
-              p.expectWord("for"); p.expectWord("query")
-              val qid = p.expectNum().toLong
-              val where = p.peekWordLower match {
-                case Some("where") => p.next(); Some(parsePred(p))
-                case _             => None
-              }
-              requireDone(p)
-              return Right(List(
-                Op.LexHybridFielded(terms, k, ws, depth, np, qid, where)))
-            }
-            // "… normalizing title 0.3, text 0.75" — the FULL
-            // Robertson–Zaragoza probe of the same fielded index
-            val bs = p.peekWordLower match {
-              case Some("normalizing") => p.next(); Some(normalizeList(p))
-              case _                   => None
-            }
-            val where = p.peekWordLower match {
-              case Some("where") => p.next(); Some(parsePred(p))
-              case _             => None
-            }
-            requireDone(p)
-            return Right(List(bs match {
-              case Some(b) =>
-                Op.LexFieldedFullSearch(terms, k, fullParams(ws, b), where)
-              case None => Op.LexFieldedSearch(terms, k, ws, where)
-            }))
-          }
-          val where = p.peekWordLower match {
+          def optWhere(): Option[Pred] = p.peekWordLower match {
             case Some("where") => p.next(); Some(parsePred(p))
             case _             => None
           }
-          requireDone(p)
-          return Right(List(Op.LexSearch(terms, k, where)))
+          return Right(lexicalQuery(p) { (terms, q) =>
+            (q, p.peekWordLower) match {
+              case (LexQuery(LexQuery.Terms, LexQuery.Bm25(_, _)), Some("fused")) =>
+                // "… fused with vector [0.1, …] at depth 20 probing 4
+                // cells [with lambda 0.7] [where …]." — the LITERAL-query
+                // hybrid: a fresh embedding + keywords served from BOTH
+                // bound indexes (lexical buckets + IVF cells), RRF-fused;
+                // "with lambda" MMR-diversifies the fused ranking, and a
+                // filter pre-filters both arms on the attribute BOTH
+                // indexes store (the x104 contract)
+                p.next(); p.expectWord("with"); p.dropWords("the")
+                p.expectWord("vector")
+                val vec = vectorLiteral(p)
+                val depth = fusionDepth()
+                val np = probing()
+                val lam = p.peekWordLower match {
+                  case Some("with") =>
+                    p.next(); p.expectWord("lambda")
+                    val l = p.expectNum()
+                    if (l < 0.0 || l > 1.0) throw ParseException(
+                      s"mmr lambda must be in [0,1]: $l")
+                    Some(l)
+                  case _ => None
+                }
+                val where = optWhere()
+                requireDone(p)
+                Some(List(lam match {
+                  case Some(l) =>
+                    Op.LexHybridMmrLit(terms, vec, k, l, depth, np, where)
+                  case None => Op.LexHybridServe(terms, vec, k, depth, np, where)
+                }))
+              case (LexQuery(LexQuery.Terms, LexQuery.Bm25(_, _)), Some("with")) =>
+                // "… with lambda 0.7 [at depth 10]." — MMR served fully
+                // AT REST: BM25 candidates from this index, embeddings
+                // fetched by id from the bound vector index. A trailing
+                // "probing 4 cells for query 0" takes the CANDIDATES from
+                // the fused HYBRID top-depth instead (the spoken id
+                // names the stored embedding driving the vector arm)
+                p.next(); p.expectWord("lambda")
+                val lam = p.expectNum()
+                if (lam < 0.0 || lam > 1.0) throw ParseException(
+                  s"mmr lambda must be in [0,1]: $lam")
+                val depth = p.peekWordLower match {
+                  case Some("at") =>
+                    p.next(); p.expectWord("depth"); p.expectNum().toInt
+                  case _ => 10
+                }
+                if (depth < k) throw ParseException(
+                  s"mmr depth $depth must be at least k=$k")
+                if (p.peekWordLower.contains("probing")) {
+                  val np = probing()
+                  p.expectWord("for"); p.expectWord("query")
+                  val qid = p.expectNum().toLong
+                  requireDone(p)
+                  Some(List(Op.LexMmrHybridServe(terms, k, lam, depth, np, qid)))
+                } else {
+                  requireDone(p)
+                  Some(List(Op.LexMmrServe(terms, k, lam, depth)))
+                }
+              case (LexQuery(LexQuery.Terms, LexQuery.Bm25F(ws, _, _)), Some("fused")) =>
+                // "… weighting title 2, text 1 fused at depth 20 probing
+                // 4 cells for query 0 [where …]." — the FIELDED hybrid:
+                // this index's BM25F arm at the spoken weights, the
+                // bound vector index's arm by the spoken query id's
+                // STORED embedding, RRF-fused (the title/body RAG probe)
+                p.next()
+                val depth = fusionDepth()
+                val np = probing()
+                p.expectWord("for"); p.expectWord("query")
+                val qid = p.expectNum().toLong
+                val where = optWhere()
+                requireDone(p)
+                Some(List(Op.LexHybridFielded(terms, k, ws, depth, np, qid, where)))
+              case _ => None
+            }
+          }.fold(identity, { case (tokens, q, where) =>
+            List(Op.LexProbe(tokens, k, q, where)) }))
         }
         p.expectWord("index")
         // "with quantized codes" = the PQ/ADC layer; "with int8 codes"
         // = the per-vector SQ8 layer
-        val (adc, sq8) =
+        val scoring: IvfScoring =
           if (p.peekWordLower.contains("with")) {
             p.next()
             if (p.peekWordLower.contains("int8")) {
               p.next(); p.dropWords("quantized")
               p.dropWords("codes", "code", "quantization")
-              (false, true)
+              IvfScoring.Sq8
             } else {
               p.dropWords("product")
               p.expectWord("quantized")
               p.dropWords("codes", "code")
-              (true, false)
+              IvfScoring.Adc
             }
-          } else (false, false)
+          } else IvfScoring.Exact
         p.expectWord("for"); p.dropWords("top", "the")
         val k = p.expectNum().toInt
         if (k <= 0) throw ParseException(s"top-k must be positive: $k")
@@ -2080,11 +1868,11 @@ object NLParser {
           p.next()
           val vec = vectorLiteral(p)
           val (np, w) = nprobeTail()
-          Right(List(Op.IndexSearchVec(vec, k, np, adc, sq8, w)))
+          Right(List(Op.IndexSearchVec(vec, k, np, scoring, w)))
         } else {
           val qid = p.expectNum().toLong
           val (np, w) = nprobeTail()
-          Right(List(Op.IndexSearch(qid, k, np, adc, sq8, w)))
+          Right(List(Op.IndexSearch(qid, k, np, scoring, w)))
         }
       case Some("delete") | Some("forget") | Some("erase") =>
         // "Delete user_id 42 from the table." — PHYSICAL compliance
@@ -2336,14 +2124,95 @@ object NLParser {
       p.next(); p.expectWord("seed"); p.expectNum().toLong
     } else default
 
+  /** The lexical grammar both retrieval routes share, read after
+    * "matching" — "Find top k documents matching …" ([[Op.LexTopK]])
+    * and "Search the lexical index for top k matching …"
+    * ([[Op.LexProbe]]):
+    * {{{
+    *   lexical := QUOTED IN THE? field (WITH SLOP int)? WEIGHTING weights
+    *            | QUOTED (WITH SLOP int)?
+    *            | terms WITHIN int TOKENS?
+    *            | terms WEIGHTING weights (NORMALIZING bs)?
+    *            | terms
+    *   then      route continuation | (WHERE pred)?
+    * }}}
+    * A QUOTED operand is a phrase (adjacency, not bag-of-words); "in
+    * <field>" runs it inside that field's own stream. `route` sees the
+    * parsed (tokens, query) before the "where" tail: a continuation
+    * only its route speaks (fusion, MMR) consumes the rest of the clause
+    * and returns its ops (Left); otherwise the tail is read and the
+    * clause must end (Right). A pair [[LexQuery]] rejects fails here,
+    * as a [[ParseException]] carrying the query's own message. */
+  private def lexicalQuery(p: TokCursor)(
+      route: (Seq[String], LexQuery) => Option[List[Op]])
+      : Either[List[Op], (Seq[String], LexQuery, Option[Pred])] = {
+    def query(build: => LexQuery): LexQuery =
+      try build
+      catch { case e: IllegalArgumentException => throw ParseException(e.getMessage) }
+    def slop(): Option[Int] = p.peekWordLower match {
+      case Some("with") =>
+        p.next(); p.expectWord("slop")
+        val sl = p.expectNum().toInt
+        if (sl < 0) throw ParseException(s"slop must be >= 0: $sl")
+        Some(sl)
+      case _ => None
+    }
+    def phraseMatch(field: Option[String]): LexQuery.Match =
+      slop().fold[LexQuery.Match](LexQuery.Phrase(field))(LexQuery.Sloppy(_, field))
+    val (tokens, q) = p.peek match {
+      case Some(Quoted(s)) =>
+        p.next()
+        val phrase = s.trim.split("\\s+").toSeq.filter(_.nonEmpty)
+        if (phrase.isEmpty) throw ParseException(
+          "a quoted phrase needs at least one token")
+        if (p.peekWordLower.contains("in")) {
+          p.next(); p.dropWords("the")
+          val field = Some(p.expectWordRaw())
+          val m = phraseMatch(field)
+          p.expectWord("weighting")
+          val ws = weightList(p)
+          (phrase, query(LexQuery(m, LexQuery.Bm25F(ws))))
+        } else (phrase, query(LexQuery(phraseMatch(None))))
+      case _ =>
+        val terms = termList(p)
+        p.peekWordLower match {
+          case Some("within") =>
+            // proximity: every term inside some w-token run, any order
+            p.next()
+            val w = p.expectNum().toInt
+            if (w < 1) throw ParseException(
+              s"proximity window must be >= 1 token: $w")
+            p.dropWords("tokens", "token")
+            (terms, query(LexQuery(LexQuery.Window(w))))
+          case Some("weighting") =>
+            // BM25F over named fields; "normalizing title 0.3, text
+            // 0.75" switches to FULL Robertson–Zaragoza BM25F
+            p.next()
+            val ws = weightList(p)
+            p.peekWordLower match {
+              case Some("normalizing") =>
+                p.next()
+                val ps = fullParams(ws, normalizeList(p))
+                (terms, query(LexQuery(scoring = LexQuery.Bm25FFull(ps))))
+              case _ => (terms, query(LexQuery(scoring = LexQuery.Bm25F(ws))))
+            }
+          case _ => (terms, LexQuery())
+        }
+    }
+    route(tokens, q).toLeft {
+      val where = p.peekWordLower match {
+        case Some("where") => p.next(); Some(parsePred(p))
+        case _             => None
+      }
+      requireDone(p)
+      (tokens, q, where)
+    }
+  }
+
   private def requireDone(p: TokCursor): Unit =
     if (!p.done) throw ParseException(
       s"trailing tokens after clause: ${p.remaining.mkString(" ")}")
 
-  /** A bracketed float list — the spoken form of an unseen literal
-    * query vector ("vector [0.1, -0.2, …]"); the caller has already
-    * consumed the word "vector". `Float.toString`/`toFloat` round-trip,
-    * so spoken floats parse bit-identical to the vector they print. */
   /** A spoken term list — words separated by commas and/or "and",
     * stopping at the first token that is neither ("fused …", end of
     * input). Shared by the BM25/hybrid routes and the lexical-index
@@ -2415,6 +2284,10 @@ object NLParser {
     ws.result()
   }
 
+  /** A bracketed float list — the spoken form of an unseen literal
+    * query vector ("vector [0.1, -0.2, …]"); the caller has already
+    * consumed the word "vector". `Float.toString`/`toFloat` round-trip,
+    * so spoken floats parse bit-identical to the vector they print. */
   private def vectorLiteral(p: TokCursor): Seq[Float] = {
     p.expectSym("[")
     val vec = Seq.newBuilder[Float]

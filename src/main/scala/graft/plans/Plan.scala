@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.operators.{IvfScoring, LexQuery}
+
 /** Typed plan IR — the deterministic replacement for the reference's
   * LLM-produced plan *string* (reference: agentic_workflow_transformation.py:51).
   *
@@ -34,6 +36,32 @@ object Pred {
   final case class And(left: Pred, right: Pred)                   extends Pred
   final case class Or(left: Pred, right: Pred)                    extends Pred
   final case class Not(child: Pred)                               extends Pred
+}
+
+/** How the flat similarity verbs ([[Op.SimilarTopK]],
+  * [[Op.SimilarTopKVec]]) rank the corpus, one spoken "using …" form
+  * each:
+  *  - [[SimilarScoring.Exact]]: exact brute-force cosine
+  *    ([[graft.operators.Similarity.bruteForceTopK]]);
+  *  - [[SimilarScoring.Pq]] ("using quantized codes"): ADC through
+  *    product-quantized code words at the classical m=8/ksub=256
+  *    operating point ([[graft.operators.Pq.adcTopK]]); `rerank =
+  *    Some(r)` adds the exact rescore of the ADC top-r
+  *    ([[graft.operators.Pq.adcTopKRefined]]);
+  *  - [[SimilarScoring.Proj]] ("using random projection"): candidates
+  *    ranked by cosine in the 4x-compressed JL-projected space, the top
+  *    `rerank` (default max(50, k)) exact-rescored
+  *    ([[graft.operators.Similarity.projectedTopK]]);
+  *  - [[SimilarScoring.Sq8]] ("using int8 codes"): the integer-exact
+  *    int8-quantized cosine, the top `rerank` (default max(50, k))
+  *    exact-rescored ([[graft.operators.Similarity.sq8TopK]]).
+  * "… with rerank 50" sets `rerank` on the compressed forms. */
+sealed trait SimilarScoring extends Product with Serializable
+object SimilarScoring {
+  case object Exact                                  extends SimilarScoring
+  final case class Pq(rerank: Option[Int] = None)   extends SimilarScoring
+  final case class Proj(rerank: Option[Int] = None) extends SimilarScoring
+  final case class Sq8(rerank: Option[Int] = None)  extends SimilarScoring
 }
 
 /** Literal values — the reference's grammar only ever compares against
@@ -152,97 +180,64 @@ object Op {
   case object Fingerprint extends CorpusOp
   /** PII scrubbing (emails, phone-like digit runs). */
   case object ScrubPii extends CorpusOp
-  /** Top-k neighbors of one query vector: exact brute-force cosine by
-    * default; `pq = true` ranks through product-quantized code words
-    * (ADC at the classical m=8/ksub=256 operating point —
-    * [[graft.operators.Pq.adcTopK]]), with `rerank = Some(r)` adding
-    * the exact rescore of the ADC top-r
-    * ([[graft.operators.Pq.adcTopKRefined]]); `proj = true` ranks
-    * candidates by cosine in the 4x-compressed JL-projected space and
-    * exact-rescores the top-rerank
-    * ([[graft.operators.Similarity.projectedTopK]]); `sq8 = true`
-    * ranks by the integer-exact int8-quantized cosine and
-    * exact-rescores ([[graft.operators.Similarity.sq8TopK]]). `pq`,
-    * `proj` and `sq8` are mutually exclusive (the parser speaks one).
-    * `where` restricts NEIGHBORS by a metadata predicate (pre-filter:
-    * exactly k matching neighbors; the query row itself is fetched
-    * from the UNFILTERED corpus) — exact path only: filtered
-    * compressed serving is the persisted index's job
-    * ([[IndexSearch]]'s `where`), since the flat compressed paths
+  /** Top-k neighbors of one query vector, ranked by `scoring`
+    * ([[SimilarScoring]]: exact brute-force cosine by default, or one of
+    * the flat compressed paths). `where` restricts NEIGHBORS by a
+    * metadata predicate (pre-filter: exactly k matching neighbors; the
+    * query row itself is fetched from the UNFILTERED corpus) — exact
+    * path only: filtered compressed serving is the persisted index's
+    * job ([[IndexSearch]]'s `where`), since the flat compressed paths
     * train/rank per query and a filtered training corpus would change
     * the quantizer itself. */
   final case class SimilarTopK(queryId: Long, k: Int,
-                               pq: Boolean = false,
-                               rerank: Option[Int] = None,
-                               proj: Boolean = false,
-                               sq8: Boolean = false,
+                               scoring: SimilarScoring = SimilarScoring.Exact,
                                where: Option[Pred] = None)         extends CorpusOp
   /** [[SimilarTopK]] with an UNSEEN literal query vector (spoken as a
     * bracketed float list) instead of a stored id — the serving shape
     * where a fresh embedding ranks against the corpus; query_id -1 is
     * outside the stored id space, so no candidate is self-excluded. */
   final case class SimilarTopKVec(vec: Seq[Float], k: Int,
-                                  pq: Boolean = false,
-                                  rerank: Option[Int] = None,
-                                  proj: Boolean = false,
-                                  sq8: Boolean = false,
+                                  scoring: SimilarScoring = SimilarScoring.Exact,
                                   where: Option[Pred] = None)      extends CorpusOp
 
-  /** BM25 lexical top-k over the documents corpus for a literal spoken
-    * term list ([[graft.operators.Retrieval.bm25TopK]]); query_id -1 —
-    * the terms are the query, outside the stored id space. `where` is
-    * the candidate pre-filter ("… where lang == 'en'"): only matching
-    * documents rank (exactly k matching results) while document
-    * frequency and corpus stats stay full-corpus. */
-  final case class Bm25TopK(terms: Seq[String], k: Int,
-                            where: Option[Pred] = None)            extends CorpusOp
-  /** Quoted-PHRASE BM25 top-k over the documents corpus ("documents
-    * matching \"spark join\"") — only documents containing the phrase
-    * as a CONTIGUOUS token run rank, scored by BM25 over the phrase's
-    * distinct terms with full-corpus stats
-    * ([[graft.operators.Retrieval.bm25TopK]], `Phrase`); query_id -1. */
-  final case class Bm25Phrase(phrase: Seq[String], k: Int,
-                              where: Option[Pred] = None)          extends CorpusOp
-  /** SLOPPY-phrase BM25 top-k ("documents matching \"spark fast\" with
-    * slop 3") — phrase tokens IN ORDER within `slop` extra positions
-    * (∃ p₀ < … < pₙ₋₁ matching the slots, pₙ₋₁ − p₀ ≤ (n−1)+slop;
-    * slop 0 = the exact phrase)
-    * ([[graft.operators.Retrieval.bm25TopK]], `Sloppy`). */
-  final case class Bm25Sloppy(phrase: Seq[String], k: Int, slop: Int,
-                              where: Option[Pred] = None)          extends CorpusOp
-  /** BM25F multi-field top-k ("documents matching spark, join
-    * weighting title 2, text 1") — weighted-aggregate scoring over
-    * named fields ([[graft.operators.Retrieval.bm25TopK]], `Bm25F`). */
-  final case class Bm25F(terms: Seq[String], k: Int,
-                         weights: Seq[(String, Double)],
-                         where: Option[Pred] = None)               extends CorpusOp
-  /** FULL Robertson–Zaragoza BM25F ("documents matching spark, join
-    * weighting title 2, text 1 normalizing title 0.3, text 0.75") —
-    * per-field length normalization INSIDE each field before the
-    * shared saturation
-    * ([[graft.operators.Retrieval.bm25TopK]], `Bm25FFull`). */
-  final case class Bm25FFull(terms: Seq[String], k: Int,
-                             params: Seq[(String, Double, Double)],
-                             where: Option[Pred] = None)           extends CorpusOp
-  /** Quoted-phrase BM25F ("documents matching \"the fast\" in title
-    * weighting title 2, text 1") — the run must sit in the NAMED
-    * field's OWN token stream; the eligible docs rank by BM25F at the
-    * spoken weights ([[graft.operators.Retrieval.bm25TopK]], `Phrase(field)` × `Bm25F`). */
-  final case class Bm25FPhrase(phrase: Seq[String], k: Int, field: String,
-                               weights: Seq[(String, Double)],
-                               where: Option[Pred] = None)         extends CorpusOp
-  /** SLOPPY-phrase BM25F ("… \"spark fast\" in text with slop 3
-    * weighting title 2, text 1") — ordered within slop inside one
-    * field's stream
-    * ([[graft.operators.Retrieval.bm25TopK]], `Sloppy(slop, field)` × `Bm25F`). */
-  final case class Bm25FSloppy(phrase: Seq[String], k: Int, field: String,
-                               slop: Int, weights: Seq[(String, Double)],
-                               where: Option[Pred] = None)         extends CorpusOp
-  /** PROXIMITY BM25 top-k ("documents matching spark, join within 5
-    * tokens") — only documents with all terms inside some window-token
-    * run rank ([[graft.operators.Retrieval.bm25TopK]], `Window`). */
-  final case class Bm25Proximity(terms: Seq[String], k: Int, window: Int,
-                                 where: Option[Pred] = None)       extends CorpusOp
+  /** Lexical top-k over the input documents: the flat scan
+    * ([[graft.operators.Retrieval.bm25TopK]]) of one spoken
+    * [[LexQuery]]. `tokens` are the spoken terms, or
+    * the quoted phrase's tokens in order; query_id -1, outside the
+    * stored id space. `where` is the candidate pre-filter ("… where
+    * lang == 'en'"): only matching documents rank (exactly k matching
+    * results) while document frequency and corpus stats stay
+    * full-corpus. Fielded scorings read the input frame's named field
+    * columns.
+    *
+    * Spoken forms ("Find top 5 documents matching …") by (match ×
+    * scoring):
+    *  - Terms × Bm25 — "spark, join, fast": bag-of-words BM25;
+    *  - Phrase × Bm25 — "\"spark join\"" (single quotes too): only
+    *    documents containing the phrase as a CONTIGUOUS token run rank,
+    *    scored by BM25 over the phrase's distinct terms;
+    *  - Sloppy(slop) × Bm25 — "\"spark fast\" with slop 3": the phrase
+    *    tokens IN ORDER within `slop` extra positions (∃ p₀ < … < pₙ₋₁
+    *    matching the slots, pₙ₋₁ − p₀ ≤ (n−1)+slop; slop 0 = the exact
+    *    phrase);
+    *  - Window(w) × Bm25 — "spark, join within 5 tokens": PROXIMITY,
+    *    every term inside some w-token run, any order;
+    *  - Terms × Bm25F — "spark, join weighting title 2, text 1":
+    *    weighted-aggregate scoring over named fields;
+    *  - Terms × Bm25FFull — "spark, join weighting title 2, text 1
+    *    normalizing title 0.3, text 0.75": FULL Robertson–Zaragoza
+    *    BM25F, per-field length normalization INSIDE each field before
+    *    the shared saturation;
+    *  - Phrase(field) × Bm25F — "\"the fast\" in title weighting title
+    *    2, text 1": the run must sit in the NAMED field's OWN token
+    *    stream; the eligible docs rank by BM25F at the spoken weights;
+    *  - Sloppy(slop, field) × Bm25F — "\"spark fast\" in text with slop
+    *    3 weighting title 2, text 1": ordered within slop inside one
+    *    field's stream.
+    * Each form takes the trailing "where …". */
+  final case class LexTopK(tokens: Seq[String], k: Int,
+                           q: LexQuery = LexQuery(),
+                           where: Option[Pred] = None)             extends CorpusOp
   /** MMR-diversified retrieval: BM25 depth-candidates over the input
     * documents, greedily re-selected for λ·relevance −
     * (1−λ)·redundancy (embedding cosine to the already-picked set,
@@ -579,88 +574,63 @@ object Op {
     * flip), then read the post-delete table back. */
   final case class DeleteByKey(keyCol: String, keys: Seq[Long])    extends TableOp
   /** ANN probe against a bound PERSISTED vector index
-    * ([[graft.operators.IvfIndex]]): the spoken query id's stored
-    * vector probes its `nprobe` nearest cells; `adc = true` scores
-    * through the index's PQ code words
-    * ([[graft.operators.IvfIndex.searchAdc]] — reads m bytes per
-    * candidate, never the floats) instead of the exact cosine;
-    * `sq8 = true` scores through the index's per-vector int8 code
-    * words ([[graft.operators.IvfIndex.searchSq8]] — 1 byte/dim,
-    * integer-exact quantized cosine). `where` filters CANDIDATES by
-    * stored attribute columns INSIDE the pruned scan (pre-filtering —
-    * the result is exactly k MATCHING neighbors; post-filtering a
-    * top-k under-returns k, the classic wrong answer). */
+    * ([[graft.operators.IvfIndex.search]]): the spoken query id's stored
+    * vector probes its `nprobe` nearest cells, candidates scored by
+    * `scoring` — exact cosine; [[IvfScoring.Adc]]
+    * ("Search the index with quantized codes …") through the index's PQ
+    * code words (reads m bytes per candidate, never the floats); or
+    * [[IvfScoring.Sq8]] ("… with int8 codes …") through
+    * its per-vector int8 code words (1 byte/dim, integer-exact
+    * quantized cosine). `where` filters CANDIDATES by stored attribute
+    * columns INSIDE the pruned scan (pre-filtering — the result is
+    * exactly k MATCHING neighbors; post-filtering a top-k under-returns
+    * k, the classic wrong answer). */
   final case class IndexSearch(queryId: Long, k: Int, nprobe: Int,
-                               adc: Boolean = false,
-                               sq8: Boolean = false,
+                               scoring: IvfScoring = IvfScoring.Exact,
                                where: Option[Pred] = None)         extends TableOp
   /** ANN probe with an UNSEEN literal query vector — the actual serving
     * shape (a fresh embedding probes the index; the stored-id form is a
     * benchmark convenience). The literal becomes a one-row broadcast
     * frame with query_id -1; same probe kernels as [[IndexSearch]]. */
   final case class IndexSearchVec(vec: Seq[Float], k: Int, nprobe: Int,
-                                  adc: Boolean = false,
-                                  sq8: Boolean = false,
+                                  scoring: IvfScoring = IvfScoring.Exact,
                                   where: Option[Pred] = None)      extends TableOp
-  /** BM25 probe of the bound persisted INVERTED index
-    * ([[graft.operators.LexIndex.search]] — reads only the query
-    * terms' bucket partitions; score-identical to the flat
-    * [[Bm25TopK]] scan over the indexed corpus). `where` filters
+  /** Lexical probe of the bound persisted INVERTED index
+    * ([[graft.operators.LexIndex.search]]) for one spoken
+    * [[LexQuery]]: reads only the query terms' bucket
+    * partitions, positional matches run from the stored position lists
+    * on the pruned candidate rows, fielded scorings apply the spoken
+    * weights at probe time — zero corpus scans, score-identical to the
+    * flat [[LexTopK]] scan over the indexed corpus. `where` filters
     * candidate documents over the index's stored attribute columns,
     * pushed INTO the pruned bucket scan (pre-filter — exactly k
-    * matching documents). */
-  final case class LexSearch(terms: Seq[String], k: Int,
-                             where: Option[Pred] = None)           extends TableOp
-  /** Quoted-PHRASE probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.search]], `Phrase` — adjacency from the
-    * stored position lists on the pruned candidate rows; zero corpus
-    * scans; score-identical to the flat [[Bm25Phrase]] scan over the
-    * indexed corpus). */
-  final case class LexPhraseSearch(phrase: Seq[String], k: Int,
-                                   where: Option[Pred] = None)     extends TableOp
-  /** SLOPPY-phrase probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.search]], `Sloppy` — ordered chains
-    * within the slop window from stored position lists on the pruned
-    * candidate rows; zero corpus scans; score-identical to the flat
-    * [[Bm25Sloppy]] scan over the indexed corpus). */
-  final case class LexSloppySearch(phrase: Seq[String], k: Int, slop: Int,
-                                   where: Option[Pred] = None)     extends TableOp
-  /** BM25F probe of the bound FIELDED inverted index
-    * ([[graft.operators.LexIndex.search]], `Bm25F` — weighted-aggregate
-    * scoring from per-field postings and the manifest's exact
-    * per-field sums; weights are probe-time). */
-  final case class LexFieldedSearch(terms: Seq[String], k: Int,
-                                    weights: Seq[(String, Double)],
-                                    where: Option[Pred] = None)    extends TableOp
-  /** FULL Robertson–Zaragoza BM25F probe of the bound FIELDED index
-    * ([[graft.operators.LexIndex.search]], `Bm25FFull` — per-field b
-    * over the same stored integers [[LexFieldedSearch]] probes; every
-    * parameter probe-time). */
-  final case class LexFieldedFullSearch(terms: Seq[String], k: Int,
-                                        params: Seq[(String, Double, Double)],
-                                        where: Option[Pred] = None) extends TableOp
-  /** Quoted-phrase probe of the bound FIELDED POSITIONAL index
-    * ([[graft.operators.LexIndex.search]], `Phrase(field)` × `Bm25F` — "the phrase
-    * in the TITLE", served: adjacency from the target field's stored
-    * within-field position lists, BM25F scoring at the spoken
-    * weights; zero corpus scans). */
-  final case class LexFieldedPhraseSearch(phrase: Seq[String], k: Int,
-                                          field: String,
-                                          weights: Seq[(String, Double)],
-                                          where: Option[Pred] = None) extends TableOp
-  /** SLOPPY-phrase probe of the bound FIELDED POSITIONAL index
-    * ([[graft.operators.LexIndex.search]], `Sloppy(slop, field)` × `Bm25F`). */
-  final case class LexFieldedSloppySearch(phrase: Seq[String], k: Int,
-                                          field: String, slop: Int,
-                                          weights: Seq[(String, Double)],
-                                          where: Option[Pred] = None) extends TableOp
-  /** PROXIMITY probe of the bound POSITIONAL inverted index
-    * ([[graft.operators.LexIndex.search]], `Window` — window
-    * containment from stored position lists on the pruned candidate
-    * rows; zero corpus scans). */
-  final case class LexProximitySearch(terms: Seq[String], k: Int,
-                                      window: Int,
-                                      where: Option[Pred] = None)  extends TableOp
+    * matching documents).
+    *
+    * Spoken forms ("Search the lexical index for top 5 matching …") by
+    * (match × scoring), with the index each needs:
+    *  - Terms × Bm25 — "spark, join, fast": any index;
+    *  - Phrase × Bm25 — "\"spark join\"": a POSITIONAL index
+    *    (adjacency from the stored position lists);
+    *  - Sloppy(slop) × Bm25 — "\"spark fast\" with slop 3": a
+    *    positional index (ordered chains within the slop window);
+    *  - Window(w) × Bm25 — "spark, join within 5 tokens": a positional
+    *    index (window containment);
+    *  - Terms × Bm25F — "spark weighting title 2, text 1": a FIELDED
+    *    index (per-field postings and the manifest's exact per-field
+    *    sums; weights are probe-time);
+    *  - Terms × Bm25FFull — "… weighting title 2, text 1 normalizing
+    *    title 0.3, text 0.75": the same fielded index, per-field b
+    *    over the same stored integers, every parameter probe-time;
+    *  - Phrase(field) × Bm25F — "\"the fast\" in title weighting title
+    *    2, text 1": a FIELDED POSITIONAL index ("the phrase in the
+    *    TITLE": adjacency from the target field's stored within-field
+    *    position lists, BM25F at the spoken weights);
+    *  - Sloppy(slop, field) × Bm25F — "\"the fast\" in title with slop
+    *    3 weighting title 2, text 1": a fielded positional index.
+    * Each form takes the trailing "where …" (an attribute-built index). */
+  final case class LexProbe(tokens: Seq[String], k: Int,
+                            q: LexQuery = LexQuery(),
+                            where: Option[Pred] = None)            extends TableOp
   /** LITERAL-query hybrid serving over TWO bound indexes — the
     * production RAG sentence: a FRESH embedding plus keywords, lexical
     * arm from the bound inverted index (bucket-pruned), vector arm from

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.Similarity
+import graft.operators.{IvfScoring, Similarity}
 import graft.sources.Sources.table
 
 /** Similarity-search queries over the `embeddings` table (X2).
@@ -259,8 +259,8 @@ object VectorQueries extends QueryPack {
     // x20's probed cells; scores are x83's quantized inner products.
     "x84_ivfpq_index_search" -> ((s: SparkSession, d: String) => {
       val emb = table(s, d, "embeddings")
-      graft.operators.IvfIndex.searchAdc(s, ivfPqIndexTable(s, d),
-          emb.filter(col("vec_id") < NQueries), K, IvfNProbe)
+      graft.operators.IvfIndex.search(s, ivfPqIndexTable(s, d),
+          emb.filter(col("vec_id") < NQueries), K, IvfNProbe, IvfScoring.Adc)
         .withColumn("score", round(col("score"), 6))
     }),
 
@@ -282,8 +282,8 @@ object VectorQueries extends QueryPack {
     // cosine, so the replay composes the two chains directly.
     "x90_ivfsq8_index_search" -> ((s: SparkSession, d: String) => {
       val emb = table(s, d, "embeddings")
-      graft.operators.IvfIndex.searchSq8(s, ivfSq8IndexTable(s, d),
-          emb.filter(col("vec_id") < NQueries), K, IvfNProbe)
+      graft.operators.IvfIndex.search(s, ivfSq8IndexTable(s, d),
+          emb.filter(col("vec_id") < NQueries), K, IvfNProbe, IvfScoring.Sq8)
         .withColumn("score", round(col("score"), 6))
     }),
 
@@ -307,16 +307,16 @@ object VectorQueries extends QueryPack {
     // attribute, still never the float vectors.
     "x94_ivfpq_search_filtered" -> ((s: SparkSession, d: String) => {
       val emb = table(s, d, "embeddings")
-      graft.operators.IvfIndex.searchAdc(s, ivfLayeredIndexTable(s, d),
-          emb.filter(col("vec_id") < NQueries), K, IvfNProbe,
+      graft.operators.IvfIndex.search(s, ivfLayeredIndexTable(s, d),
+          emb.filter(col("vec_id") < NQueries), K, IvfNProbe, IvfScoring.Adc,
           pred = Some(col("label") === FilterLabel))
         .withColumn("score", round(col("score"), 6))
     }),
 
     "x95_ivfsq8_search_filtered" -> ((s: SparkSession, d: String) => {
       val emb = table(s, d, "embeddings")
-      graft.operators.IvfIndex.searchSq8(s, ivfLayeredIndexTable(s, d),
-          emb.filter(col("vec_id") < NQueries), K, IvfNProbe,
+      graft.operators.IvfIndex.search(s, ivfLayeredIndexTable(s, d),
+          emb.filter(col("vec_id") < NQueries), K, IvfNProbe, IvfScoring.Sq8,
           pred = Some(col("label") === FilterLabel))
         .withColumn("score", round(col("score"), 6))
     }),

@@ -144,7 +144,7 @@ class IvfIndexSpec extends SparkSpec {
 
     // nprobe = every cell → candidates are ALL non-self vectors, so the
     // index must reproduce the flat sq8-cosine ranking exactly
-    val got = ranked(IvfIndex.searchSq8(spark, p, queries, K, nprobe = Cells))
+    val got = ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Sq8))
     val q = queries.select(col("vec_id").as("query_id"),
       sq8EncodeBytes(col("embedding")).as("qc"))
     val c = embs.select(col("vec_id").as("neighbor_id"),
@@ -158,8 +158,8 @@ class IvfIndexSpec extends SparkSpec {
 
     // a narrow probe prunes partitions AND columns: the pruned scan
     // reads 1 byte/dim code words, never the float vectors
-    val res = IvfIndex.searchSq8(spark, p,
-      embs.filter(col("vec_id") === 3), K, NProbe)
+    val res = IvfIndex.search(spark, p,
+      embs.filter(col("vec_id") === 3), K, NProbe, IvfScoring.Sq8)
     res.collect()
     val indexScans = graft.SparkSpec.executedFileScans(res)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("/seg-")))
@@ -176,7 +176,7 @@ class IvfIndexSpec extends SparkSpec {
     val bare = freshPath()
     IvfIndex.build(embs, bare, Cells)
     intercept[RuntimeException] {
-      IvfIndex.searchSq8(spark, bare, queries, K, NProbe)
+      IvfIndex.search(spark, bare, queries, K, NProbe, IvfScoring.Sq8)
     }
   }
 
@@ -187,11 +187,11 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(half1, p, Cells, sq8 = true)
     IvfIndex.append(half2, p) // sq8 flag rides the manifest
     val queries = embs.filter(col("vec_id") < 4)
-    val afterAppend = ranked(IvfIndex.searchSq8(spark, p, queries, K, Cells))
+    val afterAppend = ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Sq8))
     // rebuild over the union: the quantizer changes, the SQ8 layer is
     // per-vector so the probe-everything result is IDENTICAL
     IvfIndex.build(embs, p, Cells, sq8 = true)
-    assert(ranked(IvfIndex.searchSq8(spark, p, queries, K, Cells)) ==
+    assert(ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Sq8)) ==
       afterAppend)
   }
 
@@ -305,9 +305,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(embs, pPq, Cells, pq = Some(Pq.PqParams(8, 64)),
       sq8 = true, attrs = Seq("label"))
     for ((probe, codeCol) <- Seq(
-           (IvfIndex.searchAdc(spark, pPq, queries, K, NProbe, pred = Some(pred)),
+           (IvfIndex.search(spark, pPq, queries, K, NProbe, IvfScoring.Adc, Some(pred)),
             "codes"),
-           (IvfIndex.searchSq8(spark, pPq, queries, K, NProbe, pred = Some(pred)),
+           (IvfIndex.search(spark, pPq, queries, K, NProbe, IvfScoring.Sq8, Some(pred)),
             "codes8"))) {
       val rs = probe.collect()
       assert(rs.nonEmpty &&
@@ -450,8 +450,8 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.deleteByKey(spark, p, keys)
     // both compressed probes still serve, never returning erased ids
     for (probe <- Seq(
-           IvfIndex.searchAdc(spark, p, queries, K, Cells),
-           IvfIndex.searchSq8(spark, p, queries, K, Cells))) {
+           IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Adc),
+           IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Sq8))) {
       val ids = probe.select("neighbor_id").collect().map(_.getLong(0)).toSet
       assert(ids.nonEmpty && keys.forall(!ids.contains(_)))
     }

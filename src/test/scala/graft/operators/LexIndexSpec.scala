@@ -379,7 +379,7 @@ class LexIndexSpec extends SparkSpec {
     val m = IvfIndex.readManifestFull(spark, ivfP)
     val vec = IvfIndex.searchWith(spark, ivfP, m,
         qs.select(col("query_id").as("vec_id"), col("embedding")), 5, 2,
-        "vec_id", "embedding", None, excludeSelf = false)
+        IvfScoring.Exact, None, excludeSelf = false)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     assert(vec.collect().map(_.getLong(1)).contains(0L),
       "the literal arm self-excluded a legitimate hit")

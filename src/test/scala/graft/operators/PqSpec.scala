@@ -124,7 +124,7 @@ class PqSpec extends SparkSpec {
     IvfIndex.build(embs, p, Cells, pq = Some(Pq.PqParams(M, Ksub)))
     val cb = IvfIndex.readPq(spark, p).get
     val queries = embs.filter(col("vec_id") < 8)
-    val got = ranked(IvfIndex.searchAdc(spark, p, queries, K, nprobe = Cells))
+    val got = ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Adc))
     val want = ranked(Pq.adcTopK(queries, embs, cb, K))
     assert(got == want && got.nonEmpty)
   }
@@ -133,7 +133,7 @@ class PqSpec extends SparkSpec {
     val p = freshPath()
     IvfIndex.build(embs, p, Cells, pq = Some(Pq.PqParams(M, Ksub)))
     val oneQuery = embs.filter(col("vec_id") === 3)
-    val res = IvfIndex.searchAdc(spark, p, oneQuery, K, NProbe)
+    val res = IvfIndex.search(spark, p, oneQuery, K, NProbe, IvfScoring.Adc)
     res.collect()
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -176,11 +176,11 @@ class PqSpec extends SparkSpec {
     val queries = embs.filter(col("vec_id") < 8)
     // exhaustive probe over the two-segment index == flat ADC with the
     // half1-trained codebooks over the whole corpus
-    val got = ranked(IvfIndex.searchAdc(spark, p, queries, K, nprobe = Cells))
+    val got = ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Adc))
     assert(got == ranked(Pq.adcTopK(queries, embs, cb, K)))
     // compaction folds segments without touching codes
     IvfIndex.compact(spark, p)
-    assert(ranked(IvfIndex.searchAdc(spark, p, queries, K, nprobe = Cells)) == got)
+    assert(ranked(IvfIndex.search(spark, p, queries, K, Cells, IvfScoring.Adc)) == got)
   }
 
   test("streamed ingest into a PQ index serves ADC bit-identically") {
@@ -208,8 +208,8 @@ class PqSpec extends SparkSpec {
       input.addData(rows.drop(rows.length / 2).toSeq: _*)
       q.processAllAvailable()
       val queries = embs.filter(col("vec_id") < 4)
-      val got = ranked(IvfIndex.searchAdc(spark, sp, queries, K, NProbe))
-      assert(got == ranked(IvfIndex.searchAdc(spark, p, queries, K, NProbe)))
+      val got = ranked(IvfIndex.search(spark, sp, queries, K, NProbe, IvfScoring.Adc))
+      assert(got == ranked(IvfIndex.search(spark, p, queries, K, NProbe, IvfScoring.Adc)))
       assert(got.nonEmpty)
     } finally q.stop()
   }
@@ -219,7 +219,7 @@ class PqSpec extends SparkSpec {
     IvfIndex.build(embs, p, Cells)
     val queries = embs.filter(col("vec_id") < 2)
     val e = intercept[RuntimeException] {
-      IvfIndex.searchAdc(spark, p, queries, K, NProbe)
+      IvfIndex.search(spark, p, queries, K, NProbe, IvfScoring.Adc)
     }
     assert(e.getMessage.contains("no PQ layer"))
   }

@@ -2,11 +2,44 @@ package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.{IvfScoring, LexQuery}
 import graft.plans.{Op => O, Pred => P}
 
 /** Parser unit tests: every description shape from the reference's corpus
   * (agentic_workflow_transformation.py:339-362) maps to the expected IR. */
 class NLParserSpec extends AnyFunSuite {
+
+  private val FlatRoute = "Find top 5 documents matching"
+  private val ProbeRoute = "Search the lexical index for top 5 matching"
+  private val Weights = Seq("title" -> 2.0, "text" -> 1.0)
+
+  /** Every spoken lexical form — one per (match × scoring) pair — on
+    * both routes: (route, form, tokens, query). */
+  private val lexicalForms: Seq[(String, String, Seq[String], LexQuery)] = {
+    import LexQuery._
+    val forms = Seq(
+      ("spark, join, fast", Seq("spark", "join", "fast"), LexQuery()),
+      ("\"spark join\"", Seq("spark", "join"), LexQuery(Phrase())),
+      ("'spark join'", Seq("spark", "join"), LexQuery(Phrase())),
+      ("\"spark fast\" with slop 3", Seq("spark", "fast"), LexQuery(Sloppy(3))),
+      ("spark, join within 5 tokens", Seq("spark", "join"), LexQuery(Window(5))),
+      ("spark, join weighting title 2, text 1", Seq("spark", "join"),
+        LexQuery(scoring = Bm25F(Weights))),
+      ("spark, join weighting title 2, text 1 normalizing title 0.3, " +
+        "text 0.75", Seq("spark", "join"),
+        LexQuery(scoring = Bm25FFull(Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75))))),
+      ("\"the fast\" in title weighting title 2, text 1", Seq("the", "fast"),
+        LexQuery(Phrase(Some("title")), Bm25F(Weights))),
+      ("\"spark fast\" in text with slop 3 weighting title 2, text 1",
+        Seq("spark", "fast"), LexQuery(Sloppy(3, Some("text")), Bm25F(Weights))))
+    for (route <- Seq(FlatRoute, ProbeRoute); (form, tokens, q) <- forms)
+      yield (route, form, tokens, q)
+  }
+
+  private def lexicalOp(route: String, tokens: Seq[String], q: LexQuery,
+                        where: Option[Pred]): Op =
+    if (route == FlatRoute) O.LexTopK(tokens, 5, q, where)
+    else O.LexProbe(tokens, 5, q, where)
 
   test("default description: filter + select") {
     val plan = NLParser.parse("Filter rows where age > 30 and select columns name and age.")
@@ -164,24 +197,10 @@ class NLParserSpec extends AnyFunSuite {
   }
 
   test("search the persisted index") {
-    assert(NLParser.parse(
-      "Search the index for top 5 similar to 3 probing 4 cells.").ops ==
-      List(O.IndexSearch(3L, 5, 4)))
+    // one sentence per scoring is a row of the sentence-form table test
     assert(NLParser.parse(
       "Search the index for top 5 nearest to 3 probing 4.").ops ==
       List(O.IndexSearch(3L, 5, 4)))
-    assert(NLParser.parse(
-      "Search the index with quantized codes for top 5 similar to 3 " +
-      "probing 4 cells.").ops ==
-      List(O.IndexSearch(3L, 5, 4, adc = true)))
-    assert(NLParser.parse(
-      "Search the index with int8 codes for top 5 similar to 3 " +
-      "probing 4 cells.").ops ==
-      List(O.IndexSearch(3L, 5, 4, sq8 = true)))
-    assert(NLParser.parse(
-      "Search the index with int8 codes for top 3 similar to " +
-      "vector [1, 0, -1] probing 2 cells.").ops ==
-      List(O.IndexSearchVec(Seq(1f, 0f, -1f), 3, 2, sq8 = true)))
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Search the index for top 0 similar to 3 probing 4 cells."))
     assertThrows[NLParser.ParseException](NLParser.parse(
@@ -197,7 +216,7 @@ class NLParserSpec extends AnyFunSuite {
     assert(NLParser.parse(
       "Search the index with int8 codes for top 5 similar to vector " +
       "[1, 0, -1] probing 2 cells where lang == \"en\".").ops ==
-      List(O.IndexSearchVec(Seq(1f, 0f, -1f), 5, 2, sq8 = true,
+      List(O.IndexSearchVec(Seq(1f, 0f, -1f), 5, 2, IvfScoring.Sq8,
         where = Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
     // compound predicates ride the same grammar as filters
     assert(NLParser.parse(
@@ -231,14 +250,11 @@ class NLParserSpec extends AnyFunSuite {
   }
 
   test("search the index with a literal query vector") {
+    // one sentence per scoring is a row of the sentence-form table test
     assert(NLParser.parse(
       "Search the index for top 5 similar to vector [0.1, -0.2, 0.25] " +
       "probing 4 cells.").ops ==
       List(O.IndexSearchVec(Seq(0.1f, -0.2f, 0.25f), 5, 4)))
-    assert(NLParser.parse(
-      "Search the index with quantized codes for top 3 similar to " +
-      "vector [1, 0, -1] probing 2 cells.").ops ==
-      List(O.IndexSearchVec(Seq(1f, 0f, -1f), 3, 2, adc = true)))
     // unterminated / empty brackets fail loudly
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Search the index for top 5 similar to vector [0.1, 0.2 probing 4 cells."))
@@ -273,11 +289,11 @@ class NLParserSpec extends AnyFunSuite {
     assert(NLParser.parse(
       "Find top 5 most similar vectors to vector [1, 0] using quantized " +
       "codes.").ops ==
-      List(O.SimilarTopKVec(Seq(1f, 0f), 5, pq = true)))
+      List(O.SimilarTopKVec(Seq(1f, 0f), 5, SimilarScoring.Pq())))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to vector [1, 0] using quantized " +
       "codes with rerank 50.").ops ==
-      List(O.SimilarTopKVec(Seq(1f, 0f), 5, pq = true, rerank = Some(50))))
+      List(O.SimilarTopKVec(Seq(1f, 0f), 5, SimilarScoring.Pq(Some(50)))))
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Find top 5 most similar vectors to vector [1, 0] using quantized " +
       "codes with rerank 2."))
@@ -286,15 +302,15 @@ class NLParserSpec extends AnyFunSuite {
   test("find top-k similar through a random projection") {
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using random projection.").ops ==
-      List(O.SimilarTopK(3L, 5, proj = true)))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Proj())))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using a random projection " +
       "with rerank 50.").ops ==
-      List(O.SimilarTopK(3L, 5, proj = true, rerank = Some(50))))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Proj(Some(50)))))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to vector [1, 0] using random " +
       "projection with rerank 50.").ops ==
-      List(O.SimilarTopKVec(Seq(1f, 0f), 5, proj = true, rerank = Some(50))))
+      List(O.SimilarTopKVec(Seq(1f, 0f), 5, SimilarScoring.Proj(Some(50)))))
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Find top 5 most similar vectors to 3 using random projection " +
       "with rerank 2."))
@@ -312,15 +328,15 @@ class NLParserSpec extends AnyFunSuite {
   test("find top-k similar through int8 codes") {
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using int8 codes.").ops ==
-      List(O.SimilarTopK(3L, 5, sq8 = true)))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Sq8())))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using int8 quantization " +
       "with rerank 50.").ops ==
-      List(O.SimilarTopK(3L, 5, sq8 = true, rerank = Some(50))))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Sq8(Some(50)))))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to vector [1, 0] using int8 " +
       "codes with rerank 50.").ops ==
-      List(O.SimilarTopKVec(Seq(1f, 0f), 5, sq8 = true, rerank = Some(50))))
+      List(O.SimilarTopKVec(Seq(1f, 0f), 5, SimilarScoring.Sq8(Some(50)))))
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Find top 5 most similar vectors to 3 using int8 codes " +
       "with rerank 2."))
@@ -329,14 +345,14 @@ class NLParserSpec extends AnyFunSuite {
   test("find top-k similar through quantized codes") {
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using quantized codes.").ops ==
-      List(O.SimilarTopK(3L, 5, pq = true)))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Pq())))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using product quantized codes.").ops ==
-      List(O.SimilarTopK(3L, 5, pq = true)))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Pq())))
     assert(NLParser.parse(
       "Find top 5 most similar vectors to 3 using quantized codes " +
       "with rerank 50.").ops ==
-      List(O.SimilarTopK(3L, 5, pq = true, rerank = Some(50))))
+      List(O.SimilarTopK(3L, 5, SimilarScoring.Pq(Some(50)))))
     // rerank below k is a contradiction, said loudly
     assertThrows[NLParser.ParseException](NLParser.parse(
       "Find top 5 most similar vectors to 3 using quantized codes " +
@@ -979,9 +995,9 @@ class NLParserSpec extends AnyFunSuite {
   test("bm25 retrieval: comma and 'and' term separators") {
     assert(NLParser.parse(
       "Find top 5 documents matching spark, join and fast.").ops ==
-      List(O.Bm25TopK(Seq("spark", "join", "fast"), 5)))
+      List(O.LexTopK(Seq("spark", "join", "fast"), 5)))
     assert(NLParser.parse("Find top 3 docs matching table.").ops ==
-      List(O.Bm25TopK(Seq("table"), 3)))
+      List(O.LexTopK(Seq("table"), 3)))
   }
 
   test("hybrid retrieval: fused with vector, optional depth") {
@@ -1009,7 +1025,7 @@ class NLParserSpec extends AnyFunSuite {
   test("lexical index probe; plain index search unaffected") {
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark, join, fast.").ops ==
-      List(O.LexSearch(Seq("spark", "join", "fast"), 5)))
+      List(O.LexProbe(Seq("spark", "join", "fast"), 5)))
     assert(NLParser.parse(
       "Search the index for top 5 similar to 3 probing 4 cells.").ops ==
       List(O.IndexSearch(3L, 5, 4)))
@@ -1017,17 +1033,7 @@ class NLParserSpec extends AnyFunSuite {
 
   test("sloppy-phrase routes: quoted phrase + 'with slop N' on the flat " +
        "scan and the index probe; bare quoted phrase stays exact") {
-    assert(NLParser.parse(
-      "Find top 5 documents matching \"spark fast\" with slop 3.").ops ==
-      List(O.Bm25Sloppy(Seq("spark", "fast"), 5, 3)))
-    assert(NLParser.parse(
-      "Find top 5 documents matching \"spark join\".").ops ==
-      List(O.Bm25Phrase(Seq("spark", "join"), 5)))
-    assert(NLParser.parse(
-      "Search the lexical index for top 5 matching \"spark fast\" " +
-      "with slop 2 where lang == 'en'.").ops ==
-      List(O.LexSloppySearch(Seq("spark", "fast"), 5, 2,
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
+    // the phrase and sloppy forms are rows of the sentence-form table
     assert(intercept[NLParser.ParseException] {
       NLParser.parse(
         "Find top 5 documents matching \"spark fast\" with slop -1.")
@@ -1061,17 +1067,13 @@ class NLParserSpec extends AnyFunSuite {
 
   test("bm25f weighting routes: field/weight list on the flat scan and " +
        "the fielded-index probe") {
-    assert(NLParser.parse(
-      "Find top 5 documents matching spark, join weighting title 2, " +
-      "text 1.").ops ==
-      List(O.Bm25F(Seq("spark", "join"), 5,
-        Seq("title" -> 2.0, "text" -> 1.0))))
+    // both routes' weighting forms are rows of the sentence-form table;
+    // "and" separates weights as commas do
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark weighting " +
-      "title 2.5 and text 0.5 where lang == 'en'.").ops ==
-      List(O.LexFieldedSearch(Seq("spark"), 5,
-        Seq("title" -> 2.5, "text" -> 0.5),
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
+      "title 2.5 and text 0.5.").ops ==
+      List(O.LexProbe(Seq("spark"), 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("title" -> 2.5, "text" -> 0.5))))))
     assert(intercept[NLParser.ParseException] {
       NLParser.parse(
         "Find top 5 documents matching spark weighting title 0.")
@@ -1080,17 +1082,13 @@ class NLParserSpec extends AnyFunSuite {
 
   test("full-BM25F routes: 'normalizing' per-field b list on the flat " +
        "scan and the fielded probe; field names must repeat in order") {
-    assert(NLParser.parse(
-      "Find top 5 documents matching spark, join weighting title 2, " +
-      "text 1 normalizing title 0.3, text 0.75.").ops ==
-      List(O.Bm25FFull(Seq("spark", "join"), 5,
-        Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)))))
+    // both routes' normalizing forms are rows of the sentence-form
+    // table; the b bounds are inclusive
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark weighting " +
-      "title 2, text 1 normalizing title 0, text 1 where lang == 'en'.").ops ==
-      List(O.LexFieldedFullSearch(Seq("spark"), 5,
-        Seq(("title", 2.0, 0.0), ("text", 1.0, 1.0)),
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
+      "title 2, text 1 normalizing title 0, text 1.").ops ==
+      List(O.LexProbe(Seq("spark"), 5, LexQuery(scoring =
+        LexQuery.Bm25FFull(Seq(("title", 2.0, 0.0), ("text", 1.0, 1.0)))))))
     assert(intercept[NLParser.ParseException] {
       NLParser.parse(
         "Find top 5 documents matching spark weighting title 2, text 1 " +
@@ -1105,27 +1103,13 @@ class NLParserSpec extends AnyFunSuite {
 
   test("fielded-phrase routes: 'in <field>' scopes the quoted run to one " +
        "field's stream, slop composes, weighting required") {
+    // the fielded phrase and sloppy forms are rows of the sentence-form
+    // table; "the" before the field name is noise
     assert(NLParser.parse(
-      "Find top 5 documents matching \"the fast\" in title weighting " +
-      "title 2, text 1.").ops ==
-      List(O.Bm25FPhrase(Seq("the", "fast"), 5, "title",
-        Seq("title" -> 2.0, "text" -> 1.0))))
-    assert(NLParser.parse(
-      "Find top 5 documents matching \"spark fast\" in text with slop 3 " +
-      "weighting title 2, text 1 where lang == 'en'.").ops ==
-      List(O.Bm25FSloppy(Seq("spark", "fast"), 5, "text", 3,
-        Seq("title" -> 2.0, "text" -> 1.0),
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
-    assert(NLParser.parse(
-      "Search the lexical index for top 5 matching \"the fast\" in " +
-      "title weighting title 2, text 1.").ops ==
-      List(O.LexFieldedPhraseSearch(Seq("the", "fast"), 5, "title",
-        Seq("title" -> 2.0, "text" -> 1.0))))
-    assert(NLParser.parse(
-      "Search the lexical index for top 5 matching \"spark fast\" in " +
-      "text with slop 3 weighting title 2, text 1.").ops ==
-      List(O.LexFieldedSloppySearch(Seq("spark", "fast"), 5, "text", 3,
-        Seq("title" -> 2.0, "text" -> 1.0))))
+      "Find top 5 documents matching \"the fast\" in the title " +
+      "weighting title 2, text 1.").ops ==
+      List(O.LexTopK(Seq("the", "fast"), 5, LexQuery(
+        LexQuery.Phrase(Some("title")), LexQuery.Bm25F(Weights)))))
     // 'in <field>' without a weighting list is out of grammar
     assert(intercept[NLParser.ParseException] {
       NLParser.parse(
@@ -1158,15 +1142,50 @@ class NLParserSpec extends AnyFunSuite {
 
   test("filtered lexical retrieval: 'where' tails on the flat scan and " +
        "the index probe") {
+    // every form of the sentence-form table, on both routes, takes the
+    // candidate filter as its tail
+    val en = Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))
+    for ((route, form, tokens, q) <- lexicalForms) {
+      val ops = NLParser.parse(s"$route $form where lang == 'en'.").ops
+      assert(ops == List(lexicalOp(route, tokens, q, Some(en))), s"$route $form")
+    }
+    // a compound predicate rides the same grammar as filters
     assert(NLParser.parse(
-      "Find top 5 documents matching spark, join where lang == 'en'.").ops ==
-      List(O.Bm25TopK(Seq("spark", "join"), 5,
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
-    assert(NLParser.parse(
-      "Search the lexical index for top 5 matching spark, join, fast " +
-      "where lang == 'en'.").ops ==
-      List(O.LexSearch(Seq("spark", "join", "fast"), 5,
-        Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
+      "Find top 5 documents matching spark, join where lang == 'en' or " +
+      "lang == 'de'.").ops ==
+      List(O.LexTopK(Seq("spark", "join"), 5, where = Some(Pred.Or(en,
+        Pred.Cmp(Pred.Eq, "lang", Lit.Str("de")))))))
+  }
+
+  test("every lexical sentence form parses to its (tokens, LexQuery, " +
+       "where) on both routes, and every IVF scoring to its probe") {
+    for ((route, form, tokens, q) <- lexicalForms)
+      assert(NLParser.parse(s"$route $form.").ops ==
+        List(lexicalOp(route, tokens, q, None)), s"$route $form")
+    val ivfForms = Seq(
+      "" -> IvfScoring.Exact,
+      "with quantized codes " -> IvfScoring.Adc,
+      "with product quantized codes " -> IvfScoring.Adc,
+      "with int8 codes " -> IvfScoring.Sq8,
+      "with int8 quantized codes " -> IvfScoring.Sq8)
+    for ((spoken, scoring) <- ivfForms) {
+      assert(NLParser.parse(s"Search the index ${spoken}for top 5 similar " +
+        "to 3 probing 4 cells.").ops == List(O.IndexSearch(3L, 5, 4, scoring)))
+      assert(NLParser.parse(s"Search the index ${spoken}for top 3 similar " +
+        "to vector [1, 0, -1] probing 2 cells.").ops ==
+        List(O.IndexSearchVec(Seq(1f, 0f, -1f), 3, 2, scoring)))
+    }
+  }
+
+  test("an unsupported lexical pair fails at parse time on both routes, " +
+       "with the query's own message") {
+    for (route <- Seq(FlatRoute, ProbeRoute)) {
+      val e = intercept[NLParser.ParseException] {
+        NLParser.parse(s"$route \"the fast\" in body weighting title 2, text 1.")
+      }
+      assert(e.msg.contains("phrase field 'body' is not one of the scored fields"),
+        e.msg)
+    }
   }
 
   test("lexical index maintenance verbs; vector-index verbs unaffected") {

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
-import graft.operators.{IvfIndex, Pq}
+import graft.operators.{IvfIndex, IvfScoring, Pq}
 
 /** Streaming query serving ≡ batch probes.
   *
   * A MemoryStream of query vectors probes the persisted index in
   * micro-batches through [[Serving.serve]]; the accumulated
-  * output must equal ONE batch [[IvfIndex.search]]/`searchAdc` over
+  * output must equal ONE batch [[IvfIndex.search]] (exact or ADC) over
   * the union of all queries (per-query results are independent, so
   * batching boundaries must not show). Restart-replay of a batch must
   * leave the output unchanged (per-batch-directory overwrite
@@ -81,7 +81,7 @@ class VectorStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Array[Float])]
     val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
       s"$dir/ckpt") { b =>
-      IvfIndex.searchAdc(b.sparkSession, index, b, K, NProbe)
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe, IvfScoring.Adc)
     }
     try {
       stream.addData(queryRows.take(2))
@@ -91,8 +91,8 @@ class VectorStreamsSpec extends SparkSpec {
     } finally stopQuietly(q)
 
     val once = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
-    val batch = ranked(IvfIndex.searchAdc(spark,
-      index, embs.filter(col("vec_id") < 4), K, NProbe))
+    val batch = ranked(IvfIndex.search(spark,
+      index, embs.filter(col("vec_id") < 4), K, NProbe, IvfScoring.Adc))
     assert(once == batch)
 
     // simulate a restart re-delivering the LAST batch: a fresh stream
@@ -101,7 +101,7 @@ class VectorStreamsSpec extends SparkSpec {
     val stream2 = MemoryStream[(Long, Array[Float])]
     val q2 = Serving.serve(stream2.toDF().toDF("vec_id", "embedding"), s"$dir/out",
       s"$dir/ckpt2") { b =>
-      IvfIndex.searchAdc(b.sparkSession, index, b, K, NProbe)
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe, IvfScoring.Adc)
     }
     try {
       stream2.addData(queryRows.take(2))
@@ -123,7 +123,7 @@ class VectorStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Array[Float])]
     val q = Serving.serve(stream.toDF().toDF("vec_id", "embedding"), s"$dir/out",
       s"$dir/ckpt") { b =>
-      IvfIndex.searchSq8(b.sparkSession, index, b, K, NProbe)
+      IvfIndex.search(b.sparkSession, index, b, K, NProbe, IvfScoring.Sq8)
     }
     try {
       stream.addData(queryRows.take(2))
@@ -132,8 +132,8 @@ class VectorStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally stopQuietly(q)
     val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.VectorSchema))
-    val batch = ranked(IvfIndex.searchSq8(spark,
-      index, embs.filter(col("vec_id") < 4), K, NProbe))
+    val batch = ranked(IvfIndex.search(spark,
+      index, embs.filter(col("vec_id") < 4), K, NProbe, IvfScoring.Sq8))
     assert(streamed == batch && streamed.nonEmpty)
   }
 
