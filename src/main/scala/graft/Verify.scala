@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,6 +13,33 @@ object Verify {
     if (failed.isEmpty) s"VERIFY_OK n=$nOk"
     else s"VERIFY_FAIL ${failed.sorted.mkString(",")}"
 
+  /** The local session the query drivers run on, sized by
+    * `SPARK_GRAFT_CPUS` (default 4). */
+  private[graft] def session(name: String): SparkSession = {
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), name)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Runs `action` on each selected [[SparkEntry]] query's frame. A query
+    * whose build or action throws is reported on stderr under `tag` and
+    * does not stop the rest. Returns (queries done, names that failed). */
+  private[graft] def eachQuery(spark: SparkSession, sfDir: String, tag: String,
+      selected: String => Boolean)(
+      action: (String, DataFrame) => Unit): (Int, Seq[String]) = {
+    var nOk = 0
+    val failed = Seq.newBuilder[String]
+    SparkEntry.queries.foreach { case (name, fn) =>
+      if (selected(name))
+        try { action(name, fn(spark, sfDir)); nOk += 1 }
+        catch { case e: Throwable =>
+          System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+          failed += name
+        }
+    }
+    (nOk, failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated name prefixes — dev-only filter
     // for fast single-query iteration; the driver always passes two args
@@ -21,22 +49,10 @@ object Verify {
     }
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    var nOk = 0
-    val failed = Seq.newBuilder[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          nOk += 1
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failed += name
-        }
+    val (nOk, failed) = eachQuery(spark, sfDir, "verify", selected) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,7 +73,7 @@ object Verify {
     // summary BEFORE stop(): shutdown-hook output interleaving on
     // stdout could otherwise displace the tail line the driver greps
     // for — it only needs to be short and near the tail
-    println(summaryLine(nOk, failed.result()))
+    println(summaryLine(nOk, failed))
     spark.stop()
   }
 }

@@ -2148,7 +2148,9 @@ object NLParser {
       : Either[List[Op], (Seq[String], LexQuery, Option[Pred])] = {
     def query(build: => LexQuery): LexQuery =
       try build
-      catch { case e: IllegalArgumentException => throw ParseException(e.getMessage) }
+      catch { case e: IllegalArgumentException =>
+        throw ParseException(e.getMessage.stripPrefix("requirement failed: "))
+      }
     def slop(): Option[Int] = p.peekWordLower match {
       case Some("with") =>
         p.next(); p.expectWord("slop")

@@ -18,8 +18,9 @@ import java.nio.file.{Files, Paths}
   * normalized away: expression ids (`#12`), `plan_id=` tags, lambda
   * variable counters (`lambda x_7`), JVM lambda class names, `@<hash>`
   * identities, and the working directory (two checkouts dump from two
-  * roots). The optional third argument is a comma-separated list of
-  * query-name prefixes, as in [[Verify]]. */
+  * roots). A query that fails to build makes the run exit non-zero, so
+  * the `&&` chain above stops instead of comparing two dumps that both
+  * lack its file. */
 object PlanDump {
 
   private val cwd = Paths.get("").toAbsolutePath.toString
@@ -33,30 +34,16 @@ object PlanDump {
       .replaceAll("@[0-9a-f]{4,}\\b", "@H")
 
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-plandump")
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args
+    val spark = Verify.session("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
-    var n = 0
-    val failed = Seq.newBuilder[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (only.forall(_.exists(name.startsWith)))
-        try {
-          val plan = fn(spark, sfDir).queryExecution.optimizedPlan.toString
-          Files.writeString(Paths.get(outDir, s"$name.txt"), normalize(plan))
-          n += 1
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-          failed += name
-        }
+    val (n, bad) = Verify.eachQuery(spark, sfDir, "plandump", _ => true) { (name, df) =>
+      Files.writeString(Paths.get(outDir, s"$name.txt"),
+        normalize(df.queryExecution.optimizedPlan.toString))
     }
-    val bad = failed.result()
     println(if (bad.isEmpty) s"PLANDUMP_OK n=$n"
-            else s"PLANDUMP_FAIL ${bad.mkString(",")}")
+            else s"PLANDUMP_FAIL ${bad.sorted.mkString(",")}")
     spark.stop()
+    if (bad.nonEmpty) sys.exit(1)
   }
 }

@@ -1183,7 +1183,7 @@ class NLParserSpec extends AnyFunSuite {
       val e = intercept[NLParser.ParseException] {
         NLParser.parse(s"$route \"the fast\" in body weighting title 2, text 1.")
       }
-      assert(e.msg.contains("phrase field 'body' is not one of the scored fields"),
+      assert(e.msg.startsWith("phrase field 'body' is not one of the scored fields"),
         e.msg)
     }
   }
