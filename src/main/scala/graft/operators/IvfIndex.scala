@@ -910,7 +910,7 @@ object IvfIndex {
     * driver (the serving path past the bounded-batch class: only the id
     * literals and, downstream, the probed cell ids touch the driver).
     * Missing ids surface when the caller validates (see
-    * [[Retrieval.hybridServe]]'s bounded anti-join check) — a frame
+    * [[Retrieval.serve]]'s bounded presence check) — a frame
     * can't fail at construction, it is lazy. */
   private[graft] def lookupVectorsFrame(spark: SparkSession, path: String,
                                         m: IndexManifest,

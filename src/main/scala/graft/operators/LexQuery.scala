@@ -4,7 +4,7 @@ package graft.operators
   * lexical surface compiles this value — the flat scan
   * ([[Retrieval.bm25TopK]]), the persisted inverted index
   * ([[LexIndex.search]]), the at-rest hybrid's lexical arm
-  * ([[Retrieval.hybridServe]]) and, through those, every streaming
+  * ([[Retrieval.serve]]) and, through those, every streaming
   * probe — so a (match, scoring) pair is validated here once, and each
   * store compiles it in one place.
   *

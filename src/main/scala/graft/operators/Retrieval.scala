@@ -465,109 +465,96 @@ object Retrieval {
         col("rank"), col("score"))
   }
 
-  /** The fully AT-REST hybrid probe: lexical arm from the persisted
-    * inverted index ([[LexIndex.search]] of `q` — query-term bucket
-    * pruning), vector arm from the persisted IVF index
-    * ([[IvfIndex.search]] — cell partition pruning), RRF-fused. The RAG
-    * serving probe with ZERO corpus scans: every byte read is posting
-    * lists of the spoken terms or vectors of the probed cells.
+  /** The one AT-REST serve over both stores: the lexical arm from the
+    * persisted inverted index ([[LexIndex.search]] of `q` — query-term
+    * bucket pruning), an optional vector arm from the persisted IVF
+    * index ([[IvfIndex.search]]'s probe — cell partition pruning),
+    * RRF-fused, and an optional MMR re-selection of that ranking. Zero
+    * corpus scans: every byte read is posting lists of the spoken
+    * terms, vectors of the probed cells, or id-pushed vector rows.
     *
-    * Query vectors are fetched from the index BY THE QUERY ID
-    * (projected, predicate-pushed one-row reads — the bounded
-    * spoken-probe class), so unlike the flat [[hybridTopK]] the vector
-    * arm self-EXCLUDES the query's own document: fetched-by-id serving
-    * means "more like stored doc q", where q itself is not news. The
-    * flat form's literal external vectors have nothing to exclude —
-    * both semantics are deliberate.
+    * The ranking is the lexical top-`depth`, RRF-fused with the vector
+    * arm's top-`depth` when there is one; the fuse cuts to `k`, or to
+    * `depth` when an MMR pass follows. The vector arm ([[ServeVector]]):
+    *  - `Stored(nprobe)`: `query_id` is a stored `vec_id`. The serving
+    *    batch's query IDS are collected (8 bytes each — never the
+    *    vectors) and the vectors fetched as ONE id-pushed pruned read
+    *    kept as a FRAME flowing straight into the probe, so the query
+    *    embeddings never materialize on the driver at any batch size.
+    *    Fail-loud: a query id with no stored vector throws rather than
+    *    vanish from the fused ranking. The arm self-EXCLUDES the
+    *    query's own document — fetched-by-id serving means "more like
+    *    stored doc q", where q itself is not news;
+    *  - `Literal(nprobe)`: the production sentence — a FRESH embedding
+    *    plus keywords, neither stored anywhere. Queries carry
+    *    `(query_id, terms, embedding)`; nothing is fetched and nothing
+    *    is self-excluded (the [[hybridTopK]] semantics: an external
+    *    query has no "self").
+    * With `mmr = Some(λ)` the depth-bounded ranking is materialized
+    * once ([[localBounded]] — it has two consumers, the candidate-id
+    * fetch and the greedy's relevance input) and [[mmrTopK]] re-selects
+    * k over the candidates' id-fetched vectors ([[candidateVecsLoud]]).
+    * Over the plain lexical ranking the result is hash-identical to the
+    * flat `mmrTopK(bm25TopK(docs, …), embeddings, …)` over the indexed
+    * corpus; over a fused ranking relevance is the RRF score.
     *
-    * @param queries `(query_id, terms)`; query_id is also the vec_id
-    *                whose stored vector drives the vector arm
+    * ONE IVF manifest snapshot serves the query-vector fetch, the probe
+    * and the MMR candidate fetch. The Spark job count is constant in
+    * |queries| (spec-pinned).
+    *
+    * @param queries `(query_id, terms | phrase)` per [[LexQuery]]'s
+    *                column contract, plus `embedding` for a `Literal` arm
     * @param q       the lexical arm's query — plain BM25 by default, or
     *                BM25F at probe-time weights over a fielded index
     * @param pred    optional document filter over attribute columns
     *                BOTH indexes store under the same names (doc_id ≡
     *                vec_id, so the metadata is one attribute set viewed
     *                from two layouts): each arm pre-filters its
-    *                candidates inside its pruned scan, so the fused
-    *                top-k ranks only matching documents
+    *                candidates inside its pruned scan, so the ranking
+    *                holds only matching documents. Stored query vectors
+    *                are fetched unfiltered — the query document is the
+    *                probe, not a candidate
     */
-  def hybridServe(spark: org.apache.spark.sql.SparkSession,
-                  lexPath: String, ivfPath: String, queries: DataFrame,
-                  k: Int, depth: Int, nprobe: Int, c: Int = 60,
-                  q: LexQuery = LexQuery(),
-                  pred: Option[Column] = None): DataFrame = {
-    require(depth >= k, s"depth=$depth must be >= k=$k")
-    // ONE manifest read shared by the batched vector fetch and the
-    // probe — internally consistent under concurrent rebuild
-    val m = IvfIndex.readManifestFull(spark, ivfPath)
-    // bounded driver collect: the serving batch's query IDS (8 bytes
-    // each — never the vectors); the fetch is then ONE id-pushed pruned
-    // read kept AS A FRAME flowing straight into the probe, so the
-    // query embeddings themselves never materialize on the driver at
-    // any batch size. Job count stays constant in |queries|
-    // (spec-pinned): the id collect, the missing-id check, the probe.
-    val ids = queries.select("query_id").collect().map(_.getLong(0))
-    val qVecs = IvfIndex.lookupVectorsFrame(spark, ivfPath, m, ids)
-      .select(col("vec_id"), col("embedding"))
-    // fail-loud contract of the by-id fetch: the presence check
-    // collects the fetched frame's IDS ONLY (a projected, column-pruned
-    // read of the already-id-pushed files — never the vectors), so an
-    // unserved query can never just vanish from the fused ranking. One
-    // bounded job, no join — cheaper than the anti-join it replaces
-    val present = qVecs.select("vec_id").collect().map(_.getLong(0)).toSet
-    val missing = ids.filterNot(present).take(8)
-    require(missing.isEmpty,
-      s"vec_ids ${missing.mkString(", ")} are not stored in the index " +
-        s"at $ivfPath")
-    // the query vectors are FETCHED from the index unfiltered (the
-    // query document itself may not match the predicate — it is the
-    // probe, not a candidate); the predicate filters candidates only
-    serveArms(spark,
-      LexIndex.search(spark, lexPath, queries, depth, q, pred),
-      ivfPath, m, qVecs, excludeSelf = true, k, depth, nprobe, c, pred)
-  }
-
-  /** [[hybridServe]] for LITERAL query vectors — the production hybrid
-    * sentence: a FRESH embedding plus keywords, neither stored anywhere
-    * ("docs about spark join, near this just-computed embedding").
-    * Queries carry all three columns `(query_id, terms, embedding)`;
-    * nothing is fetched by id, and the vector arm does NOT self-exclude
-    * (the [[hybridTopK]] semantics: an external query has no "self" —
-    * the stored doc nearest the literal is the best hit, even if its id
-    * happens to equal the caller's query_id). Zero corpus scans, as
-    * [[hybridServe]]: the lexical arm reads the spoken terms' bucket
-    * partitions, the vector arm the probed cells' partitions. */
-  def hybridServeLiteral(spark: org.apache.spark.sql.SparkSession,
-                         lexPath: String, ivfPath: String, queries: DataFrame,
-                         k: Int, depth: Int, nprobe: Int, c: Int = 60,
-                         pred: Option[Column] = None,
-                         vecCol: String = "embedding"): DataFrame = {
+  def serve(spark: org.apache.spark.sql.SparkSession,
+            lexPath: String, ivfPath: String, queries: DataFrame,
+            k: Int, depth: Int, q: LexQuery = LexQuery(),
+            vector: Option[ServeVector] = None,
+            mmr: Option[Double] = None, c: Int = 60,
+            pred: Option[Column] = None): DataFrame = {
+    require(vector.isDefined || mmr.isDefined,
+      "a serve with neither a vector arm nor an MMR pass is LexIndex.search")
     require(depth >= k, s"depth=$depth must be >= k=$k")
     val m = IvfIndex.readManifestFull(spark, ivfPath)
-    val qVecs = queries.select(col("query_id").as("vec_id"), col(vecCol))
-    serveArms(spark,
-      LexIndex.search(spark, lexPath, queries.select("query_id", "terms"),
-        depth, pred = pred),
-      ivfPath, m, qVecs, excludeSelf = false, k, depth, nprobe, c, pred)
-  }
-
-  /** The shared at-rest fusion tail: an already-built LEXICAL arm
-    * ([[LexIndex.search]]) + the vector probe over an already-resolved manifest, RRF-fused.
-    * `qVecs` is `(vec_id, embedding)` — fetched from the index
-    * ([[hybridServe]]) or carried literally by the queries
-    * ([[hybridServeLiteral]]). */
-  private def serveArms(spark: org.apache.spark.sql.SparkSession,
-                        lexArm: DataFrame, ivfPath: String,
-                        m: IvfIndex.IndexManifest,
-                        qVecs: DataFrame,
-                        excludeSelf: Boolean, k: Int, depth: Int,
-                        nprobe: Int, c: Int,
-                        pred: Option[Column]): DataFrame = {
-    val lex = lexArm.select(col("query_id"), col("doc_id"), col("rank"))
-    val vec = IvfIndex.searchWith(spark, ivfPath, m, qVecs, depth, nprobe,
-        IvfScoring.Exact, pred, excludeSelf)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    rrfFuse(lex, vec, k, c)
+    val ranking = vector.fold(LexIndex.search(spark, lexPath, queries, depth, q, pred)) { v =>
+      val qVecs = v match {
+        case ServeVector.Literal(_) =>
+          queries.select(col("query_id").as("vec_id"), col("embedding"))
+        case ServeVector.Stored(_) =>
+          val ids = queries.select("query_id").collect().map(_.getLong(0))
+          val fetched = IvfIndex.lookupVectorsFrame(spark, ivfPath, m, ids)
+            .select(col("vec_id"), col("embedding"))
+          // the presence check collects the fetched frame's IDS ONLY (a
+          // projected read of the already-id-pushed files): one bounded
+          // job, no join
+          val present = fetched.select("vec_id").collect().map(_.getLong(0)).toSet
+          val missing = ids.filterNot(present).take(8)
+          require(missing.isEmpty,
+            s"vec_ids ${missing.mkString(", ")} are not stored in the index " +
+              s"at $ivfPath")
+          fetched
+      }
+      val lex = LexIndex.search(spark, lexPath, queries, depth, q, pred)
+        .select(col("query_id"), col("doc_id"), col("rank"))
+      val vec = IvfIndex.searchWith(spark, ivfPath, m, qVecs, depth, v.nprobe,
+          IvfScoring.Exact, pred, excludeSelf = v.isInstanceOf[ServeVector.Stored])
+        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+      rrfFuse(lex, vec, if (mmr.isDefined) depth else k, c)
+    }
+    mmr.fold(ranking) { lambda =>
+      val (candRows, cand) = localBounded(ranking)
+      mmrTopK(cand, candidateVecsLoud(spark, ivfPath, m,
+        candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
+    }
   }
 
   /** Offline retrieval evaluation — per-query recall@k of a candidate
@@ -679,21 +666,19 @@ object Retrieval {
     * every objective is bit-identical to the oracle's unrolled-greedy
     * replay; the published mmr score rounds to 1e-6.
     *
-    * @param candidates `(query_id, idCol, relCol, …)` — one row per
+    * @param candidates `(query_id, doc_id, score, …)` — one row per
     *                   candidate (ranks/extra columns ignored)
-    * @param embeddings `(vecIdCol, vecCol)` with idCol ≡ vecIdCol
-    * @return (query_id, idCol, rank, mmr) with rank 1..min(k, |cand|)
+    * @param embeddings `(vec_id, embedding)` with doc_id ≡ vec_id
+    * @return (query_id, doc_id, rank, mmr) with rank 1..min(k, |cand|)
     *         in selection order
     */
   def mmrTopK(candidates: DataFrame, embeddings: DataFrame, k: Int,
-              lambda: Double, idCol: String = "doc_id",
-              vecIdCol: String = "vec_id", vecCol: String = "embedding",
-              relCol: String = "score"): DataFrame = {
+              lambda: Double): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
     val cand = candidates
-      .select(col("query_id"), col(idCol).as("id"), col(relCol).as("rel"))
-      .join(embeddings.select(col(vecIdCol).as("id"), col(vecCol).as("vec")),
+      .select(col("query_id"), col("doc_id").as("id"), col("score").as("rel"))
+      .join(embeddings.select(col("vec_id").as("id"), col("embedding").as("vec")),
         Seq("id"))
     val greedy = udf((items: Seq[org.apache.spark.sql.Row]) =>
       mmrGreedy(items.map(r => (r.getLong(0), r.getDouble(1),
@@ -702,7 +687,7 @@ object Retrieval {
       .agg(greedy(collect_list(struct(col("id"), col("rel"), col("vec"))))
         .as("picked"))
       .select(col("query_id"), posexplode(col("picked")).as(Seq("pos", "s")))
-      .select(col("query_id"), col("s._1").as(idCol),
+      .select(col("query_id"), col("s._1").as("doc_id"),
         (col("pos") + 1).cast("long").as("rank"),
         round(col("s._2"), 6).as("mmr"))
   }
@@ -750,41 +735,6 @@ object Retrieval {
     out.result()
   }
 
-  /** [[mmrTopK]] served fully AT REST — "diversify the lexical top-k"
-    * with zero corpus scans: candidates from the persisted inverted
-    * index ([[LexIndex.search]] — the query terms' bucket partitions
-    * only, score-identical to the flat BM25 scan), their embeddings
-    * fetched from the persisted IVF index BY ID
-    * ([[IvfIndex.lookupVectorsFrame]] — an id-pushed pruned read, never
-    * the vector corpus), then the same bounded per-query greedy. The
-    * result is hash-identical to the flat
-    * `mmrTopK(bm25TopK(docs, …), embeddings, …)` over the indexed
-    * corpus (both inputs are score-identical and the greedy is shared),
-    * which is what lets the at-rest form reuse the flat oracle.
-    *
-    * The candidate-id collect is bounded by q×depth (tens per query —
-    * the spoken-probe class, [[hybridServe]]'s documented bound); a
-    * candidate with no stored vector drops from the diversification
-    * exactly as the flat form's inner embedding join drops it — and the
-    * drop is surfaced, not silent ([[candidateVecsLoud]]). */
-  def mmrServe(spark: org.apache.spark.sql.SparkSession,
-               lexPath: String, ivfPath: String, queries: DataFrame,
-               k: Int, lambda: Double, depth: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(depth >= k, s"depth=$depth must be >= k=$k")
-    // the candidate ranking is depth-bounded (q×depth rows) but its
-    // producer is a full probe pipeline with TWO consumers (the id
-    // list for the vector fetch + the greedy's relevance input):
-    // materialize it ONCE — the candidate-id collect this path always
-    // did, now also feeding the greedy instead of a plan that would
-    // re-run the probe
-    val (candRows, cand) =
-      localBounded(LexIndex.search(spark, lexPath, queries, depth,
-        LexQuery(scoring = LexQuery.Bm25(k1, b))))
-    mmrTopK(cand, candidateVecsLoud(spark, ivfPath,
-      candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
-  }
-
   /** Materialize a strictly BOUNDED frame once (a driver collect of
     * the spoken-probe class — callers pass q×k/q×depth-row rankings or
     * id-pushed vector fetches, never corpus data) and hand back both
@@ -816,11 +766,12 @@ object Retrieval {
     * column-pruned pass over the already-id-pushed files — 8 bytes per
     * candidate), never the vectors, so candidate embeddings (ids × dim
     * floats) never ship through driver memory at any depth, and the
-    * greedy's embedding join reads the pruned scan directly
-    * ([[hybridServe]]'s ids-only presence-check rationale). */
+    * greedy's embedding join reads the pruned scan directly. `m` is
+    * the serve's own manifest snapshot, so the candidates' vectors come
+    * from the same index version the vector arm probed. */
   private def candidateVecsLoud(spark: org.apache.spark.sql.SparkSession,
-                                ivfPath: String, ids: Array[Long]): DataFrame = {
-    val m = IvfIndex.readManifestFull(spark, ivfPath)
+                                ivfPath: String, m: IvfIndex.IndexManifest,
+                                ids: Array[Long]): DataFrame = {
     val vecs = IvfIndex.lookupVectorsFrame(spark, ivfPath, m, ids)
     val present = vecs.select("vec_id").collect().map(_.getLong(0)).toSet
     val missing = ids.filterNot(present)
@@ -833,49 +784,6 @@ object Retrieval {
     vecs
   }
 
-  /** [[mmrServe]] over the FUSED ranking — diversify what a RAG
-    * pipeline actually serves: candidates are the at-rest HYBRID
-    * top-`depth` ([[hybridServe]] — lexical buckets + IVF cells,
-    * RRF-fused, zero corpus scans), relevance is the fused RRF score
-    * (bit-deterministic — integer-rank divisions, no rounding needed),
-    * and the bounded per-query greedy re-selects k for relevance minus
-    * embedding redundancy. Candidate vectors fetch by id from the IVF
-    * index, so the whole pass stays in the spoken-probe cost class:
-    * every byte read is posting lists, probed cells, or id-pushed
-    * vector rows. */
-  def mmrServeHybrid(spark: org.apache.spark.sql.SparkSession,
-                     lexPath: String, ivfPath: String, queries: DataFrame,
-                     k: Int, lambda: Double, depth: Int, nprobe: Int,
-                     c: Int = 60): DataFrame = {
-    require(depth >= k, s"depth=$depth must be >= k=$k")
-    // depth-bounded fused ranking, two consumers — mmrServe's rationale
-    val (candRows, cand) = localBounded(
-      hybridServe(spark, lexPath, ivfPath, queries, depth, depth, nprobe, c))
-    mmrTopK(cand, candidateVecsLoud(spark, ivfPath,
-      candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
-  }
-
-  /** [[mmrServeHybrid]] for LITERAL query vectors — diversify the
-    * production hybrid sentence: a FRESH embedding plus keywords
-    * ([[hybridServeLiteral]] — no self-exclusion, zero corpus scans)
-    * retrieves the fused top-`depth`, and the bounded greedy re-selects
-    * k against embedding redundancy (candidate vectors fetched by id
-    * from the IVF index). `queries` carries all three columns
-    * `(query_id, terms, embedding)`; `pred` pre-filters both arms'
-    * candidates on a stored attribute. */
-  def mmrServeHybridLiteral(spark: org.apache.spark.sql.SparkSession,
-                            lexPath: String, ivfPath: String,
-                            queries: DataFrame, k: Int, lambda: Double,
-                            depth: Int, nprobe: Int, c: Int = 60,
-                            pred: Option[Column] = None): DataFrame = {
-    require(depth >= k, s"depth=$depth must be >= k=$k")
-    // depth-bounded fused ranking, two consumers — mmrServe's rationale
-    val (candRows, cand) = localBounded(hybridServeLiteral(spark, lexPath,
-      ivfPath, queries, depth, depth, nprobe, c, pred))
-    mmrTopK(cand, candidateVecsLoud(spark, ivfPath,
-      candRows.map(_.getAs[Long]("doc_id")).distinct), k, lambda)
-  }
-
   /** Hybrid search: BM25 over the document texts fused with exact
     * cosine over the aligned embeddings (doc_id ≡ vec_id), RRF-combined
     * to the final top-k. Queries carry BOTH modalities — a term list
@@ -885,24 +793,35 @@ object Retrieval {
     * fusion needs rankings deeper than k to fuse meaningfully: an arm's
     * k+1-th hit can enter the fused top-k).
     *
-    * @param queries `(query_id, terms: array<string>)`; the query
-    *                vector for each query_id is looked up in
-    *                `embeddings` by `vecIdCol` ≡ query_id
+    * @param queries    `(query_id, terms: array<string>)`; the query
+    *                   vector for each query_id is looked up in
+    *                   `embeddings` by `vec_id` ≡ query_id
+    * @param embeddings `(vec_id, embedding)`
     */
   def hybridTopK(docs: DataFrame, embeddings: DataFrame, queries: DataFrame,
-                 k: Int, depth: Int, c: Int = 60,
-                 vecIdCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
+                 k: Int, depth: Int, c: Int = 60): DataFrame = {
     require(depth >= k, s"depth=$depth must be >= k=$k")
     val lex = bm25TopK(docs, queries, depth)
     val qVecs = embeddings.join(
-      broadcast(queries.select(col("query_id").as(vecIdCol))), Seq(vecIdCol))
+      broadcast(queries.select(col("query_id").as("vec_id"))), Seq("vec_id"))
     // the query is EXTERNAL (a term list + an embedding), not a corpus
     // member being deduplicated — nothing to self-exclude: the doc whose
     // stored vector IS the query vector is a legitimate (best) hit
     val vec = Similarity.bruteForceTopK(qVecs, embeddings, depth,
-        idCol = vecIdCol, vecCol = vecCol, excludeSelf = false)
+        excludeSelf = false)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     rrfFuse(lex.select("query_id", "doc_id", "rank"), vec, k, c)
   }
+}
+
+/** The vector arm of a [[Retrieval.serve]]: where its query vectors
+  * come from, and how many IVF cells it probes. */
+sealed trait ServeVector extends Product with Serializable { def nprobe: Int }
+object ServeVector {
+  /** `query_id` is a stored `vec_id`: the vectors are fetched by id and
+    * the arm self-excludes. */
+  final case class Stored(nprobe: Int)  extends ServeVector
+  /** The queries carry `embedding`: nothing is fetched, nothing is
+    * self-excluded. */
+  final case class Literal(nprobe: Int) extends ServeVector
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Events, IvfScoring, LexIndex, LexQuery, Multimodal, Retrieval, Sampling, Similarity, SkewJoin, TextAnalysis}
+import graft.operators.{Dedup, Events, IvfScoring, LexIndex, LexQuery, Multimodal, Retrieval, Sampling, ServeVector, Similarity, SkewJoin, TextAnalysis}
 
 /** Plan IR → DataFrame program.
   *
@@ -41,8 +41,8 @@ object Compiler {
     compile(plan, input, catalog, tablePath, None)
 
   /** As above, additionally binding a PERSISTED VECTOR INDEX path for
-    * the two-store serving verbs ([[Op.LexHybridServe]] — the lexical
-    * index binds as the table path, the IVF index here). */
+    * the two-store verbs ([[Op.LexServe]], [[Op.HybridEval]] — the
+    * lexical index binds as the table path, the IVF index here). */
   def compile(plan: Plan, input: DataFrame,
               catalog: Map[String, DataFrame],
               tablePath: Option[String],
@@ -71,6 +71,10 @@ object Compiler {
       s"$op needs a manifested table or persisted index input (a " +
         "directory with manifest-*.txt / index-manifest-*.txt / " +
         "lex-manifest-*.txt) — plain frames have no versions to act on"))
+    // the IVF index of a two-store verb, bound beside the lexical one
+    def vectorIndex: String = vectorIndexPath.getOrElse(throw InvalidPlanException(
+      s"$op needs a bound vector index (vectorIndexPath) beside the " +
+        "lexical one — it serves from both stores"))
     op match {
       case Op.LoadAtVersion(v) => ManifestedLog.loadAt(spark, path, v)
       case Op.CompactClosedDays(wmUs) =>
@@ -153,79 +157,38 @@ object Compiler {
       case Op.LexProbe(tokens, k, q, where) =>
         LexIndex.search(spark, path, spokenQuery(spark, tokens, q), k, q,
           where.map(predicate(df, _)))
-      case Op.LexHybridServe(terms, vec, k, depth, nprobe, where) =>
-        // the literal query carries BOTH modalities inline (query_id
-        // -1, outside the stored id space); the lexical index is the
-        // bound table, the vector index binds separately — one spoken
-        // sentence, two pruned index probes, zero corpus scans; a
-        // spoken filter pre-filters BOTH arms on the shared attribute
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the hybrid serves from both stores"))
-        val queries = spark.createDataFrame(Seq((-1L, terms, vec)))
-          .toDF("query_id", "terms", "embedding")
-        graft.operators.Retrieval.hybridServeLiteral(spark, path, ivfPath,
-          queries, k, depth, nprobe,
-          pred = where.map(predicate(df, _)))
-      case Op.LexHybridMmrLit(terms, vec, k, lambda, depth, nprobe, where) =>
-        // the diversified literal hybrid: fused top-depth candidates,
-        // RRF relevance, id-fetched embeddings, bounded greedy
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the hybrid serves from both stores"))
-        val queries = spark.createDataFrame(Seq((-1L, terms, vec)))
-          .toDF("query_id", "terms", "embedding")
-        graft.operators.Retrieval.mmrServeHybridLiteral(spark, path,
-          ivfPath, queries, k, lambda, depth, nprobe,
-          pred = where.map(predicate(df, _)))
-      case Op.LexMmrServe(terms, k, lambda, depth) =>
-        // fully at-rest MMR: candidates from this (lexical) index,
-        // their embeddings fetched by id from the bound vector index —
-        // zero corpus scans, hash-identical to the flat MmrTopK
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the embeddings fetch by id from it"))
-        val queries = spark.createDataFrame(Seq((-1L, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.Retrieval.mmrServe(spark, path, ivfPath,
-          queries, k, lambda, depth)
-      case Op.LexMmrHybridServe(terms, k, lambda, depth, nprobe, qid) =>
-        // MMR over the fused two-index ranking: hybrid top-depth
-        // candidates, RRF relevance, id-fetched embeddings. The spoken
-        // query id names the STORED embedding driving the vector arm
-        // (the by-id hybrid serving semantics)
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the vector arm and embeddings serve from it"))
-        val queries = spark.createDataFrame(Seq((qid, terms)))
-          .toDF("query_id", "terms")
-        graft.operators.Retrieval.mmrServeHybrid(spark, path, ivfPath,
-          queries, k, lambda, depth, nprobe)
-      case Op.LexHybridFielded(terms, k, ws, depth, nprobe, qid, where) =>
-        // the fielded hybrid: BM25F arm from this (fielded) index at
-        // the spoken probe-time weights, vector arm by the spoken id's
-        // stored embedding — two pruned probes, zero corpus scans
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the hybrid serves from both stores"))
-        val queries = spark.createDataFrame(Seq((qid, terms)))
-          .toDF("query_id", "terms")
-        Retrieval.hybridServe(spark, path, ivfPath, queries, k, depth,
-          nprobe, q = LexQuery(scoring = LexQuery.Bm25F(ws)),
-          pred = where.map(predicate(df, _)))
+      case Op.LexServe(terms, k, q, depth, arm, mmr, where) =>
+        // the lexical index is the bound table, the vector index binds
+        // separately — one spoken sentence, pruned probes of both
+        // stores, zero corpus scans. A by-id arm's spoken id is the
+        // query id (it names the stored embedding); a literal arm's
+        // vector rides the query row at query_id -1, outside the stored
+        // id space
+        if (arm.isEmpty && mmr.isEmpty) throw InvalidPlanException(
+          s"$op has neither a vector arm nor an MMR lambda — that is a LexProbe")
+        val queries = arm match {
+          case Some(ServeArm.Literal(vec, _)) =>
+            spark.createDataFrame(Seq((-1L, terms, vec)))
+              .toDF("query_id", q.column, "embedding")
+          case Some(ServeArm.ById(qid, _)) => spokenQuery(spark, terms, q, qid)
+          case None                         => spokenQuery(spark, terms, q)
+        }
+        Retrieval.serve(spark, path, vectorIndex, queries, k, depth, q,
+          arm.map {
+            case ServeArm.ById(_, np)    => ServeVector.Stored(np)
+            case ServeArm.Literal(_, np) => ServeVector.Literal(np)
+          }, mmr, pred = where.map(predicate(df, _)))
       case Op.HybridEval(ndcg, k, qid, terms, depth, nprobe) =>
         // the fused at-rest probe vs the exact-hybrid reference: the
         // lexical arm is shared (the index probe IS score-identical to
         // the flat scan), the reference's vector arm is exact cosine
         // over the IVF index's stored vectors with the same
         // self-exclusion — the metric isolates the IVF approximation
-        val ivfPath = vectorIndexPath.getOrElse(throw InvalidPlanException(
-          s"$op needs a bound vector index (vectorIndexPath) beside the " +
-            "lexical one — the hybrid evaluates both stores"))
+        val ivfPath = vectorIndex
         val queries = spark.createDataFrame(Seq((qid, terms)))
           .toDF("query_id", "terms")
-        val probe = Retrieval.hybridServe(spark, path, ivfPath, queries,
-          k, depth, nprobe)
+        val probe = Retrieval.serve(spark, path, ivfPath, queries, k, depth,
+          vector = Some(ServeVector.Stored(nprobe)))
         val lex = graft.operators.LexIndex.search(spark, path, queries, depth)
           .select(col("query_id"), col("doc_id"), col("rank"))
         val corpus = graft.operators.IvfIndex.read(spark, ivfPath)
@@ -262,10 +225,12 @@ object Compiler {
   }
 
   /** A spoken lexical query as a one-row frame in `q`'s column
-    * contract, query_id -1 (outside the stored doc id space). */
+    * contract, query_id `qid` — by default -1, outside the stored doc
+    * id space. */
   private def spokenQuery(spark: org.apache.spark.sql.SparkSession,
-                          tokens: Seq[String], q: LexQuery): DataFrame =
-    spark.createDataFrame(Seq((-1L, tokens))).toDF("query_id", q.column)
+                          tokens: Seq[String], q: LexQuery,
+                          qid: Long = -1L): DataFrame =
+    spark.createDataFrame(Seq((qid, tokens))).toDF("query_id", q.column)
 
   /** The inverted index's logical content — what the lexical
     * maintenance verbs read back for their content-invariance oracles:

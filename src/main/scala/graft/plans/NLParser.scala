@@ -1734,93 +1734,73 @@ object NLParser {
             p.dropWords("cells", "cell")
             np
           }
-          def fusionDepth(): Int = {
+          def depthOr(default: Int, what: String): Int = {
             val depth = p.peekWordLower match {
               case Some("at") =>
                 p.next(); p.expectWord("depth"); p.expectNum().toInt
-              case _ => 20
+              case _ => default
             }
             if (depth < k) throw ParseException(
-              s"fusion depth $depth must be at least k=$k")
+              s"$what depth $depth must be at least k=$k")
             depth
+          }
+          def lambda(): Double = {
+            p.expectWord("lambda")
+            val l = p.expectNum()
+            if (l < 0.0 || l > 1.0) throw ParseException(
+              s"mmr lambda must be in [0,1]: $l")
+            l
           }
           def optWhere(): Option[Pred] = p.peekWordLower match {
             case Some("where") => p.next(); Some(parsePred(p))
             case _             => None
           }
+          // the two-store serving forms, one Op.LexServe each (its
+          // scaladoc lists them by vector arm × MMR)
           return Right(lexicalQuery(p) { (terms, q) =>
+            def serve(depth: Int, arm: Option[ServeArm], mmr: Option[Double],
+                      where: Option[Pred]) = {
+              requireDone(p)
+              Some(List(Op.LexServe(terms, k, q, depth, arm, mmr, where)))
+            }
             (q, p.peekWordLower) match {
               case (LexQuery(LexQuery.Terms, LexQuery.Bm25(_, _)), Some("fused")) =>
                 // "… fused with vector [0.1, …] at depth 20 probing 4
                 // cells [with lambda 0.7] [where …]." — the LITERAL-query
-                // hybrid: a fresh embedding + keywords served from BOTH
-                // bound indexes (lexical buckets + IVF cells), RRF-fused;
-                // "with lambda" MMR-diversifies the fused ranking, and a
-                // filter pre-filters both arms on the attribute BOTH
-                // indexes store (the x104 contract)
+                // hybrid, optionally MMR-diversified
                 p.next(); p.expectWord("with"); p.dropWords("the")
                 p.expectWord("vector")
                 val vec = vectorLiteral(p)
-                val depth = fusionDepth()
+                val depth = depthOr(20, "fusion")
                 val np = probing()
-                val lam = p.peekWordLower match {
-                  case Some("with") =>
-                    p.next(); p.expectWord("lambda")
-                    val l = p.expectNum()
-                    if (l < 0.0 || l > 1.0) throw ParseException(
-                      s"mmr lambda must be in [0,1]: $l")
-                    Some(l)
-                  case _ => None
-                }
-                val where = optWhere()
-                requireDone(p)
-                Some(List(lam match {
-                  case Some(l) =>
-                    Op.LexHybridMmrLit(terms, vec, k, l, depth, np, where)
-                  case None => Op.LexHybridServe(terms, vec, k, depth, np, where)
-                }))
+                val lam =
+                  if (p.peekWordLower.contains("with")) { p.next(); Some(lambda()) }
+                  else None
+                serve(depth, Some(ServeArm.Literal(vec, np)), lam, optWhere())
               case (LexQuery(LexQuery.Terms, LexQuery.Bm25(_, _)), Some("with")) =>
-                // "… with lambda 0.7 [at depth 10]." — MMR served fully
-                // AT REST: BM25 candidates from this index, embeddings
-                // fetched by id from the bound vector index. A trailing
-                // "probing 4 cells for query 0" takes the CANDIDATES from
-                // the fused HYBRID top-depth instead (the spoken id
-                // names the stored embedding driving the vector arm)
-                p.next(); p.expectWord("lambda")
-                val lam = p.expectNum()
-                if (lam < 0.0 || lam > 1.0) throw ParseException(
-                  s"mmr lambda must be in [0,1]: $lam")
-                val depth = p.peekWordLower match {
-                  case Some("at") =>
-                    p.next(); p.expectWord("depth"); p.expectNum().toInt
-                  case _ => 10
-                }
-                if (depth < k) throw ParseException(
-                  s"mmr depth $depth must be at least k=$k")
-                if (p.peekWordLower.contains("probing")) {
-                  val np = probing()
-                  p.expectWord("for"); p.expectWord("query")
-                  val qid = p.expectNum().toLong
-                  requireDone(p)
-                  Some(List(Op.LexMmrHybridServe(terms, k, lam, depth, np, qid)))
-                } else {
-                  requireDone(p)
-                  Some(List(Op.LexMmrServe(terms, k, lam, depth)))
-                }
-              case (LexQuery(LexQuery.Terms, LexQuery.Bm25F(ws, _, _)), Some("fused")) =>
-                // "… weighting title 2, text 1 fused at depth 20 probing
-                // 4 cells for query 0 [where …]." — the FIELDED hybrid:
-                // this index's BM25F arm at the spoken weights, the
-                // bound vector index's arm by the spoken query id's
-                // STORED embedding, RRF-fused (the title/body RAG probe)
+                // "… with lambda 0.7 [at depth 10] [probing 4 cells for
+                // query 0]." — MMR over this index's BM25 candidates, or
+                // over the fused hybrid top-depth driven by the spoken
+                // id's stored embedding
                 p.next()
-                val depth = fusionDepth()
+                val lam = lambda()
+                val depth = depthOr(10, "mmr")
+                val arm =
+                  if (p.peekWordLower.contains("probing")) {
+                    val np = probing()
+                    p.expectWord("for"); p.expectWord("query")
+                    Some(ServeArm.ById(p.expectNum().toLong, np))
+                  } else None
+                serve(depth, arm, Some(lam), None)
+              case (LexQuery(LexQuery.Terms, LexQuery.Bm25F(_, _, _)), Some("fused")) =>
+                // "… weighting title 2, text 1 fused at depth 20 probing
+                // 4 cells for query 0 [where …]." — the FIELDED hybrid
+                p.next()
+                val depth = depthOr(20, "fusion")
                 val np = probing()
                 p.expectWord("for"); p.expectWord("query")
-                val qid = p.expectNum().toLong
-                val where = optWhere()
-                requireDone(p)
-                Some(List(Op.LexHybridFielded(terms, k, ws, depth, np, qid, where)))
+                val arm = ServeArm.ById(p.expectNum().toLong, np)
+                serve(depth, Some(arm), None, optWhere())
               case _ => None
             }
           }.fold(identity, { case (tokens, q, where) =>

@@ -64,6 +64,16 @@ object SimilarScoring {
   final case class Sq8(rerank: Option[Int] = None)  extends SimilarScoring
 }
 
+/** The vector arm of an [[Op.LexServe]]: the query vector's source and
+  * the IVF cells probed. */
+sealed trait ServeArm extends Product with Serializable
+object ServeArm {
+  /** "probing 4 cells for query 0": the stored embedding of vec_id `qid`. */
+  final case class ById(qid: Long, nprobe: Int)           extends ServeArm
+  /** "fused with vector [0.1, …] … probing 4 cells": a fresh embedding. */
+  final case class Literal(vec: Seq[Float], nprobe: Int)  extends ServeArm
+}
+
 /** Literal values — the reference's grammar only ever compares against
   * numbers and single-quoted strings. */
 sealed trait Lit extends Product with Serializable
@@ -631,56 +641,38 @@ object Op {
   final case class LexProbe(tokens: Seq[String], k: Int,
                             q: LexQuery = LexQuery(),
                             where: Option[Pred] = None)            extends TableOp
-  /** LITERAL-query hybrid serving over TWO bound indexes — the
-    * production RAG sentence: a FRESH embedding plus keywords, lexical
-    * arm from the bound inverted index (bucket-pruned), vector arm from
-    * the bound IVF index (cell-pruned, NOT self-excluded — an external
-    * query has no "self"), RRF-fused to the top-k
-    * ([[graft.operators.Retrieval.hybridServeLiteral]]). The vector
-    * index binds through the compile-time `vectorIndexPath`, the
-    * lexical one through the table path, so one spoken sentence probes
-    * both stores with zero corpus scans. */
-  final case class LexHybridServe(terms: Seq[String], vec: Seq[Float],
-                                  k: Int, depth: Int, nprobe: Int,
-                                  where: Option[Pred] = None)      extends TableOp
-  /** MMR diversification served fully AT REST over TWO bound indexes
-    * ([[graft.operators.Retrieval.mmrServe]]): BM25 depth-candidates
-    * from the bound inverted index, their embeddings fetched BY ID from
-    * the bound IVF index (`vectorIndexPath`), the shared bounded
-    * greedy — zero corpus scans; hash-identical to the flat
-    * [[MmrTopK]] over the indexed corpus. */
-  final case class LexMmrServe(terms: Seq[String], k: Int,
-                               lambda: Double, depth: Int)         extends TableOp
-  /** MMR over the FUSED ranking, served at rest
-    * ([[graft.operators.Retrieval.mmrServeHybrid]]): candidates are
-    * the two-index hybrid probe's RRF top-`depth` (this bound lexical
-    * index + the bound IVF index at `nprobe`), relevance the fused
-    * score, embeddings fetched by id — the diversified form of what a
-    * RAG pipeline actually serves. */
-  final case class LexMmrHybridServe(terms: Seq[String], k: Int,
-                                     lambda: Double, depth: Int,
-                                     nprobe: Int, qid: Long)       extends TableOp
-  /** The FIELDED hybrid served at rest over TWO bound indexes
-    * ([[graft.operators.Retrieval.hybridServe]] with a `Bm25F` lexical arm): BM25F lexical
-    * arm from this bound FIELDED index at the spoken probe-time
-    * weights, vector arm from the bound IVF index by the spoken query
-    * id's STORED embedding (self-excluding, the by-id semantics),
-    * RRF-fused — the title/body RAG probe, spoken: "… matching spark,
-    * join weighting title 2, text 1 fused at depth 20 probing 4 cells
-    * for query 0 [where …]". */
-  final case class LexHybridFielded(terms: Seq[String], k: Int,
-                                    weights: Seq[(String, Double)],
-                                    depth: Int, nprobe: Int, qid: Long,
-                                    where: Option[Pred] = None)    extends TableOp
-  /** MMR over the LITERAL-query fused ranking
-    * ([[graft.operators.Retrieval.mmrServeHybridLiteral]]): the
-    * production hybrid sentence (fresh embedding + keywords, no
-    * self-exclusion), diversified — "… fused with vector […] at depth
-    * 10 probing 4 cells with lambda 0.7 [where …]". */
-  final case class LexHybridMmrLit(terms: Seq[String], vec: Seq[Float],
-                                   k: Int, lambda: Double, depth: Int,
-                                   nprobe: Int,
-                                   where: Option[Pred] = None)     extends TableOp
+  /** Serving over TWO bound indexes ([[graft.operators.Retrieval.serve]]):
+    * the lexical arm from the bound inverted index (the table path;
+    * bucket-pruned), an optional vector arm from the bound IVF index
+    * (the compile-time `vectorIndexPath`; cell-pruned), RRF-fused, and
+    * an optional MMR re-selection at λ = `mmr` over the candidates'
+    * id-fetched embeddings — zero corpus scans. `vector` is the arm:
+    * [[ServeArm.ById]] (the spoken query id names the STORED embedding;
+    * self-excluding) or [[ServeArm.Literal]] (a fresh embedding, query
+    * id -1; nothing self-excluded). With neither an arm nor a λ the
+    * sentence is an [[LexProbe]], and the compiler rejects the Op.
+    *
+    * Spoken forms ("Search the lexical index for top 5 matching …") by
+    * (vector arm × MMR), with the default depth and the `where` tail:
+    *  - Literal × none — "spark, join fused with vector [0.1, …] [at
+    *    depth 20] probing 4 cells [where …]": depth 20, takes `where`
+    *    (both arms pre-filter on the attribute BOTH indexes store);
+    *  - Literal × MMR — "… probing 4 cells with lambda 0.7 [where …]":
+    *    depth 20, takes `where`;
+    *  - none × MMR — "spark, join with lambda 0.7 [at depth 10]": depth
+    *    10, no `where`; hash-identical to the flat [[MmrTopK]] over the
+    *    indexed corpus;
+    *  - ById × MMR — "… with lambda 0.7 [at depth 10] probing 4 cells
+    *    for query 0": depth 10, no `where`;
+    *  - ById × none — "spark, join weighting title 2, text 1 fused [at
+    *    depth 20] probing 4 cells for query 0 [where …]": the FIELDED
+    *    hybrid over a fielded index (BM25F at the spoken probe-time
+    *    weights), depth 20, takes `where`.
+    * Every other form's lexical query is Terms × Bm25. */
+  final case class LexServe(terms: Seq[String], k: Int, q: LexQuery,
+                            depth: Int, vector: Option[ServeArm],
+                            mmr: Option[Double],
+                            where: Option[Pred] = None)            extends TableOp
   /** Offline evaluation of the FUSED two-index ranking: the at-rest
     * hybrid probe (this bound lexical index + the bound IVF index)
     * scored against the exact-hybrid reference — same lexical arm,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{LexIndex, LexQuery, Retrieval}
+import graft.operators.{LexIndex, LexQuery, Retrieval, ServeVector}
 import graft.sources.Sources.table
 
 /** Lexical + hybrid retrieval queries (Retrieval.scala) over
@@ -317,9 +317,9 @@ object RetrievalQueries extends QueryPack {
     // RAG probe with zero corpus scans (query vectors fetched by id,
     // so the vector arm self-excludes; the oracle replays both arms).
     "x101_hybrid_serve" -> ((s: SparkSession, d: String) =>
-      graft.operators.Retrieval.hybridServe(s, lexIndexTable(s, d),
+      Retrieval.serve(s, lexIndexTable(s, d),
         VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-        IvfNProbe, RrfC)),
+        vector = Some(ServeVector.Stored(IvfNProbe)), c = RrfC)),
 
     // Attribute-filtered lexical serving, flat form: only documents of
     // the slice rank (exactly k matching — a pre-filter, never the
@@ -342,9 +342,9 @@ object RetrievalQueries extends QueryPack {
     // doc_id ≡ vec_id), then RRF-fuse — "docs about X, near this
     // embedding, where label = 3", the full RAG serving sentence.
     "x104_hybrid_serve_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.Retrieval.hybridServe(s, lexLabelIndexTable(s, d),
+      Retrieval.serve(s, lexLabelIndexTable(s, d),
         VectorQueries.ivfAttrIndexTable(s, d), queriesDf(s), K, Depth,
-        IvfNProbe, RrfC,
+        vector = Some(ServeVector.Stored(IvfNProbe)), c = RrfC,
         pred = Some(col("label") === VectorQueries.FilterLabel))),
 
     // Lifecycle verbs on the dedicated maintenance index — every one
@@ -500,9 +500,9 @@ object RetrievalQueries extends QueryPack {
     // self-excluded — external queries have no "self"), RRF-fused;
     // still zero corpus scans.
     "x114_hybrid_serve_literal" -> ((s: SparkSession, d: String) =>
-      graft.operators.Retrieval.hybridServeLiteral(s, lexIndexTable(s, d),
+      Retrieval.serve(s, lexIndexTable(s, d),
         VectorQueries.ivfIndexTable(s, d), litHybridQueriesDf(s), K, Depth,
-        IvfNProbe, RrfC)),
+        vector = Some(ServeVector.Literal(IvfNProbe)), c = RrfC)),
 
     // Quoted-phrase retrieval, flat form: only documents containing
     // the CONTIGUOUS token run rank (adjacency, not bag-of-words),
@@ -523,9 +523,9 @@ object RetrievalQueries extends QueryPack {
     // arms pre-filtering on the attribute both indexes store (x104's
     // contract on x114's literal-query form).
     "x124_hybrid_serve_lit_filtered" -> ((s: SparkSession, d: String) =>
-      graft.operators.Retrieval.hybridServeLiteral(s,
-        lexLabelIndexTable(s, d), VectorQueries.ivfAttrIndexTable(s, d),
-        litHybridQueriesDf(s), K, Depth, IvfNProbe, RrfC,
+      Retrieval.serve(s, lexLabelIndexTable(s, d),
+        VectorQueries.ivfAttrIndexTable(s, d), litHybridQueriesDf(s), K, Depth,
+        vector = Some(ServeVector.Literal(IvfNProbe)), c = RrfC,
         pred = Some(col("label") === VectorQueries.FilterLabel))),
 
     // Proximity retrieval — the middle ground between bag-of-words and
@@ -586,9 +586,9 @@ object RetrievalQueries extends QueryPack {
     // from the fielded index (probe-time weights), by-id vector arm
     // from the IVF index, RRF-fused; zero corpus scans.
     "x137_hybrid_serve_fielded" -> ((s: SparkSession, d: String) =>
-      Retrieval.hybridServe(s, lexFieldedIndexTable(s, d),
+      Retrieval.serve(s, lexFieldedIndexTable(s, d),
         VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-        IvfNProbe, RrfC, LexQuery(scoring = LexQuery.Bm25F(FieldWeights)))),
+        FieldedQ, Some(ServeVector.Stored(IvfNProbe)), c = RrfC)),
 
     // FIELDED × POSITIONAL — "the phrase in the TITLE": only documents
     // whose title stream holds the contiguous run rank, scored by
@@ -694,26 +694,28 @@ object RetrievalQueries extends QueryPack {
     // bench twins: both inputs are score-identical and the greedy is
     // shared).
     "x117_mmr_serve" -> ((s: SparkSession, d: String) =>
-      Retrieval.mmrServe(s, lexIndexTable(s, d),
-        VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, MmrLambda,
-        MmrDepth, k1 = K1, b = B)),
+      Retrieval.serve(s, lexIndexTable(s, d),
+        VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, MmrDepth,
+        TermsQ, mmr = Some(MmrLambda))),
 
     // MMR over the FUSED ranking — diversify what a RAG pipeline
     // actually serves: hybrid top-depth candidates (two pruned index
     // probes, RRF-fused), relevance = the fused score, embeddings
     // fetched by id — the whole pass in the spoken-probe cost class.
     "x131_mmr_hybrid_serve" -> ((s: SparkSession, d: String) =>
-      Retrieval.mmrServeHybrid(s, lexIndexTable(s, d),
-        VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, MmrLambda,
-        MmrDepth, IvfNProbe, RrfC)),
+      Retrieval.serve(s, lexIndexTable(s, d),
+        VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, MmrDepth,
+        vector = Some(ServeVector.Stored(IvfNProbe)), mmr = Some(MmrLambda),
+        c = RrfC)),
 
     // The literal-query form: diversify the production hybrid sentence
     // (fresh embedding + keywords, x114's probe at depth) — shares
     // nl154's oracle string (single query -1, same constants).
     "x136_mmr_hybrid_lit" -> ((s: SparkSession, d: String) =>
-      Retrieval.mmrServeHybridLiteral(s, lexIndexTable(s, d),
+      Retrieval.serve(s, lexIndexTable(s, d),
         VectorQueries.ivfIndexTable(s, d), litHybridQueriesDf(s), K,
-        MmrLambda, MmrDepth, IvfNProbe, RrfC)),
+        MmrDepth, vector = Some(ServeVector.Literal(IvfNProbe)),
+        mmr = Some(MmrLambda), c = RrfC)),
 
     // Offline evaluation of the FUSED at-rest ranking (x110/x111's
     // protocol, hybrid side): the two-index hybrid probe scored against
@@ -747,9 +749,9 @@ object RetrievalQueries extends QueryPack {
   /** x118/x119's candidate: the fully at-rest hybrid probe (x101's
     * exact shape and constants). */
   private def hybridProbe(s: SparkSession, d: String): DataFrame =
-    Retrieval.hybridServe(s, lexIndexTable(s, d),
+    Retrieval.serve(s, lexIndexTable(s, d),
       VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-      HybridEvalNProbe, RrfC)
+      vector = Some(ServeVector.Stored(HybridEvalNProbe)), c = RrfC)
 
   /** x118/x119's reference: the exact hybrid at the same operating
     * point — flat BM25 (score-identical to the index arm) RRF-fused
@@ -771,9 +773,9 @@ object RetrievalQueries extends QueryPack {
   /** x141/x142's probe: the at-rest FIELDED hybrid at the eval
     * operating point (x137's serving shape under x118's nprobe). */
   private def hybridProbeFielded(s: SparkSession, d: String): DataFrame =
-    Retrieval.hybridServe(s, lexFieldedIndexTable(s, d),
+    Retrieval.serve(s, lexFieldedIndexTable(s, d),
       VectorQueries.ivfIndexTable(s, d), queriesDf(s), K, Depth,
-      HybridEvalNProbe, RrfC, LexQuery(scoring = LexQuery.Bm25F(FieldWeights)))
+      FieldedQ, Some(ServeVector.Stored(HybridEvalNProbe)), c = RrfC)
 
   /** The exact FIELDED-hybrid reference: flat BM25F (score-identical
     * to the fielded probe) RRF-fused with EXACT self-excluding cosine

@@ -270,8 +270,8 @@ class LexIndexSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     IvfIndex.build(embs, ivfP, cells = 2)
     val qs = queriesDf(0L -> Seq("spark", "join"))
-    val out = Retrieval.hybridServe(spark, lexP, ivfP, qs, 3,
-      depth = 5, nprobe = 1)
+    val out = Retrieval.serve(spark, lexP, ivfP, qs, 3,
+      depth = 5, vector = Some(ServeVector.Stored(1)))
     out.collect()
     // every executed file scan is an index segment — zero corpus scans
     val scans = graft.SparkSpec.executedFileScans(out)
@@ -300,8 +300,8 @@ class LexIndexSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     IvfIndex.build(embs, ivfP, cells = 2)
     val qs = queriesDf(0L -> Seq("spark", "join"), 1L -> Seq("table"))
-    val out = Retrieval.mmrServe(spark, lexP, ivfP, qs, 3,
-      lambda = 0.7, depth = 5)
+    val out = Retrieval.serve(spark, lexP, ivfP, qs, 3, depth = 5,
+      mmr = Some(0.7))
     out.collect()
     // zero corpus scans: every executed file scan is an index segment
     val scans = graft.SparkSpec.executedFileScans(out)
@@ -366,8 +366,8 @@ class LexIndexSpec extends SparkSpec {
     val qs = spark.createDataFrame(
         Seq((0L, Seq("spark", "join"), vec0.toSeq)))
       .toDF("query_id", "terms", "embedding")
-    val out = Retrieval.hybridServeLiteral(spark, lexP, ivfP, qs, 3,
-      depth = 5, nprobe = 2)
+    val out = Retrieval.serve(spark, lexP, ivfP, qs, 3,
+      depth = 5, vector = Some(ServeVector.Literal(2)))
     out.collect()
     val scans = graft.SparkSpec.executedFileScans(out)
     assert(scans.nonEmpty)
@@ -398,8 +398,8 @@ class LexIndexSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     IvfIndex.build(embs, ivfP, cells = 2)
     val qs = queriesDf(0L -> Seq("spark", "join"))
-    val out = Retrieval.hybridServe(spark, lexP, ivfP, qs, 3,
-      depth = 5, nprobe = 1)
+    val out = Retrieval.serve(spark, lexP, ivfP, qs, 3,
+      depth = 5, vector = Some(ServeVector.Stored(1)))
     out.collect()
     // TWO scans of the vector index in ONE executed plan — the id-pushed
     // query-vector fetch and the cell-pruned candidate probe. The old
@@ -415,8 +415,8 @@ class LexIndexSpec extends SparkSpec {
         (f.contains("In(") || f.contains("EqualTo")))),
       "query-vector fetch lost the pushed vec_id filter")
     val e = intercept[IllegalArgumentException] {
-      Retrieval.hybridServe(spark, lexP, ivfP,
-        queriesDf(99L -> Seq("spark")), 3, depth = 5, nprobe = 1).collect()
+      Retrieval.serve(spark, lexP, ivfP, queriesDf(99L -> Seq("spark")), 3,
+        depth = 5, vector = Some(ServeVector.Stored(1))).collect()
     }
     assert(e.getMessage.contains("not stored"))
   }
@@ -641,14 +641,67 @@ class LexIndexSpec extends SparkSpec {
       Seq("hash", "merge"), Seq("window", "slow"), Seq("fast", "batch"),
       Seq("spark", "table"))
     def serve(n: Int) = countJobs {
-      Retrieval.hybridServe(spark, lexP, ivfP,
+      Retrieval.serve(spark, lexP, ivfP,
         queriesDf((0 until n).map(i => i.toLong -> terms(i)): _*),
-        3, depth = 5, nprobe = 1).collect()
+        3, depth = 5, vector = Some(ServeVector.Stored(1))).collect()
     }
     val j1 = serve(1)
     val j6 = serve(6)
     assert(j6 <= j1 + 1,
       s"hybridServe jobs grew with the batch: $j1 jobs at 1 query, $j6 at 6")
+  }
+
+  test("every serving shape reads only index files, and its Spark job " +
+       "count is constant in the query-batch size") {
+    // one fixture build for every shape: attribute-carrying lexical and
+    // IVF indexes (the filtered shape pre-filters both arms on `lang`)
+    // and a fielded lexical index
+    val (lexP, lexFP, ivfP) = (freshPath(), freshPath(), freshPath())
+    LexIndex.build(docsAttrDf, lexP, buckets = 16, attrs = Seq("lang"))
+    LexIndex.buildFielded(fieldedDf, lexFP, fields = Seq("title", "text"),
+      buckets = 16)
+    IvfIndex.build(docsAttrFx.map { case (id, _, lang) =>
+        (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f),
+          lang) }.toDF("vec_id", "embedding", "lang"),
+      ivfP, cells = 2, attrs = Seq("lang"))
+    val terms = Seq(Seq("spark", "join"), Seq("table", "scan"),
+      Seq("hash", "merge"), Seq("window", "slow"), Seq("fast", "batch"),
+      Seq("spark", "table"))
+    // by-id queries name stored vec_ids; literal ones carry fresh vectors
+    def byId(n: Int) =
+      queriesDf((0 until n).map(i => i.toLong -> terms(i)): _*)
+    def literal(n: Int) = spark.createDataFrame((0 until n).map(i =>
+        (-1L - i, terms(i), Seq.tabulate(4)(j => (i * 3 + j * 5) % 7 / 7.0f - 0.4f))))
+      .toDF("query_id", "terms", "embedding")
+    val (stored, lit) = (Some(ServeVector.Stored(1)), Some(ServeVector.Literal(1)))
+    val (fielded, mmr) = (LexQuery(scoring = LexQuery.Bm25F(FW)), Some(0.7))
+    val shapes: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "by-id fuse" -> (n =>
+        Retrieval.serve(spark, lexP, ivfP, byId(n), 3, 5, vector = stored)),
+      "literal fuse" -> (n =>
+        Retrieval.serve(spark, lexP, ivfP, literal(n), 3, 5, vector = lit)),
+      "fielded by-id fuse" -> (n =>
+        Retrieval.serve(spark, lexFP, ivfP, byId(n), 3, 5, fielded, stored)),
+      "lexical MMR" -> (n =>
+        Retrieval.serve(spark, lexP, ivfP, byId(n), 3, 5, mmr = mmr)),
+      "by-id MMR" -> (n => Retrieval.serve(spark, lexP, ivfP, byId(n), 3, 5,
+        vector = stored, mmr = mmr)),
+      "literal MMR" -> (n => Retrieval.serve(spark, lexP, ivfP, literal(n),
+        3, 5, vector = lit, mmr = mmr)),
+      "filtered by-id fuse" -> (n => Retrieval.serve(spark, lexP, ivfP,
+        byId(n), 3, 5, vector = stored, pred = Some(col("lang") === "en"))))
+    for ((shape, serve) <- shapes) {
+      val j1 = countJobs(serve(1).collect())
+      // built inside the count: a serve runs its eager jobs while building
+      var out: org.apache.spark.sql.DataFrame = null
+      val j6 = countJobs { out = serve(6); out.collect() }
+      val scans = graft.SparkSpec.executedFileScans(out)
+      assert(scans.nonEmpty && scans.forall(_.relation.location.rootPaths
+        .forall(_.toString.contains("/seg-"))), s"$shape read a non-index file")
+      info(s"$shape: $j1 jobs at 1 query, $j6 at 6")
+      assert(j6 <= j1 + 1,
+        s"$shape jobs grew with the batch: $j1 jobs at 1 query, $j6 at 6")
+    }
   }
 
   test("bucketStats: footer totals equal a full-scan group-by; " +

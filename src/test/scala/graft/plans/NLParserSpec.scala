@@ -1044,25 +1044,26 @@ class NLParserSpec extends AnyFunSuite {
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark, join, fast " +
       "with lambda 0.7 at depth 10 probing 4 cells for query 0.").ops ==
-      List(O.LexMmrHybridServe(Seq("spark", "join", "fast"), 5, 0.7, 10,
-        4, 0L)))
+      List(O.LexServe(Seq("spark", "join", "fast"), 5, LexQuery(), 10,
+        Some(ServeArm.ById(0L, 4)), Some(0.7))))
     // without the probing tail the plain at-rest MMR route is untouched
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark with lambda " +
       "0.7 at depth 10.").ops ==
-      List(O.LexMmrServe(Seq("spark"), 5, 0.7, 10)))
+      List(O.LexServe(Seq("spark"), 5, LexQuery(), 10, None, Some(0.7))))
     // the literal-hybrid form takes a trailing lambda (diversified
     // production sentence); without it the plain literal hybrid holds
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark, join fused " +
       "with vector [0.1, -0.2] at depth 10 probing 4 cells with " +
       "lambda 0.7.").ops ==
-      List(O.LexHybridMmrLit(Seq("spark", "join"), Seq(0.1f, -0.2f), 5,
-        0.7, 10, 4)))
+      List(O.LexServe(Seq("spark", "join"), 5, LexQuery(), 10,
+        Some(ServeArm.Literal(Seq(0.1f, -0.2f), 4)), Some(0.7))))
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark fused with " +
       "vector [0.1, -0.2] at depth 10 probing 4 cells.").ops ==
-      List(O.LexHybridServe(Seq("spark"), Seq(0.1f, -0.2f), 5, 10, 4)))
+      List(O.LexServe(Seq("spark"), 5, LexQuery(), 10,
+        Some(ServeArm.Literal(Seq(0.1f, -0.2f), 4)), None)))
   }
 
   test("bm25f weighting routes: field/weight list on the flat scan and " +
@@ -1123,21 +1124,66 @@ class NLParserSpec extends AnyFunSuite {
       "Search the lexical index for top 5 matching spark, join " +
       "weighting title 2, text 1 fused at depth 20 probing 4 cells " +
       "for query 0.").ops ==
-      List(O.LexHybridFielded(Seq("spark", "join"), 5,
-        Seq("title" -> 2.0, "text" -> 1.0), 20, 4, 0L)))
+      List(O.LexServe(Seq("spark", "join"), 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("title" -> 2.0, "text" -> 1.0))),
+        20, Some(ServeArm.ById(0L, 4)), None)))
     // depth defaults to 20; a where tail pre-filters both arms
     assert(NLParser.parse(
       "Search the lexical index for top 5 matching spark weighting " +
       "title 2, text 1 fused probing 4 cells for query 3 where " +
       "lang == 'en'.").ops ==
-      List(O.LexHybridFielded(Seq("spark"), 5,
-        Seq("title" -> 2.0, "text" -> 1.0), 20, 4, 3L,
+      List(O.LexServe(Seq("spark"), 5,
+        LexQuery(scoring = LexQuery.Bm25F(Seq("title" -> 2.0, "text" -> 1.0))),
+        20, Some(ServeArm.ById(3L, 4)), None,
         Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en"))))))
     assert(intercept[NLParser.ParseException] {
       NLParser.parse(
         "Search the lexical index for top 5 matching spark weighting " +
         "title 2, text 1 fused at depth 2 probing 4 cells for query 0.")
     }.msg.contains("depth"))
+  }
+
+  test("every two-store serving form parses to its LexServe (vector arm × " +
+       "MMR, defaults included); forms outside the grammar still fail") {
+    import ServeArm.{ById, Literal}
+    val en = Some(Pred.Cmp(Pred.Eq, "lang", Lit.Str("en")))
+    val lit = Literal(Seq(0.1f, -0.2f), 4)
+    val fielded = LexQuery(scoring = LexQuery.Bm25F(Weights))
+    val st = Seq("spark", "join")
+    val forms: Seq[(String, Op)] = Seq(
+      "spark, join fused with vector [0.1, -0.2] probing 4 cells" ->
+        O.LexServe(st, 5, LexQuery(), 20, Some(lit), None),
+      "spark, join fused with vector [0.1, -0.2] at depth 10 probing 4 " +
+        "cells where lang == 'en'" ->
+        O.LexServe(st, 5, LexQuery(), 10, Some(lit), None, en),
+      "spark, join fused with vector [0.1, -0.2] probing 4 cells with " +
+        "lambda 0.7" ->
+        O.LexServe(st, 5, LexQuery(), 20, Some(lit), Some(0.7)),
+      "spark, join fused with vector [0.1, -0.2] at depth 10 probing 4 " +
+        "cells with lambda 0.7 where lang == 'en'" ->
+        O.LexServe(st, 5, LexQuery(), 10, Some(lit), Some(0.7), en),
+      "spark, join with lambda 0.7" ->
+        O.LexServe(st, 5, LexQuery(), 10, None, Some(0.7)),
+      "spark, join with lambda 0.7 at depth 15" ->
+        O.LexServe(st, 5, LexQuery(), 15, None, Some(0.7)),
+      "spark, join with lambda 0.7 probing 4 cells for query 3" ->
+        O.LexServe(st, 5, LexQuery(), 10, Some(ById(3L, 4)), Some(0.7)),
+      "spark, join with lambda 0.7 at depth 15 probing 4 cells for query 3" ->
+        O.LexServe(st, 5, LexQuery(), 15, Some(ById(3L, 4)), Some(0.7)),
+      "spark, join weighting title 2, text 1 fused probing 4 cells for " +
+        "query 3" ->
+        O.LexServe(st, 5, fielded, 20, Some(ById(3L, 4)), None),
+      "spark, join weighting title 2, text 1 fused at depth 10 probing 4 " +
+        "cells for query 3 where lang == 'en'" ->
+        O.LexServe(st, 5, fielded, 10, Some(ById(3L, 4)), None, en))
+    for ((form, op) <- forms)
+      assert(NLParser.parse(s"$ProbeRoute $form.").ops == List(op), form)
+    val outside = Seq(
+      "\"spark join\" fused with vector [0.1, -0.2] probing 4 cells",
+      "spark weighting title 2, text 1 with lambda 0.7",
+      "spark fused with vector [0.1, -0.2] probing 4 cells for query 0")
+    for (form <- outside)
+      intercept[NLParser.ParseException](NLParser.parse(s"$ProbeRoute $form."))
   }
 
   test("filtered lexical retrieval: 'where' tails on the flat scan and " +

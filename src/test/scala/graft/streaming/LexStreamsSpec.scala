@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
-import graft.operators.{IvfIndex, LexIndex, LexQuery, Retrieval}
+import graft.operators.{IvfIndex, LexIndex, LexQuery, Retrieval, ServeVector}
 
 /** Streaming keyword/hybrid serving ≡ batch probes — the
   * [[VectorStreamsSpec]] contract for the lexical arm: batching
@@ -153,8 +153,8 @@ class LexStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Seq[String])]
     val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
       s"$dir/ckpt") { b =>
-      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
-        nprobe = 1)
+      Retrieval.serve(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        vector = Some(ServeVector.Stored(1)))
     }
     try {
       stream.addData(queryFx.take(1))
@@ -163,8 +163,9 @@ class LexStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally stopQuietly(q)
     val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
-    val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
-      queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1))
+    val batch = ranked(Retrieval.serve(spark, lexP, ivfP,
+      queriesDf(queryFx.take(2)), K, depth = 5,
+      vector = Some(ServeVector.Stored(1))))
     assert(streamed == batch && streamed.nonEmpty)
     assert(Serving.served(spark, s"$dir/none",
       Serving.LexicalSchema).columns.toSeq ==
@@ -301,17 +302,19 @@ class LexStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Seq[String])]
     val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
       s"$dir/ckpt") { b =>
-      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
-        nprobe = 1, q = LexQuery(scoring = LexQuery.Bm25F(fw)))
+      Retrieval.serve(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        q = LexQuery(scoring = LexQuery.Bm25F(fw)),
+        vector = Some(ServeVector.Stored(1)))
     }
     try {
       stream.addData(queryFx.take(1)); q.processAllAvailable()
       stream.addData(queryFx.slice(1, 2)); q.processAllAvailable()
     } finally stopQuietly(q)
     val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
-    val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
-      queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1,
-      q = LexQuery(scoring = LexQuery.Bm25F(fw))))
+    val batch = ranked(Retrieval.serve(spark, lexP, ivfP,
+      queriesDf(queryFx.take(2)), K, depth = 5,
+      q = LexQuery(scoring = LexQuery.Bm25F(fw)),
+      vector = Some(ServeVector.Stored(1))))
     assert(streamed == batch && streamed.nonEmpty)
   }
 
@@ -332,17 +335,17 @@ class LexStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Seq[String], Seq[Float])]
     val q = Serving.serve(stream.toDF().toDF("query_id", "terms", "embedding"),
       s"$dir/out", s"$dir/ckpt") { b =>
-      Retrieval.hybridServeLiteral(b.sparkSession, lexP, ivfP, b, K, depth = 5,
-        nprobe = 1)
+      Retrieval.serve(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        vector = Some(ServeVector.Literal(1)))
     }
     try {
       stream.addData(litFx.take(1)); q.processAllAvailable()
       stream.addData(litFx.drop(1)); q.processAllAvailable()
     } finally stopQuietly(q)
     val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
-    val batch = ranked(Retrieval.hybridServeLiteral(spark, lexP, ivfP,
+    val batch = ranked(Retrieval.serve(spark, lexP, ivfP,
       spark.createDataFrame(litFx).toDF("query_id", "terms", "embedding"),
-      K, depth = 5, nprobe = 1))
+      K, depth = 5, vector = Some(ServeVector.Literal(1))))
     assert(streamed == batch && streamed.nonEmpty)
   }
 
@@ -364,16 +367,17 @@ class LexStreamsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Seq[String])]
     val q = Serving.serve(stream.toDF().toDF("query_id", "terms"), s"$dir/out",
       s"$dir/ckpt") { b =>
-      Retrieval.hybridServe(b.sparkSession, lexP, ivfP, b, K, depth = 5,
-        nprobe = 1, pred = pred)
+      Retrieval.serve(b.sparkSession, lexP, ivfP, b, K, depth = 5,
+        vector = Some(ServeVector.Stored(1)), pred = pred)
     }
     try {
       stream.addData(queryFx.take(2))
       q.processAllAvailable()
     } finally stopQuietly(q)
     val streamed = ranked(Serving.served(spark, s"$dir/out", Serving.LexicalSchema))
-    val batch = ranked(Retrieval.hybridServe(spark, lexP, ivfP,
-      queriesDf(queryFx.take(2)), K, depth = 5, nprobe = 1, pred = pred))
+    val batch = ranked(Retrieval.serve(spark, lexP, ivfP,
+      queriesDf(queryFx.take(2)), K, depth = 5,
+      vector = Some(ServeVector.Stored(1)), pred = pred))
     assert(streamed == batch && streamed.nonEmpty)
     // only en documents (even ids) ever serve
     assert(streamed.forall { case (_, d, _, _) => d % 2 == 0 })
