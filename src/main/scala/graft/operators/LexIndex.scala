@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
-
-import graft.operators.IvfIndex.SegEntry
 
 /** Persisted inverted index — the at-rest serving form of BM25
   * ([[Retrieval.bm25TopK]] is the per-query scan form), shaped by the
@@ -37,19 +35,12 @@ import graft.operators.IvfIndex.SegEntry
   *    for why the filter must NOT push below the df window);
   *  - segments land behind an atomic versioned manifest rename
   *    (`lex-manifest-<v>.txt`, newest wins): append publishes one new
-  *    segment + summed stats, a crash anywhere leaves the old index
-  *    serving, and a racing appender loses the rename loudly
-  *    ([[ConcurrentWriteException]]) and retries against
-  *    the winner;
-  *  - the full maintenance lifecycle of the vector index: [[compact]]
-  *    folds append segments into one (content-invariant, sync cursors
-  *    carried forward), [[vacuum]] reclaims superseded bytes,
-  *    [[deleteByKey]]/[[deleteWhere]] are compliance erasure
-  *    (copy-on-write bounded to the buckets containing the documents'
-  *    terms, stats adjusted exactly, one atomic flip), and
-  *    [[ingest]]/[[buildFromLog]]/[[syncFromLog]] track a growing
-  *    manifested corpus exactly-once (cursor = the sync tag in the
-  *    live manifest — [[SyncCursors]]).
+  *    segment + summed stats;
+  *  - the segment lifecycle — ingest, change-feed sync, compact,
+  *    erase, pins and vacuum — is [[SegmentedIndex]]'s, over the `tb`
+  *    partition; this index adds the `_df` sidecar every written
+  *    segment gets ([[DfSidecarDir]]) and an erase's exact stats
+  *    adjustment ([[onErase]]).
   *
   * Because tf/dl/N/Σdl are stored exactly and scoring runs through
   * [[Retrieval.scoreAndRank]] — the SAME tail as the flat scan — an
@@ -57,13 +48,16 @@ import graft.operators.IvfIndex.SegEntry
   * corpus (spec-pinned in LexIndexSpec, hash-pinned by x100 sharing
   * x98's oracle replay).
   */
-object LexIndex {
+object LexIndex extends SegmentedIndex[Int]("lex-manifest", "tb", "doc_id",
+                                             "a lexical index", _.toInt) {
+
+  type M = LexManifest
 
   private val Header = "graft-lex-index-manifest-v1"
 
   /** Column names the postings layout owns; attribute columns may not
     * collide with them. */
-  private val ReservedCols =
+  protected val reservedCols: Set[String] =
     Set("term", "doc_id", "tf", "dl", "tb", "positions", "fi", "dls")
 
   /** Sentinel for [[build]]'s `buckets`: size the bucket count from the
@@ -127,17 +121,11 @@ object LexIndex {
     math.floorMod(h, buckets.toLong).toInt
   }
 
-  private def fs(spark: SparkSession, root: Path): FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def dir(spark: SparkSession, root: Path): VersionedDir =
-    new VersionedDir(fs(spark, root), root, "lex-manifest")
-
   /** Authoritative read schema: attribute columns sit between the
     * counts and the partition column; `tb` is declared INT here so the
     * partition column never wraps in a cast (which would block
     * partition pruning — the [[IvfIndex]] lesson, spec-pinned). */
-  private def postingsSchema(m: LexManifest): StructType =
+  protected def schema(m: LexManifest): StructType =
     if (m.fielded)
       // fielded layout: one posting per (term, doc, FIELD) with the
       // field ordinal and the doc's per-field lengths (constant per
@@ -169,15 +157,6 @@ object LexIndex {
       StructField("tb", org.apache.spark.sql.types.IntegerType))
 
   // ----------------------------------------------------------- manifest
-
-  def versions(spark: SparkSession, path: String): Seq[Long] =
-    dir(spark, new Path(path)).versions
-
-  def readManifest(spark: SparkSession, path: String): LexManifest = {
-    val v = versions(spark, path).lastOption.getOrElse(
-      sys.error(s"no lex manifest under $path — not a lexical index"))
-    readManifestAt(spark, path, v)
-  }
 
   private[operators] def readManifestAt(spark: SparkSession, path: String,
                                         v: Long): LexManifest = {
@@ -216,7 +195,16 @@ object LexIndex {
                 attrs, positional, dfSegs, fields, fieldSums)
   }
 
-  private def publish(spark: SparkSession, root: Path, m: LexManifest): Unit =
+  protected def versionOf(m: LexManifest): Long = m.version
+  protected def entriesOf(m: LexManifest): Seq[SegEntry] = m.entries
+
+  /** Every written segment carries its `_df` sidecar. */
+  protected def next(m: LexManifest, entries: Seq[SegEntry],
+                     written: Seq[String]): LexManifest =
+    m.copy(version = m.version + 1, entries = entries,
+      dfSegs = (m.dfSegs ++ written).intersect(entries.map(_.name).toSet))
+
+  protected def publish(spark: SparkSession, root: Path, m: LexManifest): Unit =
     dir(spark, root).publish(m.version,
       Seq(Header, s"stats=${m.nDocs},${m.sumDl}", s"buckets=${m.buckets}") ++
         m.attrsDdl.map(d => s"attrs=$d").toSeq ++
@@ -228,18 +216,6 @@ object LexIndex {
         m.entries.map(_.render))
 
   // ------------------------------------------------------------- build
-
-  /** The attribute DDL drawn from the input frame's schema (name, type,
-    * nullability verbatim), after the reserved-name guard. */
-  private def attrsDdlOf(docs: DataFrame, attrs: Seq[String]): Option[String] = {
-    attrs.foreach { a =>
-      require(!ReservedCols.contains(a),
-        s"attribute column '$a' collides with a postings layout column " +
-          s"(${ReservedCols.toSeq.sorted.mkString(", ")})")
-    }
-    if (attrs.isEmpty) None
-    else Some(StructType(attrs.map(a => docs.schema(a))).toDDL)
-  }
 
   /** Postings of one document batch, WITHOUT the bucket column — ONE
     * corpus tokenize + (doc, term) shuffle, paid at build so probes
@@ -387,39 +363,23 @@ object LexIndex {
       .write.mode("overwrite").partitionBy("tb")
       .parquet(new Path(target, DfSidecarDir).toString)
 
-  private def writeSegment(spark: SparkSession, root: Path, name: String,
-                           postings: DataFrame, buckets: Int): Unit = {
-    val f = fs(spark, root)
-    val target = new Path(root, name)
-    if (f.exists(target)) f.delete(target, true) // unreferenced leftover
-    val withTb = postings
-      .withColumn("tb",
-        udf((t: String) => termBucket(t, buckets)).apply(col("term")))
-    withTb
-      // term-sorted files inside each bucket partition: a probed bucket
-      // row-group-skips straight to its terms via the pushed term filter
-      .repartition(col("tb")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").partitionBy("tb").parquet(target.toString)
+  /** Term-sorted files inside each bucket partition: a probed bucket
+    * row-group-skips straight to its terms via the pushed term filter. */
+  protected def sortKeys: Seq[Column] = Seq(col("term"), col("doc_id"))
+  protected def eraseFileRows: Option[Long] = None
+  override protected def sidecarDirs: Seq[String] = Seq(DfSidecarDir)
+
+  override protected def afterWrite(spark: SparkSession, target: Path): Unit = {
     writeDfSidecar(spark, target)
-    f.delete(new Path(target, "_SUCCESS"), false)
-    f.delete(new Path(target, s"$DfSidecarDir/_SUCCESS"), false)
+    fs(spark, target).delete(new Path(target, s"$DfSidecarDir/_SUCCESS"), false)
   }
 
-  /** A segment of rows ALREADY carrying the postings schema (stored tb
-    * included) — the erase path's writer: bucket assignments are
-    * preserved, never recomputed. */
-  private def writeRawSegment(spark: SparkSession, root: Path, name: String,
-                              rows: DataFrame): Unit = {
-    val f = fs(spark, root)
-    val target = new Path(root, name)
-    if (f.exists(target)) f.delete(target, true)
-    rows
-      .repartition(col("tb")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").partitionBy("tb").parquet(target.toString)
-    writeDfSidecar(spark, target)
-    f.delete(new Path(target, "_SUCCESS"), false)
-    f.delete(new Path(target, s"$DfSidecarDir/_SUCCESS"), false)
-  }
+  /** A postings segment, hashed into `buckets` term buckets. */
+  private def writePostings(spark: SparkSession, root: Path, name: String,
+                            postings: DataFrame, buckets: Int): Unit =
+    writeSegment(spark, root, name, postings
+      .withColumn("tb",
+        udf((t: String) => termBucket(t, buckets)).apply(col("term"))))
 
   /** Build (or rebuild) the index: one postings segment, stats from the
     * same batch, one atomic manifest flip. `buckets = AutoBuckets`
@@ -451,7 +411,7 @@ object LexIndex {
       } else buckets
     val version = versions(spark, path).lastOption.getOrElse(0L) + 1
     val seg = f"seg-$version%09d"
-    try writeSegment(spark, root, seg, postings, nBuckets)
+    try writePostings(spark, root, seg, postings, nBuckets)
     finally if (buckets == AutoBuckets) postings.unpersist()
     val (n, sd) = statsOf(docs, idCol, textCol)
     publish(spark, root,
@@ -480,7 +440,7 @@ object LexIndex {
     require(fields.nonEmpty, "buildFielded needs at least one field")
     require(buckets > 0 || buckets == AutoBuckets,
       s"buckets must be positive (or LexIndex.AutoBuckets), got $buckets")
-    fields.foreach { f => require(!ReservedCols.contains(f),
+    fields.foreach { f => require(!reservedCols.contains(f),
       s"field column '$f' collides with a postings layout column") }
     val spark = docs.sparkSession
     val root = new Path(path)
@@ -493,7 +453,7 @@ object LexIndex {
       } else buckets
     val version = versions(spark, path).lastOption.getOrElse(0L) + 1
     val seg = f"seg-$version%09d"
-    try writeSegment(spark, root, seg, postings, nBuckets)
+    try writePostings(spark, root, seg, postings, nBuckets)
     finally if (buckets == AutoBuckets) postings.unpersist()
     val (n, raw, sums) = statsOfFielded(docs, idCol, fields)
     publish(spark, root,
@@ -506,7 +466,8 @@ object LexIndex {
     * (hashed under the manifest's frozen bucket count), stats summed
     * (exact integer addition — order-free), one atomic flip — cost ∝
     * batch, the ingest-screen shape. Batch doc ids must be new (same
-    * contract as [[IvfIndex.append]]); attribute columns recorded at
+    * contract as [[IvfIndex.append]]); a fielded index reads its field
+    * columns, a plain one `text`, and attribute columns recorded at
     * build are carried from the batch (a missing one fails loudly at
     * analysis).
     *
@@ -525,28 +486,27 @@ object LexIndex {
     * segment and fails loudly instead of publishing postings hashed
     * under a replaced spread. */
   def append(docs: DataFrame, path: String,
-             idCol: String = "doc_id", textCol: String = "text",
-             batchTag: Option[String] = None): Long = {
+             batchTag: Option[String]): Long = {
     batchTag.foreach(VersionedDir.requireName("batch tags", _))
     val spark = docs.sparkSession
     val root = new Path(path)
     val m0 = readManifest(spark, path)
     if (batchTag.exists(VersionedDir.delivered(m0.segments, _))) return m0.version
     val seg = VersionedDir.segmentName(batchTag)
-    writeSegment(spark, root, seg,
+    writePostings(spark, root, seg,
       m0.fields match {
         case Some(fs) =>
-          postingsOfFielded(docs, idCol, fs, m0.attrs.fieldNames.toSeq,
+          postingsOfFielded(docs, "doc_id", fs, m0.attrs.fieldNames.toSeq,
             m0.positional)
         case None =>
-          postingsOf(docs, idCol, textCol, m0.attrs.fieldNames.toSeq,
+          postingsOf(docs, "doc_id", "text", m0.attrs.fieldNames.toSeq,
             m0.positional)
       },
       m0.buckets)
     val (n, sd, sums) = m0.fields match {
-      case Some(fs) => statsOfFielded(docs, idCol, fs)
+      case Some(fs) => statsOfFielded(docs, "doc_id", fs)
       case None =>
-        val (a, b) = statsOf(docs, idCol, textCol); (a, b, Nil)
+        val (a, b) = statsOf(docs, "doc_id", "text"); (a, b, Nil)
     }
     // a rebuild may replace the bucket spread, attrs, positions, fields
     dir(spark, root).publishSegment(seg, batchTag, m0,
@@ -560,201 +520,37 @@ object LexIndex {
     }
   }
 
-  /** Streaming ingest twin: each micro-batch appends one batch-tagged
-    * segment — re-delivered batches no-op on the tag, so restarts
-    * upgrade to exactly-once index content; every batch is one atomic
-    * manifest flip, so a concurrent [[search]] sees whole batches or
-    * nothing. */
-  def ingest(docs: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        append(batch, path, batchTag = Some(batchId.toString)); ()
-      }
-      .start()
-
-  // ------------------------------------------------- change-feed sync
-
-  /** Record that the index content reflects the log AS OF `version` —
-    * the [[IvfIndex.markSynced]] twin (shared [[SyncCursors]]). */
-  def markSynced(spark: SparkSession, indexPath: String, logPath: String,
-                 version: Long): Unit = {
-    val root = new Path(indexPath)
-    SyncCursors.writeBase(fs(spark, root), root,
-      SyncCursors.logTag(logPath), version)
-  }
-
-  /** The log version this index's content reflects — max of the build
-    * base and every sync tag in the live manifest (one atomic rename
-    * carries segment AND cursor; [[compact]] persists tags into the
-    * base file before folding them away). */
-  def syncedVersion(spark: SparkSession, indexPath: String,
-                    logPath: String): Option[Long] = {
-    val root = new Path(indexPath)
-    SyncCursors.syncedVersion(fs(spark, root), root,
-      SyncCursors.logTag(logPath), readManifest(spark, indexPath).segments)
-  }
-
-  /** Build the index from a manifested documents log's CURRENT content
-    * and record the log version it reflects — the starting point of
-    * the change-feed loop ([[syncFromLog]] then tracks the log forward
-    * without rebuilds). `key` must be unique in the log. */
+  /** [[build]] from a manifested documents log's `doc_id`, `text` and
+    * `attrs` columns ([[SegmentedIndex]]'s change-feed starting
+    * point). */
   def buildFromLog(spark: SparkSession, logPath: String, indexPath: String,
                    buckets: Int = AutoBuckets,
-                   key: String = "doc_id", textCol: String = "text",
                    attrs: Seq[String] = Nil,
-                   positions: Boolean = false): Long = {
-    val (logV, _) = ManifestedLog.readManifest(spark, logPath)
-    val docs = ManifestedLog.load(spark, logPath)
-      .select(col(key) +: col(textCol) +: attrs.map(col): _*)
-    val v = build(docs, indexPath, buckets, key, textCol, attrs, positions)
-    markSynced(spark, indexPath, logPath, logV)
-    v
-  }
+                   positions: Boolean = false): Long =
+    buildFromLogWith(spark, logPath, indexPath, Seq("doc_id", "text") ++ attrs)(
+      build(_, indexPath, buckets, attrs = attrs, positions = positions))
 
-  /** Advance the index to the log's newest version: compute the delta
-    * with the log's own change feed ([[ManifestedLog.changesBetween]] —
-    * cost ∝ touched days, never the log) and [[append]] it under the
-    * sync batch tag. Returns (log version synced to, index manifest
-    * version). EXACTLY-ONCE by construction — the cursor is the sync
-    * tag in the live manifest, landed by the same atomic rename as the
-    * segment; a re-run against an unchanged log is a pure no-op
-    * (the [[IvfIndex.syncFromLog]] contract, postings-side). */
-  def syncFromLog(spark: SparkSession, logPath: String, indexPath: String,
-                  key: String = "doc_id",
-                  textCol: String = "text"): (Long, Long) = {
-    val from = syncedVersion(spark, indexPath, logPath).getOrElse(sys.error(
-      s"$indexPath has no sync cursor for log $logPath — build it with " +
-        "buildFromLog (or markSynced the version its content reflects)"))
-    val (to, _) = ManifestedLog.readManifest(spark, logPath)
-    val m = readManifest(spark, indexPath)
-    if (to == from) return (from, m.version)
-    val delta0 =
-      if (from == 0L) ManifestedLog.load(spark, logPath)
-      else ManifestedLog.changesBetween(spark, logPath, from, to, key)
-    // a fielded index ingests its manifest's field columns; a plain one
-    // the text column — either way the attrs ride
-    val delta = delta0
-      .select(col(key) +: (m.fields.getOrElse(Seq(textCol)) ++
-        m.attrs.fieldNames.toSeq).map(col): _*)
-    val v = append(delta, indexPath, idCol = key, textCol = textCol,
-      batchTag = Some(s"${SyncCursors.logTag(logPath)}-$from-$to"))
-    (to, v)
-  }
+  /** A fielded index ingests its manifest's field columns, a plain one
+    * the text column — either way the attrs ride. */
+  protected def logColumns(m: LexManifest): Seq[String] =
+    "doc_id" +: (m.fields.getOrElse(Seq("text")) ++ m.attrs.fieldNames.toSeq)
 
-  // -------------------------------------------------------- maintenance
-
-  /** Fold every segment into one (content-identical, fewer files);
-    * readers flip atomically with the manifest, the bucket count and
-    * stats carry forward unchanged (compaction moves bytes, never the
-    * layout), and sync cursors persist into their base files before
-    * the tagged segment names fold away ([[SyncCursors.persistCursors]]
-    * — without it the next [[syncFromLog]] would replay, and
-    * duplicate, every already-ingested delta). Erase skips fold away
-    * too: the merged read excludes skipped buckets, so compaction
-    * doubles as the PHYSICAL completion of a prior [[deleteByKey]].
-    *
-    * Hot buckets (a stop-word-like term's posting list) RE-TILE
-    * instead of re-concentrating: per-bucket posting counts size a
-    * tile count (⌈rows/maxRowsPerFile⌉), a broadcast join tags each
-    * row's tile, and the shuffle spreads a hot bucket over that many
-    * write tasks — compaction cost tracks the skewed bucket's size
-    * with parallelism, not one straggler task. The per-bucket counts
-    * come from parquet FOOTERS ([[bucketStats]] — [[IvfIndex.compact]]'s
-    * cellStats recipe), so sizing the tiles never re-reads the posting
-    * bytes the fold is about to move (it used to be a second full
-    * postings pass); when no bucket re-tiles (the non-skewed common
-    * case) the tile join and column drop out of the plan entirely. */
-  def compact(spark: SparkSession, path: String,
-              maxRowsPerFile: Long = 1L << 20): Long = {
-    require(maxRowsPerFile > 0, s"maxRowsPerFile must be positive")
-    import spark.implicits._
-    val root = new Path(path)
-    val m = readManifest(spark, path)
-    val merged = readPostingsWith(spark, path, m)
-    val tiles = bucketStatsOf(spark, root, m).select("tb", "n_rows").collect()
-      .map(r => (r.getInt(0),
-        math.ceil(r.getLong(1).toDouble / maxRowsPerFile).toLong))
-      .filter(_._2 > 1)
-    val seg = f"seg-${m.version + 1}%09d"
-    val f = fs(spark, root)
-    val target = new Path(root, seg)
-    if (f.exists(target)) f.delete(target, true)
-    val retiled =
-      if (tiles.isEmpty) merged.repartition(col("tb"))
-      else merged
-        .join(broadcast(tiles.toSeq.toDF("tb", "tiles")), Seq("tb"), "left")
-        .withColumn("tile",
-          pmod(col("doc_id"), greatest(coalesce(col("tiles"), lit(1L)),
-            lit(1L))))
-        .repartition(col("tb"), col("tile"))
-        .drop("tile", "tiles")
-    retiled
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRowsPerFile)
-      .partitionBy("tb").parquet(target.toString)
-    writeDfSidecar(spark, target)
-    f.delete(new Path(target, "_SUCCESS"), false)
-    f.delete(new Path(target, s"$DfSidecarDir/_SUCCESS"), false)
-    SyncCursors.persistCursors(f, root, m.segments)
-    publish(spark, root, LexManifest(m.version + 1, Seq(SegEntry(seg)),
-      m.buckets, m.nDocs, m.sumDl, m.attrsDdl, m.positional, Set(seg),
-      m.fields, m.fieldSums))
-    m.version + 1
-  }
-
-  /** Compliance erasure — "forget document X" for the one store that
-    * would otherwise keep serving its content by keyword after the log
-    * ([[ManifestedLog.deleteByKey]]) and the vector index
-    * ([[IvfIndex.deleteByKey]]) have both forgotten it. */
-  def deleteByKey(spark: SparkSession, path: String, keys: Seq[Long],
-                  maxRetries: Int = 5): Long = {
-    require(keys.nonEmpty, "deleteByKey needs at least one doc id")
-    deleteWhere(spark, path, col("doc_id").isin(keys: _*), maxRetries)
-  }
-
-  /** [[deleteByKey]] generalized to a DOCUMENT-level predicate over the
-    * postings columns (doc_id and the stored attribute columns — a
-    * document's attributes are constant across its postings; a
-    * term-level predicate would leave partial documents whose manifest
-    * stats no longer reconcile, so don't). Fully distributed — no id
-    * list materializes. Rows where the predicate is TRUE are erased;
-    * NULL is not-erased.
-    *
-    * COPY-ON-WRITE BOUNDED TO CONTAINING BUCKETS: one pushed-predicate
-    * scan locates the (segment, bucket) pairs holding the documents'
-    * postings; each affected segment contributes one ERASE segment
-    * holding only those buckets' SURVIVING rows (stored bucket
-    * assignments preserved), and the old entry gains a `skip=` set for
-    * them — untouched buckets and segments are not read, not
-    * rewritten, not even listed. The manifest stats subtract the
-    * erased documents' exact (count, Σdl) in the SAME atomic flip, so
-    * every post-erase probe scores over the corpus-minus-erased —
-    * score-identical to a flat scan of the surviving documents.
-    * Physical completion via [[vacuum]] or [[compact]]. Idempotent:
-    * erasing already-absent documents publishes nothing. */
-  def deleteWhere(spark: SparkSession, path: String, pred: Column,
-                  maxRetries: Int = 5): Long = {
-    val root = new Path(path)
-    val m = readManifest(spark, path)
-    val schema = postingsSchema(m)
-    // ONE job: per-segment branches union under a segment-name literal,
-    // each branch's predicate pushed into its scan
-    val hits = m.entries.map { e =>
-      segFrame(spark, root, e, schema)
-        .filter(pred)
-        .select(lit(e.name).as("seg"), col("tb"))
-    }.reduce(_.unionByName(_)).distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1)))
-    if (hits.isEmpty) return m.version
+  /** An erase subtracts the erased documents' exact (count, Σdl) — and
+    * on a fielded index the per-field sums — in the same atomic flip,
+    * so every post-erase probe scores over the corpus minus the erased
+    * documents, score-identical to a flat scan of the survivors. A
+    * document-level predicate is required (a term-level one would
+    * leave partial documents whose stats no longer reconcile). */
+  override protected def onErase(spark: SparkSession, root: Path,
+                                 m: LexManifest,
+                                 pred: Column): LexManifest => LexManifest = {
     // the erased documents' exact stats delta: distinct (doc_id, dl[s])
     // of matched postings — lengths are constant per document, and the
     // append contract (new ids per batch) keeps a document in one
-    // segment. Fielded indexes also subtract per-field exact sums.
+    // segment
+    val sch = schema(m)
     val goneDocsDf = m.entries.map { e =>
-      segFrame(spark, root, e, schema).filter(pred)
+      segFrame(spark, root, e, sch).filter(pred)
         .select("doc_id", if (m.fielded) "dls" else "dl")
     }.reduce(_.unionByName(_)).distinct()
     val (goneDocs, goneDl, goneSums) =
@@ -770,108 +566,10 @@ object LexIndex {
         val sums = (0 until nf).map(i => g.getLong(i + 1))
         (g.getLong(0), sums.sum, sums)
       }
-    val affected: Map[String, Seq[Long]] =
-      hits.groupBy(_._1).map { case (s, bs) =>
-        s -> bs.map(_._2.toLong).toSeq.sorted }
-    val eraseEntries = affected.toSeq.sortBy(_._1).map { case (segName, bks) =>
-      val e = m.entries.find(_.name == segName).getOrElse(
-        sys.error(s"located segment $segName vanished from the manifest"))
-      val newSeg = s"seg-${VersionedDir.token()}-e"
-      // partition filter first: the rewrite READS only the containing
-      // buckets' files (pruned at listing), then drops the erased rows —
-      // NULL-predicate rows survive (coalesce, not bare negation)
-      val survivors = segFrame(spark, root, e, schema)
-        .filter(col("tb").isin(bks.map(b => Integer.valueOf(b.toInt)): _*))
-        .filter(!coalesce(pred, lit(false)))
-      writeRawSegment(spark, root, newSeg, survivors)
-      SegEntry(newSeg)
-    }
-    val newEntries = m.entries.map { e =>
-      affected.get(e.name) match {
-        case Some(bks) => e.copy(skip = (e.skip ++ bks).distinct.sorted)
-        case None => e
-      }
-    } ++ eraseEntries
-    try {
-      publish(spark, root, LexManifest(m.version + 1, newEntries, m.buckets,
-        m.nDocs - goneDocs, m.sumDl - goneDl, m.attrsDdl, m.positional,
-        m.dfSegs ++ eraseEntries.map(_.name), m.fields,
-        m.fieldSums.zip(goneSums).map { case (a, b) => a - b }))
-      m.version + 1
-    } catch {
-      case e: ConcurrentWriteException =>
-        // a racer published (append/compact/rebuild) — our located
-        // buckets and stats may be stale; drop the staged erase
-        // segments and redo against the new state
-        val f = fs(spark, root)
-        eraseEntries.foreach(es => f.delete(new Path(root, es.name), true))
-        if (maxRetries <= 0) throw e
-        deleteWhere(spark, path, pred, maxRetries - 1)
-    }
+    n => n.copy(nDocs = n.nDocs - goneDocs, sumDl = n.sumDl - goneDl,
+      fieldSums = n.fieldSums.zip(goneSums).map { case (a, b) => a - b })
   }
 
-  /** Reader pins — the [[VersionedDir]] handshake
-    * ([[ManifestedLog.pin]]'s contract, postings side): a long-running
-    * reader (a retrieval evaluation replaying one index version) pins
-    * BEFORE the long read, and [[vacuum]] keeps every pinned manifest
-    * with its segments until unpinned. A pin either protects its
-    * version or fails loudly at pin time. */
-  def pin(spark: SparkSession, path: String, name: String, version: Long): Long =
-    dir(spark, new Path(path)).pin(name, version)
-
-  /** Drop the named pin; true if it existed. */
-  def unpin(spark: SparkSession, path: String, name: String): Boolean =
-    dir(spark, new Path(path)).unpin(name)
-
-  /** All registered pins, name → version. */
-  def pins(spark: SparkSession, path: String): Map[String, Long] =
-    dir(spark, new Path(path)).pins
-
-  /** Drop superseded manifests, the segments no retained manifest
-    * references, and — completing [[deleteByKey]]'s physical erasure —
-    * every bucket directory ALL retaining manifests skip. Retention is
-    * keepVersions ∪ [[pin]]s: every pinned manifest survives with its
-    * segments until unpinned. The `orphanMinAgeMs` guard protects
-    * never-referenced entries an in-flight [[append]]/[[ingest]] is
-    * still staging (the [[IvfIndex.vacuum]] contract): sweeps beside
-    * live ingest should set it above the longest append; the 0 default
-    * keeps eager cleanup for single-writer use. Also reclaims the
-    * orphaned segment a crashed appender left behind (written, never
-    * published). */
-  def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1,
-             orphanMinAgeMs: Long = 0L): Long = {
-    val root = new Path(path)
-    val (kept, swept) = dir(spark, root).vacuum(keepVersions, orphanMinAgeMs)(
-      readManifestAt(spark, path, _))(_.segments, _.startsWith("seg-"))
-    // physical erase completion: a live segment's bucket dir reclaims
-    // when EVERY kept manifest referencing the segment skips it
-    val f = fs(spark, root)
-    var removed = swept
-    SegEntry.skippedByAll(kept.flatMap(_.entries)).foreach { case (seg, bks) =>
-      bks.foreach { b =>
-        val bucketDir = new Path(root, s"$seg/tb=$b")
-        if (f.exists(bucketDir)) { f.delete(bucketDir, true); removed += 1 }
-        // the bucket's df-sidecar statistics go with it (readers already
-        // exclude skipped buckets, so this is hygiene, not correctness).
-        // Sidecar deletions do NOT increment the returned count — it
-        // means "reclaimed manifests + segments + data bucket dirs", the
-        // meaning callers have always read it as.
-        val dfDir = new Path(root, s"$seg/$DfSidecarDir/tb=$b")
-        if (f.exists(dfDir)) f.delete(dfDir, true)
-      }
-    }
-    removed
-  }
-
-  /** Per-bucket posting/byte/file counts from parquet FOOTERS only —
-    * the lexical twin of [[IvfIndex.cellStats]]: hot-BUCKET skew (a
-    * stop-word-like term's posting list — the inverted index's classic
-    * failure mode, which [[compact]]'s re-tiling addresses) visible at
-    * metadata cost, never a data scan. The file listing is driver-side
-    * planner work bounded by the manifest's file count; the footer
-    * reads distribute. Row totals are exact, so a full-scan group-by
-    * is the equality certificate (x113). Erase-skipped buckets are
-    * excluded, as every reader excludes them. */
   /** The df-sidecar set a probe will actually USE: the manifest's `df=`
     * registration — or, for a LEGACY manifest (an empty set alongside
     * live segments, impossible from current build/append/compact, which
@@ -914,37 +612,15 @@ object LexIndex {
       .orderBy("segment")
   }
 
+  /** Per-bucket `(tb, n_rows, bytes, files)` from parquet FOOTERS only
+    * ([[SegmentedIndex.footerStats]]) — the lexical twin of
+    * [[IvfIndex.cellStats]]: hot-BUCKET skew (a stop-word-like term's
+    * posting list — the inverted index's classic failure mode, which
+    * [[compact]]'s re-tiling addresses) at metadata cost. Row totals
+    * are exact, so a full-scan group-by is the equality certificate
+    * (x113). */
   def bucketStats(spark: SparkSession, path: String): DataFrame =
-    bucketStatsOf(spark, new Path(path), readManifest(spark, path))
-
-  /** [[bucketStats]] of the manifest `m` — [[compact]] sizes its tiles
-    * from the manifest it folds, not a newer one. */
-  private[operators] def bucketStatsOf(spark: SparkSession, root: Path,
-                                       m: LexManifest): DataFrame = {
-    import spark.implicits._
-    val f = fs(spark, root)
-    val TbRe = "tb=(\\d+)".r
-    val files: Seq[(Int, String, Long)] = for {
-      e <- m.entries
-      tbDir <- f.listStatus(new Path(root, e.name)).toSeq
-      tm <- TbRe.findFirstMatchIn(tbDir.getPath.getName).toSeq
-      if !e.skip.contains(tm.group(1).toLong)
-      st <- f.listStatus(tbDir.getPath).toSeq
-      if st.getPath.getName.endsWith(".parquet")
-    } yield (tm.group(1).toInt, st.getPath.toString, st.getLen)
-    val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val slices = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(files, slices)
-      .map { case (tb, file, bytes) =>
-        (tb, Footers.rowCount(bc.value.value, file), bytes)
-      }
-      .toDF("tb", "n_rows", "bytes")
-      .groupBy("tb")
-      .agg(sum("n_rows").as("n_rows"), sum("bytes").as("bytes"),
-           count(lit(1)).as("files"))
-  }
+    footerStats(spark, new Path(path), readManifest(spark, path))
 
   // -------------------------------------------------------------- read
 
@@ -952,24 +628,7 @@ object LexIndex {
     * the NL maintenance verbs' content read-back). Erase-skipped
     * buckets are pruned at listing inside each segment branch. */
   def readPostings(spark: SparkSession, path: String): DataFrame =
-    readPostingsWith(spark, path, readManifest(spark, path))
-
-  private def segFrame(spark: SparkSession, root: Path, e: SegEntry,
-                       schema: StructType): DataFrame = {
-    val df = spark.read.schema(schema)
-      .parquet(new Path(root, e.name).toString)
-    // a skip is a partition predicate: excluded buckets prune at listing
-    if (e.skip.isEmpty) df
-    else df.filter(!col("tb").isin(e.skip.map(b => Integer.valueOf(b.toInt)): _*))
-  }
-
-  private def readPostingsWith(spark: SparkSession, path: String,
-                               m: LexManifest): DataFrame = {
-    val root = new Path(path)
-    val schema = postingsSchema(m)
-    m.entries.map(segFrame(spark, root, _, schema))
-      .reduce(_.unionByName(_))
-  }
+    frame(spark, new Path(path), readManifest(spark, path))
 
   // ------------------------------------------------------------- probe
 
@@ -1197,7 +856,7 @@ object LexIndex {
     * the partitions holding some query term. */
   private def prunedPostings(spark: SparkSession, path: String,
                              m: LexManifest, pp: ProbePruning): DataFrame = {
-    val postings = readPostingsWith(spark, path, m)
+    val postings = frame(spark, new Path(path), m)
       .filter(col("tb").isin(pp.buckets.map(Integer.valueOf).toSeq: _*))
     pp.litTerms.fold(postings)(ts =>
       postings.filter(col("term").isin(ts.toSeq: _*)))
@@ -1217,7 +876,7 @@ object LexIndex {
     * width. The result is query-term-bounded, always broadcastable. */
   private def dfStats(spark: SparkSession, root: Path, m: LexManifest,
                       qTerms: DataFrame, pp: ProbePruning): DataFrame = {
-    val schema = StructType(Seq(
+    val dfSchema = StructType(Seq(
       StructField("term", org.apache.spark.sql.types.StringType),
       StructField("df", org.apache.spark.sql.types.LongType),
       StructField("tb", org.apache.spark.sql.types.IntegerType)))
@@ -1231,20 +890,17 @@ object LexIndex {
     }
     val dfSegsEff = effectiveDfSegs(spark, root, m)
     val per = m.entries.map { e =>
-      if (dfSegsEff.contains(e.name)) {
-        val base = spark.read.schema(schema)
-          .parquet(new Path(root, s"${e.name}/$DfSidecarDir").toString)
-        val unskipped =
-          if (e.skip.isEmpty) base
-          else base.filter(!col("tb").isin(
-            e.skip.map(b => Integer.valueOf(b.toInt)): _*))
-        restrict(unskipped).select("term", "df")
-      } else
+      if (dfSegsEff.contains(e.name))
+        // the sidecar is bucket-partitioned like its segment, so it
+        // reads as one, under the segment's skips
+        restrict(segFrame(spark, new Path(root, e.name),
+          SegEntry(DfSidecarDir, e.skip), dfSchema)).select("term", "df")
+      else
         // legacy pre-sidecar segment: its partial recomputes from its
         // own bucket-pruned postings (bounded — this one segment only;
         // distinct docs ≡ rows on a plain segment, and the any-field
         // count on a fielded one)
-        restrict(segFrame(spark, root, e, postingsSchema(m)))
+        restrict(segFrame(spark, root, e, schema(m)))
           .groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
           .select("term", "df")
     }.reduce(_.unionByName(_))

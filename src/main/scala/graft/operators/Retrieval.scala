@@ -524,7 +524,7 @@ object Retrieval {
     require(vector.isDefined || mmr.isDefined,
       "a serve with neither a vector arm nor an MMR pass is LexIndex.search")
     require(depth >= k, s"depth=$depth must be >= k=$k")
-    val m = IvfIndex.readManifestFull(spark, ivfPath)
+    val m = IvfIndex.readManifest(spark, ivfPath)
     val ranking = vector.fold(LexIndex.search(spark, lexPath, queries, depth, q, pred)) { v =>
       val qVecs = v match {
         case ServeVector.Literal(_) =>

@@ -108,28 +108,16 @@ object Compiler {
         // takes a one-row literal frame, because the probe's broadcast
         // query side must never carry an index scan (at scale, a
         // full-table read per spoken probe).
-        val m = IvfIndex.readManifestFull(spark, path)
+        val m = IvfIndex.readManifest(spark, path)
         val vec = IvfIndex.lookupVectorWith(spark, path, m, qid)
         indexProbe(spark, path, m, qid, vec, k, nprobe, scoring,
                    where.map(predicate(df, _)))
       case Op.IndexSearchVec(vec, k, nprobe, scoring, where) =>
         // an UNSEEN literal query vector — nothing to fetch; the id -1
         // is outside the stored id space, so no candidate is excluded
-        val m = graft.operators.IvfIndex.readManifestFull(spark, path)
+        val m = graft.operators.IvfIndex.readManifest(spark, path)
         indexProbe(spark, path, m, -1L, vec.toArray, k, nprobe, scoring,
                    where.map(predicate(df, _)))
-      case Op.IndexErase(keys) =>
-        graft.operators.IvfIndex.deleteByKey(spark, path, keys)
-        graft.operators.IvfIndex.read(spark, path)
-      case Op.IndexEraseWhere(w) =>
-        graft.operators.IvfIndex.deleteWhere(spark, path, predicate(df, w))
-        graft.operators.IvfIndex.read(spark, path)
-      case Op.IndexCompact =>
-        graft.operators.IvfIndex.compact(spark, path)
-        graft.operators.IvfIndex.read(spark, path)
-      case Op.IndexVacuumKeep(k) =>
-        graft.operators.IvfIndex.vacuum(spark, path, keepVersions = k)
-        graft.operators.IvfIndex.read(spark, path)
       case Op.IndexCellProfile =>
         graft.operators.IvfIndex.cellStats(spark, path)
           .select(col("cell"), col("n_rows"))
@@ -140,7 +128,7 @@ object Compiler {
         // pruned (vec_id < qMax pushes to the scan) bounded slice —
         // eval-sized by construction, and the exact arm scans the
         // corpus anyway (that is what's being compared against)
-        val m = IvfIndex.readManifestFull(spark, path)
+        val m = IvfIndex.readManifest(spark, path)
         val corpus = IvfIndex.readWith(spark, path, m)
           .select(col("vec_id"), col("embedding"))
         val queries = corpus.filter(col("vec_id") < qMax)
@@ -209,18 +197,23 @@ object Compiler {
           .agg(coalesce(sum("n_rows"), lit(0L)).as("n_postings"))
           .select(lit(m.buckets).cast("long").as("buckets"),
             col("n_postings"), lit(m.nDocs).as("n_docs"))
-      case Op.LexErase(keys) =>
-        graft.operators.LexIndex.deleteByKey(spark, path, keys)
-        lexContent(spark, path)
-      case Op.LexEraseWhere(w) =>
-        graft.operators.LexIndex.deleteWhere(spark, path, predicate(df, w))
-        lexContent(spark, path)
-      case Op.LexCompact =>
-        graft.operators.LexIndex.compact(spark, path)
-        lexContent(spark, path)
-      case Op.LexVacuumKeep(k) =>
-        graft.operators.LexIndex.vacuum(spark, path, keepVersions = k)
-        lexContent(spark, path)
+      case Op.IndexMaintain(store, verb) =>
+        // run the verb through the store's segment lifecycle, then read
+        // the content back for the content oracles
+        val ix: graft.operators.SegmentedIndex[_] = store match {
+          case IndexStore.Lexical => LexIndex
+          case IndexStore.Vector  => graft.operators.IvfIndex
+        }
+        verb match {
+          case IndexVerb.Erase(keys)    => ix.deleteByKey(spark, path, keys)
+          case IndexVerb.EraseWhere(w)  => ix.deleteWhere(spark, path, predicate(df, w))
+          case IndexVerb.Compact        => ix.compact(spark, path)
+          case IndexVerb.VacuumKeep(k)  => ix.vacuum(spark, path, keepVersions = k)
+        }
+        store match {
+          case IndexStore.Lexical => lexContent(spark, path)
+          case IndexStore.Vector  => graft.operators.IvfIndex.read(spark, path)
+        }
     }
   }
 

@@ -1564,10 +1564,10 @@ object NLParser {
         if (p.peekWordLower.contains("lexical")) {
           p.next(); p.expectWord("index")
           requireDone(p)
-          Right(List(Op.LexCompact))
+          Right(List(Op.IndexMaintain(IndexStore.Lexical, IndexVerb.Compact)))
         } else if (p.peekWordLower.contains("index")) {
           p.next(); requireDone(p)
-          Right(List(Op.IndexCompact))
+          Right(List(Op.IndexMaintain(IndexStore.Vector, IndexVerb.Compact)))
         } else {
           p.dropWords("closed", "days", "day", "table", "log")
           p.peekWordLower match {
@@ -1600,8 +1600,8 @@ object NLParser {
         p.dropWords("versions", "version")
         requireDone(p)
         Right(List(
-          if (onLex) Op.LexVacuumKeep(k.toInt)
-          else if (onIndex) Op.IndexVacuumKeep(k.toInt)
+          if (onLex) Op.IndexMaintain(IndexStore.Lexical, IndexVerb.VacuumKeep(k.toInt))
+          else if (onIndex) Op.IndexMaintain(IndexStore.Vector, IndexVerb.VacuumKeep(k.toInt))
           else Op.VacuumKeep(k.toInt)))
       case Some("maintain") =>
         // "Maintain the snapshot of the table." — advance the colocated
@@ -1875,7 +1875,7 @@ object NLParser {
               val w = parsePred(p)
               p.dropWords("from", "the", "lexical", "index")
               requireDone(p)
-              return Right(List(Op.LexEraseWhere(w)))
+              return Right(List(Op.IndexMaintain(IndexStore.Lexical, IndexVerb.EraseWhere(w))))
             }
             val ks = Seq.newBuilder[Long]
             def oneDoc(): Unit = {
@@ -1889,7 +1889,7 @@ object NLParser {
             p.dropWords("from", "the")
             p.expectWord("lexical"); p.expectWord("index")
             requireDone(p)
-            return Right(List(Op.LexErase(ks.result())))
+            return Right(List(Op.IndexMaintain(IndexStore.Lexical, IndexVerb.Erase(ks.result()))))
           case _ => ()
         }
         p.peekWordLower match {
@@ -1902,7 +1902,7 @@ object NLParser {
               val w = parsePred(p)
               p.dropWords("from", "the", "index")
               requireDone(p)
-              return Right(List(Op.IndexEraseWhere(w)))
+              return Right(List(Op.IndexMaintain(IndexStore.Vector, IndexVerb.EraseWhere(w))))
             }
             val ks = Seq.newBuilder[Long]
             def oneVec(): Unit = {
@@ -1915,7 +1915,7 @@ object NLParser {
             while (p.peek.contains(Sym(","))) { p.next(); oneVec() }
             p.dropWords("from", "the", "index")
             requireDone(p)
-            return Right(List(Op.IndexErase(ks.result())))
+            return Right(List(Op.IndexMaintain(IndexStore.Vector, IndexVerb.Erase(ks.result()))))
           case _ => ()
         }
         val kc = p.expectWordRaw()

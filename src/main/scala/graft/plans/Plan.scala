@@ -74,6 +74,28 @@ object ServeArm {
   final case class Literal(vec: Seq[Float], nprobe: Int)  extends ServeArm
 }
 
+/** Which persisted index an [[Op.IndexMaintain]] acts on. */
+sealed trait IndexStore extends Product with Serializable
+object IndexStore {
+  /** The inverted index ([[graft.operators.LexIndex]]). */
+  case object Lexical extends IndexStore
+  /** The IVF vector index ([[graft.operators.IvfIndex]]). */
+  case object Vector  extends IndexStore
+}
+
+/** An [[Op.IndexMaintain]] verb. */
+sealed trait IndexVerb extends Product with Serializable
+object IndexVerb {
+  /** Erase the rows whose id (doc_id / vec_id) is in `keys`. */
+  final case class Erase(keys: Seq[Long])   extends IndexVerb
+  /** Erase the rows `where` holds for, over the stored columns. */
+  final case class EraseWhere(where: Pred)  extends IndexVerb
+  /** Fold every segment into one. */
+  case object Compact                        extends IndexVerb
+  /** Keep the newest `keep` manifests (and every pinned one). */
+  final case class VacuumKeep(keep: Int)     extends IndexVerb
+}
+
 /** Literal values — the reference's grammar only ever compares against
   * numbers and single-quoted strings. */
 sealed trait Lit extends Product with Serializable
@@ -683,26 +705,6 @@ object Op {
   final case class HybridEval(ndcg: Boolean, k: Int, qid: Long,
                               terms: Seq[String], depth: Int,
                               nprobe: Int)                         extends TableOp
-  /** Physical compliance erasure of vector ids from the bound index
-    * ([[graft.operators.IvfIndex.deleteByKey]] — copy-on-write bounded
-    * to the cells containing the ids, one atomic flip; vacuum/compact
-    * complete the physical reclaim), then read the post-erase index
-    * content back. The index twin of [[DeleteByKey]]. */
-  final case class IndexErase(keys: Seq[Long])                     extends TableOp
-  /** [[IndexErase]] generalized to a predicate over the index's stored
-    * columns — the attribute-sweep compliance shape ("erase every
-    * vector where licence = 'revoked'";
-    * [[graft.operators.IvfIndex.deleteWhere]] — fully distributed, no
-    * id list materializes; NULL-predicate rows survive). */
-  final case class IndexEraseWhere(where: Pred)                    extends TableOp
-  /** Fold the bound index's segments into one, re-tiling hot cells
-    * into bounded files ([[graft.operators.IvfIndex.compact]]), then
-    * read the index content back — content must be invariant. */
-  case object IndexCompact                                         extends TableOp
-  /** Trim the bound index's retained history to the newest `keep`
-    * manifests ([[graft.operators.IvfIndex.vacuum]]), then read the
-    * index content back — content invariant. */
-  final case class IndexVacuumKeep(keep: Int)                      extends TableOp
   /** Per-cell row counts of the bound index from parquet footers only
     * ([[graft.operators.IvfIndex.cellStats]]) — hot-cell visibility at
     * metadata cost; the spoken twin of [[DayProfile]] for the IVF
@@ -717,33 +719,42 @@ object Op {
     * The "is the index good enough" job, spoken. */
   final case class IndexEval(ndcg: Boolean, k: Int, qMax: Long,
                              nprobe: Int)                          extends TableOp
-  /** Compliance erasure of document ids from the bound INVERTED index
-    * ([[graft.operators.LexIndex.deleteByKey]] — copy-on-write bounded
-    * to the buckets holding the documents' postings, stats adjusted in
-    * the same atomic flip), then the post-erase postings content
-    * `(term, doc_id, tf, dl)` read back. The lexical twin of
-    * [[IndexErase]]. */
-  final case class LexErase(keys: Seq[Long])                       extends TableOp
-  /** [[LexErase]] generalized to a document-level predicate over the
-    * postings' stored columns
-    * ([[graft.operators.LexIndex.deleteWhere]] — fully distributed;
-    * NULL-predicate rows survive). */
-  final case class LexEraseWhere(where: Pred)                      extends TableOp
   /** Summary profile of the bound inverted index from its manifest and
     * parquet FOOTERS only ([[graft.operators.LexIndex.bucketStats]] —
     * no data scan): `(buckets, n_postings, n_docs)`. Footer row totals
     * are exact, so the corpus postings replay is its oracle (the
     * auto-derived bucket count replays as max(16, ⌊√vocabulary⌋)). */
   case object LexBucketProfile                                     extends TableOp
-  /** Fold the bound inverted index's segments into one
-    * ([[graft.operators.LexIndex.compact]] — hot buckets re-tile, sync
-    * cursors persist), then read the postings content back — content
-    * must be invariant. */
-  case object LexCompact                                           extends TableOp
-  /** Trim the bound inverted index's retained history to the newest
-    * `keep` manifests ([[graft.operators.LexIndex.vacuum]]), then read
-    * the postings content back — content invariant. */
-  final case class LexVacuumKeep(keep: Int)                        extends TableOp
+  /** Maintenance of the bound persisted index, then its content read
+    * back — the index's vectors `(vec_id, embedding[, codes][, codes8]
+    * [, attrs…], cell)`, or the inverted index's postings `(term,
+    * doc_id, tf, dl)`. Every verb runs through the one segment
+    * lifecycle both indexes share
+    * ([[graft.operators.SegmentedIndex]]). Compaction and vacuum are
+    * content-invariant — that is what their oracles certify; an erase
+    * is copy-on-write bounded to the partitions holding the rows, one
+    * atomic flip, and the inverted index's stats drop by the erased
+    * documents' exact totals in the same flip.
+    *
+    * Spoken forms by (store × verb):
+    *  - Vector × Erase — "Erase vectors 3, 7 from the index.";
+    *  - Vector × EraseWhere — "Erase vectors where label == 9 from the
+    *    index." (NULL-predicate rows survive);
+    *  - Vector × Compact — "Compact the index." (hot cells re-tile);
+    *  - Vector × VacuumKeep — "Vacuum the index keeping 1 versions."
+    *    (+ unreferenced quantizer files and erase-skipped cell dirs);
+    *  - Lexical × Erase — "Delete docs 3, 7 from the lexical index."
+    *    (also "documents");
+    *  - Lexical × EraseWhere — "Erase documents where lang == 'de' from
+    *    the lexical index." (a document-level predicate);
+    *  - Lexical × Compact — "Compact the lexical index." (hot buckets
+    *    re-tile; sync cursors persist across the fold);
+    *  - Lexical × VacuumKeep — "Vacuum the lexical index keeping 1
+    *    versions." (+ erase-skipped bucket dirs).
+    * Each erase form takes any of the leading verbs "delete", "erase"
+    * and "forget"; "doc"/"docs"/"document"/"documents" pick the
+    * lexical index, "vector"/"vectors" the vector index. */
+  final case class IndexMaintain(store: IndexStore, verb: IndexVerb) extends TableOp
 }
 
 final case class Plan(ops: List[Op]) {

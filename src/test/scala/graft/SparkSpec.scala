@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -12,18 +13,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Spark jobs started while `body` runs. */
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * asynchronously, so it is drained before the listener registers (a
+    * late event from an earlier job must not count) and again after
+    * `body` (every job `body` started has posted its start by then). */
   protected def countJobs(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      // the listener bus posts asynchronously; settle before reading
-      Thread.sleep(1000)
+      ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     jobs.get()
   }

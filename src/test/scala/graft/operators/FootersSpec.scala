@@ -47,7 +47,7 @@ class FootersSpec extends SparkSpec {
     IvfIndex.build(vecs.filter(col("vec_id") < 8), ivf, cells = 3)
     val ivfV1 = IvfIndex.cellStats(spark, ivf).collect().toSet
     IvfIndex.append(vecs.filter(col("vec_id") >= 8), ivf)
-    val ivfOld = IvfIndex.cellStatsOf(spark, new Path(ivf),
+    val ivfOld = IvfIndex.footerStats(spark, new Path(ivf),
       IvfIndex.readManifestAt(spark, ivf, 1L)).collect().toSet
     assert(ivfOld == ivfV1)
     assert(IvfIndex.cellStats(spark, ivf).collect().toSet != ivfV1)
@@ -57,7 +57,7 @@ class FootersSpec extends SparkSpec {
     LexIndex.build(docs.filter(col("doc_id") < 2), lex, buckets = 4)
     val lexV1 = LexIndex.bucketStats(spark, lex).collect().toSet
     LexIndex.append(docs.filter(col("doc_id") >= 2), lex)
-    val lexOld = LexIndex.bucketStatsOf(spark, new Path(lex),
+    val lexOld = LexIndex.footerStats(spark, new Path(lex),
       LexIndex.readManifestAt(spark, lex, 1L)).collect().toSet
     assert(lexOld == lexV1)
     assert(LexIndex.bucketStats(spark, lex).collect().toSet != lexV1)

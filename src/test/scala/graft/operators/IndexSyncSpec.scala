@@ -58,10 +58,10 @@ class IndexSyncSpec extends SparkSpec {
     assert(ranked(idxPath) == ranked(twinPath) && ranked(idxPath).nonEmpty)
     // re-delivered sync against the unchanged log: pure no-op — no new
     // index version, no new segment
-    val segsBefore = IvfIndex.readManifestFull(spark, idxPath).segments
+    val segsBefore = IvfIndex.readManifest(spark, idxPath).segments
     val (to2, v2) = IvfIndex.syncFromLog(spark, logPath, idxPath)
     assert(to2 == 3L && v2 == 2L)
-    assert(IvfIndex.readManifestFull(spark, idxPath).segments == segsBefore)
+    assert(IvfIndex.readManifest(spark, idxPath).segments == segsBefore)
   }
 
   test("a crash between append and nothing: the cursor IS the sync tag, " +
@@ -102,7 +102,7 @@ class IndexSyncSpec extends SparkSpec {
     // replays the v1→v2 delta and every probe double-counts those ids
     IvfIndex.compact(spark, idxPath)
     assert(IvfIndex.syncedVersion(spark, idxPath, logPath).contains(2L))
-    val vAfterCompact = IvfIndex.readManifestFull(spark, idxPath).version
+    val vAfterCompact = IvfIndex.readManifest(spark, idxPath).version
     val (to, v) = IvfIndex.syncFromLog(spark, logPath, idxPath)
     assert(to == 2L && v == vAfterCompact)
     assert(IvfIndex.read(spark, idxPath).count() == n)

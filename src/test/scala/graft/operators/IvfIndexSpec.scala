@@ -341,7 +341,7 @@ class IvfIndexSpec extends SparkSpec {
     val affectedCells = keys.map(beforeContent).toSet
     // snapshot every data file (name → mtime) before the erase
     def dataFiles(): Map[String, Long] = {
-      val m = IvfIndex.readManifestFull(spark, p)
+      val m = IvfIndex.readManifest(spark, p)
       (for {
         seg <- m.segments
         cellDir <- f.listStatus(new Path(p, seg)).toSeq
@@ -360,7 +360,7 @@ class IvfIndexSpec extends SparkSpec {
     // 2) the rewrite touched ONLY containing cells: every pre-existing
     // file is untouched (same mtime), and the new erase segments hold
     // nothing but the affected cells
-    val m = IvfIndex.readManifestFull(spark, p)
+    val m = IvfIndex.readManifest(spark, p)
     val eraseSegs = m.entries.filter(_.name.endsWith("-e"))
     assert(eraseSegs.nonEmpty)
     before.foreach { case (path, mtime) =>
@@ -388,11 +388,11 @@ class IvfIndexSpec extends SparkSpec {
     }
     // 5) idempotent: erasing again publishes nothing
     assert(IvfIndex.deleteByKey(spark, p, keys) == v)
-    assert(IvfIndex.readManifestFull(spark, p).version == v)
+    assert(IvfIndex.readManifest(spark, p).version == v)
     // 6) vacuum completes the PHYSICAL erase: the skipped cell dirs of
     // retained segments are reclaimed (old manifests gone with them)
     IvfIndex.vacuum(spark, p)
-    val mm = IvfIndex.readManifestFull(spark, p)
+    val mm = IvfIndex.readManifest(spark, p)
     mm.entries.filter(_.skip.nonEmpty).foreach { e =>
       e.skip.foreach { c =>
         assert(!f.exists(new Path(p, s"${e.name}/cell=$c")),
@@ -404,7 +404,7 @@ class IvfIndexSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == after)
     // 7) compact folds to a skip-free physical layout, same content
     IvfIndex.compact(spark, p)
-    val mc = IvfIndex.readManifestFull(spark, p)
+    val mc = IvfIndex.readManifest(spark, p)
     assert(mc.entries.size == 1 && mc.entries.head.skip.isEmpty)
     assert(IvfIndex.read(spark, p).select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == after)
@@ -424,7 +424,7 @@ class IvfIndexSpec extends SparkSpec {
     assert((after intersect slice).isEmpty)
     assert(after.size + slice.size == embs.count())
     // idempotent
-    val v = IvfIndex.readManifestFull(spark, p).version
+    val v = IvfIndex.readManifest(spark, p).version
     assert(IvfIndex.deleteWhere(spark, p, col("label") === 9) == v)
     // NULL predicate rows are NOT erased: an index whose attr is null
     // for some rows must not silently drop them under a sweep
@@ -469,7 +469,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(embs.filter(col("vec_id") < 250), p, cells = 8)
     val queries = embs.filter(col("vec_id") < 4)
     val before = ranked(IvfIndex.search(spark, p, queries, K, NProbe))
-    val m1 = IvfIndex.readManifestFull(spark, p)
+    val m1 = IvfIndex.readManifest(spark, p)
     assert(m1.centroidsFile == "centroids-000000001.txt")
     // crashed rebuild = everything a build writes EXCEPT the manifest:
     // materialize a would-be v2 with different geometry in a twin dir,
@@ -485,13 +485,13 @@ class IvfIndexSpec extends SparkSpec {
         false, spark.sparkContext.hadoopConfiguration)
     }
     // readers see the OLD pairing — results unchanged
-    assert(IvfIndex.readManifestFull(spark, p) == m1)
+    assert(IvfIndex.readManifest(spark, p) == m1)
     assert(ranked(IvfIndex.search(spark, p, queries, K, NProbe)) == before)
     // a completed rebuild flips in one rename and supersedes everything
     // (it lands at v2 — crash remnants never bumped the manifest — and
     // OVERWRITES them, exactly what a restarted rebuild does)
     IvfIndex.build(embs, p, cells = Cells)
-    val m2 = IvfIndex.readManifestFull(spark, p)
+    val m2 = IvfIndex.readManifest(spark, p)
     assert(m2.centroidsFile == "centroids-000000002.txt" &&
       m2.segments == Seq("seg-000000002"))
     assert(ranked(IvfIndex.search(spark, p, queries, K, NProbe)) ==
@@ -516,7 +516,7 @@ class IvfIndexSpec extends SparkSpec {
     val versions = Await.result(Future.sequence(futures), 5.minutes)
     // every racer published some version; together they reach v5
     assert(versions.toSet.subsetOf(Set(2L, 3L, 4L, 5L)))
-    assert(IvfIndex.readManifestFull(spark, p).version == 5L)
+    assert(IvfIndex.readManifest(spark, p).version == 5L)
     assert(IvfIndex.read(spark, p).count() == embs.count())
     // content identical to a serial build over the full corpus's cells
     val queries = embs.filter(col("vec_id") < 4)
@@ -545,7 +545,7 @@ class IvfIndexSpec extends SparkSpec {
     // them into multiple files, each within the hard bound
     IvfIndex.compact(spark, p, maxRowsPerFile = 50)
     val f = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = IvfIndex.readManifestFull(spark, p)
+    val m = IvfIndex.readManifest(spark, p)
     val conf = spark.sparkContext.hadoopConfiguration
     val statuses = for {
       seg <- m.segments
@@ -661,9 +661,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.append(embs.filter(col("vec_id") % 2 === 1), p)
     val queries = embs.filter(col("vec_id") < 4)
     val before = ranked(IvfIndex.search(spark, p, queries, K, NProbe))
-    assert(IvfIndex.readManifest(spark, p)._2.size == 2)
+    assert(IvfIndex.readManifest(spark, p).segments.size == 2)
     assert(IvfIndex.compact(spark, p) == 3L)
-    assert(IvfIndex.readManifest(spark, p)._2.size == 1)
+    assert(IvfIndex.readManifest(spark, p).segments.size == 1)
     assert(ranked(IvfIndex.search(spark, p, queries, K, NProbe)) == before)
     // crash remnant: an unreferenced segment dir + tmp — vacuum sweeps
     val f = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)

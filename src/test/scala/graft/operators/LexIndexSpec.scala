@@ -31,20 +31,33 @@ class LexIndexSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
+  // Fixture indexes over the seven documents, built once per suite and
+  // shared by the tests that only read them; a test that mutates an
+  // index builds its own.
+  private def built(build: String => Unit): String = {
+    val p = freshPath(); build(p); p
+  }
+  private lazy val plainIx = built(LexIndex.build(docsDf, _))
+  private lazy val plain16Ix = built(LexIndex.build(docsDf, _, buckets = 16))
+  private lazy val posIx = built(LexIndex.build(docsDf, _, positions = true))
+  /** doc_id ≡ vec_id, 4 dims, deterministic. */
+  private def embsDf = docsFx.map { case (id, _) =>
+    (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
+    .toDF("vec_id", "embedding")
+  private lazy val ivfIx = built(IvfIndex.build(embsDf, _, cells = 2))
+
   test("index probe is score-identical to the flat BM25 scan") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p)
+    val p = plainIx
     val qs = queriesDf(1L -> Seq("spark", "join"), 2L -> Seq("table", "scan"))
     assert(rows(LexIndex.search(spark, p, qs, 3)) ==
       rows(Retrieval.bm25TopK(docsDf, qs, 3)))
   }
 
   test("append ≡ rebuild: same content, stats summed exactly") {
-    val (p1, p2) = (freshPath(), freshPath())
+    val (p1, p2) = (freshPath(), plainIx)
     val (half, rest) = docsFx.partition(_._1 % 2 == 0)
     LexIndex.build(half.toDF("doc_id", "text"), p1)
     LexIndex.append(rest.toDF("doc_id", "text"), p1)
-    LexIndex.build(docsDf, p2)
     val m1 = LexIndex.readManifest(spark, p1)
     val m2 = LexIndex.readManifest(spark, p2)
     assert((m1.nDocs, m1.sumDl) == (m2.nDocs, m2.sumDl))
@@ -58,8 +71,7 @@ class LexIndexSpec extends SparkSpec {
   }
 
   test("probe reads only the probed buckets with the term filter pushed") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, buckets = 16)
+    val p = plain16Ix
     val qs = queriesDf(1L -> Seq("spark", "join"))
     val res = LexIndex.search(spark, p, qs, 3)
     res.collect()
@@ -251,8 +263,7 @@ class LexIndexSpec extends SparkSpec {
   }
 
   test("terms absent from the corpus score nothing; unknown index fails loudly") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p)
+    val p = plainIx
     assert(LexIndex.search(spark, p, queriesDf(1L -> Seq("zebra")), 3).count() == 0)
     val e = intercept[RuntimeException] {
       LexIndex.readManifest(spark, freshPath())
@@ -261,14 +272,7 @@ class LexIndexSpec extends SparkSpec {
   }
 
   test("hybridServe fuses the two at-rest arms; only index files are read") {
-    val lexP = freshPath()
-    LexIndex.build(docsDf, lexP)
-    val ivfP = freshPath()
-    // aligned embeddings: doc_id ≡ vec_id, 4 dims, deterministic
-    val embs = docsFx.map { case (id, _) =>
-      (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
-      .toDF("vec_id", "embedding")
-    IvfIndex.build(embs, ivfP, cells = 2)
+    val (lexP, ivfP, embs) = (plainIx, ivfIx, embsDf)
     val qs = queriesDf(0L -> Seq("spark", "join"))
     val out = Retrieval.serve(spark, lexP, ivfP, qs, 3,
       depth = 5, vector = Some(ServeVector.Stored(1)))
@@ -292,13 +296,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("mmrServe diversifies fully at rest: only index files are read, " +
        "result ≡ the flat mmrTopK over the indexed corpus") {
-    val lexP = freshPath()
-    LexIndex.build(docsDf, lexP)
-    val ivfP = freshPath()
-    val embs = docsFx.map { case (id, _) =>
-      (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
-      .toDF("vec_id", "embedding")
-    IvfIndex.build(embs, ivfP, cells = 2)
+    val (lexP, ivfP, embs) = (plainIx, ivfIx, embsDf)
     val qs = queriesDf(0L -> Seq("spark", "join"), 1L -> Seq("table"))
     val out = Retrieval.serve(spark, lexP, ivfP, qs, 3, depth = 5,
       mmr = Some(0.7))
@@ -352,13 +350,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("hybridServeLiteral: a fresh embedding + keywords serve with NO " +
        "self-exclusion and zero corpus scans; equals the composed arms") {
-    val lexP = freshPath()
-    LexIndex.build(docsDf, lexP)
-    val ivfP = freshPath()
-    val embs = docsFx.map { case (id, _) =>
-      (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
-      .toDF("vec_id", "embedding")
-    IvfIndex.build(embs, ivfP, cells = 2)
+    val (lexP, ivfP) = (plainIx, ivfIx)
     // the query_id COLLIDES with stored doc 0 on purpose, and the
     // literal embedding IS doc 0's stored vector: the literal regime
     // must still rank doc 0 (an external query has no "self")
@@ -376,7 +368,7 @@ class LexIndexSpec extends SparkSpec {
       "hybridServeLiteral read a non-index file")
     // equals the hand-composed arms — the vector arm probed by the
     // literal with excludeSelf = false, so doc 0 is its (cosine 1) top hit
-    val m = IvfIndex.readManifestFull(spark, ivfP)
+    val m = IvfIndex.readManifest(spark, ivfP)
     val vec = IvfIndex.searchWith(spark, ivfP, m,
         qs.select(col("query_id").as("vec_id"), col("embedding")), 5, 2,
         IvfScoring.Exact, None, excludeSelf = false)
@@ -390,13 +382,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("hybridServe's query vectors flow as a FRAME (the fetch scan sits " +
        "in the probe's own plan) and a missing id still fails loudly") {
-    val lexP = freshPath()
-    LexIndex.build(docsDf, lexP)
-    val ivfP = freshPath()
-    val embs = docsFx.map { case (id, _) =>
-      (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
-      .toDF("vec_id", "embedding")
-    IvfIndex.build(embs, ivfP, cells = 2)
+    val (lexP, ivfP) = (plainIx, ivfIx)
     val qs = queriesDf(0L -> Seq("spark", "join"))
     val out = Retrieval.serve(spark, lexP, ivfP, qs, 3,
       depth = 5, vector = Some(ServeVector.Stored(1)))
@@ -510,6 +496,8 @@ class LexIndexSpec extends SparkSpec {
   private val docsAttrFx = docsFx.map { case (id, t) =>
     (id, t, if (id % 2 == 0) "en" else "fr") }
   private def docsAttrDf = docsAttrFx.toDF("doc_id", "text", "lang")
+  private lazy val attr16Ix = built(LexIndex.build(docsAttrDf, _, buckets = 16,
+    attrs = Seq("lang")))
 
   test("deleteWhere sweeps an attribute slice; NULL-attribute rows survive") {
     val p = freshPath()
@@ -528,8 +516,7 @@ class LexIndexSpec extends SparkSpec {
   test("attribute-filtered probe: eligibility rides the pruned candidate " +
        "rows (no extra scan or exchange), exactly k matching docs, " +
        "score-identical to the filtered flat scan") {
-    val p = freshPath()
-    LexIndex.build(docsAttrDf, p, buckets = 16, attrs = Seq("lang"))
+    val p = attr16Ix
     val qs = queriesDf(1L -> Seq("spark", "join", "table"))
     val res = LexIndex.search(spark, p, qs, 3, pred = Some(col("lang") === "en"))
     val got = rows(res)
@@ -630,13 +617,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("hybridServe's vector fetch is batched: Spark job count is " +
        "constant in the query-batch size") {
-    val lexP = freshPath()
-    LexIndex.build(docsDf, lexP, buckets = 16)
-    val ivfP = freshPath()
-    val embs = docsFx.map { case (id, _) =>
-      (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f)) }
-      .toDF("vec_id", "embedding")
-    IvfIndex.build(embs, ivfP, cells = 2)
+    val (lexP, ivfP) = (plain16Ix, ivfIx)
     val terms = Seq(Seq("spark", "join"), Seq("table", "scan"),
       Seq("hash", "merge"), Seq("window", "slow"), Seq("fast", "batch"),
       Seq("spark", "table"))
@@ -656,10 +637,7 @@ class LexIndexSpec extends SparkSpec {
     // one fixture build for every shape: attribute-carrying lexical and
     // IVF indexes (the filtered shape pre-filters both arms on `lang`)
     // and a fielded lexical index
-    val (lexP, lexFP, ivfP) = (freshPath(), freshPath(), freshPath())
-    LexIndex.build(docsAttrDf, lexP, buckets = 16, attrs = Seq("lang"))
-    LexIndex.buildFielded(fieldedDf, lexFP, fields = Seq("title", "text"),
-      buckets = 16)
+    val (lexP, lexFP, ivfP) = (attr16Ix, fielded16Ix, freshPath())
     IvfIndex.build(docsAttrFx.map { case (id, _, lang) =>
         (id, Array.tabulate(4)(j => ((id * 7 + j * 3) % 10 / 10.0f) - 0.4f),
           lang) }.toDF("vec_id", "embedding", "lang"),
@@ -728,8 +706,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("phrase probe ≡ flat phrase scan, including duplicate-term and " +
        "single-term phrases") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, positions = true)
+    val p = posIx
     val ph = phrasesDf(
       1L -> Seq("spark", "join"),      // doc 0 only (adjacent run)
       2L -> Seq("spark", "spark"),     // duplicate term: doc 2 only
@@ -743,8 +720,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("phrase adjacency: all terms present but never adjacent is NOT " +
        "a result") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, positions = true)
+    val p = posIx
     // doc 4 "fast fast join spark table" holds join AND fast but never
     // the run "join fast"; doc 0 "spark join fast spark" holds it
     val ph = phrasesDf(1L -> Seq("join", "fast"))
@@ -788,8 +764,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("positions cost nothing on non-phrase probes (column-pruned), " +
        "and only the adjacency branch reads them on phrase probes") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, positions = true)
+    val p = posIx
     val qs = queriesDf(1L -> Seq("spark", "join"))
     val res = LexIndex.search(spark, p, qs, 3)
     res.collect()
@@ -824,12 +799,19 @@ class LexIndexSpec extends SparkSpec {
     // not corrupt the per-field sums with size(null) = -1
     (5L, null.asInstanceOf[String], "spark scan join"))
   private def fieldedDf = fieldedFx.toDF("doc_id", "title", "text")
+  private def buildFieldedIx(p: String, buckets: Int = LexIndex.AutoBuckets,
+                             positions: Boolean = false): Unit =
+    LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"),
+      buckets = buckets, positions = positions)
+  private lazy val fieldedIx = built(buildFieldedIx(_))
+  private lazy val fielded16Ix = built(buildFieldedIx(_, buckets = 16))
+  private lazy val fieldedPos16Ix = built(buildFieldedIx(_, buckets = 16,
+    positions = true))
   private val FW = Seq("title" -> 2.0, "text" -> 1.0)
 
   test("fielded probe ≡ flat BM25F scan at any probe-time weighting; " +
        "append ≡ rebuild; plain probes on a fielded index fail loudly") {
-    val p = freshPath()
-    LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"))
+    val p = fieldedIx
     val qs = queriesDf(1L -> Seq("spark", "join"), 2L -> Seq("table"))
     for (ws <- Seq(FW, Seq("title" -> 1.0, "text" -> 1.0),
                    Seq("title" -> 5.0, "text" -> 0.5))) {
@@ -849,13 +831,11 @@ class LexIndexSpec extends SparkSpec {
       fieldedFx.map(t => dlOf(t._3)).sum))
     assert(m.nDocs == 6L)
     // append ≡ rebuild (stats summed per field, content identical)
-    val (p1, p2) = (freshPath(), freshPath())
+    val (p1, p2) = (freshPath(), fielded16Ix)
     val (half, rest) = fieldedFx.partition(_._1 % 2 == 0)
     LexIndex.buildFielded(half.toDF("doc_id", "title", "text"), p1,
       fields = Seq("title", "text"), buckets = 16)
     LexIndex.append(rest.toDF("doc_id", "title", "text"), p1)
-    LexIndex.buildFielded(fieldedDf, p2, fields = Seq("title", "text"),
-      buckets = 16)
     val (m1, m2) = (LexIndex.readManifest(spark, p1),
       LexIndex.readManifest(spark, p2))
     assert(m1.fieldSums == m2.fieldSums && m1.nDocs == m2.nDocs)
@@ -867,8 +847,7 @@ class LexIndexSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, p, qs, 5)
     }.getMessage.contains("FIELDED"))
-    val plain = freshPath()
-    LexIndex.build(docsDf, plain)
+    val plain = plainIx
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, plain, qs, 5, LexQuery(scoring = LexQuery.Bm25F(FW)))
     }.getMessage.contains("fielded"))
@@ -880,9 +859,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("fielded probe stays bucket-pruned with df from the sidecar " +
        "statistics — one postings read, no corpus scan") {
-    val p = freshPath()
-    LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"),
-      buckets = 16)
+    val p = fielded16Ix
     val qs = queriesDf(1L -> Seq("spark", "join"))
     val res = LexIndex.search(spark, p, qs, 3,
       LexQuery(scoring = LexQuery.Bm25F(FW)))
@@ -911,8 +888,7 @@ class LexIndexSpec extends SparkSpec {
   test("searchFieldedFull (Robertson–Zaragoza) ≡ flat full scan at any " +
        "probe-time (w, b, k1) tuning over the SAME index searchFielded " +
        "probes; guards fail loudly") {
-    val p = freshPath()
-    LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"))
+    val p = fieldedIx
     val qs = queriesDf(1L -> Seq("spark", "join"), 2L -> Seq("table"))
     for (ps <- Seq(
         Seq(("title", 2.0, 0.3), ("text", 1.0, 0.75)),
@@ -946,8 +922,7 @@ class LexIndexSpec extends SparkSpec {
         LexQuery(scoring =
           LexQuery.Bm25FFull(Seq(("title", 2.0, 1.5), ("text", 1.0, 0.75)))))
     }.getMessage.contains("b must be in [0,1]"))
-    val plain = freshPath()
-    LexIndex.build(docsDf, plain)
+    val plain = plainIx
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, plain, qs, 5,
         LexQuery(scoring =
@@ -958,9 +933,7 @@ class LexIndexSpec extends SparkSpec {
   test("fielded PHRASE/SLOPPY probes ≡ the flat fielded scans (within-" +
        "field streams); slop 0 ≡ exact; append ≡ rebuild; guards both " +
        "ways; zero corpus scans with positions column-pruned off scoring") {
-    val p = freshPath()
-    LexIndex.buildFielded(fieldedDf, p, fields = Seq("title", "text"),
-      buckets = 16, positions = true)
+    val p = fieldedPos16Ix
     def phrases(qs: (Long, Seq[String])*) =
       spark.createDataFrame(qs).toDF("query_id", "phrase")
     val ph = phrases(
@@ -992,13 +965,11 @@ class LexIndexSpec extends SparkSpec {
           LexQuery(LexQuery.Phrase(Some("title")), LexQuery.Bm25F(FW)))
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L))
     // append ≡ rebuild on the positional fielded layout
-    val (p1, p2) = (freshPath(), freshPath())
+    val (p1, p2) = (freshPath(), fieldedPos16Ix)
     val (half, rest) = fieldedFx.partition(_._1 % 2 == 0)
     LexIndex.buildFielded(half.toDF("doc_id", "title", "text"), p1,
       fields = Seq("title", "text"), buckets = 16, positions = true)
     LexIndex.append(rest.toDF("doc_id", "title", "text"), p1)
-    LexIndex.buildFielded(fieldedDf, p2,
-      fields = Seq("title", "text"), buckets = 16, positions = true)
     assert(rows(LexIndex.search(spark, p1, ph, 5,
       LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))) ==
       rows(LexIndex.search(spark, p2, ph, 5,
@@ -1044,15 +1015,12 @@ class LexIndexSpec extends SparkSpec {
       LexIndex.search(spark, p,
         queriesDf(1L -> Seq("spark", "join")), 5, LexQuery(LexQuery.Window(4)))
     }.getMessage.contains("FIELDED"))
-    val noPos = freshPath()
-    LexIndex.buildFielded(fieldedDf, noPos, fields = Seq("title", "text"),
-      buckets = 16)
+    val noPos = fielded16Ix
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, noPos, ph, 5,
         LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))
     }.getMessage.contains("positional"))
-    val plain = freshPath()
-    LexIndex.build(docsDf, plain, positions = true)
+    val plain = posIx
     assert(intercept[IllegalArgumentException] {
       LexIndex.search(spark, plain, ph, 5,
         LexQuery(LexQuery.Phrase(Some("text")), LexQuery.Bm25F(FW)))
@@ -1090,8 +1058,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("sloppy probe ≡ flat sloppy scan; ordered (unlike proximity), " +
        "slop 0 ≡ the exact phrase probe; zero corpus scans") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, positions = true)
+    val p = posIx
     val ph = phrasesDf(
       1L -> Seq("spark", "fast"),         // doc 0 in order; doc 4 only reversed
       2L -> Seq("join", "spark", "table"), // doc 4 adjacent 3-gram
@@ -1119,8 +1086,7 @@ class LexIndexSpec extends SparkSpec {
     assert(scans.nonEmpty && scans.forall(_.relation.location.rootPaths
       .forall(_.toString.contains("/seg-"))))
     // a non-positional index fails loudly
-    val p2 = freshPath()
-    LexIndex.build(docsDf, p2)
+    val p2 = plainIx
     val e = intercept[IllegalArgumentException] {
       LexIndex.search(spark, p2, ph, 5, LexQuery(LexQuery.Sloppy(1)))
     }
@@ -1129,8 +1095,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("proximity probe ≡ flat proximity scan; sits strictly between " +
        "phrase and bag-of-words") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p, positions = true)
+    val p = posIx
     // doc 0 "spark join fast spark": spark+fast within 3 (0,2) though
     // never adjacent; doc 4 "fast fast join spark table": within 3 too
     // (fast@1, spark@3); doc 1 has neither term pair
@@ -1164,8 +1129,7 @@ class LexIndexSpec extends SparkSpec {
 
   test("phrase probe on a non-positional index fails loudly; " +
        "maintenance preserves the positional layout") {
-    val p = freshPath()
-    LexIndex.build(docsDf, p)
+    val p = plainIx
     val e = intercept[IllegalArgumentException] {
       LexIndex.search(spark, p, phrasesDf(1L -> Seq("spark")), 3,
         LexQuery(LexQuery.Phrase()))
@@ -1218,8 +1182,7 @@ class LexIndexSpec extends SparkSpec {
     val m = LexIndex.readManifest(spark, p)
     assert(m.version == 5L && m.segments.size == 5)
     // stats summed exactly: identical to a one-shot build of the corpus
-    val whole = freshPath()
-    LexIndex.build(docsDf, whole)
+    val whole = plainIx
     val w = LexIndex.readManifest(spark, whole)
     assert((m.nDocs, m.sumDl) == (w.nDocs, w.sumDl))
     val qs = queriesDf(1L -> Seq("spark", "join", "window", "batch"))

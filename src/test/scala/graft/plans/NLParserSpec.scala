@@ -236,9 +236,9 @@ class NLParserSpec extends AnyFunSuite {
       "with rerank 50 where label == 3."))
     // erasure: "vector(s)" is the discriminator vs the log's DeleteByKey
     assert(NLParser.parse("Erase vectors 3, 7 from the index.").ops ==
-      List(O.IndexErase(Seq(3L, 7L))))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Erase(Seq(3L, 7L)))))
     assert(NLParser.parse("Delete vector 42 from the index.").ops ==
-      List(O.IndexErase(Seq(42L))))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Erase(Seq(42L)))))
     assert(NLParser.parse("Delete user_id 42 from the table.").ops ==
       List(O.DeleteByKey("user_id", Seq(42L))))
     assertThrows[NLParser.ParseException](NLParser.parse(
@@ -246,7 +246,7 @@ class NLParserSpec extends AnyFunSuite {
     // the attribute-sweep form: erase by predicate, not id list
     assert(NLParser.parse(
       "Erase vectors where label == 9 from the index.").ops ==
-      List(O.IndexEraseWhere(Pred.Cmp(Pred.Eq, "label", Lit.Num(9.0)))))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.EraseWhere(Pred.Cmp(Pred.Eq, "label", Lit.Num(9.0))))))
   }
 
   test("search the index with a literal query vector") {
@@ -263,9 +263,9 @@ class NLParserSpec extends AnyFunSuite {
   }
 
   test("index maintenance verbs") {
-    assert(NLParser.parse("Compact the index.").ops == List(O.IndexCompact))
+    assert(NLParser.parse("Compact the index.").ops == List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Compact)))
     assert(NLParser.parse("Vacuum the index keeping 1 versions.").ops ==
-      List(O.IndexVacuumKeep(1)))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.VacuumKeep(1))))
     assert(NLParser.parse("Profile the index by cell.").ops ==
       List(O.IndexCellProfile))
     assert(NLParser.parse("Profile events by day.").ops == List(O.DayProfile))
@@ -276,7 +276,7 @@ class NLParserSpec extends AnyFunSuite {
       NLParser.parse("Profile events by cell."))
     assert(NLParser.parse(
       "Compact the index and select columns vec_id and cell.").ops ==
-      List(O.IndexCompact, O.Select(Seq("vec_id", "cell"))))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Compact), O.Select(Seq("vec_id", "cell"))))
     // the table verbs are untouched by the index twins
     assert(NLParser.parse("Vacuum the table keeping 2 versions.").ops ==
       List(O.VacuumKeep(2)))
@@ -1241,12 +1241,12 @@ class NLParserSpec extends AnyFunSuite {
       List(O.IndexCellProfile))
     assert(NLParser.parse("Profile events by day.").ops == List(O.DayProfile))
     assert(NLParser.parse("Compact the lexical index.").ops ==
-      List(O.LexCompact))
-    assert(NLParser.parse("Compact the index.").ops == List(O.IndexCompact))
+      List(O.IndexMaintain(IndexStore.Lexical, IndexVerb.Compact)))
+    assert(NLParser.parse("Compact the index.").ops == List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Compact)))
     assert(NLParser.parse("Vacuum the lexical index keeping 2 versions.").ops ==
-      List(O.LexVacuumKeep(2)))
+      List(O.IndexMaintain(IndexStore.Lexical, IndexVerb.VacuumKeep(2))))
     assert(NLParser.parse("Vacuum the index keeping 1 versions.").ops ==
-      List(O.IndexVacuumKeep(1)))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.VacuumKeep(1))))
   }
 
   test("mmr diversification route: lambda bounds, default depth, depth >= k") {
@@ -1281,12 +1281,12 @@ class NLParserSpec extends AnyFunSuite {
   test("lexical index erasure: by doc ids and by attribute sweep; the " +
        "vector and log erases keep their routes") {
     assert(NLParser.parse("Delete docs 3, 7 from the lexical index.").ops ==
-      List(O.LexErase(Seq(3L, 7L))))
+      List(O.IndexMaintain(IndexStore.Lexical, IndexVerb.Erase(Seq(3L, 7L)))))
     assert(NLParser.parse(
       "Erase documents where lang == 'de' from the lexical index.").ops ==
-      List(O.LexEraseWhere(Pred.Cmp(Pred.Eq, "lang", Lit.Str("de")))))
+      List(O.IndexMaintain(IndexStore.Lexical, IndexVerb.EraseWhere(Pred.Cmp(Pred.Eq, "lang", Lit.Str("de"))))))
     assert(NLParser.parse("Erase vectors 3, 7 from the index.").ops ==
-      List(O.IndexErase(Seq(3L, 7L))))
+      List(O.IndexMaintain(IndexStore.Vector, IndexVerb.Erase(Seq(3L, 7L)))))
     assert(NLParser.parse("Delete user_id 42 from the table.").ops ==
       List(O.DeleteByKey("user_id", Seq(42L))))
   }

@@ -58,8 +58,6 @@ class SourcesSchemaCacheSpec extends SparkSpec {
     val path = s"${tempDir("graft-cache-jobs")}/t.parquet"
     spark.range(100).selectExpr("id", "cast(id as string) AS s")
       .write.parquet(path)
-    // let the listener bus deliver the write's jobs before counting
-    Thread.sleep(1000)
     assert(countJobs(Sources.parquet(spark, path)) == 1)
     assert(countJobs(Sources.parquet(spark, path)) == 0)
     assert(countJobs(Sources.parquet(spark, path).schema) == 0)
